@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import threading
+import time
 
 _CLK = os.sysconf("SC_CLK_TCK")
 
@@ -85,20 +86,26 @@ def rss_mb(root: int | None = None) -> float:
 
 class PeakRss:
     """Samples the tree's memory on a background thread while in a
-    `with` block; `peak_mb` is the highest total seen. A sample reads the
-    JVM's page tables, about 30 ms for a 2 GB heap, so it is taken once
-    a second."""
+    `with` block; `peak_mb` is the highest total seen. A sample walks the
+    page tables of every process, tens of ms for a JVM with a few GB
+    resident, so it is taken once a second, and `cpu_s` is the CPU time
+    (user + system) the sampling thread had used by its last sample:
+    callers that measure the tree's CPU subtract it, so that sampling
+    does not count as the program's work."""
 
-    def __init__(self, interval_s: float = 1.0):
-        self.interval_s = interval_s
+    INTERVAL_S = 1.0
+
+    def __init__(self):
         self.peak_mb = 0.0
+        self.cpu_s = 0.0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
     def _run(self) -> None:
         while True:
             self.peak_mb = max(self.peak_mb, rss_mb())
-            if self._stop.wait(self.interval_s):
+            self.cpu_s = time.thread_time()
+            if self._stop.wait(self.INTERVAL_S):
                 return
 
     def __enter__(self) -> "PeakRss":

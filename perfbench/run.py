@@ -32,8 +32,15 @@ from spans import Tracer, attribute_event_log, base_metrics, python_ms, sql_tota
 
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
-HEAP = "2g"  # Spark driver heap; in local mode it holds the executors too
 NO_PERF_DATA = "-XX:-UsePerfData"
+# G1 touches every heap region it commits, so the resident heap is what
+# the collector has committed. From the JVM's default start (a 64th of
+# the machine's memory) G1 grew it during the cold start to 1.0-1.9 GB,
+# depending on how long its early collections took, and peak memory
+# spread by 0.24-0.29 (IQR over median) across seeds; from 2 GB it
+# spread by 0.01-0.07. The collector may still grow it, nothing is
+# touched in advance, and the maximum stays the program's default.
+INITIAL_HEAP = "2g"
 PROGRAM = ("smos_spark/__init__.py", "__spark_entry__.py")  # what the benchmark imports
 
 # (name, unit, better, bound): a user sees all of these. On the shared
@@ -42,14 +49,18 @@ PROGRAM = ("smos_spark/__init__.py", "__spark_entry__.py")  # what the benchmark
 # time spread by 0.4 (IQR over median) across ten seeds while its CPU
 # time spread by 0.11. Cost is therefore reported as CPU time; wall times
 # go to standard error and into the per-layer report. Work per
-# CPU-second is not reported either: at these input sizes a job's cost
-# hardly depends on its input, so dividing by the seed's turn count
-# (which varies by 7%) only adds spread. The bounds are the widest the
+# CPU-second is not reported either: a third of a rollup job's cost
+# depends on its input, so dividing by the seed's turn count (which
+# varies by 7%) adds spread without giving a cost per turn. Resident
+# memory follows the heap the collector has committed, not what the
+# engine uses of it, so the engine's heap use is reported as the bytes
+# it allocates on the heap per cycle. The bounds are the widest the
 # benchmark format allows.
 END_TO_END = [
     ("setup_s", "s", "lower", 0.25),
     ("cpu_s", "s", "lower", 0.25),
     ("peak_rss_mb", "MB", "lower", 0.25),
+    ("heap_alloc_mb", "MB", "lower", 0.25),
 ]
 
 # the layer calls each workload wraps in a span, in report order
@@ -72,9 +83,6 @@ SPANS = {
         "dedup.dedup_apply",
     ],
 }
-# traced runs of a key also run these workloads once, so that every
-# layer is measured by a workload that BENCHMARK.json lists
-TRACE_TAIL = {"rollup_batch": ("text_dedup",)}
 BASE_UNITS = {
     "wall_ms": "ms",
     "jobs": "count",
@@ -137,7 +145,6 @@ def _configure_env(work: Path) -> int:
         PYSPARK_PYTHON=sys.executable,
         # get_spark sizes shuffle partitions from this; it defaults to 32
         SPARK_GRAFT_CPUS=str(cores),
-        SMOS_SPARK_DRIVER_MEM=HEAP,
         # JVM perf-data files go to /tmp whatever java.io.tmpdir says
         SPARK_LAUNCHER_OPTS=NO_PERF_DATA,
     )
@@ -152,10 +159,8 @@ def _start_spark(work: Path, cores: int, event_log: bool):
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
         "spark.local.dir": str(work / "spark-local"),
-        # a heap committed and touched up front makes peak memory
-        # independent of when the collector grows it
         "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={work / 'tmp'} {NO_PERF_DATA}"
-        f" -Xms{HEAP} -XX:+AlwaysPreTouch",
+        f" -Xms{INITIAL_HEAP}",
         "spark.sql.warehouse.dir": str(work / "warehouse"),
     }
     if event_log:
@@ -197,25 +202,38 @@ def _wait_children(timeout_s: float = 60) -> None:
         time.sleep(0.2)
 
 
+def _heap_allocated_mb(spark) -> float:
+    """MB the JVM has allocated on its heap since it started, by threads
+    alive or ended."""
+    threads = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getThreadMXBean()
+    return threads.getTotalThreadAllocatedBytes() / 2**20
+
+
 def _window(wl, seconds: float) -> tuple[list, float, int]:
-    """Closed loop: start cycles until `seconds` have passed. Returns
-    the cycles, the peak memory during them, and the failed layer calls."""
+    """Closed loop: start cycles until `seconds` have passed, or until
+    the workload's input is used up. Returns the cycles, the peak memory
+    during them, and the failed layer calls."""
     cycles, failed = [], 0
     deadline = time.perf_counter() + seconds
     with PeakRss() as rss:
         while True:
-            cpu0 = cpu_seconds()
+            if not wl.has_input():
+                print(f"perfbench {wl.name}: input used up, window ends early", file=sys.stderr)
+                break
+            cpu0, alloc0 = cpu_seconds() - rss.cpu_s, _heap_allocated_mb(wl.spark)
             try:
                 c = wl.cycle()
             except Exception:  # a failed cycle ends the window and counts as failed calls
                 traceback.print_exc()
                 failed += wl.ops_per_cycle
                 break
-            c.cpu_s = cpu_seconds() - cpu0
+            c.cpu_s = cpu_seconds() - rss.cpu_s - cpu0
+            c.alloc_mb = _heap_allocated_mb(wl.spark) - alloc0
             cycles.append(c)
             print(
                 f"perfbench {wl.name}: cycle {len(cycles)}: {c.items} items, op {c.op_s:.2f} s,"
-                f" requests {' '.join(f'{x:.0f}' for x in c.latencies_ms)} ms, cpu {c.cpu_s:.1f} s",
+                f" requests {' '.join(f'{x:.0f}' for x in c.latencies_ms)} ms, cpu {c.cpu_s:.1f} s,"
+                f" heap allocated {c.alloc_mb:.0f} MB",
                 file=sys.stderr,
             )
             if time.perf_counter() >= deadline:
@@ -228,6 +246,7 @@ def _end_to_end(cycles, setup_s: float, peak_mb: float) -> dict[str, float]:
         "setup_s": setup_s,
         "cpu_s": statistics.median(c.cpu_s for c in cycles),
         "peak_rss_mb": peak_mb,
+        "heap_alloc_mb": statistics.median(c.alloc_mb for c in cycles),
     }
 
 
@@ -336,13 +355,13 @@ def _traced(wl, work: Path, cores: int, seconds: float, untraced_cpu_s: float):
     if cycles:
         traced_cpu_s = _end_to_end(cycles, 0.0, peak_mb)["cpu_s"]
         counts["trace.overhead_pct"] = 100 * (traced_cpu_s / untraced_cpu_s - 1)
-    # layers whose workload is not in BENCHMARK.json run here once
-    for name in TRACE_TAIL.get(wl.name, ()):
-        tail = workloads.WORKLOADS[name](
-            spark, Tracer(spark.sparkContext, False), work / name, wl.seed, wl.scale
+    # text_dedup is not in BENCHMARK.json; its layers are measured here once
+    if wl.name == "rollup_batch":
+        tail = workloads.TextDedup(
+            spark, Tracer(spark.sparkContext, False), work / "text_dedup", wl.seed, wl.scale
         )
-        tail.generate(work / name / "inputs")
-        tail.prepare(work / name / "inputs")
+        tail.generate(work / "text_dedup" / "inputs")
+        tail.prepare(work / "text_dedup" / "inputs")
         tail.warm_up()
         tail.tracer = tracer
         attempted += tail.cycle().ops

@@ -44,7 +44,7 @@ def test_fails_without_the_program(tmp_path):
 
 @pytest.mark.parametrize(
     "workload, trace",
-    [("rollup_batch", True), ("ingest_serve", True), ("ingest_serve", False)],
+    [("rollup_batch", True), ("ingest_serve", True)],
 )
 def test_tiny_run_is_correct_and_complete(workload, trace):
     result = run.run(workload, seed=5, seconds=0.1, trace=trace, scale=0.05)
@@ -59,3 +59,16 @@ def test_tiny_run_is_correct_and_complete(workload, trace):
     if trace:  # the layers of the workload itself were attributed work
         for span in run.SPANS[workload]:
             assert result["metrics"][f"{span}.jobs"]["value"] > 0, span
+
+
+def test_window_ends_cleanly_when_the_input_is_used_up(monkeypatch):
+    # a few batches of 150 turns after the preload: the warm-up takes
+    # one, and a window of many cycles' length uses up the rest
+    monkeypatch.syspath_prepend(str(run.ROOT))  # workloads imports the program
+    import workloads
+
+    monkeypatch.setattr(workloads.IngestServe, "BATCH_TURNS", 3_000)
+    result = run.run("ingest_serve", seed=5, seconds=600, trace=False, scale=0.05)
+    assert result["correct"], result
+    assert result["failed"] == 0
+    assert [m[0] for m in run.END_TO_END] == list(result["metrics"])

@@ -45,8 +45,8 @@ from smos_spark.streaming.incremental import ingest_batch
 from smos_spark.synth import synth_transcripts
 
 START = "2025-01-01 00:00:00"  # synth_transcripts' default epoch
-# about 125 conversations a bucket; scripts/rollup_job.py's default of
-# 32 is sized for stores a hundred times larger
+# 1250 conversations a bucket in rollup_batch, 125 in ingest_serve;
+# scripts/rollup_job.py's default of 32 is sized for larger stores
 N_BUCKETS = 8
 PARAMS = ["n_turns", "len_sum"]  # scripts/rollup_job.py --block-parameters default
 TIER_UNITS = {"1m": "minute", "1h": "hour", "1d": "day"}
@@ -60,13 +60,15 @@ TIER_COLS = (
 class Cycle:
     """What one cycle did: `items` processed by its write or compute
     operation in `op_s` seconds, the latency of each client request in
-    ms, and how many layer calls it made."""
+    ms, and how many layer calls it made; the window adds its CPU time
+    and the MB it allocated on the JVM heap."""
 
     items: int = 0
     op_s: float = 0.0
     latencies_ms: list = field(default_factory=list)
     ops: int = 0
     cpu_s: float = 0.0
+    alloc_mb: float = 0.0
 
 
 def _bytes(path: Path) -> int:
@@ -147,6 +149,10 @@ class Workload:
     def cycle(self) -> Cycle:
         raise NotImplementedError
 
+    def has_input(self) -> bool:
+        """Whether another cycle has input left to work on."""
+        return True
+
     def warm_up(self) -> None:
         """Runs before timing, so that the timed cycle is warm."""
         raise NotImplementedError
@@ -167,7 +173,7 @@ class RollupBatch(Workload):
 
     name = "rollup_batch"
     ops_per_cycle = 4
-    N_CONV = 1000
+    N_CONV = 10000
     SPAN_DAYS = 3
 
     def generate(self, out: Path) -> None:
@@ -329,10 +335,11 @@ class IngestServe(Workload):
         preload is the slowest."""
         self.cycle(views=1)
 
+    def has_input(self) -> bool:
+        return self.batch < self.n_batches
+
     def cycle(self, views: int = VIEWS) -> Cycle:
         spark, span = self.spark, self.tracer.span
-        if self.batch == self.n_batches:
-            raise RuntimeError(f"ran out of input batches after {self.n_batches}")
         self.batch += 1
         b = self.batch
         with span(self.name):
