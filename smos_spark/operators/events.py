@@ -301,9 +301,11 @@ def period_compare(
     lag would silently compare against whatever bucket happened to
     precede, not the calendar-aligned one. Buckets with no comparison
     period are dropped. ratio_ppm = (cur·1e6) div prev via pure
-    integer floor division (pmod-subtract), NULL when prev ≤ 0 (a
-    ratio against a non-positive base is meaningless). delta = cur −
-    prev is always exact.
+    integer floor division (pmod-subtract) in decimal(38,0), so the
+    scaled numerator cannot overflow int64 even for totals above
+    2^63/1e6; NULL when prev ≤ 0 (a ratio against a non-positive base
+    is meaningless). ratio_ppm itself is a long: exact while
+    |cur/prev| < 2^63/1e6. delta = cur − prev is always exact.
 
     Plan: one map-side-combined reduction to O(keys·buckets) counter
     rows, then a self-equi-join of that bounded table — the raw
@@ -330,7 +332,7 @@ def period_compare(
         F.col("cur").alias("prev"),
     )
     joined = totals.join(prev, [*keys, "_b"])
-    scaled = F.col("cur") * F.lit(1_000_000)
+    scaled = F.col("cur").cast("decimal(38,0)") * F.lit(1_000_000)
     ratio = F.when(
         F.col("prev") > 0,
         (

@@ -305,7 +305,7 @@ def tiered_read_store(
     out = None
     cols = None
     for name, lo, hi in segments:
-        df = spark.read.parquet(store.tier_path(name))
+        df = store.scan_tier(spark, name)
         if cols is None:
             cols = [c for c in df.columns if c not in ("bucket_id", "bucket_date")]
         part = (

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from smos_spark.functions.joins import null_safe_join
+
 __all__ = [
     "autocorrelation",
     "concentration",
@@ -587,7 +589,8 @@ def standardize(
     (S = Σx, Q = Σx² in decimal(38,0)), so the only floats are the
     final fixed-order chain (cast → sqrt → divide → floor), bit-equal
     cross-engine. Rows in constant or single-row groups get NULL
-    (σ = 0). Input must be integer-quantized.
+    (σ = 0). A NULL group value is a group like any other: the moments
+    join back null-safely. Input must be integer-quantized.
 
     Plan: one map-side-combined aggregation to O(groups) moment rows,
     broadcast-joined back onto the stream — the raw side is never
@@ -604,7 +607,7 @@ def standardize(
             F.sum(v.cast(_DEC) * v.cast(_DEC)).alias("_zq"),
         )
     )
-    joined = df.join(F.broadcast(moments), group_cols, "left")
+    joined = null_safe_join(df, F.broadcast(moments), group_cols, "left")
     num = F.col("_zn").cast(_DEC) * v.cast(_DEC) - F.col("_zs")
     rad = (
         F.col("_zn").cast(_DEC) * F.col("_zq")
@@ -614,9 +617,11 @@ def standardize(
         rad > 0,
         num.cast("double") / F.sqrt(rad.cast("double")),
     )
-    return joined.withColumn(
-        out_col, F.floor(z * 1_000_000).cast("long")
-    ).drop("_zn", "_zs", "_zq")
+    # group columns first, as a join on column names orders them
+    rest = [c for c in df.columns if c not in group_cols]
+    return joined.select(
+        *group_cols, *rest, F.floor(z * 1_000_000).cast("long").alias(out_col)
+    )
 
 
 def top_movers(

@@ -3,7 +3,7 @@
 Reference post-op chain (/root/reference/src/smos/interface.py:128-162),
 reproduced in order:
   1. point lookup by key → one cell file (here: one bucket directory,
-     pruned by a literal bucket_id predicate — store.read_tier_for_conv)
+     pruned by a foldable bucket_id predicate — store.read_tier_for_conv)
   2. drop rows where ALL value columns are NULL (`drop_missing=True`,
      interface.py:151-152)
   3. integer restoration: a float column with no NULLs and all whole
@@ -78,7 +78,9 @@ def read_conv_series(
         value_cols = keep
     if drop_missing:
         df = df.na.drop(how="all", subset=value_cols)
-    df = df.orderBy("bucket_start")
+    # one conversation's rows: sorting them in one task costs no job and
+    # no exchange, where orderBy adds a range-sampling job and a shuffle
+    df = df.coalesce(1).sortWithinPartitions("bucket_start")
     if downcast_ints:
         df = downcast_whole_floats(df, value_cols)
     return df
@@ -96,8 +98,24 @@ def read_block_series(
     --blocks phase): the conv_id predicate pushes down to the parquet
     scan (key column min/max row-group stats — blocks are written
     conv-clustered), then ONLY that conversation's blocks are
-    decoded. Returns the long-form series ordered by time."""
+    decoded. Returns the long-form series ordered by time.
+
+    Works on a flat blocks directory and on a `write_blocks` layout
+    (whose partition columns are discovered from the paths). The scan
+    declares the only columns the decoder needs, so no job infers a
+    schema and no other column reaches the Python worker."""
     from smos_spark.operators.compress import decompress_series
 
-    blocks = spark.read.parquet(blocks_path).where(F.col("conv_id") == conv_id)
-    return decompress_series(blocks, list(value_cols), ts_col=ts_col).orderBy(ts_col)
+    blobs = ["ts_blob", *(f"{c}_blob" for c in value_cols)]
+    schema = ", ".join(["conv_id string", *(f"{b} binary" for b in blobs)])
+    blocks = (
+        spark.read.schema(schema)
+        .parquet(blocks_path)
+        .where(F.col("conv_id") == conv_id)
+        .select("conv_id", *blobs)
+    )
+    return (  # sorted in one task, as in read_conv_series
+        decompress_series(blocks, list(value_cols), ts_col=ts_col)
+        .coalesce(1)
+        .sortWithinPartitions(ts_col)
+    )

@@ -10,8 +10,12 @@ bucketing uses ``date_trunc`` (reference analog: netCDF epoch
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+#: the directory that holds the smos_spark package
+_PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 
 def get_spark(
@@ -25,6 +29,11 @@ def get_spark(
     Defaults honor the driver environment variables:
       SPARK_GRAFT_CPUS  → local[N] parallelism (default 32)
       SPARK_GRAFT_SF_DIR is consumed by bench.py, not here.
+
+    Python workers start through `smos_spark._pydaemon` (PySpark's
+    daemon without the per-task rescan of `pyspark.zip`); the package
+    root is put on the executors' PYTHONPATH so it resolves from any
+    working directory.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
@@ -48,6 +57,8 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SMOS_SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "smos_spark._pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -9,7 +9,8 @@ and the substitution is documented in BENCH/BASELINE.md):
       transcripts/ts_date=YYYY-MM-DD/...   raw turns, days(ts) pruning
       tiers/{1m,1h,1d}/bucket_id=K/...     tier partials, key-bucketed
       _checkpoint/                         per-batch lineage+metrics rows
-      overview.json                        last_day / parameters state
+      overview.json                        last_day / parameters state,
+                                           and each table's schema
 
 * `ts_date` partitioning ≙ the reference's yearly-subdir + date-coded
   filename layout (/root/reference/src/smos/interface.py:436-444):
@@ -20,6 +21,11 @@ and the substitution is documented in BENCH/BASELINE.md):
   reference reads one cell file (docs/img2ts.rst:13-16).
 * `overview.json` ≙ overview.yml (smos_l2/reshuffle.py:71-94): written
   only after a successful batch, read back for the monotonic guard.
+  It is also the store's catalog, the way Iceberg keeps a table's
+  schema in its metadata: every tier and block writer records the
+  schema it wrote, and the readers scan with it, so Spark never runs a
+  footer-reading job to infer one (`_checkpoint` has the fixed
+  CHECKPOINT_SCHEMA).
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from smos_spark.schema import TIERS
 
@@ -52,9 +59,11 @@ CHECKPOINT_SCHEMA = (
 )
 
 
-def bucket_expr(col: str = "conv_id", n_buckets: int = DEFAULT_N_BUCKETS):
-    """Deterministic key→bucket assignment (J4, the lonlat2cell analog)."""
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
+def bucket_expr(col="conv_id", n_buckets: int = DEFAULT_N_BUCKETS):
+    """Deterministic key→bucket assignment (J4, the lonlat2cell analog).
+    `col` is a column name or a Column (a literal key gives a foldable
+    expression)."""
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
 @dataclass
@@ -65,17 +74,19 @@ class Overview:
     last_batch_id: int = -1
     parameters: dict | None = None
     extra: dict = None  # free-form state (e.g. retention_floor per tier)
+    schemas: dict = None  # table dir (relative to the root) → schema JSON
 
     @classmethod
     def load(cls, path: Path) -> "Overview":
         if not path.exists():
-            return cls(extra={})
+            return cls(extra={}, schemas={})
         d = json.loads(path.read_text())
         return cls(
             last_day=d.get("last_day"),
             last_batch_id=d.get("last_batch_id", -1),
             parameters=d.get("parameters"),
             extra=d.get("extra") or {},
+            schemas=d.get("schemas") or {},
         )
 
     def save(self, path: Path) -> None:
@@ -88,6 +99,7 @@ class Overview:
                     "last_batch_id": self.last_batch_id,
                     "parameters": self.parameters,
                     "extra": self.extra or {},
+                    "schemas": self.schemas or {},
                 }
             )
         )
@@ -116,7 +128,13 @@ class TranscriptStore:
         equality predicates on conv_id skip whole row-groups without
         decoding them (asserted via scan metrics in
         test_point_read_bloom_prunes_row_groups). Write-time-only
-        property; readers need no configuration."""
+        property; readers need no configuration.
+
+        The overview sidecar is also the store's catalog: each tier and
+        block writer records the schema it wrote there (partition
+        columns included), and the readers scan with that schema, so
+        opening a table launches no schema-inference job. Tables
+        written before schemas were recorded are read with inference."""
         self.root = Path(root)
         recorded = (Overview.load(self.root / "overview.json").extra or {}).get(
             "n_buckets"
@@ -160,6 +178,21 @@ class TranscriptStore:
     def overview_path(self) -> Path:
         return self.root / "overview.json"
 
+    def _scan(self, spark: SparkSession, path: str) -> DataFrame:
+        """The table at `path`, partition columns included, read with
+        the schema its writer recorded (a declared schema means no
+        footer-reading job); unrecorded tables fall back to inference."""
+        schema = self.load_overview().schemas.get(self._table_key(path))
+        if schema is None:
+            return spark.read.parquet(path)
+        return spark.read.schema(T.StructType.fromJson(schema)).parquet(path)
+
+    def _table_key(self, path: str) -> str:
+        return Path(path).relative_to(self.root).as_posix()
+
+    def _record_schema(self, path: str, written: DataFrame) -> None:
+        self.save_overview(self.load_overview(), {self._table_key(path): written.schema})
+
     # --- raw table ---
     def append_transcripts(self, df: DataFrame) -> None:
         (
@@ -189,14 +222,14 @@ class TranscriptStore:
         # leads with the partition columns so the dynamic-partition
         # writer's required ordering is already satisfied: no hidden
         # second sort, one open file at a time, conv-clustered rows.
+        out = self._with_partition_cols(tier_df)
         self._with_point_read_options(
-            self._with_partition_cols(tier_df)
-            .repartition("bucket_date", "bucket_id")
+            out.repartition("bucket_date", "bucket_id")
             .sortWithinPartitions("bucket_date", "bucket_id", "conv_id", "bucket_start")
             .write.partitionBy("bucket_date", "bucket_id")
             .mode(mode)
         ).parquet(self.tier_path(tier))
-        self._ensure_overview()
+        self._record_schema(self.tier_path(tier), out)
 
     def overwrite_tier_partitions(self, tier_df: DataFrame, tier: str) -> None:
         """Dynamic partition overwrite — rewrites only the
@@ -205,55 +238,53 @@ class TranscriptStore:
         spark = tier_df.sparkSession
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        out = self._with_partition_cols(tier_df)
         try:
             self._with_point_read_options(
-                self._with_partition_cols(tier_df)
-                .repartition("bucket_date", "bucket_id")
+                out.repartition("bucket_date", "bucket_id")
                 .sortWithinPartitions("bucket_date", "bucket_id", "conv_id", "bucket_start")
                 .write.partitionBy("bucket_date", "bucket_id")
                 .mode("overwrite")
             ).parquet(self.tier_path(tier))
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        self._record_schema(self.tier_path(tier), out)
+
+    def scan_tier(self, spark: SparkSession, tier: str) -> DataFrame:
+        """The tier with its bucket_date/bucket_id partition columns,
+        for callers that prune on them."""
+        return self._scan(spark, self.tier_path(tier))
 
     def read_tier(self, spark: SparkSession, tier: str) -> DataFrame:
-        return spark.read.parquet(self.tier_path(tier)).drop("bucket_id", "bucket_date")
+        return self.scan_tier(spark, tier).drop("bucket_id", "bucket_date")
 
     def read_tier_since(self, spark: SparkSession, tier: str, day_lo) -> DataFrame:
         """Tier rows with bucket_date >= day_lo — the filter hits the
         bucket_date PARTITION column, so older directories are pruned
         from the scan entirely."""
-        df = spark.read.parquet(self.tier_path(tier))
+        df = self.scan_tier(spark, tier)
         return df.where(F.col("bucket_date") >= F.to_date(F.lit(str(day_lo)))).drop(
             "bucket_id", "bucket_date"
         )
 
-    def _bucket_literal(self, spark: SparkSession, conv_id: str) -> int:
-        """Resolve a key's bucket to a LITERAL so partition filters
-        actually prune directories (a column-vs-column predicate would
-        scan every bucket). THE one definition of the key→bucket map
-        shared by tier and block point reads — hash/cast changes here
-        stay consistent across both layouts."""
+    def _read_conv(self, spark: SparkSession, path: str, conv_id: str) -> DataFrame:
+        """Point read shared by tier and block tables. The bucket side
+        is `bucket_expr` over a literal, so it is foldable: the
+        optimizer folds it to a constant during partition pruning, which
+        keeps exactly one bucket directory with no job to compute the
+        bucket."""
+        bucket = bucket_expr(F.lit(conv_id), self.n_buckets)
         return (
-            spark.range(1)
-            .select(
-                F.pmod(F.xxhash64(F.lit(conv_id)), F.lit(self.n_buckets))
-                .cast("int")
-                .alias("b")
-            )
-            .collect()[0]
-            .b
+            self._scan(spark, path)
+            .where((F.col("bucket_id") == bucket) & (F.col("conv_id") == conv_id))
+            .drop("bucket_id")
         )
 
     def read_tier_for_conv(self, spark: SparkSession, tier: str, conv_id: str) -> DataFrame:
         """Point read with bucket pruning: the partition filter on
         bucket_id restricts the scan to one directory — the read-one-
         cell-file locality of the reference (J2)."""
-        b = self._bucket_literal(spark, conv_id)
-        df = spark.read.parquet(self.tier_path(tier))
-        return df.where(
-            (F.col("bucket_id") == F.lit(b)) & (F.col("conv_id") == conv_id)
-        ).drop("bucket_id")
+        return self._read_conv(spark, self.tier_path(tier), conv_id)
 
     def blocks_path(self, tier: str) -> str:
         return str(self.root / f"blocks_{tier}")
@@ -307,13 +338,12 @@ class TranscriptStore:
         # record layout + codec so a reopen can never mis-bucket point
         # reads (same guard as write_tier) or decode with the wrong
         # codec (gorilla/chimp blobs share a header and misparse
-        # silently)
-        self._ensure_overview()
+        # silently), and the schema the readers scan with
         ov = self.load_overview()
         codecs = dict((ov.extra or {}).get("block_codecs") or {})
         codecs[tier] = codec
         ov.extra = {**(ov.extra or {}), "block_codecs": codecs}
-        self.save_overview(ov)
+        self.save_overview(ov, {self._table_key(self.blocks_path(tier)): out.schema})
 
     def read_blocks(
         self, spark: SparkSession, tier: str, day_lo=None, day_hi=None
@@ -321,7 +351,7 @@ class TranscriptStore:
         """Block rows, optionally pruned to block_date ∈ [day_lo,
         day_hi] — the filter hits the PARTITION column, so out-of-range
         day directories never enter the scan."""
-        df = spark.read.parquet(self.blocks_path(tier))
+        df = self._scan(spark, self.blocks_path(tier))
         if day_lo is not None:
             df = df.where(F.col("block_date") >= F.to_date(F.lit(str(day_lo))))
         if day_hi is not None:
@@ -331,13 +361,9 @@ class TranscriptStore:
     def read_blocks_for_conv(
         self, spark: SparkSession, tier: str, conv_id: str
     ) -> DataFrame:
-        """Point read with bucket pruning (same literal-bucket
-        resolution as read_tier_for_conv — J2 locality for blocks)."""
-        b = self._bucket_literal(spark, conv_id)
-        df = spark.read.parquet(self.blocks_path(tier))
-        return df.where(
-            (F.col("bucket_id") == F.lit(b)) & (F.col("conv_id") == conv_id)
-        ).drop("bucket_id")
+        """Point read with bucket pruning (the same folded bucket
+        predicate as read_tier_for_conv — J2 locality for blocks)."""
+        return self._read_conv(spark, self.blocks_path(tier), conv_id)
 
     def blocks_range_minmax(
         self,
@@ -420,7 +446,7 @@ class TranscriptStore:
         opens. Filters land on the scan (bucket_date partition pruning
         for the ts range; conv_id min/max row-group stats for the key
         range); one write, no driver materialization."""
-        df = spark.read.parquet(self.tier_path(tier))
+        df = self.scan_tier(spark, tier)
         if ts_lo is not None:
             df = df.where(F.col("bucket_start") >= F.lit(str(ts_lo)).cast("timestamp"))
             df = df.where(F.col("bucket_date") >= F.to_date(F.lit(str(ts_lo)[:10])))
@@ -512,15 +538,21 @@ class TranscriptStore:
     def load_overview(self) -> Overview:
         return Overview.load(self.overview_path)
 
-    def save_overview(self, ov: Overview) -> None:
-        # every overview commit records the physical bucket layout so
-        # a reopen (n_buckets=None) can never mis-bucket point reads
+    def save_overview(
+        self, ov: Overview, schemas: dict[str, T.StructType] | None = None
+    ) -> None:
+        """Commit `ov`. Every commit records the physical bucket layout
+        so a reopen (n_buckets=None) can never mis-bucket point reads.
+        Table schemas are set only by the writers (`schemas`, keyed by
+        table directory); the ones already on disk are kept, so a caller
+        holding an overview loaded before a write never drops them."""
         ov.extra = {**(ov.extra or {}), "n_buckets": self.n_buckets}
+        ov.schemas = {
+            **(ov.schemas or {}),
+            **self.load_overview().schemas,
+            **{k: s.jsonValue() for k, s in (schemas or {}).items()},
+        }
         ov.save(self.overview_path)
-
-    def _ensure_overview(self) -> None:
-        if not self.overview_path.exists():
-            self.save_overview(Overview(extra={}))
 
     # --- checkpoint lineage ---
     def _recover_checkpoint_swap(self) -> None:
@@ -566,7 +598,7 @@ class TranscriptStore:
         self._recover_checkpoint_swap()
         if not Path(self.checkpoint_path).exists():
             return None
-        return spark.read.parquet(self.checkpoint_path)
+        return spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.checkpoint_path)
 
     def compact_checkpoint(self, spark: SparkSession, max_files: int = 16) -> int:
         """Compact the lineage table's per-batch coalesce(1) appends.
@@ -591,7 +623,9 @@ class TranscriptStore:
         tmp = Path(str(p) + "_compacting")
         old = Path(str(p) + "_old")
         shutil.rmtree(old, ignore_errors=True)
-        spark.read.parquet(str(p)).coalesce(1).write.mode("overwrite").parquet(str(tmp))
+        spark.read.schema(CHECKPOINT_SCHEMA).parquet(str(p)).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(str(tmp))
         os.replace(p, old)
         os.replace(tmp, p)
         shutil.rmtree(old)

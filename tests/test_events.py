@@ -286,6 +286,23 @@ class TestPeriodCompare:
         # FLOOR(-7e6/7) = -1_000_000 exactly
         assert r["ratio_ppm"] == -1_000_000
 
+    def test_scaled_total_above_int64_is_exact(self, spark):
+        """cur·1e6 exceeds 2^63 for a total just above 2^63/1e6: the
+        ratio is still exact (decimal(38,0) numerator) instead of an
+        ARITHMETIC_OVERFLOW abort under ANSI."""
+        import datetime as dt
+
+        from smos_spark.operators.events import period_compare
+
+        cur, prev = 2**63 // 1_000_000 + 1, 3_000_000_000_001
+        assert cur * 1_000_000 > 2**63 - 1
+        t0 = dt.datetime(2024, 1, 1)
+        rows = [("k", t0, prev), ("k", t0 + dt.timedelta(days=7), cur)]
+        df = spark.createDataFrame(rows, "k string, ts timestamp, v long")
+        r = period_compare(df, "v", ["k"]).collect()[0]
+        assert (r["cur"], r["prev"], r["delta"]) == (cur, prev, cur - prev)
+        assert r["ratio_ppm"] == cur * 1_000_000 // prev
+
 
 class TestConversionLag:
     def test_known_answers(self, spark):

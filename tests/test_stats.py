@@ -502,6 +502,25 @@ def test_standardize_constant_group_null_and_passthrough(spark):
     assert set(out.columns) == {"g", "i", "v", "extra", "z_ppm"}
 
 
+def test_standardize_null_group_matches_pandas(spark):
+    """A NULL group is scored against its own moments (null-safe join
+    back), not silently given a NULL z-score."""
+    import pandas as pd
+
+    from smos_spark.operators.stats import standardize
+
+    rows = [(None, 1, 3), (None, 2, 8), (None, 3, 10), ("a", 4, 1), ("a", 5, 6)]
+    df = spark.createDataFrame(rows, "g string, i long, v long")
+    got = {r["i"]: r["z_ppm"] for r in standardize(df, "v", ["g"]).collect()}
+
+    pdf = pd.DataFrame(rows, columns=["g", "i", "v"])
+    grp = pdf.groupby(pdf.g.fillna("<null>")).v
+    z = (pdf.v - grp.transform("mean")) / grp.transform("std", ddof=0)
+    want = dict(zip(pdf.i, np.floor(z * 1_000_000).astype("int64")))
+    assert got[1] is not None and got[3] is not None
+    assert all(abs(got[i] - want[i]) <= 1 for i in want), (got, want)
+
+
 def test_standardize_zero_row_shuffle_plan(spark):
     from smos_spark.operators.stats import standardize
 
