@@ -23,11 +23,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from smos_spark.schema import TIERS
+from smos_spark.schema import ROLES, TIERS
 
 __all__ = [
     "rollup_from_raw",
     "reaggregate",
+    "turn_partials",
     "with_derived",
     "salted_rollup_from_raw",
     "detect_hot_convs",
@@ -95,6 +96,35 @@ def rollup_from_raw(df: DataFrame, tier: str) -> DataFrame:
     return df.groupBy(
         F.col("conv_id"), _bucket(F.col("ts"), tier).alias("bucket_start")
     ).agg(*_partial_aggs())
+
+
+def turn_partials(df: DataFrame) -> DataFrame:
+    """raw turns → one-turn tier partials, row for row (no shuffle).
+
+    Each turn becomes the partial a bucket holding only that turn
+    would have, with bucket_start = ts, so merging them is the same
+    as aggregating raw: reaggregate(turn_partials(df), t) ==
+    rollup_from_raw(df, t) for every tier, NULL role/tool/text/conv_id
+    included. Lets a store merge new turns straight into any tier.
+    """
+    length = F.length("text").cast("long")
+
+    def flag(cond: Column) -> Column:
+        return F.when(cond, 1).otherwise(0).cast("long")
+
+    return df.select(
+        F.col("conv_id"),
+        F.col("ts").alias("bucket_start"),
+        F.lit(1).cast("long").alias("n_turns"),
+        *[flag(F.col("role") == r).alias(f"n_role_{r}") for r in ROLES],
+        flag(F.col("tool").isNotNull()).alias("n_tool_calls"),
+        length.alias("len_sum"),
+        flag(length.isNotNull()).alias("len_cnt"),
+        length.alias("len_min"),
+        length.alias("len_max"),
+        F.col("ts").alias("first_ts"),
+        F.col("ts").alias("last_ts"),
+    )
 
 
 def reaggregate(tier_df: DataFrame, to_tier: str) -> DataFrame:

@@ -61,30 +61,34 @@ def grouped_pearson(
     constant or the group has < 2 rows).
 
     corr = (n·Σxy − Σx·Σy) / √((n·Σx² − (Σx)²)·(n·Σy² − (Σy)²)) over
-    int64 sums promoted to decimal(38,0) for the cross products — a
-    10^12-row group with |x| up to ~10^3 stays exact (n·Σx² ≈ 10^30 ≪
-    10^38), where int64 would overflow. Inputs must satisfy
-    |x|,|y| < ~2^31 so x², xy fit int64 pre-aggregation; quantize
-    wider floats first (e.g. floor(v·100)). The only doubles are the
-    final division's operands (exact while the decimals are < 2^53 —
-    always true at the sf scales the oracle checks; beyond that the
-    decimal→double rounding is still deterministic round-to-nearest).
+    decimal(38,0): each value is cast to decimal before it is squared
+    or multiplied, so the products and moments are exact integers for
+    any int64 input while n·max|x| and n·max|y| stay below ~10^19
+    (then n·Σx² ≤ (n·max|x|)² < 10^38): a 10^12-row group with |x| up
+    to ~10^7, or a 3-row group with |x| up to ~3·10^18. Beyond that
+    Spark's ANSI mode raises ARITHMETIC_OVERFLOW rather than returning
+    a wrong value. Quantize floats first (e.g. floor(v·100)). The only
+    doubles are the final division's operands (exact while the
+    decimals are < 2^53 — always true at the sf scales the oracle
+    checks; beyond that the decimal→double rounding is still
+    deterministic round-to-nearest).
 
     One aggregation, map-side partials; no window, no join."""
-    xl, yl = F.col(x).cast("long"), F.col(y).cast("long")
+    xd = F.col(x).cast("long").cast(_DEC)
+    yd = F.col(y).cast("long").cast(_DEC)
     agg = df.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("_n"),
-        F.sum(xl).alias("_sx"),
-        F.sum(yl).alias("_sy"),
-        F.sum(xl * xl).alias("_sxx"),
-        F.sum(yl * yl).alias("_syy"),
-        F.sum(xl * yl).alias("_sxy"),
+        F.sum(xd).alias("_sx"),
+        F.sum(yd).alias("_sy"),
+        F.sum(xd * xd).alias("_sxx"),
+        F.sum(yd * yd).alias("_syy"),
+        F.sum(xd * yd).alias("_sxy"),
     )
     n = F.col("_n").cast(_DEC)
-    sx, sy = F.col("_sx").cast(_DEC), F.col("_sy").cast(_DEC)
-    num = n * F.col("_sxy").cast(_DEC) - sx * sy
-    d1 = n * F.col("_sxx").cast(_DEC) - sx * sx
-    d2 = n * F.col("_syy").cast(_DEC) - sy * sy
+    sx, sy = F.col("_sx"), F.col("_sy")
+    num = n * F.col("_sxy") - sx * sy
+    d1 = n * F.col("_sxx") - sx * sx
+    d2 = n * F.col("_syy") - sy * sy
     corr = F.when(
         (d1 > 0) & (d2 > 0),
         num.cast("double") / F.sqrt(d1.cast("double") * d2.cast("double")),

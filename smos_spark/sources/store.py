@@ -7,7 +7,9 @@ and the substitution is documented in BENCH/BASELINE.md):
 
     root/
       transcripts/ts_date=YYYY-MM-DD/...   raw turns, days(ts) pruning
-      tiers/{1m,1h,1d}/bucket_id=K/...     tier partials, key-bucketed
+      tiers/{1m,1h,1d}/bucket_date=D/bucket_id=K/...
+                                           tier partials, time-major,
+                                           then key-bucketed
       _checkpoint/                         per-batch lineage+metrics rows
       overview.json                        last_day / parameters state,
                                            and each table's schema
@@ -26,6 +28,12 @@ and the substitution is documented in BENCH/BASELINE.md):
   schema it wrote, and the readers scan with it, so Spark never runs a
   footer-reading job to infer one (`_checkpoint` has the fixed
   CHECKPOINT_SCHEMA).
+* Tiers are built whole by `write_tier` and maintained by
+  `merge_tier_partitions`: new partials (raw turns through
+  `rollup.turn_partials`) are merged with the existing rows of the day
+  partitions they touch, and only those (bucket_date, bucket_id)
+  partitions are rewritten, by dynamic partition overwrite, in one
+  shuffle per tier.
 """
 
 from __future__ import annotations
@@ -36,10 +44,11 @@ import warnings
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from smos_spark.operators.rollup import _MERGE, _bucket, _merge_aggs
 from smos_spark.schema import TIERS
 
 DEFAULT_N_BUCKETS = 64
@@ -231,18 +240,36 @@ class TranscriptStore:
         ).parquet(self.tier_path(tier))
         self._record_schema(self.tier_path(tier), out)
 
-    def overwrite_tier_partitions(self, tier_df: DataFrame, tier: str) -> None:
-        """Dynamic partition overwrite — rewrites only the
-        (bucket_date, bucket_id) partitions present in tier_df
-        (the Iceberg-MERGE substitute)."""
-        spark = tier_df.sparkSession
+    def merge_tier_partitions(
+        self, rows: DataFrame, tier: str, obs: Observation | None = None
+    ) -> None:
+        """Merge partials into `tier` and rewrite, by dynamic partition
+        overwrite, only the (bucket_date, bucket_id) partitions they
+        touch (the Iceberg-MERGE substitute). `rows` are partials at
+        this tier or finer: turn_partials of raw turns, plus the tier's
+        own rows of the partitions being rewritten. An `obs` observes
+        the merged row count as ``rows_out``.
+
+        One shuffle: the repartition on the partition columns already
+        clusters the merge's grouping keys, so the aggregation and the
+        writer's sort run in the same stage."""
+        spark = rows.sparkSession
+        keyed = self._with_partition_cols(
+            rows.withColumn("bucket_start", _bucket(F.col("bucket_start"), tier))
+        )
+        out = (
+            keyed.repartition("bucket_date", "bucket_id")
+            .groupBy("bucket_date", "bucket_id", "conv_id", "bucket_start")
+            .agg(*_merge_aggs())
+            .select("conv_id", "bucket_start", *_MERGE, "bucket_date", "bucket_id")
+        )
+        if obs is not None:
+            out = out.observe(obs, F.count(F.lit(1)).alias("rows_out"))
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        out = self._with_partition_cols(tier_df)
         try:
             self._with_point_read_options(
-                out.repartition("bucket_date", "bucket_id")
-                .sortWithinPartitions("bucket_date", "bucket_id", "conv_id", "bucket_start")
+                out.sortWithinPartitions("bucket_date", "bucket_id", "conv_id", "bucket_start")
                 .write.partitionBy("bucket_date", "bucket_id")
                 .mode("overwrite")
             ).parquet(self.tier_path(tier))
@@ -654,7 +681,7 @@ class TranscriptStore:
         derived from a broadcast date→n_files map, so big days still
         get multiple parallel writers/files. Untouched dates keep
         their files byte-identical; readers see old-or-new per
-        partition (same contract as overwrite_tier_partitions).
+        partition (same contract as merge_tier_partitions).
         Callers doing concurrent maintenance hold the advisory writer
         lock, like tier merges. Returns
         ``{"dates": k, "files_before": a, "files_after": b}``."""

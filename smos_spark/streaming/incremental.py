@@ -12,11 +12,15 @@ resume: a batch already present in the checkpoint table is skipped, so
 re-running an interrupted job converges to the identical store (tested
 byte-for-byte at the tier level in tests/test_incremental.py).
 
-Merge strategy on parquet (no Iceberg MERGE in sandbox): tier buckets
-straddling the batch boundary are re-aggregated from (existing tier ∪
-new partials) and rewritten via dynamic partition overwrite — the
-write-then-commit-manifest pattern; the overview commit is the atomic
-rename at the end.
+Merge strategy on parquet, which has no MERGE: each raw turn
+becomes a one-turn partial (`rollup.turn_partials`), and every tier is
+merged straight from those, not cascaded 1m→1h→1d. Per tier,
+`TranscriptStore.merge_tier_partitions` re-aggregates (the tier's rows
+from the batch's first day on ∪ the turn partials) in one shuffle and
+rewrites only the touched (bucket_date, bucket_id) partitions by
+dynamic partition overwrite. Because the partials are exact, the result
+equals a rollup of all raw turns. This is the write-then-commit-manifest
+pattern: the overview commit is the atomic rename at the end.
 """
 
 from __future__ import annotations
@@ -24,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from smos_spark.operators.rollup import reaggregate, rollup_from_raw
+from smos_spark.operators.rollup import turn_partials
 from smos_spark.sources.store import Overview, TranscriptStore
 
 
@@ -82,12 +86,8 @@ def _ingest_batch_locked(
     # --- resume / idempotence: skip an already-committed batch ---
     cp = store.read_checkpoint(spark)
     if cp is not None:
-        done = (
-            cp.where((F.col("run_id") == run_id) & (F.col("batch_id") == batch_id))
-            .limit(1)
-            .count()
-        )
-        if done:
+        done = cp.where((F.col("run_id") == run_id) & (F.col("batch_id") == batch_id))
+        if not done.isEmpty():
             return {"skipped": True, "batch_id": batch_id}
 
     if batch_id <= ov.last_batch_id:
@@ -130,18 +130,7 @@ def _ingest_batch_locked(
         store.save_overview(ov)
         return {"skipped": False, "batch_id": batch_id, "rows_in": 0}
 
-    batch = batch.cache()
-    store.append_transcripts(batch)
-
-    # --- tier maintenance: re-aggregate only affected buckets ---
-    stats: list[dict] = []
-    new_1m = rollup_from_raw(batch, "1m")
-    affected = {"1m": new_1m}
-    affected["1h"] = reaggregate(new_1m, "1h")
-    affected["1d"] = reaggregate(affected["1h"], "1d")
-
     import datetime as _dt
-    import shutil as _shutil
     from pathlib import Path
 
     from pyspark.sql import Observation
@@ -160,63 +149,80 @@ def _ingest_batch_locked(
     batch_days = [
         str(d0 + _dt.timedelta(days=i)) for i in range((d1 - d0).days + 1)
     ]
-    for tier in ("1m", "1h", "1d"):
-        new_partials = affected[tier]
-        tier_exists = Path(store.tier_path(tier)).exists()
-        # rows_out via an observed metric on the write itself — no
-        # post-write count job, no full-table scan
-        obs = Observation(f"tier_{tier}_b{batch_id}")
-        if not tier_exists:
-            out = new_partials.observe(obs, F.count(F.lit(1)).alias("rows_out"))
-            store.write_tier(out, tier, mode="overwrite")
-        else:
-            # only date partitions the batch touches need rewriting;
-            # the boundary is day-aligned because the physical layout
-            # partitions on bucket_date — everything before it is final
-            # and is neither read (partition pruning) nor written.
-            overlap = store.read_tier_since(spark, tier, batch_day)
-            merged = reaggregate(overlap.unionByName(new_partials), tier)
-            out = merged.observe(obs, F.count(F.lit(1)).alias("rows_out"))
-            store.overwrite_tier_partitions(out, tier)
-        for d in batch_days:
-            bdir = Path(store.blocks_path(tier)) / f"block_date={d}"
-            if bdir.exists():
-                _shutil.rmtree(bdir)
-                stats.append(
-                    {
-                        "run_id": run_id,
-                        "batch_id": batch_id,
-                        "tier": f"blocks_{tier}",
-                        "partition_key": f"block_date={d}",
-                        "rows_in": 0,
-                        "rows_out": 0,
-                        "min_ts": None,
-                        "max_ts": None,
-                        "committed_seq": -1,
-                    }
-                )
-        out_rows = obs.get["rows_out"]
-        stats.append(
-            {
-                "run_id": run_id,
-                "batch_id": batch_id,
-                "tier": tier,
-                "partition_key": "all",
-                "rows_in": n_in,
-                "rows_out": out_rows,
-                "min_ts": lo,
-                "max_ts": hi,
-                "committed_seq": batch_id * 10 + {"1m": 0, "1h": 1, "1d": 2}[tier],
-            }
-        )
+    stats: list[dict] = []
+    batch = batch.cache()
+    try:
+        store.append_transcripts(batch)
+        # --- tier maintenance: merge the turns straight into each tier ---
+        turns = turn_partials(batch)
+        for tier in ("1m", "1h", "1d"):
+            rows = turns
+            if Path(store.tier_path(tier)).exists():
+                # only date partitions the batch touches need rewriting;
+                # the boundary is day-aligned because the physical layout
+                # partitions on bucket_date — everything before it is final
+                # and is neither read (partition pruning) nor written.
+                rows = store.read_tier_since(spark, tier, batch_day).unionByName(turns)
+            # rows_out via an observed metric on the write itself — no
+            # post-write count job, no full-table scan
+            obs = Observation(f"tier_{tier}_b{batch_id}")
+            store.merge_tier_partitions(rows, tier, obs)
+            stats += _drop_stale_blocks(store, tier, batch_days, run_id, batch_id)
+            stats.append(
+                {
+                    "run_id": run_id,
+                    "batch_id": batch_id,
+                    "tier": tier,
+                    "partition_key": "all",
+                    "rows_in": n_in,
+                    "rows_out": obs.get["rows_out"],
+                    "min_ts": lo,
+                    "max_ts": hi,
+                    "committed_seq": batch_id * 10 + {"1m": 0, "1h": 1, "1d": 2}[tier],
+                }
+            )
+    finally:
+        # also on failure: a cached batch left behind would outlive the
+        # retries in the same Spark session (foreachBatch re-runs stack
+        # more copies)
+        batch.unpersist()
 
     # --- commit: lineage rows, then overview (atomic rename last) ---
     store.append_checkpoint(spark, stats)
     ov.last_day = max(str(hi), ov.last_day or "")
     ov.last_batch_id = batch_id
     store.save_overview(ov)
-    batch.unpersist()
     return {"skipped": False, "batch_id": batch_id, "rows_in": n_in}
+
+
+def _drop_stale_blocks(
+    store: TranscriptStore, tier: str, days: list[str], run_id: str, batch_id: int
+) -> list[dict]:
+    """Delete the tier's compressed blocks for `days`, which encode the
+    tier's values from before a merge; one lineage row per dropped day.
+    A reader that hits a missing day re-encodes from the tier."""
+    import shutil
+    from pathlib import Path
+
+    stats = []
+    for d in days:
+        bdir = Path(store.blocks_path(tier)) / f"block_date={d}"
+        if bdir.exists():
+            shutil.rmtree(bdir)
+            stats.append(
+                {
+                    "run_id": run_id,
+                    "batch_id": batch_id,
+                    "tier": f"blocks_{tier}",
+                    "partition_key": f"block_date={d}",
+                    "rows_in": 0,
+                    "rows_out": 0,
+                    "min_ts": None,
+                    "max_ts": None,
+                    "committed_seq": -1,
+                }
+            )
+    return stats
 
 
 def ingest_batches(
@@ -279,12 +285,14 @@ def merge_quarantine(
     Scale shape: late data clusters near the append boundary, so the
     rewrite set is a handful of day partitions regardless of table
     size; everything else is partition-pruned out of both the read
-    and the write. One shuffle per tier recompute, same plans as the
-    original ingest.
+    and the write. One shuffle per tier recompute: the merged raw days
+    go through `turn_partials` into `merge_tier_partitions`, the same
+    plan as the ingest's tier merges.
     """
     import shutil
     from pathlib import Path
 
+    placeable = None
     store.acquire_writer_lock()
     try:
         qdir = Path(store.root) / "_quarantine"
@@ -360,34 +368,16 @@ def merge_quarantine(
             .where(F.col("ts_date").isin(days))
             .drop("ts_date")
         )
-        tiers = {"1m": rollup_from_raw(raw_days, "1m")}
-        tiers["1h"] = reaggregate(tiers["1m"], "1h")
-        tiers["1d"] = reaggregate(tiers["1h"], "1d")
+        turns = turn_partials(raw_days)
         stats = []
         ov = store.load_overview()
         merge_batch = ov.last_batch_id + 1
-        for tier, out in tiers.items():
-            store.overwrite_tier_partitions(out, tier)
+        for tier in ("1m", "1h", "1d"):
+            store.merge_tier_partitions(turns, tier)
             # the tier's derived compressed block store shares the day
             # layout; its blocks for a merged day now encode PRE-merge
             # values — drop them (mirrors retention's block handling)
-            for d in days:
-                bdir = Path(store.blocks_path(tier)) / f"block_date={d}"
-                if bdir.exists():
-                    shutil.rmtree(bdir)
-                    stats.append(
-                        {
-                            "run_id": run_id,
-                            "batch_id": merge_batch,
-                            "tier": f"blocks_{tier}",
-                            "partition_key": f"block_date={d}",
-                            "rows_in": 0,
-                            "rows_out": 0,
-                            "min_ts": None,
-                            "max_ts": None,
-                            "committed_seq": -1,
-                        }
-                    )
+            stats += _drop_stale_blocks(store, tier, days, run_id, merge_batch)
             stats.append(
                 {
                     "run_id": run_id,
@@ -405,8 +395,9 @@ def merge_quarantine(
         store.append_checkpoint(spark, stats)
         ov.last_batch_id = merge_batch
         store.save_overview(ov)
-        placeable.unpersist()
         shutil.rmtree(frozen)
         return {"merged": n_late, "unplaceable": n_null, "days": sorted(days)}
     finally:
+        if placeable is not None:
+            placeable.unpersist()
         store.release_writer_lock()

@@ -61,6 +61,16 @@ def test_rollup_job_with_subset_flags(spark, transcripts, input_parquet, tmp_pat
     assert (tier.agg(F.sum("n_tool_calls")).collect()[0][0] or 0) == 0
     # blocks written for the requested parameters
     assert (Path(store_root) / "blocks_1h").exists()
+    # the report's counts, observed on the writes, match the store
+    for t in ("1m", "1h", "1d"):
+        on_disk = spark.read.parquet(f"{store_root}/tiers/{t}").count()
+        assert res["tier_rows"][t] == on_disk, t
+    expected_turns = (
+        transcripts.where(F.col("conv_id").between("conv000000", "conv000019"))
+        .where(F.col("ts").between("2025-01-01 00:00:00", "2025-01-02 23:59:59"))
+        .count()
+    )
+    assert res["turns"] == expected_turns
 
 
 def test_store_tool_read_extend_export(spark, transcripts, tmp_path):

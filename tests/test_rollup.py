@@ -10,11 +10,13 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from smos_spark.operators.rollup import (
     reaggregate,
     rollup_from_raw,
     salted_rollup_from_raw,
+    turn_partials,
     with_derived,
 )
 
@@ -67,6 +69,31 @@ def test_rollup_matches_pandas_oracle(transcripts, transcripts_pdf, tier):
         )
     assert (got.first_ts.values == exp.first_ts.values).all()
     assert (got.last_ts.values == exp.last_ts.values).all()
+
+
+@pytest.mark.parametrize("tier", ["1m", "1h", "1d"])
+def test_turn_partials_reaggregate_equals_rollup(spark, transcripts, tier):
+    """Merging one-turn partials is exactly a rollup from raw — values,
+    NULLs and types — including turns with a NULL role, tool, text or
+    conv_id and empty text, which the synth data never produces."""
+    edge = spark.createDataFrame(
+        [
+            ("conv000001", 900, None, "hi", None, "2025-01-01 00:00:05"),
+            ("conv000001", 901, "tool", None, "grep", "2025-01-01 00:00:40"),
+            ("conv000001", 902, "user", "", None, "2025-01-01 00:00:41"),
+            ("edge", 0, None, None, None, "2025-01-02 10:00:00"),
+            ("edge", 1, "system", None, "x", "2025-01-02 10:00:30"),
+            (None, 0, "user", "orphan", None, "2025-01-01 00:00:07"),
+            (None, 1, "assistant", None, None, "2025-01-01 00:59:59"),
+        ],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    df = transcripts.unionByName(edge)
+    got = reaggregate(turn_partials(df), tier)
+    exp = rollup_from_raw(df, tier)
+    assert got.dtypes == exp.dtypes
+    assert got.exceptAll(exp).isEmpty() and exp.exceptAll(got).isEmpty()
+    assert got.count() == exp.count()
 
 
 @pytest.mark.parametrize("pair", [("1m", "1h"), ("1h", "1d")])

@@ -50,6 +50,32 @@ def test_pearson_partition_invariant(spark, pairs):
     assert a == b
 
 
+def test_pearson_exact_beyond_int64_squares(spark):
+    """|x| ≈ 4e9 makes x² overflow int64 (ARITHMETIC_OVERFLOW under
+    ANSI); the decimal moments keep the result exact."""
+    from fractions import Fraction
+
+    xs = [4_000_000_000, -4_100_000_003, 3_900_000_017]
+    ys = [1, 5, 2]
+    df = spark.createDataFrame(
+        [("g", x, y) for x, y in zip(xs, ys)], "g string, x long, y long"
+    )
+    got = grouped_pearson(df, "x", "y", ["g"]).collect()[0]
+
+    n = Fraction(len(xs))
+    sx, sy = Fraction(sum(xs)), Fraction(sum(ys))
+    num = n * sum(Fraction(x * y) for x, y in zip(xs, ys)) - sx * sy
+    d1 = n * sum(Fraction(x * x) for x in xs) - sx * sx
+    d2 = n * sum(Fraction(y * y) for y in ys) - sy * sy
+    corr = float(num) / math.sqrt(float(d1) * float(d2))
+    assert got["n_pairs"] == 3
+    assert got["corr_ppm"] == math.floor(corr * 1_000_000)
+    # the exact correlation (num/√(d1·d2), rational before the root)
+    # agrees to the ppm
+    exact_sq = num * num / (d1 * d2)
+    assert abs(got["corr_ppm"] / 1e6 - math.copysign(math.sqrt(exact_sq), num)) < 2e-6
+
+
 def test_histogram_counts_and_edges(spark):
     df = spark.createDataFrame(
         [(float(v),) for v in (0, 49.9, 50, 99.9, 100, -0.1, -50)] + [(None,)],

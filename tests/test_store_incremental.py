@@ -209,16 +209,66 @@ def test_ingest_batch_driver_job_budget(spark, transcripts, tmp_path):
     sc.setJobGroup("other", "")
     n1 = len(tracker.getJobIdsForGroup("ingest_b1"))
 
-    # bounds + raw append + 3 tier writes (+ checkpoint read/append);
-    # AQE materializes shuffle stages as separate jobs so the budget
-    # is not exactly the logical action count — it leaves slack for
-    # those but forbids the old per-tier min()+count() metric pattern
-    # (which added 6+ scan jobs per batch)
-    # measured baseline: 12 (create) / 21 (merge; AQE stage jobs for
-    # the 3x read-merge-rewrite); the legacy per-tier min()+count()
-    # metric pattern adds ~8 more scan jobs on top
-    assert n0 <= 14, f"first batch ran {n0} jobs"
-    assert n1 <= 23, f"merge batch ran {n1} jobs"
+    # bounds + raw append + 3 tier merges (+ checkpoint probe/append);
+    # AQE materializes each write's one shuffle stage as its own job,
+    # so the budget is not exactly the logical action count. Measured:
+    # 12 (create) / 13 (merge). A second shuffle per tier merge, or a
+    # per-tier min()+count() metric scan, breaks it.
+    assert n0 <= 12, f"first batch ran {n0} jobs"
+    assert n1 <= 14, f"merge batch ran {n1} jobs"
+
+
+def test_merge_tier_partitions_one_shuffle(spark, transcripts_pdf, tmp_path, monkeypatch):
+    """A tier merge shuffles once: repartitioning on the partition
+    columns already clusters the merge's grouping keys, so neither the
+    aggregation nor the writer's sort adds an exchange. The merged tier
+    equals a rollup of all the turns."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from smos_spark.operators.rollup import turn_partials
+
+    raw = spark.createDataFrame(transcripts_pdf)
+    old, new = raw.where(F.col("conv_id") < "conv000030"), raw.where(
+        F.col("conv_id") >= "conv000030"
+    )
+    store = TranscriptStore(tmp_path / "plan", n_buckets=4)
+    store.merge_tier_partitions(turn_partials(old), "1h")  # creates the tier
+
+    plans = []
+    write = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    overlap = store.read_tier_since(spark, "1h", "2025-01-01")
+    store.merge_tier_partitions(overlap.unionByName(turn_partials(new)), "1h")
+    monkeypatch.undo()
+
+    assert len(plans) == 1
+    assert plans[0].count("Exchange") == 1, plans[0]
+    got = store.read_tier(spark, "1h")
+    exp = rollup_from_raw(raw, "1h")
+    assert got.exceptAll(exp).isEmpty() and exp.exceptAll(got).isEmpty()
+
+
+def test_failed_tier_merge_unpersists_batch(spark, transcripts, tmp_path, monkeypatch):
+    """A batch whose tier write fails is not left cached: retries
+    (foreachBatch re-runs) must not stack cached copies."""
+    store = TranscriptStore(tmp_path / "leak", n_buckets=4)
+    batch = transcripts.where(F.col("conv_id") < "conv000020")
+
+    def failing_merge(self, rows, tier, obs=None):
+        raise RuntimeError("tier write failed")
+
+    monkeypatch.setattr(TranscriptStore, "merge_tier_partitions", failing_merge)
+    jsc = spark.sparkContext._jsc
+    before = sorted(jsc.getPersistentRDDs().keys())
+    for _ in range(2):  # a failure, then its retry
+        with pytest.raises(RuntimeError, match="tier write failed"):
+            ingest_batch(store, batch, run_id="leak", batch_id=0)
+        assert sorted(jsc.getPersistentRDDs().keys()) == before
 
 
 def test_export_subset_roundtrip(spark, transcripts, tmp_path):
