@@ -43,7 +43,9 @@ crossing rows are sparse, and the documented mitigation is to
 pre-filter to crossing rows plus a per-bucket carry — not implemented
 until a workload needs it (see operators/dispatch.py for the
 auto-dispatch pattern).  A key's alert state is O(1); the streaming
-twin below runs in bounded state at any stream length.
+twins are fold steps on streaming/fold.py's `keyed_fold_stream` (which
+states their ordering and lateness contract) and run in bounded state
+at any stream length.
 
 Reference analog: the reference's quality-flag gating raises/clears a
 per-cell usability verdict from threshold crossings of RFI fractions
@@ -55,9 +57,13 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from smos_spark.streaming.fold import keyed_fold_stream, schema_ddl
 
 __all__ = [
     "drawdown_alerts",
@@ -131,30 +137,18 @@ def hysteresis_stream(
     tie_cols: Sequence[str] = ("event_id",),
     watermark: str = "1 hour",
 ):
-    """Structured Streaming twin of `hysteresis_alerts` (§2.8 parity —
-    the same incremental-path contract as anomaly.cusum_stream).
+    """Structured Streaming twin of `hysteresis_alerts`: a fold step on
+    `keyed_fold_stream` (ordering and lateness contract in
+    streaming/fold.py).
 
     State per key is the batch fold's carry — (current alert state as
-    -1/0/+1, last event-time micros), 16 bytes, O(1) in stream length
-    — maintained across micro-batches via applyInPandasWithState.
-    Emits ONLY transition rows (append mode; ``events_only=True``
+    -1/0/+1, last event-time micros), 16 bytes, O(1) in stream length.
+    Emits ONLY transition rows (append mode; the ``events_only=True``
     batch twin), each exactly once; row-for-row equal to the batch
-    operator over the same rows (pinned in
-    test_hysteresis_stream_matches_batch).
-
-    Ordering contract (mirrors cusum_stream): a key's micro-batch
-    chunks are concatenated and sorted once by (ts, *ties); a row
-    arriving in a later micro-batch with ts earlier than the key's
-    last processed ts cannot re-enter the fold and is DROPPED — bound
-    disorder with the source watermark.  State is kept for the key's
-    lifetime (eviction would silently reset the alert to inactive).
+    operator over the same rows.
     """
     if not lo < hi:
         raise ValueError("need lo < hi (dead band between them)")
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     keys = list(key_cols)
     ties = list(tie_cols)
     src = stream.where(
@@ -165,25 +159,9 @@ def hysteresis_stream(
         *[F.col(t) for t in ties],
         F.col(value_col).cast("double").alias(value_col),
     )
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
-    ) + ", alert_active int, event string"
-    state_schema = "state int, last_us long"
 
-    def _fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout configured
-            state.remove()
-            return iter([])
-        s0, last_us = state.get if state.exists else (0, None)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return iter([])
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pdf = pdf.sort_values(["_ts_us", *ties], kind="mergesort")
-        if last_us is not None:
-            pdf = pdf[pdf["_ts_us"] >= last_us]
-        if not len(pdf):
-            return iter([])
+    def step(carry, pdf):
+        (s0,) = carry
         v = pdf[value_col].to_numpy(dtype=np.float64)
         cls = np.where(v >= hi, 1.0, np.where(v <= lo, -1.0, np.nan))
         # seeded LOCF: prepend the carried state as a virtual first
@@ -196,26 +174,16 @@ def hysteresis_stream(
         )
         active = (filled == 1).astype(np.int64)
         prev = np.concatenate(([np.int64(1 if s0 == 1 else 0)], active[:-1]))
-        state.update((int(filled[-1]), int(pdf["_ts_us"].iloc[-1])))
         mask = active != prev
-        if not mask.any():
-            return iter([])
-        out = pdf.loc[mask].drop(columns=["_ts_us"]).copy()
-        out["alert_active"] = active[mask].astype(np.int32)
-        out["event"] = np.where(active[mask] == 1, "raise", "clear")
-        return iter([out])
-
-    return (
-        src.withWatermark(ts_col, watermark)
-        .withColumn("_ts_us", F.unix_micros(F.col(ts_col).cast("timestamp")))
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        out = pdf.loc[mask].assign(
+            alert_active=active[mask].astype(np.int32),
+            event=np.where(active[mask] == 1, "raise", "clear"),
         )
+        return (int(filled[-1]),), out
+
+    return keyed_fold_stream(
+        src, keys, ts_col, ties, "state int", (0,), step,
+        schema_ddl(src) + ", alert_active int, event string", watermark,
     )
 
 
@@ -317,29 +285,19 @@ def threshold_hold_stream(
     tie_cols: Sequence[str] = ("event_id",),
     watermark: str = "1 hour",
 ):
-    """Structured Streaming twin of `threshold_hold_alerts` (§2.8
-    parity — the hysteresis_stream contract applied to the `for:`
-    hold).
+    """Structured Streaming twin of `threshold_hold_alerts`: a fold
+    step on `keyed_fold_stream` (ordering and lateness contract in
+    streaming/fold.py).
 
     State per key is the batch fold's carry — (current run's start
     micros or the no-run sentinel, whether the alert was firing, last
     processed micros), 24 bytes, O(1) in stream length.  Emits ONLY
     transition rows ('fire'/'resolve'; the ``events_only=True`` batch
     twin), each exactly once, row-for-row equal to batch over the same
-    rows (pinned in test_threshold_hold_stream_matches_batch).
-
-    Ordering contract (cusum_stream's): chunks concat+sort once by
-    (ts, *ties); rows earlier than the key's last processed ts are
-    DROPPED — bound disorder with the source watermark.  State is kept
-    for the key's lifetime: evicting it would forget an open run and
-    silently re-age the alert from zero.
+    rows.
     """
     if hold_sec < 0:
         raise ValueError("hold_sec must be >= 0")
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     keys = list(key_cols)
     ties = list(tie_cols)
     hold_us = int(round(hold_sec * 1_000_000))
@@ -351,26 +309,10 @@ def threshold_hold_stream(
         *[F.col(t) for t in ties],
         F.col(value_col).cast("double").alias(value_col),
     )
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
-    ) + ", cond int, firing int, event string"
-    state_schema = "run_start_us long, was_firing int, last_us long"
     _NONE = -(1 << 62)
 
-    def _fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout configured
-            state.remove()
-            return iter([])
-        run0, wf0, lus = state.get if state.exists else (_NONE, 0, None)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return iter([])
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pdf = pdf.sort_values(["_ts_us", *ties], kind="mergesort")
-        if lus is not None:
-            pdf = pdf[pdf["_ts_us"] >= lus]
-        if not len(pdf):
-            return iter([])
+    def step(carry, pdf):
+        run0, wf0 = carry
         us = pdf["_ts_us"].to_numpy(dtype=np.int64)
         v = pdf[value_col].to_numpy(dtype=np.float64)
         cond = v >= hi
@@ -393,27 +335,18 @@ def threshold_hold_stream(
             int(run_start[-1]) if cond[-1] and not np.isnan(run_start[-1])
             else _NONE
         )
-        state.update((tail_run, int(firing[-1]), int(us[-1])))
         mask = firing != prev_f
-        if not mask.any():
-            return iter([])
-        out = pdf.loc[mask].drop(columns=["_ts_us"]).copy()
-        out["cond"] = cond[mask].astype(np.int32)
-        out["firing"] = firing[mask].astype(np.int32)
-        out["event"] = np.where(firing[mask] == 1, "fire", "resolve")
-        return iter([out])
-
-    return (
-        src.withWatermark(ts_col, watermark)
-        .withColumn("_ts_us", F.unix_micros(F.col(ts_col).cast("timestamp")))
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        out = pdf.loc[mask].assign(
+            cond=cond[mask].astype(np.int32),
+            firing=firing[mask].astype(np.int32),
+            event=np.where(firing[mask] == 1, "fire", "resolve"),
         )
+        return (tail_run, int(firing[-1])), out
+
+    return keyed_fold_stream(
+        src, keys, ts_col, ties, "run_start_us long, was_firing int",
+        (_NONE, 0), step,
+        schema_ddl(src) + ", cond int, firing int, event string", watermark,
     )
 
 
@@ -481,26 +414,18 @@ def drawdown_alerts_stream(
     tie_cols: Sequence[str] = ("event_id",),
     watermark: str = "1 hour",
 ):
-    """Structured Streaming twin of `drawdown_alerts` (§2.8 parity).
+    """Structured Streaming twin of `drawdown_alerts`: a fold step on
+    `keyed_fold_stream` (ordering and lateness contract in
+    streaming/fold.py).
 
     A record drawdown is knowable AT its own row — running peak and
     running record are both carryable scalars — so the streamed alerts
     equal batch row-for-row with zero emission lag (gap_alerts'
     class). State per key: (peak, record drawdown, last event-time
     µs) — 24 bytes, O(1).
-
-    Ordering contract (cusum_stream's): each micro-batch's chunks are
-    concatenated and sorted once by (ts, *ties); rows at or earlier
-    than the key's last processed µs are DROPPED — bound disorder with
-    the source watermark. (A dropped late row cannot retroactively
-    deepen an already-published record.)
     """
     if threshold <= 0:
         raise ValueError("threshold must be a positive integer")
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     keys = list(key_cols)
     ties = list(tie_cols)
     src = stream.where(
@@ -511,29 +436,14 @@ def drawdown_alerts_stream(
         *[F.col(t) for t in ties],
         F.col(value_col).cast("long").alias("_v"),
     )
-    key_fields = [f for f in src.schema.fields if f.name in keys]
     out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in key_fields)
-        + (", " if key_fields else "")
+        schema_ddl(src.select(*keys)) + (", " if keys else "")
         + f"{ts_col} timestamp, value long, peak long, drawdown long"
     )
-    state_schema = "peak long, record long, last_us long"
     thr = int(threshold)
 
-    def _fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout configured
-            state.remove()
-            return iter([])
-        peak0, rec0, lus = state.get if state.exists else (None, -1, None)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return iter([])
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pdf = pdf.sort_values(["_ts_us", *ties], kind="mergesort")
-        if lus is not None:
-            pdf = pdf[pdf["_ts_us"] > lus]
-        if not len(pdf):
-            return iter([])
+    def step(carry, pdf):
+        peak0, rec0 = carry
         vs = pdf["_v"].to_numpy(dtype=np.int64)
         seed = np.int64(peak0) if peak0 is not None else vs[0]
         peak = np.maximum.accumulate(np.maximum(vs, seed))
@@ -544,32 +454,15 @@ def drawdown_alerts_stream(
         )
         mask = (dd >= thr) & (dd > prev)
         us = pdf["_ts_us"].to_numpy(dtype=np.int64)
-        state.update((
-            int(peak[-1]),
-            int(max(rec0, int(dd.max()))),
-            int(us[-1]),
-        ))
-        if not mask.any():
-            return iter([])
         out = pd.DataFrame({
             ts_col: pd.to_datetime(us[mask], unit="us"),
             "value": vs[mask],
             "peak": peak[mask],
             "drawdown": dd[mask],
         })
-        for k in keys:
-            out.insert(0, k, pdf[k].iloc[0])
-        return iter([out])
+        return (int(peak[-1]), int(max(rec0, int(dd.max())))), out
 
-    return (
-        src.withWatermark(ts_col, watermark)
-        .withColumn("_ts_us", F.unix_micros(F.col(ts_col).cast("timestamp")))
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold_stream(
+        src, keys, ts_col, ties, "peak long, record long", (None, -1), step,
+        out_schema, watermark,
     )

@@ -36,10 +36,10 @@ CUSUM: deviations measured against a KNOWN target mean rather than the
 per-key sample mean — the only form a stream can compute, since the
 sample mean needs the whole series). The batch variant is the same
 closed windowed form minus the per-key aggregates; the streaming twin
-carries O(1) state per key — (last statistic, last event-time) — via
-applyInPandasWithState and is row-for-row equal to the batch operator
-(pinned in test_cusum_stream_matches_batch), the same §2.8
-incremental-path contract as smooth.ewma_stream.
+is a fold step on streaming/fold.py's `keyed_fold_stream` (which
+states its ordering and lateness contract), carrying O(1) state per
+key — (last statistic, last event-time) — and is row-for-row equal to
+the batch operator.
 
 Reference analog: the reference ships per-variable validity masks and
 fixed-decimal image statistics (/root/reference/src/smos/smos_ic/
@@ -55,6 +55,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from smos_spark.streaming.fold import keyed_fold_stream, schema_ddl
 
 __all__ = [
     "seasonal_anomaly",
@@ -431,25 +433,18 @@ def cusum_stream(
     cents: int = 100,
     watermark: str = "1 hour",
 ):
-    """Structured Streaming twin of `cusum_fixed` (§2.8 parity, the
-    same incremental-path contract as smooth.ewma_stream).
+    """Structured Streaming twin of `cusum_fixed`: a fold step on
+    `keyed_fold_stream` (ordering and lateness contract in
+    streaming/fold.py).
 
     State per key is exactly the batch fold's carry — (current CUSUM
-    statistic in cents, last event-time micros), 16 bytes — maintained
-    across micro-batches via applyInPandasWithState, so the streaming
-    flag set and cusum_cents values are row-for-row IDENTICAL to
-    running `cusum_fixed` over the same rows in batch (pinned in
-    test_cusum_stream_matches_batch). Within each micro-batch the
-    kernel evaluates the fold with the SAME vectorized closed form
-    (cumsum + running-min over the state-seeded deviation array — no
-    per-row Python), emitting only flagged rows (append mode).
-
-    Ordering contract (mirrors ewma_stream): rows within a micro-batch
-    are sorted by (ts, *ties); a row arriving in a later micro-batch
-    with ts earlier than the key's last processed ts cannot re-enter
-    the fold and is DROPPED — bound disorder with the source
-    watermark. State is kept for the key's lifetime (eviction would
-    silently reset the statistic). Rows with NULL ts or NULL value are
+    statistic in cents, last event-time micros), 16 bytes — so the
+    streaming flag set and cusum_cents values are row-for-row
+    IDENTICAL to running `cusum_fixed` over the same rows in batch.
+    Within each micro-batch the kernel evaluates the fold with the
+    SAME vectorized closed form (cumsum + running-min over the
+    state-seeded deviation array — no per-row Python), emitting only
+    flagged rows (append mode). Rows with NULL ts or NULL value are
     excluded, as in batch.
     """
     if h_cents <= 0:
@@ -457,8 +452,6 @@ def cusum_stream(
     if slack_cents < 0:
         raise ValueError("slack_cents must be >= 0")
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     keys = list(key_cols)
     ties = list(tie_cols)
@@ -474,54 +467,21 @@ def cusum_stream(
         .cast("long")
         .alias("value_cents"),
     )
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
-    ) + ", cusum_cents long"
-    state_schema = "s long, last_us long"
 
-    def _fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout configured
-            state.remove()
-            return iter([])
-        s0, last_us = state.get if state.exists else (0, None)
-        # concat + sort once: chunks arrive in arbitrary row order
-        # (see ewma_stream's note) — bounded by this key's rows in
-        # THIS micro-batch, state stays O(1)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return iter([])
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pdf = pdf.sort_values(["_ts_us", *ties], kind="mergesort")
-        if last_us is not None:
-            pdf = pdf[pdf["_ts_us"] >= last_us]
-        if not len(pdf):
-            return iter([])
+    def step(carry, pdf):
         d = pdf["value_cents"].to_numpy(dtype=np.int64) - shift
         # seeded closed form: fold from state s0 == closed form over
         # the array with s0 prepended as a virtual first deviation
         # (max(0, 0 + s0) = s0 since s0 >= 0), then drop the seed row
-        p = np.cumsum(np.concatenate(([np.int64(s0)], d)))
+        p = np.cumsum(np.concatenate(([np.int64(carry[0])], d)))
         runmin = np.minimum.accumulate(np.minimum(p, 0))
         s_all = (p - runmin)[1:]
         mask = s_all > h
-        state.update((int(s_all[-1]), int(pdf["_ts_us"].iloc[-1])))
-        if not mask.any():
-            return iter([])
-        out = pdf.loc[mask].drop(columns=["_ts_us"]).copy()
-        out["cusum_cents"] = s_all[mask]
-        return iter([out])
+        return (int(s_all[-1]),), pdf.loc[mask].assign(cusum_cents=s_all[mask])
 
-    return (
-        src.withWatermark(ts_col, watermark)
-        .withColumn("_ts_us", F.unix_micros(F.col(ts_col).cast("timestamp")))
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold_stream(
+        src, keys, ts_col, ties, "s long", (0,), step,
+        schema_ddl(src) + ", cusum_cents long", watermark,
     )
 
 

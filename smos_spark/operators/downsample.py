@@ -29,6 +29,10 @@ four orderings are in-partition sorts on the same Exchange.
 bucket) with a two-level adjacency carry across non-empty buckets —
 the hot-key path, proven identical to the keyed versions in tests.
 
+The streaming twins (``counter_rate_stream``, ``gap_alerts_stream``)
+are fold steps on streaming/fold.py's ``keyed_fold_stream``, which
+states their ordering and lateness contract.
+
 All comparisons are on raw column values (ordering, never float
 arithmetic except the caller-visible counter deltas), so the DuckDB
 twins in ``__spark_entry__.oracle_sql`` match exactly.
@@ -38,12 +42,15 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from smos_spark.functions.joins import null_safe_join
 from smos_spark.operators.rollup import _width_bucket
+from smos_spark.streaming.fold import keyed_fold_stream, schema_ddl
 
 __all__ = [
     "m4_downsample",
@@ -465,35 +472,27 @@ def counter_rate_stream(
     tie_cols: Sequence[str] = ("event_id",),
     watermark: str = "1 hour",
 ):
-    """Structured Streaming twin of `counter_rate` (§2.8 parity — the
-    slo_stream emit-on-close contract applied to Prometheus
-    ``increase()`` semantics).
+    """Structured Streaming twin of `counter_rate` (the slo_stream
+    emit-on-close contract applied to Prometheus ``increase()``
+    semantics): a fold step on `keyed_fold_stream` (ordering and
+    lateness contract in streaming/fold.py).
 
     State per key is the batch fold's carry: the OPEN bucket's partial
-    (bucket index, increase, n_samples) plus the last sample's
-    (value, event-time micros) for the cross-bucket / cross-batch
-    predecessor, and the last emitted bucket index — six int64s, O(1)
-    in stream length.  A bucket's row is emitted exactly once, when a
+    (bucket index, increase, n_samples), the last sample's value for
+    the cross-bucket / cross-batch predecessor and the last event-time
+    micros — five int64s, O(1) in stream length.  A bucket's row is emitted exactly once, when a
     LATER bucket first appears for the key, so the streaming output
     equals the batch output minus each key's final still-open bucket —
-    row-for-row identical values (pinned in
-    test_counter_rate_stream_matches_batch).
+    row-for-row identical values.  A late row can never land in an
+    already-published bucket: that bucket ends before the key's last
+    processed ts.
 
     Exactness contract: the counter column must be INTEGER-typed (the
     exact-sum guarantee; float counters would make the per-bucket sum
     order-sensitive) — enforced, ValueError otherwise.  Reset handling
     is the batch rule verbatim: delta = v - prev when monotone, else v;
     a key's first sample contributes 0.
-
-    Ordering contract (cusum_stream's): a key's micro-batch chunks are
-    concatenated and sorted once by (ts, *ties); rows earlier than the
-    key's last processed ts, or in an already-published bucket, are
-    DROPPED — bound disorder with the source watermark.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     width_us = int(round(width_sec * 1_000_000))
     if width_us <= 0:
         raise ValueError(f"width_sec must be positive, got {width_sec}")
@@ -513,39 +512,16 @@ def counter_rate_stream(
             f"counter column must be integer-typed for the exact-sum "
             f"contract, got {vtype}"
         )
-    key_fields = [f for f in src.schema.fields if f.name in keys]
     out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in key_fields)
-        + (", " if key_fields else "")
+        schema_ddl(src.select(*keys)) + (", " if keys else "")
         + "bucket_start timestamp, increase long, n_samples long"
-    )
-    state_schema = (
-        "open_bucket long, open_inc long, open_n long, "
-        "last_v long, last_us long, last_emitted long"
     )
     _NONE = -(1 << 62)
 
-    def _fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout configured
-            state.remove()
-            return iter([])
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return iter([])
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pdf = pdf.sort_values(["_ts_us", *ties], kind="mergesort")
-        if state.exists:
-            ob, oi, on, lv, lus, lem = state.get
-        else:
-            ob, oi, on, lv, lus, lem = _NONE, 0, 0, _NONE, None, _NONE
-        if lus is not None and lus != _NONE:
-            pdf = pdf[pdf["_ts_us"] >= lus]
+    def step(carry, pdf):
+        ob, oi, on, lv = carry
         us = pdf["_ts_us"].to_numpy(dtype=np.int64)
         buckets = us // width_us
-        keep = buckets > lem if lem != _NONE else np.ones(len(us), bool)
-        pdf, us, buckets = pdf[keep], us[keep], buckets[keep]
-        if not len(us):
-            return iter([])
         v = pdf["_v"].to_numpy(dtype=np.int64)
         prev = np.concatenate(
             ([np.int64(lv if lv != _NONE else 0)], v[:-1])
@@ -558,7 +534,7 @@ def counter_rate_stream(
         inc = np.bincount(inv, weights=delta).astype(np.int64)
         cnt = np.bincount(inv).astype(np.int64)
         if ob != _NONE:
-            if len(ub) and ub[0] == ob:
+            if ub[0] == ob:
                 inc[0] += oi
                 cnt[0] += on
             else:
@@ -566,33 +542,18 @@ def counter_rate_stream(
                 inc = np.concatenate(([np.int64(oi)], inc))
                 cnt = np.concatenate(([np.int64(on)], cnt))
         # all but the last (max) bucket are now closed: emit them
-        state.update((
-            int(ub[-1]), int(inc[-1]), int(cnt[-1]),
-            int(v[-1]), int(us[-1]),
-            int(ub[-2]) if len(ub) > 1 else lem,
-        ))
-        if len(ub) == 1:
-            return iter([])
+        carry = (int(ub[-1]), int(inc[-1]), int(cnt[-1]), int(v[-1]))
         out = pd.DataFrame({
             "bucket_start": pd.to_datetime(ub[:-1] * width_us, unit="us"),
             "increase": inc[:-1],
             "n_samples": cnt[:-1],
         })
-        for k in keys:
-            out.insert(0, k, pdf[k].iloc[0])
-        return iter([out])
+        return carry, out
 
-    return (
-        src.withWatermark(ts_col, watermark)
-        .withColumn("_ts_us", F.unix_micros(F.col(ts_col).cast("timestamp")))
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold_stream(
+        src, keys, ts_col, ties,
+        "open_bucket long, open_inc long, open_n long, last_v long",
+        (_NONE, 0, 0, _NONE), step, out_schema, watermark,
     )
 
 
@@ -643,25 +604,18 @@ def gap_alerts_stream(
     tie_cols: Sequence[str] = ("event_id",),
     watermark: str = "1 hour",
 ):
-    """Structured Streaming twin of `gap_alerts` (§2.8 parity).
+    """Structured Streaming twin of `gap_alerts`: a fold step on
+    `keyed_fold_stream` (ordering and lateness contract in
+    streaming/fold.py).
 
     A gap is knowable exactly when its CLOSING sample arrives, so the
     streaming output is row-for-row IDENTICAL to batch over the same
     rows — no open-tail deficit at all, unlike the emit-on-close bucket
-    twins (pinned in test_gap_alerts_stream_matches_batch).  State per
-    key is the last sample's event-time micros — 8 bytes, O(1).
-
-    Ordering contract (cusum_stream's): chunks concat+sort once by
-    (ts, *ties); rows earlier than the key's last processed ts are
-    DROPPED — bound disorder with the source watermark.  (A dropped
-    late row cannot retroactively split an already-published gap.)
+    twins.  State per key is the previous sample's event-time micros
+    (plus the fold's last_us) — 16 bytes, O(1).
     """
     if min_gap_sec <= 0:
         raise ValueError("min_gap_sec must be positive")
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     keys = list(key_cols)
     ties = list(tie_cols)
     min_gap_us = int(round(min_gap_sec * 1_000_000))
@@ -670,57 +624,26 @@ def gap_alerts_stream(
         F.col(ts_col).cast("timestamp").alias(ts_col),
         *[F.col(t) for t in ties],
     )
-    key_fields = [f for f in src.schema.fields if f.name in keys]
     out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in key_fields)
-        + (", " if key_fields else "")
+        schema_ddl(src.select(*keys)) + (", " if keys else "")
         + "gap_start timestamp, gap_end timestamp, gap_us long"
     )
-    state_schema = "last_us long"
 
-    def _fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout configured
-            state.remove()
-            return iter([])
-        (lus,) = state.get if state.exists else (None,)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return iter([])
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pdf = pdf.sort_values(["_ts_us", *ties], kind="mergesort")
-        if lus is not None:
-            pdf = pdf[pdf["_ts_us"] >= lus]
-        if not len(pdf):
-            return iter([])
+    def step(carry, pdf):
+        (prev_us,) = carry
         us = pdf["_ts_us"].to_numpy(dtype=np.int64)
-        prev = np.concatenate(
-            ([np.int64(lus if lus is not None else -1)], us[:-1])
-        )
+        prev = np.concatenate(([us[0] if prev_us is None else prev_us], us[:-1]))
         gap = us - prev
-        mask = (gap >= min_gap_us) & (
-            np.arange(len(us)) > 0 if lus is None else np.ones(len(us), bool)
-        )
-        state.update((int(us[-1]),))
-        if not mask.any():
-            return iter([])
+        mask = gap >= min_gap_us
+        mask[0] &= prev_us is not None  # a key's first sample opens no gap
         out = pd.DataFrame({
             "gap_start": pd.to_datetime(prev[mask], unit="us"),
             "gap_end": pd.to_datetime(us[mask], unit="us"),
             "gap_us": gap[mask],
         })
-        for k in keys:
-            out.insert(0, k, pdf[k].iloc[0])
-        return iter([out])
+        return (int(us[-1]),), out
 
-    return (
-        src.withWatermark(ts_col, watermark)
-        .withColumn("_ts_us", F.unix_micros(F.col(ts_col).cast("timestamp")))
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold_stream(
+        src, keys, ts_col, ties, "prev_us long", (None,), step,
+        out_schema, watermark,
     )

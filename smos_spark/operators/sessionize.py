@@ -89,6 +89,12 @@ def sessionize_stream(
     the same schema as `session_stats` (session_id restarts per state
     lifetime).
 
+    Late rows: a row older than the open session's last turn but not
+    older than its start joins the open session without moving
+    `session_end` (or the timeout) back; a row older than the open
+    session's start is dropped: folding it in could extend or merge
+    with a session already emitted.
+
     In-batch gap splitting is vectorized: one diff + flatnonzero for
     the break positions, prefix sums for the segment aggregates — the
     Python loop runs per SESSION, not per row.
@@ -144,6 +150,14 @@ def sessionize_stream(
         for pdf in ([merged] if merged is not None else []):
             pdf = pdf.sort_values(["_ts_us", "turn_idx"], kind="mergesort")
             ts_us = pdf["_ts_us"].to_numpy(dtype="int64")
+            if start_us is not None:
+                # late rows (docstring): drop those before the open
+                # session's start; clamp those inside it to last_us so
+                # session_end and the timeout never move back
+                keep = ts_us >= start_us
+                pdf, ts_us = pdf[keep], np.maximum(ts_us[keep], last_us)
+                if not len(ts_us):
+                    break
             cum_tool = np.concatenate(
                 ([0], np.cumsum(pdf["tool"].notna().to_numpy(dtype="int64")))
             )

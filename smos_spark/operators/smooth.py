@@ -27,12 +27,11 @@ Exactness: the pandas recurrence multiplies exactly like DuckDB's
 on the contract data — so the operator ships an EXACT oracle despite
 being float recursion.
 
-`ewma_stream` is the Structured Streaming twin (§2.8 parity, the
-incremental-path contract of streaming/incremental.py applied to
-smoothing): applyInPandasWithState carries the identical (y, last_ts)
-state per key across micro-batches, so the streaming output equals
-the batch operator row-for-row (pinned in
-test_ewma_stream_matches_batch).
+`ewma_stream` / `des_stream` are the Structured Streaming twins: fold
+steps on `keyed_fold_stream` (streaming/fold.py states their ordering
+and lateness contract) that carry the batch operator's (y) / (s1, s2)
+per key, so the streaming output equals the batch operator
+row-for-row.
 """
 
 from __future__ import annotations
@@ -43,6 +42,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from smos_spark.streaming.fold import keyed_fold_stream, schema_ddl
 
 __all__ = ["ewma", "ewma_stream", "des", "des_stream"]
 
@@ -68,6 +69,17 @@ def _same_key(a, b) -> bool:
     return all(
         (x == y) or (pd.isna(x) and pd.isna(y)) for x, y in zip(a, b)
     )
+
+
+def _run_bounds(pdf: pd.DataFrame, keys: Sequence[str]) -> list[int]:
+    """Boundaries ``[0, s_1, ..., len(pdf)]`` of the runs of equal key
+    tuples in a key-sorted batch, NULL-safe like `_same_key`."""
+    change = np.zeros(len(pdf), dtype=bool)
+    for k in keys:
+        col = pdf[k]
+        change |= ((col != col.shift()) & ~(col.isna() & col.shift().isna())).to_numpy()
+    # row 0 always opens a run (its shift-compare is NULL-keyed)
+    return [0, *(np.flatnonzero(change[1:]) + 1).tolist(), len(pdf)]
 
 
 def ewma(
@@ -107,9 +119,7 @@ def ewma(
     arranged = src.repartition(n_parts, *keys).sortWithinPartitions(
         *keys, ts_col, *ties
     )
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
-    ) + f", {out_col} double"
+    schema = f"{schema_ddl(src)}, {out_col} double"
 
     def _stream(batches):
         carry_key: tuple | None = None
@@ -133,14 +143,7 @@ def ewma(
             if carry_key is not None and _same_key(
                 tuple(pdf.iloc[0][k] for k in keys), carry_key
             ):
-                change = None
-                for k in keys:
-                    col = pdf[k]
-                    neq = (col != col.shift()) & ~(col.isna() & col.shift().isna())
-                    change = neq if change is None else (change | neq)
-                breaks = np.flatnonzero(change.to_numpy())
-                breaks = breaks[breaks > 0]
-                end = int(breaks[0]) if len(breaks) else len(pdf)
+                end = _run_bounds(pdf, keys)[1]
                 out.iloc[:end, out.columns.get_loc(out_col)] = _seeded_ewma(
                     pdf[value_col].iloc[:end], alpha, carry_y
                 )
@@ -162,80 +165,32 @@ def ewma_stream(
     watermark: str = "1 hour",
 ):
     """Structured Streaming twin of `ewma`: per-key smoothed values
-    maintained across micro-batches via applyInPandasWithState.
+    maintained across micro-batches by `keyed_fold_stream`, under the
+    ordering and lateness contract stated in streaming/fold.py.
 
     State per key is exactly the batch operator's carry — (last
     smoothed y, last event-time micros), 16 bytes — so the streaming
     output is row-for-row IDENTICAL to running `ewma` over the same
-    rows in batch (the seeded continuation is bit-exact; pinned in
-    test_ewma_stream_matches_batch). Emits every input row of the
-    micro-batch with its smoothed value appended (outputMode append).
-
-    Ordering contract (the streaming monotonic guard, mirroring
-    incremental.py's tier append): within a micro-batch rows are
-    sorted by (ts, *ties); a row arriving in a LATER micro-batch with
-    ts earlier than the key's last processed ts cannot re-enter the
-    recurrence (its smoothed predecessor is already emitted) and is
-    DROPPED — bound disorder with the source watermark, which gates
-    how late such rows can be. State is kept for the lifetime of the
-    key (16 bytes/key; idle-key eviction would silently restart the
-    recursion on the next row, breaking the batch-equality contract).
-
-    Rows with NULL ts or NULL value are excluded, as in batch.
+    rows in batch (the seeded continuation is bit-exact). Emits every
+    input row of the micro-batch with its smoothed value appended
+    (outputMode append). Rows with NULL ts or NULL value are excluded,
+    as in batch.
     """
     if not (0.0 < alpha <= 1.0):
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     keys = list(key_cols)
     ties = list(tie_cols)
     src = stream.where(
         F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
     ).select(*keys, ts_col, *ties, value_col)
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
-    ) + f", {out_col} double"
-    state_schema = "y double, last_us long"
 
-    def _fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout configured
-            state.remove()
-            return iter([])
-        y, last_us = state.get if state.exists else (None, None)
-        # the engine hands one key's micro-batch rows as an iterator of
-        # Arrow chunks in ARBITRARY row order (only the grouping key is
-        # sorted) — a later chunk can carry earlier timestamps, so the
-        # chunks must be concatenated and sorted ONCE before the
-        # watermark filter and the recurrence run; per-chunk processing
-        # would misorder or silently drop on-time rows. State stays
-        # O(1); the concat is bounded by the key's rows in THIS
-        # micro-batch.
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return iter([])
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pdf = pdf.sort_values(["_ts_us", *ties], kind="mergesort")
-        if last_us is not None:
-            pdf = pdf[pdf["_ts_us"] >= last_us]
-        if not len(pdf):
-            return iter([])
-        vals = _seeded_ewma(pdf[value_col], alpha, y)
-        out = pdf.drop(columns=["_ts_us"]).copy()
-        out[out_col] = vals
-        state.update((float(vals[-1]), int(pdf["_ts_us"].iloc[-1])))
-        return iter([out])
+    def step(carry, pdf):
+        vals = _seeded_ewma(pdf[value_col], alpha, carry[0])
+        return (float(vals[-1]),), pdf.assign(**{out_col: vals})
 
-    return (
-        src.withWatermark(ts_col, watermark)
-        .withColumn("_ts_us", F.unix_micros(F.col(ts_col).cast("timestamp")))
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold_stream(
+        src, keys, ts_col, ties, "y double", (None,), step,
+        f"{schema_ddl(src)}, {out_col} double", watermark,
     )
 
 
@@ -307,9 +262,7 @@ def des(
     arranged = src.repartition(n_parts, *keys).sortWithinPartitions(
         *keys, ts_col, *ties
     )
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
-    ) + ", des_level double, des_trend double, des_forecast double"
+    schema = schema_ddl(src) + ", des_level double, des_trend double, des_forecast double"
 
     def _stream(batches):
         carry_key: tuple | None = None
@@ -317,15 +270,7 @@ def des(
         for pdf in batches:
             if not len(pdf):
                 continue
-            # group runs within the sorted batch
-            change = None
-            for k in keys:
-                col = pdf[k]
-                neq = (col != col.shift()) & ~(col.isna() & col.shift().isna())
-                change = neq if change is None else (change | neq)
-            starts = np.flatnonzero(change.to_numpy())
-            # row 0 always opens a run (its shift-compare is NULL-keyed)
-            bounds = [0, *[s for s in starts.tolist() if s > 0], len(pdf)]
+            bounds = _run_bounds(pdf, keys)
             s1_all = np.empty(len(pdf))
             s2_all = np.empty(len(pdf))
             for lo, hi in zip(bounds[:-1], bounds[1:]):
@@ -362,70 +307,28 @@ def des_stream(
     tie_cols: Sequence[str] = (),
     watermark: str = "1 hour",
 ):
-    """Structured Streaming twin of `des` (§2.8 parity, the same
-    incremental-path contract as `ewma_stream`): per-key (s1, s2,
-    last event-time µs) state — 24 bytes — carried across
-    micro-batches via applyInPandasWithState, so the streaming output
-    equals the batch operator row-for-row (pinned in
-    test_des_stream_matches_batch).  Ordering contract identical to
-    `ewma_stream`: in-batch sort by (ts, *ties); rows older than the
-    key's last processed ts are DROPPED (their smoothed successors
-    are already emitted); disorder is bounded by the source watermark.
+    """Structured Streaming twin of `des`: per-key (s1, s2, last
+    event-time µs) state — 24 bytes — carried across micro-batches by
+    `keyed_fold_stream` (ordering and lateness contract in
+    streaming/fold.py), so the streaming output equals the batch
+    operator row-for-row.
     """
     if not (0.0 < alpha < 1.0):
         raise ValueError(f"alpha must be in (0, 1), got {alpha}")
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     keys = list(key_cols)
     ties = list(tie_cols)
     src = stream.where(
         F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
     ).select(*keys, ts_col, *ties, value_col)
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
-    ) + ", des_level double, des_trend double, des_forecast double"
-    state_schema = "s1 double, s2 double, last_us long"
 
-    def _fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:  # pragma: no cover - NoTimeout configured
-            state.remove()
-            return iter([])
-        s1_0, s2_0, last_us = (
-            state.get if state.exists else (None, None, None)
-        )
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return iter([])
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        pdf = pdf.sort_values(["_ts_us", *ties], kind="mergesort")
-        if last_us is not None:
-            pdf = pdf[pdf["_ts_us"] >= last_us]
-        if not len(pdf):
-            return iter([])
-        s1, s2 = _seeded_des(pdf[value_col], alpha, s1_0, s2_0)
-        out = pdf.drop(columns=["_ts_us"]).copy()
+    def step(carry, pdf):
+        s1, s2 = _seeded_des(pdf[value_col], alpha, *carry)
         level, trend, fc = _des_outputs(s1, s2, alpha)
-        out["des_level"] = level
-        out["des_trend"] = trend
-        out["des_forecast"] = fc
-        state.update(
-            (float(s1[-1]), float(s2[-1]), int(pdf["_ts_us"].iloc[-1]))
-        )
-        return iter([out])
+        out = pdf.assign(des_level=level, des_trend=trend, des_forecast=fc)
+        return (float(s1[-1]), float(s2[-1])), out
 
-    return (
-        src.withWatermark(ts_col, watermark)
-        .withColumn("_ts_us", F.unix_micros(F.col(ts_col).cast("timestamp")))
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold_stream(
+        src, keys, ts_col, ties, "s1 double, s2 double", (None, None), step,
+        schema_ddl(src) + ", des_level double, des_trend double, des_forecast double",
+        watermark,
     )

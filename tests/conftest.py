@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from smos_spark.session import get_spark
@@ -25,3 +27,41 @@ def transcripts(spark):
 @pytest.fixture(scope="session")
 def transcripts_pdf(transcripts):
     return transcripts.toPandas()
+
+
+@pytest.fixture
+def run_stream(spark, tmp_path):
+    """Run a streaming query over file sources to completion.
+
+    ``run_stream(name, build, *inputs, mode="append")``: each input is a
+    list of DataFrames, written as one parquet file apiece and read
+    back as a file stream of one file per micro-batch, in list order.
+    ``build(*streams)`` returns the streaming query's DataFrame, which
+    runs with ``availableNow`` into the memory table ``name``; that
+    table is returned.
+    """
+    dirs = itertools.count()
+
+    def run(name, build, *inputs, mode="append"):
+        streams = []
+        for frames in inputs:
+            src = str(tmp_path / f"stream_src{next(dirs)}")
+            for f in frames:
+                f.coalesce(1).write.mode("append").parquet(src)
+            streams.append(
+                spark.readStream.schema(frames[0].schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+            )
+        q = (
+            build(*streams)
+            .writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return spark.table(name)
+
+    return run

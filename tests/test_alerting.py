@@ -7,7 +7,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 from smos_spark.operators.alerting import hysteresis_alerts, hysteresis_stream
 
@@ -106,68 +105,13 @@ def test_single_exchange_plan(spark, gauge):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_hysteresis_stream_matches_batch(spark, tmp_path):
-    """Streaming twin across 3 micro-batches == batch events_only
-    rows, row-for-row (the 16-byte state is the batch fold's carry)."""
-    from smos_spark.synth import synth_transcripts
+def test_hysteresis_stream_matches_batch(spark, run_stream):
+    """Streaming twin over a random micro-batch split == batch
+    events_only rows, row-for-row (case "hysteresis" of
+    test_stream_fold)."""
+    from test_stream_fold import check_fold_twin
 
-    turns = (
-        synth_transcripts(spark, n_conv=30, seed=23)
-        .where(F.col("ts").isNotNull())
-        .select(
-            "conv_id", "ts", "turn_idx",
-            F.length("text").cast("double").alias("value"),
-        )
-        .where(F.col("value").isNotNull())
-        .cache()
-    )
-    hi, lo = 600.0, 200.0
-    c1, c2 = turns.selectExpr(
-        "percentile_approx(ts, 0.33) as a",
-        "percentile_approx(ts, 0.66) as b",
-    ).collect()[0]
-    src = str(tmp_path / "src")
-    turns.where(F.col("ts") <= F.lit(c1)).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    turns.where(
-        (F.col("ts") > F.lit(c1)) & (F.col("ts") <= F.lit(c2))
-    ).coalesce(1).write.mode("append").parquet(src)
-    turns.where(F.col("ts") > F.lit(c2)).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    stream = (
-        spark.readStream.schema(turns.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        hysteresis_stream(
-            stream, "value", hi=hi, lo=lo,
-            key_cols=["conv_id"], tie_cols=["turn_idx"],
-            watermark="0 seconds",
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("hyst_stream_t")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = sorted(
-        (r["conv_id"], r["turn_idx"], r["alert_active"], r["event"])
-        for r in spark.table("hyst_stream_t").collect()
-    )
-    want = sorted(
-        (r["conv_id"], r["turn_idx"], r["alert_active"], r["event"])
-        for r in hysteresis_alerts(
-            turns, "value", hi=hi, lo=lo,
-            key_cols=["conv_id"], ts_col="ts", tie_cols=["turn_idx"],
-            events_only=True,
-        ).collect()
-    )
-    assert got == want and len(want) > 5
+    check_fold_twin(spark, run_stream, "hysteresis", split_seed=0)
 
 
 class TestThresholdHold:
@@ -248,72 +192,13 @@ class TestThresholdHold:
         )
         assert plan.count("Exchange") == 1, plan
 
-    def test_threshold_hold_stream_matches_batch(self, spark, tmp_path):
-        """Streaming `for:` twin across 3 micro-batches == batch
-        events_only rows (the 24-byte state is the fold's carry)."""
-        from smos_spark.operators.alerting import (
-            threshold_hold_alerts,
-            threshold_hold_stream,
-        )
-        from smos_spark.synth import synth_transcripts
+    def test_threshold_hold_stream_matches_batch(self, spark, run_stream):
+        """Streaming `for:` twin over a random micro-batch split ==
+        batch events_only rows (case "threshold_hold" of
+        test_stream_fold)."""
+        from test_stream_fold import check_fold_twin
 
-        turns = (
-            synth_transcripts(spark, n_conv=30, seed=37)
-            .where(F.col("ts").isNotNull())
-            .select(
-                "conv_id", "ts", "turn_idx",
-                F.length("text").cast("double").alias("value"),
-            )
-            .where(F.col("value").isNotNull())
-            .cache()
-        )
-        hi, hold = 300.0, 180.0
-        c1, c2 = turns.selectExpr(
-            "percentile_approx(ts, 0.33) as a",
-            "percentile_approx(ts, 0.66) as b",
-        ).collect()[0]
-        src = str(tmp_path / "src")
-        turns.where(F.col("ts") <= F.lit(c1)).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        turns.where(
-            (F.col("ts") > F.lit(c1)) & (F.col("ts") <= F.lit(c2))
-        ).coalesce(1).write.mode("append").parquet(src)
-        turns.where(F.col("ts") > F.lit(c2)).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-        stream = (
-            spark.readStream.schema(turns.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            threshold_hold_stream(
-                stream, "value", hi=hi, hold_sec=hold,
-                key_cols=["conv_id"], tie_cols=["turn_idx"],
-                watermark="0 seconds",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("hold_stream_t")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = sorted(
-            (r["conv_id"], r["turn_idx"], r["cond"], r["firing"], r["event"])
-            for r in spark.table("hold_stream_t").collect()
-        )
-        want = sorted(
-            (r["conv_id"], r["turn_idx"], r["cond"], r["firing"], r["event"])
-            for r in threshold_hold_alerts(
-                turns, "value", hi=hi, hold_sec=hold,
-                key_cols=["conv_id"], tie_cols=["turn_idx"],
-                events_only=True,
-            ).collect()
-        )
-        assert got == want and len(want) > 5
+        check_fold_twin(spark, run_stream, "threshold_hold", split_seed=0)
 
 
 class TestDrawdownAlerts:
@@ -365,65 +250,33 @@ class TestDrawdownAlerts:
         )
         assert plan.count("Exchange hashpartitioning") == 1
 
-    def test_stream_matches_batch(self, spark, tmp_path):
-        """Streaming record-drawdown alerts across 3 micro-batches ==
-        batch row-for-row — a record is knowable at its own row, so
-        zero emission lag (gap_alerts' class)."""
+    def test_stream_matches_batch(self, spark, run_stream):
+        """Streaming record-drawdown alerts over a random micro-batch
+        split == batch row-for-row (case "drawdown" of
+        test_stream_fold)."""
+        from test_stream_fold import check_fold_twin
+
+        check_fold_twin(spark, run_stream, "drawdown", split_seed=0)
+
+    def test_stream_keeps_later_tie_at_last_ts(self, spark, run_stream):
+        """A row in a later micro-batch at the key's last ts with a
+        later tie is folded in, as in batch: dropping it would lose
+        the record it sets."""
         from smos_spark.operators.alerting import (
             drawdown_alerts,
             drawdown_alerts_stream,
         )
-        from smos_spark.synth import synth_transcripts
 
-        turns = (
-            synth_transcripts(spark, n_conv=25, seed=43)
-            .where(F.col("ts").isNotNull() & F.col("text").isNotNull())
-            .select(
-                "conv_id", "ts", "turn_idx",
-                F.length("text").cast("long").alias("v"),
-            )
-            .cache()
-        )
-        thr = 40
-        c1, c2 = turns.selectExpr(
-            "percentile_approx(ts, 0.33) as a",
-            "percentile_approx(ts, 0.66) as b",
-        ).collect()[0]
-        src = str(tmp_path / "src_dd")
-        turns.where(F.col("ts") <= F.lit(c1)).coalesce(1).write.mode(
-            "append").parquet(src)
-        turns.where(
-            (F.col("ts") > F.lit(c1)) & (F.col("ts") <= F.lit(c2))
-        ).coalesce(1).write.mode("append").parquet(src)
-        turns.where(F.col("ts") > F.lit(c2)).coalesce(1).write.mode(
-            "append").parquet(src)
-
-        stream = (
-            spark.readStream.schema(turns.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            drawdown_alerts_stream(
-                stream, "v", threshold=thr, key_cols=("conv_id",),
-                tie_cols=("turn_idx",), watermark="0 seconds",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("dd_stream_t")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = sorted(
-            (r["conv_id"], r["ts"], r["value"], r["peak"], r["drawdown"])
-            for r in spark.table("dd_stream_t").collect()
-        )
-        want = sorted(
-            (r["conv_id"], r["ts"], r["value"], r["peak"], r["drawdown"])
-            for r in drawdown_alerts(
-                turns, "v", threshold=thr, key_cols=("conv_id",),
-                tie_cols=("turn_idx",),
-            ).collect()
-        )
-        assert got == want and len(want) > 10
+        t0 = _ts(0)
+        schema = "g string, ts timestamp, i long, v long"
+        mb1 = spark.createDataFrame([("k", t0, 1, 100)], schema)
+        mb2 = spark.createDataFrame([("k", t0, 2, 50)], schema)
+        kw = dict(threshold=10, key_cols=("g",), tie_cols=("i",))
+        got = run_stream(
+            "dd_tie",
+            lambda s: drawdown_alerts_stream(s, "v", watermark="0 seconds", **kw),
+            [mb1, mb2],
+        ).collect()
+        want = drawdown_alerts(mb1.union(mb2), "v", **kw).collect()
+        assert len(want) == 1
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want))

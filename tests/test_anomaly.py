@@ -253,76 +253,14 @@ class TestCusumFixed:
 
 
 class TestCusumStream:
-    def test_cusum_stream_matches_batch(self, spark, tmp_path):
-        """Streaming fixed-target CUSUM across multiple micro-batches
-        (maxFilesPerTrigger=1 over time-sliced files) must equal the
-        batch operator row-for-row: the 16-byte state per key is
-        exactly the batch fold's carry."""
-        import pandas as pd
+    def test_cusum_stream_matches_batch(self, spark, run_stream):
+        """Streaming fixed-target CUSUM over a random micro-batch split
+        must equal the batch operator row-for-row: the 16-byte state
+        per key is exactly the batch fold's carry (case "cusum" of
+        test_stream_fold)."""
+        from test_stream_fold import check_fold_twin
 
-        from smos_spark.synth import synth_transcripts
-
-        turns = (
-            synth_transcripts(spark, n_conv=30, seed=17)
-            .where(F.col("ts").isNotNull())
-            .select(
-                "conv_id", "ts", "turn_idx",
-                F.length("text").cast("double").alias("value"),
-            )
-            .where(F.col("value").isNotNull())
-            .cache()
-        )
-        params = dict(
-            target_cents=50000, slack_cents=10000, h_cents=200000
-        )
-        c1, c2 = turns.selectExpr(
-            "percentile_approx(ts, 0.33) as a",
-            "percentile_approx(ts, 0.66) as b",
-        ).collect()[0]
-        src = str(tmp_path / "src")
-        turns.where(F.col("ts") <= F.lit(c1)).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        turns.where(
-            (F.col("ts") > F.lit(c1)) & (F.col("ts") <= F.lit(c2))
-        ).coalesce(1).write.mode("append").parquet(src)
-        turns.where(F.col("ts") > F.lit(c2)).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-        stream = (
-            spark.readStream.schema(turns.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            cusum_stream(
-                stream, "value", ["conv_id"], tie_cols=["turn_idx"],
-                watermark="0 seconds", **params,
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("cusum_stream_t")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = (
-            spark.table("cusum_stream_t")
-            .toPandas()
-            .sort_values(["conv_id", "ts", "turn_idx"])
-            .reset_index(drop=True)
-        )
-        exp = (
-            cusum_fixed(
-                turns, "value", ["conv_id"], tie_cols=["turn_idx"], **params
-            )
-            .toPandas()
-            .sort_values(["conv_id", "ts", "turn_idx"])
-            .reset_index(drop=True)
-        )
-        assert len(got) == len(exp) and len(got) > 0
-        pd.testing.assert_frame_equal(got[exp.columns], exp)
+        check_fold_twin(spark, run_stream, "cusum", split_seed=0)
 
     def test_rejects_bad_params(self, spark):
         df = _ev(spark, [("a", T0, 1.0)])
@@ -379,7 +317,7 @@ class TestSeasonalProfileAndStream:
         assert len(out) == 3  # the unseen-bucket row is dropped, not scored
         assert all(r.value_cents == 900 for r in out)
 
-    def test_seasonal_stream_matches_batch(self, spark, tmp_path):
+    def test_seasonal_stream_matches_batch(self, spark, run_stream):
         """Stream-static scoring against a frozen profile must equal
         batch scoring of the same rows against the same profile."""
         import pandas as pd
@@ -402,34 +340,20 @@ class TestSeasonalProfileAndStream:
         )
         prof = seasonal_profile(turns, "value", ["role"]).cache()
         prof.count()
-        src = str(tmp_path / "src")
         cut = turns.selectExpr("percentile_approx(ts, 0.5) as c").collect()[0][0]
-        turns.where(F.col("ts") <= F.lit(cut)).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        turns.where(F.col("ts") > F.lit(cut)).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        stream = (
-            spark.readStream.schema(turns.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            seasonal_anomaly_stream(
-                stream, prof, "value", ["role"], ["conv_id", "turn_idx"],
-                k_num=3, k_den=2,
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("seasonal_stream_t")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         key = ["role", "conv_id", "turn_idx"]
         got = (
-            spark.table("seasonal_stream_t")
+            run_stream(
+                "seasonal_stream_t",
+                lambda s: seasonal_anomaly_stream(
+                    s, prof, "value", ["role"], ["conv_id", "turn_idx"],
+                    k_num=3, k_den=2,
+                ),
+                [
+                    turns.where(F.col("ts") <= F.lit(cut)),
+                    turns.where(F.col("ts") > F.lit(cut)),
+                ],
+            )
             .toPandas()
             .sort_values(key)
             .reset_index(drop=True)

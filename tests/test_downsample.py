@@ -328,86 +328,13 @@ class TestLttb:
 
 
 class TestCounterRateStream:
-    def test_counter_rate_stream_matches_batch(self, spark, tmp_path):
-        """Streaming reset-aware increase() across 3 micro-batches ==
-        batch counter_rate minus each key's final still-open bucket."""
-        from pyspark.sql.window import Window
+    def test_counter_rate_stream_matches_batch(self, spark, run_stream):
+        """Streaming reset-aware increase() over a random micro-batch
+        split == batch counter_rate minus each key's final still-open
+        bucket (case "counter_rate" of test_stream_fold)."""
+        from test_stream_fold import check_fold_twin
 
-        from smos_spark.operators.downsample import counter_rate_stream
-        from smos_spark.synth import synth_transcripts
-
-        w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-        turns = (
-            synth_transcripts(spark, n_conv=25, seed=31)
-            .where(F.col("ts").isNotNull())
-            .withColumn(
-                "counter",
-                # cumulative text length mod 10k: a monotone counter
-                # with planted resets
-                F.pmod(
-                    F.sum(F.length("text")).over(w), F.lit(10_000)
-                ).cast("long"),
-            )
-            .select("conv_id", "ts", "turn_idx", "counter")
-            .cache()
-        )
-        c1, c2 = turns.selectExpr(
-            "percentile_approx(ts, 0.33) as a",
-            "percentile_approx(ts, 0.66) as b",
-        ).collect()[0]
-        src = str(tmp_path / "src")
-        turns.where(F.col("ts") <= F.lit(c1)).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        turns.where(
-            (F.col("ts") > F.lit(c1)) & (F.col("ts") <= F.lit(c2))
-        ).coalesce(1).write.mode("append").parquet(src)
-        turns.where(F.col("ts") > F.lit(c2)).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-        stream = (
-            spark.readStream.schema(turns.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            counter_rate_stream(
-                stream,
-                key_cols=["conv_id"],
-                counter_col="counter",
-                width_sec=3600.0,
-                tie_cols=["turn_idx"],
-                watermark="0 seconds",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("crate_stream_t")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = sorted(
-            (r["conv_id"], r["bucket_start"], r["increase"], r["n_samples"])
-            for r in spark.table("crate_stream_t").collect()
-        )
-        batch = counter_rate(
-            turns,
-            key_cols=("conv_id",),
-            counter_col="counter",
-            width_sec=3600.0,
-            tie_cols=("turn_idx",),
-        )
-        wlast = Window.partitionBy("conv_id")
-        want = sorted(
-            (r["conv_id"], r["bucket_start"], r["increase"], r["n_samples"])
-            for r in batch.withColumn(
-                "_maxb", F.max("bucket_start").over(wlast)
-            )
-            .where(F.col("bucket_start") < F.col("_maxb"))
-            .collect()
-        )
-        assert got == want and len(want) > 10
+        check_fold_twin(spark, run_stream, "counter_rate", split_seed=0)
 
     def test_float_counter_refused(self, spark):
         from smos_spark.operators.downsample import counter_rate_stream
@@ -472,64 +399,11 @@ class TestGapAlerts:
         with pytest.raises(ValueError):
             gap_alerts_stream(events, min_gap_sec=-5.0)
 
-    def test_gap_alerts_stream_matches_batch(self, spark, tmp_path):
-        """Streaming gap alerts across 3 micro-batches == batch
-        row-for-row — a gap closes exactly when its closing sample
-        arrives, so there is NO open-tail deficit."""
-        from smos_spark.operators.downsample import (
-            gap_alerts,
-            gap_alerts_stream,
-        )
-        from smos_spark.synth import synth_transcripts
+    def test_gap_alerts_stream_matches_batch(self, spark, run_stream):
+        """Streaming gap alerts over a random micro-batch split ==
+        batch row-for-row — a gap closes exactly when its closing
+        sample arrives, so there is NO open-tail deficit (case
+        "gap_alerts" of test_stream_fold)."""
+        from test_stream_fold import check_fold_twin
 
-        turns = (
-            synth_transcripts(spark, n_conv=25, seed=41)
-            .where(F.col("ts").isNotNull())
-            .select("conv_id", "ts", "turn_idx")
-            .cache()
-        )
-        thr = 1800.0
-        c1, c2 = turns.selectExpr(
-            "percentile_approx(ts, 0.33) as a",
-            "percentile_approx(ts, 0.66) as b",
-        ).collect()[0]
-        src = str(tmp_path / "src")
-        turns.where(F.col("ts") <= F.lit(c1)).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        turns.where(
-            (F.col("ts") > F.lit(c1)) & (F.col("ts") <= F.lit(c2))
-        ).coalesce(1).write.mode("append").parquet(src)
-        turns.where(F.col("ts") > F.lit(c2)).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-        stream = (
-            spark.readStream.schema(turns.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            gap_alerts_stream(
-                stream, key_cols=["conv_id"], min_gap_sec=thr,
-                tie_cols=["turn_idx"], watermark="0 seconds",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("gap_stream_t")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = sorted(
-            (r["conv_id"], r["gap_start"], r["gap_end"], r["gap_us"])
-            for r in spark.table("gap_stream_t").collect()
-        )
-        want = sorted(
-            (r["conv_id"], r["gap_start"], r["gap_end"], r["gap_us"])
-            for r in gap_alerts(
-                turns, key_cols=("conv_id",), min_gap_sec=thr,
-                tie_cols=("turn_idx",),
-            ).collect()
-        )
-        assert got == want and len(want) > 10
+        check_fold_twin(spark, run_stream, "gap_alerts", split_seed=0)

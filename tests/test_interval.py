@@ -156,7 +156,7 @@ def test_left_null_attribute_point_not_duplicated(spark, frames):
     assert len(t5) == 1 and t5[0]["ivl"] is None          # unmatched once
 
 
-def test_interval_join_stream_matches_batch(spark, tmp_path):
+def test_interval_join_stream_matches_batch(spark, run_stream):
     """Stream-stream interval join (watermarked state bounds) must
     equal the batch bucketed inner join on the same rows — points and
     intervals each arriving over multiple micro-batches."""
@@ -190,34 +190,16 @@ def test_interval_join_stream_matches_batch(spark, tmp_path):
         + 1.0
     )
 
-    psrc, isrc = str(tmp_path / "pts"), str(tmp_path / "ivs")
-    for half in (0, 1):
-        points.where(F.crc32(F.col("conv_id")) % 2 == half).coalesce(1).write.mode(
-            "append"
-        ).parquet(psrc)
-        intervals.where(F.crc32(F.col("conv_id")) % 2 == half).coalesce(
-            1
-        ).write.mode("append").parquet(isrc)
-
-    pstream = (
-        spark.readStream.schema(points.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(psrc)
-    )
-    istream = spark.readStream.schema(intervals.schema).parquet(isrc)
-    q = (
-        interval_join_stream(
-            pstream, istream, max_len_sec=max_len, watermark="0 seconds"
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ivj_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # points arrive in two micro-batches, the intervals all in the first
     got = (
-        spark.table("ivj_stream")
+        run_stream(
+            "ivj_stream",
+            lambda ps, iv: interval_join_stream(
+                ps, iv, max_len_sec=max_len, watermark="0 seconds"
+            ),
+            [points.where(F.crc32(F.col("conv_id")) % 2 == h) for h in (0, 1)],
+            [intervals],
+        )
         .toPandas()
         .sort_values(["conv_id", "ts", "turn_idx", "session_id"])
         .reset_index(drop=True)

@@ -70,20 +70,12 @@ def test_session_stats_consistency(spark, turns):
             assert (starts[i] - ends[i - 1]).total_seconds() > GAP
 
 
-def test_sessionize_stream_matches_batch(spark, turns, tmp_path):
-    src = str(tmp_path / "src")
-    turns.write.parquet(src)
-    stream = spark.readStream.schema(turns.schema).parquet(src)
-    q = (
-        sessionize_stream(stream, GAP, watermark="0 seconds")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sessions_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("sessions_stream").toPandas()
+def test_sessionize_stream_matches_batch(spark, turns, run_stream):
+    got = run_stream(
+        "sessions_stream",
+        lambda s: sessionize_stream(s, GAP, watermark="0 seconds"),
+        [turns],
+    ).toPandas()
 
     exp = session_stats(turns, GAP).toPandas()
     # the stream emits only CLOSED sessions (watermark can't pass the
@@ -104,26 +96,18 @@ def test_sessionize_stream_matches_batch(spark, turns, tmp_path):
     assert len(exp) - n_convs <= len(got) <= len(exp)
 
 
-def test_sessionize_stream_non_utc_timezone(spark, turns, tmp_path):
+def test_sessionize_stream_non_utc_timezone(spark, turns, run_stream):
     """State/timeout arithmetic is true-epoch: a session timezone west
     of UTC must neither shift session bounds nor throw
     timeout-below-watermark errors."""
-    src = str(tmp_path / "src_tz")
-    turns.write.parquet(src)
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
     try:
-        stream = spark.readStream.schema(turns.schema).parquet(src)
-        q = (
-            sessionize_stream(stream, GAP, watermark="0 seconds")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("sessions_stream_tz")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = spark.table("sessions_stream_tz").toPandas()
+        got = run_stream(
+            "sessions_stream_tz",
+            lambda s: sessionize_stream(s, GAP, watermark="0 seconds"),
+            [turns],
+        ).toPandas()
         exp = session_stats(turns, GAP).toPandas()
         assert len(got) > 0
         key = ["conv_id", "session_id"]
@@ -135,3 +119,27 @@ def test_sessionize_stream_non_utc_timezone(spark, turns, tmp_path):
             )
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
+
+
+def test_sessionize_stream_late_row_keeps_session_end(spark, run_stream):
+    """A late turn inside the open session joins it without moving
+    session_end back: turns at +0 s and +100 s, then +50 s, then +10 h
+    (which closes the first session) give batch's 00:01:40 end."""
+    t0 = pd.Timestamp("2025-01-01")
+    schema = "conv_id string, ts timestamp, turn_idx int, tool string, text string"
+
+    def turn(sec, idx):
+        return ("c", (t0 + pd.Timedelta(seconds=sec)).to_pydatetime(), idx, None, "x")
+
+    batches = [[turn(0, 0), turn(100, 1)], [turn(50, 2)], [turn(36_000, 3)]]
+    frames = [spark.createDataFrame(b, schema) for b in batches]
+    got = run_stream(
+        "sessions_late",
+        lambda s: sessionize_stream(s, GAP, watermark="1 hour"),
+        frames,
+    ).toPandas()
+    exp = session_stats(frames[0].union(frames[1]).union(frames[2]), GAP).toPandas()
+    first = exp[exp.session_id == 0].reset_index(drop=True)
+    assert len(got) == 1
+    for c in ("session_start", "session_end", "n_turns", "n_tool_calls", "len_sum"):
+        assert got[c].iloc[0] == first[c].iloc[0], c

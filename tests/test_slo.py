@@ -154,7 +154,7 @@ KW = dict(
 
 
 class TestSloStream:
-    def test_stream_matches_batch_minus_open_buckets(self, spark, tmp_path):
+    def test_stream_matches_batch_minus_open_buckets(self, spark, run_stream):
         """Streaming emits a bucket once a later one appears; output ==
         batch rows minus each key's final (open) bucket, values
         row-for-row identical."""
@@ -168,29 +168,22 @@ class TestSloStream:
             ("b", 0, 4, 0), ("b", 2, 1, 7), ("b", 3, 2, 2),
         ]
         df = _ev(spark, rows).cache()
-        src = str(tmp_path / "src")
         # three time-ordered micro-batches split at hour boundaries
-        for lo, hi in ((0, 2), (2, 4), (4, 24)):
-            t_lo = T0 + dt.timedelta(hours=lo)
-            t_hi = T0 + dt.timedelta(hours=hi)
-            chunk = df.where((df.ts >= t_lo) & (df.ts < t_hi))
-            chunk.coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            slo_stream(stream, "is_err", key_cols=("key",), watermark="0 seconds", **KW)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("slo_stream_t")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        chunks = [
+            df.where(
+                (df.ts >= T0 + dt.timedelta(hours=lo))
+                & (df.ts < T0 + dt.timedelta(hours=hi))
+            )
+            for lo, hi in ((0, 2), (2, 4), (4, 24))
+        ]
         got = (
-            spark.table("slo_stream_t")
+            run_stream(
+                "slo_stream_t",
+                lambda s: slo_stream(
+                    s, "is_err", key_cols=("key",), watermark="0 seconds", **KW
+                ),
+                chunks,
+            )
             .toPandas()
             .sort_values(["key", "bucket"])
             .reset_index(drop=True)
@@ -208,31 +201,21 @@ class TestSloStream:
         assert len(got) == len(exp) and len(got) > 0
         pd.testing.assert_frame_equal(got[exp.columns], exp)
 
-    def test_stream_drops_late_rows_for_published_buckets(self, spark, tmp_path):
+    def test_stream_drops_late_rows_for_published_buckets(self, spark, run_stream):
         """A row for an already-emitted bucket arriving in a later
         micro-batch is dropped, never amending a published alert."""
         from smos_spark.operators.slo import slo_stream
 
         early = _ev(spark, [("a", 0, 1, 1), ("a", 1, 1, 0)])
         late = _ev(spark, [("a", 0, 0, 5), ("a", 2, 1, 0)])
-        src = str(tmp_path / "src")
-        early.coalesce(1).write.mode("append").parquet(src)
-        late.coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(early.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        out = run_stream(
+            "slo_stream_late",
+            lambda s: slo_stream(
+                s, "is_err", key_cols=("key",), watermark="0 seconds", **KW
+            ),
+            [early, late],
         )
-        q = (
-            slo_stream(stream, "is_err", key_cols=("key",), watermark="0 seconds", **KW)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("slo_stream_late")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows = {r.bucket: r for r in spark.table("slo_stream_late").collect()}
+        rows = {r.bucket: r for r in out.collect()}
         # bucket 0 emitted from batch 1 with its original counters
         assert rows[min(rows)].total == 2 and rows[min(rows)].errors == 1
         # bucket 1 emitted when bucket 2 arrived; the late bucket-0

@@ -5,7 +5,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 from smos_spark.operators.smooth import ewma
 
@@ -104,110 +103,41 @@ def test_ewma_null_numeric_key_single_group(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
 
 
-def test_ewma_stream_matches_batch(spark, tmp_path):
-    """Streaming EWMA across MULTIPLE micro-batches (maxFilesPerTrigger=1
-    over time-sliced files) must equal the batch operator row-for-row —
-    the state carried per key is exactly the batch carry."""
-    import pandas as pd
+def test_ewma_stream_matches_batch(spark, run_stream):
+    """Streaming EWMA over a random micro-batch split equals the batch
+    operator row-for-row (case "ewma" of test_stream_fold)."""
+    from test_stream_fold import check_fold_twin
 
-    from smos_spark.operators.smooth import ewma_stream
-    from smos_spark.synth import synth_transcripts
-
-    turns = (
-        synth_transcripts(spark, n_conv=30, seed=13)
-        .where(F.col("ts").isNotNull())
-        .select(
-            "conv_id", "ts", "turn_idx",
-            F.length("text").cast("double").alias("value"),
-        )
-        .where(F.col("value").isNotNull())
-        .cache()
-    )
-    # three strictly time-ordered slices -> three micro-batches
-    c1, c2 = turns.selectExpr(
-        "percentile_approx(ts, 0.33) as a", "percentile_approx(ts, 0.66) as b"
-    ).collect()[0]
-    src = str(tmp_path / "src")
-    turns.where(F.col("ts") <= F.lit(c1)).coalesce(1).write.mode("append").parquet(src)
-    turns.where((F.col("ts") > F.lit(c1)) & (F.col("ts") <= F.lit(c2))).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    turns.where(F.col("ts") > F.lit(c2)).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(turns.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        ewma_stream(stream, 0.3, key_cols=["conv_id"], tie_cols=["turn_idx"],
-                    watermark="0 seconds")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ewma_stream_t")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.table("ewma_stream_t")
-        .toPandas()
-        .sort_values(["conv_id", "ts", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    exp = (
-        ewma(turns, 0.3, key_cols=["conv_id"], tie_cols=["turn_idx"])
-        .toPandas()
-        .sort_values(["conv_id", "ts", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(exp) and len(got) > 0
-    pd.testing.assert_frame_equal(got[exp.columns], exp)
+    check_fold_twin(spark, run_stream, "ewma", split_seed=0)
 
 
-def test_ewma_stream_drops_cross_batch_late_rows(spark, tmp_path):
+def test_ewma_stream_drops_cross_batch_late_rows(spark, run_stream):
     """A row landing in a later micro-batch with ts before the key's
     last processed ts cannot re-enter the recurrence — it is dropped,
     never smoothed out of order."""
-    import datetime as dt
-
     from smos_spark.operators.smooth import ewma_stream
 
     t0 = dt.datetime(2024, 1, 1)
     early = [("k", t0 + dt.timedelta(seconds=i), i, float(i)) for i in range(3)]
     late = [("k", t0 + dt.timedelta(seconds=1), 99, 1000.0)]  # ts before batch-1 tail
     schema = "conv_id string, ts timestamp, turn_idx long, value double"
-    src = str(tmp_path / "src")
-    spark.createDataFrame(early, schema).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(late, schema).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    out = run_stream(
+        "ewma_stream_late",
+        lambda s: ewma_stream(s, 0.5, key_cols=["conv_id"], tie_cols=["turn_idx"],
+                              watermark="0 seconds"),
+        [spark.createDataFrame(early, schema), spark.createDataFrame(late, schema)],
     )
-    q = (
-        ewma_stream(stream, 0.5, key_cols=["conv_id"], tie_cols=["turn_idx"],
-                    watermark="0 seconds")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ewma_stream_late")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = {r["turn_idx"]: r["ewma"] for r in spark.table("ewma_stream_late").collect()}
+    rows = {r["turn_idx"]: r["ewma"] for r in out.collect()}
     assert set(rows) == {0, 1, 2}  # the late row is dropped
     assert rows[0] == 0.0 and rows[1] == 0.5 and rows[2] == 1.25
 
 
-def test_ewma_stream_handles_unordered_arrow_chunks(spark, tmp_path):
+def test_ewma_stream_handles_unordered_arrow_chunks(spark, run_stream):
     """applyInPandasWithState hands a key's micro-batch rows as Arrow
     chunks in arbitrary order — write a key's rows ts-DESCENDING with
     a tiny Arrow batch size so later chunks carry EARLIER timestamps;
     every row must still be smoothed, in ts order (per-chunk
     processing would drop or misorder them)."""
-    import pandas as pd
-
     from smos_spark.operators.smooth import ewma_stream
 
     rows = [("k", dt.datetime(2024, 1, 1) + dt.timedelta(seconds=i), i, float(i))
@@ -216,24 +146,16 @@ def test_ewma_stream_handles_unordered_arrow_chunks(spark, tmp_path):
         list(reversed(rows)),  # descending ts in file order
         "conv_id string, ts timestamp, turn_idx long, value double",
     )
-    src = str(tmp_path / "src")
-    df.coalesce(1).write.parquet(src)
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "5")
     try:
-        stream = spark.readStream.schema(df.schema).parquet(src)
-        q = (
-            ewma_stream(stream, 0.5, key_cols=["conv_id"], tie_cols=["turn_idx"],
-                        watermark="0 seconds")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("ewma_chunks")
-            .trigger(availableNow=True)
-            .start()
+        out = run_stream(
+            "ewma_chunks",
+            lambda s: ewma_stream(s, 0.5, key_cols=["conv_id"], tie_cols=["turn_idx"],
+                                  watermark="0 seconds"),
+            [df],
         )
-        q.awaitTermination()
-        got = {r["turn_idx"]: r["ewma"]
-               for r in spark.table("ewma_chunks").collect()}
+        got = {r["turn_idx"]: r["ewma"] for r in out.collect()}
         assert set(got) == set(range(20))  # nothing dropped
         exp = ewma(df, 0.5, key_cols=["conv_id"], tie_cols=["turn_idx"]).collect()
         for r in exp:
@@ -299,61 +221,9 @@ def test_des_carry_across_arrow_batches(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
 
 
-def test_des_stream_matches_batch(spark, tmp_path):
-    """Streaming DES across three micro-batches equals the batch
-    operator row-for-row — the 24-byte (s1, s2, last_us) state is
-    exactly the batch carry."""
-    import pandas as pd
+def test_des_stream_matches_batch(spark, run_stream):
+    """Streaming DES over a random micro-batch split equals the batch
+    operator row-for-row (case "des" of test_stream_fold)."""
+    from test_stream_fold import check_fold_twin
 
-    from smos_spark.operators.smooth import des, des_stream
-    from smos_spark.synth import synth_transcripts
-
-    turns = (
-        synth_transcripts(spark, n_conv=30, seed=13)
-        .where(F.col("ts").isNotNull())
-        .select(
-            "conv_id", "ts", "turn_idx",
-            F.length("text").cast("double").alias("value"),
-        )
-        .where(F.col("value").isNotNull())
-        .cache()
-    )
-    c1, c2 = turns.selectExpr(
-        "percentile_approx(ts, 0.33) as a", "percentile_approx(ts, 0.66) as b"
-    ).collect()[0]
-    src = str(tmp_path / "src")
-    turns.where(F.col("ts") <= F.lit(c1)).coalesce(1).write.mode("append").parquet(src)
-    turns.where((F.col("ts") > F.lit(c1)) & (F.col("ts") <= F.lit(c2))).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    turns.where(F.col("ts") > F.lit(c2)).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(turns.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        des_stream(stream, 0.3, key_cols=["conv_id"], tie_cols=["turn_idx"],
-                   watermark="0 seconds")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("des_stream_t")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.table("des_stream_t")
-        .toPandas()
-        .sort_values(["conv_id", "ts", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    exp = (
-        des(turns, 0.3, key_cols=["conv_id"], tie_cols=["turn_idx"])
-        .toPandas()
-        .sort_values(["conv_id", "ts", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(exp) and len(got) > 0
-    pd.testing.assert_frame_equal(got[exp.columns], exp)
+    check_fold_twin(spark, run_stream, "des", split_seed=0)

@@ -19,23 +19,14 @@ def turns(spark):
     return synth_transcripts(spark, n_conv=40, seed=11, span_days=2).cache()
 
 
-def test_streaming_rollup_equals_batch(spark, turns, tmp_path):
-    src = str(tmp_path / "src")
-    turns.write.parquet(src)
-
-    stream = spark.readStream.schema(turns.schema).parquet(src)
-    agg = streaming_rollup(stream, "1m", watermark="1 hour")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("tier_1m_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
+def test_streaming_rollup_equals_batch(spark, turns, run_stream):
     got = (
-        spark.table("tier_1m_stream")
+        run_stream(
+            "tier_1m_stream",
+            lambda s: streaming_rollup(s, "1m", watermark="1 hour"),
+            [turns],
+            mode="complete",
+        )
         .toPandas()
         .sort_values(["conv_id", "bucket_start"])
         .reset_index(drop=True)
@@ -93,40 +84,23 @@ def test_stream_ingest_builds_tiers_and_resumes(spark, turns, tmp_path):
     ).count()
 
 
-def test_streaming_dedup_within_watermark(spark, turns, tmp_path):
+def test_streaming_dedup_within_watermark(spark, turns, run_stream):
     """Replayed turns across micro-batches are dropped while inside
     the watermark horizon, and the surviving set equals the batch
     dropDuplicates on the same files; state is watermark-bounded by
     construction (dropDuplicatesWithinWatermark)."""
     from smos_spark.streaming.continuous import streaming_dedup
 
-    src = tmp_path / "landing"
     base = turns.limit(200).cache()
     # batch 1: the original turns; batch 2: a full replay plus 50 new
-    base.write.parquet(str(src / "f1"))
-    replay = base.unionAll(turns.orderBy(F.desc("conv_id"), "ts").limit(50))
-    replay.write.parquet(str(src / "f2"))
-
-    from smos_spark.schema import TRANSCRIPTS_SCHEMA
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q = (
-        streaming_dedup(stream, watermark="10 days")
-        .writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("dedup_out").select("conv_id", "turn_idx")
+    replay = base.unionAll(turns.orderBy(F.desc("conv_id"), "ts").limit(50)).cache()
+    got = run_stream(
+        "dedup_out",
+        lambda s: streaming_dedup(s, watermark="10 days"),
+        [base, replay],
+    ).select("conv_id", "turn_idx")
     batch_equiv = (
-        spark.read.parquet(str(src / "*"))
+        base.unionAll(replay)
         .dropDuplicates(["conv_id", "turn_idx"])
         .select("conv_id", "turn_idx")
     )
