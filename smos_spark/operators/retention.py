@@ -72,6 +72,7 @@ def _apply_retention_locked(
     policy: dict[str, int | None] | None,
     run_id: str,
 ) -> dict[str, list[str]]:
+    store.roll_forward()  # a crashed writer's committed batch goes first
     policy = {**DEFAULT_RETENTION, **(policy or {})}
     if isinstance(now, str):
         now = dt.date.fromisoformat(now[:10])

@@ -11,8 +11,12 @@ and the substitution is documented in BENCH/BASELINE.md):
                                            tier partials, time-major,
                                            then key-bucketed
       _checkpoint/                         per-batch lineage+metrics rows
+      _quarantine/                         late and NULL-ts raw rows
+      _staging/<run_id>-<batch_id>/        one batch's writes before
+                                           they are published
       overview.json                        last_day / parameters state,
-                                           and each table's schema
+                                           each table's schema, and the
+                                           pending publish
 
 * `ts_date` partitioning ≙ the reference's yearly-subdir + date-coded
   filename layout (/root/reference/src/smos/interface.py:436-444):
@@ -22,26 +26,48 @@ and the substitution is documented in BENCH/BASELINE.md):
   a point read touches exactly one bucket directory the way the
   reference reads one cell file (docs/img2ts.rst:13-16).
 * `overview.json` ≙ overview.yml (smos_l2/reshuffle.py:71-94): written
-  only after a successful batch, read back for the monotonic guard.
+  only after a batch's data, read back for the monotonic guard.
   It is also the store's catalog, the way Iceberg keeps a table's
   schema in its metadata: every tier and block writer records the
   schema it wrote, and the readers scan with it, so Spark never runs a
   footer-reading job to infer one (`_checkpoint` has the fixed
   CHECKPOINT_SCHEMA).
 * Tiers are built whole by `write_tier` and maintained by
-  `merge_tier_partitions`: new partials (raw turns through
+  `merge_tiers`: new partials (raw turns through
   `rollup.turn_partials`) are merged with the existing rows of the day
-  partitions they touch, and only those (bucket_date, bucket_id)
-  partitions are rewritten, by dynamic partition overwrite, in one
-  shuffle per tier.
+  partitions they touch, for all three tiers in one shuffle and one
+  write job, into a staging directory.
+
+Staged commit (the reference writes its state only after the data,
+smos_l2/reshuffle.py:147-152). A writer puts everything a batch
+changes under `_staging/<run_id>-<batch_id>/`: `append/<table>/...`
+holds files to add to a table (raw turns, late rows, lineage rows),
+`swap/<table>/...` holds partition directories that replace the live
+ones (tier partitions, rewritten raw days). `commit_staged` then records
+the batch as `pending` in the overview — the atomic rename of
+`Overview.save` is the commit point — and publishes: it moves the
+staged files in, swaps each staged partition directory for the live
+one, drops stale block days, removes the staging directory, and last
+advances `last_batch_id`/`last_day` and clears `pending`. Publishing is
+renames on the local filesystem, like `Overview.save` and the
+checkpoint swap; an object store has no atomic rename and is out of
+scope. `roll_forward`, which ingest, the quarantine merge and retention
+call first under the writer lock, finishes a pending publish (each
+step is skipped once done, so a crash at any point converges) and
+discards any staging directory without one, which was never committed.
+A publish first restores a checkpoint compaction that crashed between
+its two renames, like every other checkpoint entry point.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import shutil
 import warnings
 from dataclasses import dataclass
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -84,6 +110,7 @@ class Overview:
     parameters: dict | None = None
     extra: dict = None  # free-form state (e.g. retention_floor per tier)
     schemas: dict = None  # table dir (relative to the root) → schema JSON
+    pending: dict | None = None  # the committed batch still being published
 
     @classmethod
     def load(cls, path: Path) -> "Overview":
@@ -96,6 +123,7 @@ class Overview:
             parameters=d.get("parameters"),
             extra=d.get("extra") or {},
             schemas=d.get("schemas") or {},
+            pending=d.get("pending"),
         )
 
     def save(self, path: Path) -> None:
@@ -109,6 +137,7 @@ class Overview:
                     "parameters": self.parameters,
                     "extra": self.extra or {},
                     "schemas": self.schemas or {},
+                    "pending": self.pending,
                 }
             )
         )
@@ -203,13 +232,14 @@ class TranscriptStore:
         self.save_overview(self.load_overview(), {self._table_key(path): written.schema})
 
     # --- raw table ---
-    def append_transcripts(self, df: DataFrame) -> None:
+    def append_transcripts(self, df: DataFrame, path: str | None = None) -> None:
+        """Append raw turns to the table, or to `path` (a staged append)."""
         (
             df.withColumn("ts_date", F.to_date("ts"))
             .repartition("ts_date")  # one writer wave per day partition
             .write.partitionBy("ts_date")
             .mode("append")
-            .parquet(self.transcripts_path)
+            .parquet(path or self.transcripts_path)
         )
 
     def read_transcripts(self, spark: SparkSession) -> DataFrame:
@@ -240,42 +270,56 @@ class TranscriptStore:
         ).parquet(self.tier_path(tier))
         self._record_schema(self.tier_path(tier), out)
 
-    def merge_tier_partitions(
-        self, rows: DataFrame, tier: str, obs: Observation | None = None
+    def merge_tiers(
+        self,
+        rows_by_tier: dict[str, DataFrame],
+        staging: Path,
+        obs: Observation | None = None,
     ) -> None:
-        """Merge partials into `tier` and rewrite, by dynamic partition
-        overwrite, only the (bucket_date, bucket_id) partitions they
-        touch (the Iceberg-MERGE substitute). `rows` are partials at
-        this tier or finer: turn_partials of raw turns, plus the tier's
-        own rows of the partitions being rewritten. An `obs` observes
-        the merged row count as ``rows_out``.
+        """Merge partials into several tiers with one shuffle and one
+        write job, staged for `commit_staged` (the Iceberg-MERGE
+        substitute). `rows_by_tier` maps a tier to partials at that tier
+        or finer: turn_partials of raw turns, plus the tier's own rows of
+        the partitions being rewritten. Each tier's rows are truncated
+        to the tier and tagged with it; the merged (bucket_date,
+        bucket_id) partitions land in `staging/swap/tiers/<tier>/`, and
+        publishing swaps exactly those for the live ones. An `obs`
+        observes each tier's merged row count as ``rows_out_<tier>``.
 
-        One shuffle: the repartition on the partition columns already
-        clusters the merge's grouping keys, so the aggregation and the
-        writer's sort run in the same stage."""
-        spark = rows.sparkSession
-        keyed = self._with_partition_cols(
-            rows.withColumn("bucket_start", _bucket(F.col("bucket_start"), tier))
-        )
+        One shuffle: the repartition on (tier, bucket_date, bucket_id)
+        already clusters the merge's grouping keys, so the aggregation
+        and the writer's sort run in the same stage."""
+        tagged = [
+            rows.withColumn("bucket_start", _bucket(F.col("bucket_start"), tier)).withColumn(
+                "tier", F.lit(tier)
+            )
+            for tier, rows in rows_by_tier.items()
+        ]
+        keyed = self._with_partition_cols(reduce(DataFrame.unionByName, tagged))
         out = (
-            keyed.repartition("bucket_date", "bucket_id")
-            .groupBy("bucket_date", "bucket_id", "conv_id", "bucket_start")
+            keyed.repartition("tier", "bucket_date", "bucket_id")
+            .groupBy("tier", "bucket_date", "bucket_id", "conv_id", "bucket_start")
             .agg(*_merge_aggs())
-            .select("conv_id", "bucket_start", *_MERGE, "bucket_date", "bucket_id")
+            .select("conv_id", "bucket_start", *_MERGE, "tier", "bucket_date", "bucket_id")
         )
         if obs is not None:
-            out = out.observe(obs, F.count(F.lit(1)).alias("rows_out"))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            self._with_point_read_options(
-                out.sortWithinPartitions("bucket_date", "bucket_id", "conv_id", "bucket_start")
-                .write.partitionBy("bucket_date", "bucket_id")
-                .mode("overwrite")
-            ).parquet(self.tier_path(tier))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        self._record_schema(self.tier_path(tier), out)
+            out = out.observe(
+                obs,
+                *(F.count_if(F.col("tier") == t).alias(f"rows_out_{t}") for t in rows_by_tier),
+            )
+        staged = staging / "swap" / "tiers"
+        self._with_point_read_options(
+            out.sortWithinPartitions("tier", "bucket_date", "bucket_id", "conv_id", "bucket_start")
+            .write.partitionBy("tier", "bucket_date", "bucket_id")
+        ).parquet(str(staged))
+        for tier in rows_by_tier:  # tier=1m/... mirrors tiers/1m/...
+            if (staged / f"tier={tier}").exists():
+                os.replace(staged / f"tier={tier}", staged / tier)
+        schema = out.drop("tier").schema
+        self.save_overview(
+            self.load_overview(),
+            {self._table_key(self.tier_path(t)): schema for t in rows_by_tier},
+        )
 
     def scan_tier(self, spark: SparkSession, tier: str) -> DataFrame:
         """The tier with its bucket_date/bucket_id partition columns,
@@ -502,7 +546,7 @@ class TranscriptStore:
     # --- writer exclusion ---
     # The parquet+manifest substitute for Iceberg has no snapshot
     # isolation: two concurrent ingest_batch runs could interleave
-    # partition overwrites and overview commits. This advisory lock
+    # partition swaps and overview commits. This advisory lock
     # (O_EXCL lock file carrying pid + timestamp, stale after
     # `stale_sec`) makes the single-writer assumption explicit and
     # enforced rather than silent — the reference has the same
@@ -544,8 +588,6 @@ class TranscriptStore:
         unconditionally unlinking would evict that new holder and let
         a third writer interleave with its in-flight partition
         overwrites."""
-        import contextlib
-
         with contextlib.suppress(FileNotFoundError):
             try:
                 held = json.loads(self.lock_path.read_text())
@@ -581,6 +623,88 @@ class TranscriptStore:
         }
         ov.save(self.overview_path)
 
+    # --- staged commits ---
+    @property
+    def staging_root(self) -> Path:
+        return self.root / "_staging"
+
+    def staging_path(self, run_id: str, batch_id: int) -> Path:
+        """Where batch (run_id, batch_id) stages its writes: files under
+        `append/<table>/` are added to the table, partition directories
+        under `swap/<table>/` replace the live ones."""
+        return self.staging_root / f"{run_id}-{batch_id}"
+
+    def commit_staged(
+        self,
+        run_id: str,
+        batch_id: int,
+        last_day: str | None = None,
+        drop: list[str] | None = None,
+    ) -> None:
+        """Commit the batch staged at `staging_path(run_id, batch_id)`:
+        record it as `pending` in the overview (the commit point), then
+        publish it. `drop` lists directories (relative to the root) to
+        delete on publish, such as stale block days. Callers hold the
+        writer lock."""
+        ov = self.load_overview()
+        ov.pending = {
+            "run_id": run_id,
+            "batch_id": batch_id,
+            "last_day": last_day,
+            "drop": drop or [],
+        }
+        self.save_overview(ov)
+        self._publish(ov)
+
+    def roll_forward(self) -> None:
+        """Finish what a crashed writer left: publish the pending batch,
+        if any, then discard every other staging directory (never
+        committed, so its batch is redone). Callers hold the writer
+        lock."""
+        ov = self.load_overview()
+        if ov.pending is not None:
+            self._publish(ov)
+        shutil.rmtree(self.staging_root, ignore_errors=True)
+
+    def _publish(self, ov: Overview) -> None:
+        """Publish `ov.pending` by renames, then advance the overview.
+        Every step is skipped once done (a moved file or swapped
+        directory is gone from the staging tree), so re-running after a
+        crash at any point finishes the same publish. A compaction that
+        crashed between its renames is restored first, so the staged
+        lineage lands next to the old history and never in a fresh
+        `_checkpoint` that would shadow it."""
+        self._recover_checkpoint_swap()
+        p = ov.pending
+        staging = self.staging_path(p["run_id"], p["batch_id"])
+        added = staging / "append"
+        for f in sorted(added.rglob("*")):
+            if f.is_file() and not f.name.startswith(("_", "._")):  # not _SUCCESS
+                dst = self.root / f.relative_to(added)
+                dst.parent.mkdir(parents=True, exist_ok=True)
+                os.replace(f, dst)
+        swapped, replaced = staging / "swap", staging / "replaced"
+        # partition directories are the ones holding data files; a
+        # directory emptied by earlier swaps holds none and is skipped
+        for d in sorted({f.parent for f in swapped.rglob("part-*") if f.is_file()}):
+            rel = d.relative_to(swapped)
+            live = self.root / rel
+            if live.exists():
+                (replaced / rel).parent.mkdir(parents=True, exist_ok=True)
+                os.replace(live, replaced / rel)
+            live.parent.mkdir(parents=True, exist_ok=True)
+            os.replace(d, live)
+        for rel in p["drop"]:
+            shutil.rmtree(self.root / rel, ignore_errors=True)
+        shutil.rmtree(staging, ignore_errors=True)
+        with contextlib.suppress(OSError):  # leave no empty _staging/
+            self.staging_root.rmdir()
+        ov.last_batch_id = p["batch_id"]
+        if p["last_day"] is not None:
+            ov.last_day = max(p["last_day"], ov.last_day or "")
+        ov.pending = None
+        self.save_overview(ov)
+
     # --- checkpoint lineage ---
     def _recover_checkpoint_swap(self) -> None:
         """Self-heal a compaction interrupted between its two directory
@@ -599,10 +723,15 @@ class TranscriptStore:
         # leftover tmp from an incomplete rewrite is garbage either way
         shutil.rmtree(tmp, ignore_errors=True)
 
-    def append_checkpoint(self, spark: SparkSession, rows: list[dict]) -> None:
+    def append_checkpoint(
+        self, spark: SparkSession, rows: list[dict], path: str | None = None
+    ) -> None:
+        """Append lineage rows to `_checkpoint`, or to `path` (a staged
+        append)."""
         if not rows:
             return
-        self._recover_checkpoint_swap()
+        if path is None:
+            self._recover_checkpoint_swap()
         spark.createDataFrame(
             [
                 (
@@ -619,7 +748,7 @@ class TranscriptStore:
                 for r in rows
             ],
             CHECKPOINT_SCHEMA,
-        ).coalesce(1).write.mode("append").parquet(self.checkpoint_path)
+        ).coalesce(1).write.mode("append").parquet(path or self.checkpoint_path)
 
     def read_checkpoint(self, spark: SparkSession) -> DataFrame | None:
         self._recover_checkpoint_swap()
@@ -681,7 +810,7 @@ class TranscriptStore:
         derived from a broadcast date→n_files map, so big days still
         get multiple parallel writers/files. Untouched dates keep
         their files byte-identical; readers see old-or-new per
-        partition (same contract as merge_tier_partitions).
+        partition (the same contract as a published tier merge).
         Callers doing concurrent maintenance hold the advisory writer
         lock, like tier merges. Returns
         ``{"dates": k, "files_before": a, "files_after": b}``."""

@@ -9,8 +9,10 @@ reshuffle.py:96-155). On Spark this becomes two complementary shapes:
    imgbuffer loop analog), each batch driven through the SAME
    checkpointed `ingest_batch` path as batch mode (foreachBatch).
    Exactly-once: Spark's streaming checkpoint tracks consumed files;
-   the store's lineage table makes tier maintenance idempotent per
-   (run_id, batch_id), so replays after a crash are no-ops.
+   the store's staged commit makes tier maintenance idempotent per
+   (run_id, batch_id): a re-run epoch finishes a committed batch's
+   publish or redoes an uncommitted one, and a replay of a published
+   batch is a no-op.
 
 2. `streaming_rollup` — a native watermarked windowed aggregation
    producing 1m-tier partials continuously; late rows beyond the
@@ -99,7 +101,7 @@ def stream_ingest(
     `input_path` flows through the checkpointed incremental tier
     maintenance (ingest_batch). Trigger.AvailableNow drains what
     exists and stops — rerunning resumes from the streaming
-    checkpoint (consumed files) AND the store lineage (committed
+    checkpoint (consumed files) AND the store overview (committed
     batches), either alone is enough for exactly-once tiers.
     """
     reader = spark.readStream.schema(TRANSCRIPTS_SCHEMA)

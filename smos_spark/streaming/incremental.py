@@ -7,20 +7,39 @@ Reference semantics (/root/reference/src/smos/smos_l2/reshuffle.py:96-155):
   * the state file is written only after a successful repurpose
     (:147-152) — commit follows data
 
-Our engine upgrades that to per-batch lineage rows and idempotent
-resume: a batch already present in the checkpoint table is skipped, so
-re-running an interrupted job converges to the identical store (tested
-byte-for-byte at the tier level in tests/test_incremental.py).
+Merge strategy on parquet, which has no MERGE: each raw turn becomes a
+one-turn partial (`rollup.turn_partials`), and every tier is merged
+straight from those, not cascaded 1m→1h→1d. `TranscriptStore.merge_tiers`
+re-aggregates, for all three tiers at once, (each tier's rows from the
+batch's first day on ∪ the turn partials) in one shuffle and one write
+job, and stages only the touched (bucket_date, bucket_id) partitions.
+Because the partials are exact, the result equals a rollup of all raw
+turns.
 
-Merge strategy on parquet, which has no MERGE: each raw turn
-becomes a one-turn partial (`rollup.turn_partials`), and every tier is
-merged straight from those, not cascaded 1m→1h→1d. Per tier,
-`TranscriptStore.merge_tier_partitions` re-aggregates (the tier's rows
-from the batch's first day on ∪ the turn partials) in one shuffle and
-rewrites only the touched (bucket_date, bucket_id) partitions by
-dynamic partition overwrite. Because the partials are exact, the result
-equals a rollup of all raw turns. This is the write-then-commit-manifest
-pattern: the overview commit is the atomic rename at the end.
+Commit protocol (see `sources/store.py`). A batch stages all of its
+writes under `_staging/<run_id>-<batch_id>/`: the raw turns, the late
+rows, the merged tier partitions and its lineage rows. Only then is it
+recorded as `pending` in the overview, and that atomic overview rename
+is the commit point. Publishing moves the staged files into
+`transcripts/`, `_quarantine/` and `_checkpoint/`, swaps the staged
+partition directories into `tiers/<tier>/` and drops stale block days,
+all by local-filesystem renames; last, the overview advances
+`last_batch_id`/`last_day` and clears `pending`. Nothing the live store
+holds changes before the commit point, so a batch is applied exactly
+once whatever fails:
+
+  * a failure before the commit point (a bounds job, the staged tier
+    job, the lineage write) leaves a staging directory without a
+    `pending` record; the retry discards it and redoes the batch;
+  * a failure after it (mid-publish, or before the final overview
+    save) is rolled forward by the next writer: a retry of the same
+    (run_id, batch_id) finishes the publish and is then skipped by the
+    `last_batch_id` check below, without recomputing; any other batch
+    finishes it before its own work;
+  * a batch at or before `last_batch_id` is skipped.
+
+`continuous.stream_ingest` re-runs a failed `foreachBatch` epoch with
+the same batch id, which is exactly such a retry.
 """
 
 from __future__ import annotations
@@ -29,7 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smos_spark.operators.rollup import turn_partials
-from smos_spark.sources.store import Overview, TranscriptStore
+from smos_spark.schema import TIERS
+from smos_spark.sources.store import TranscriptStore
 
 
 class MonotonicAppendError(ValueError):
@@ -60,11 +80,12 @@ def ingest_batch(
     quarantine: bool = True,
 ) -> dict:
     """Append one batch of raw turns and incrementally maintain all
-    three tiers. Idempotent per (run_id, batch_id). Holds the store's
-    advisory writer lock for the duration: the parquet+manifest layout
-    has no snapshot isolation, so a second concurrent writer raises
-    ConcurrentWriterError instead of interleaving partition
-    overwrites."""
+    three tiers. Idempotent per (run_id, batch_id): see the module
+    docstring for the staged commit and what a retry does. Holds the
+    store's advisory writer lock for the duration: the parquet+manifest
+    layout has no snapshot isolation, so a second concurrent writer
+    raises ConcurrentWriterError instead of interleaving partition
+    swaps."""
     store.acquire_writer_lock()
     try:
         return _ingest_batch_locked(store, batch, run_id, batch_id, strict, quarantine)
@@ -81,19 +102,11 @@ def _ingest_batch_locked(
     quarantine: bool,
 ) -> dict:
     spark = batch.sparkSession
+
+    # --- resume: finish a committed batch, discard an uncommitted one ---
+    store.roll_forward()
     ov = store.load_overview()
-
-    # --- resume / idempotence: skip an already-committed batch ---
-    cp = store.read_checkpoint(spark)
-    if cp is not None:
-        done = cp.where((F.col("run_id") == run_id) & (F.col("batch_id") == batch_id))
-        if not done.isEmpty():
-            return {"skipped": True, "batch_id": batch_id}
-
     if batch_id <= ov.last_batch_id:
-        # overview says committed but checkpoint row missing → the
-        # previous run died between data write and lineage append;
-        # overview is the commit point, so treat as done.
         return {"skipped": True, "batch_id": batch_id}
 
     # --- monotonic guard / late/invalid-data routing ---
@@ -116,6 +129,7 @@ def _ingest_batch_locked(
         F.count(on_time).alias("n"),
     ).collect()[0]
     lo, hi, n_in = bounds.lo, bounds.hi, bounds.n
+    staging = store.staging_path(run_id, batch_id)
     if bounds.n_raw != n_in:  # some rows are late and/or NULL-ts
         if strict:
             raise MonotonicAppendError(
@@ -124,10 +138,9 @@ def _ingest_batch_locked(
             )
         batch, late = split_late_rows(batch, ov.last_day)
         if quarantine:
-            late.write.mode("append").parquet(str(store.root / "_quarantine"))
+            late.write.parquet(str(staging / "append" / "_quarantine"))
     if n_in == 0:
-        ov.last_batch_id = batch_id
-        store.save_overview(ov)
+        store.commit_staged(run_id, batch_id)
         return {"skipped": False, "batch_id": batch_id, "rows_in": 0}
 
     import datetime as _dt
@@ -149,80 +162,87 @@ def _ingest_batch_locked(
     batch_days = [
         str(d0 + _dt.timedelta(days=i)) for i in range((d1 - d0).days + 1)
     ]
-    stats: list[dict] = []
+    # rows_out_<tier> via observed metrics on the tier write itself — no
+    # post-write count job, no full-table scan
+    obs = Observation(f"tiers_b{batch_id}")
     batch = batch.cache()
     try:
-        store.append_transcripts(batch)
+        store.append_transcripts(batch, str(staging / "append" / "transcripts"))
         # --- tier maintenance: merge the turns straight into each tier ---
         turns = turn_partials(batch)
-        for tier in ("1m", "1h", "1d"):
-            rows = turns
-            if Path(store.tier_path(tier)).exists():
-                # only date partitions the batch touches need rewriting;
-                # the boundary is day-aligned because the physical layout
-                # partitions on bucket_date — everything before it is final
-                # and is neither read (partition pruning) nor written.
-                rows = store.read_tier_since(spark, tier, batch_day).unionByName(turns)
-            # rows_out via an observed metric on the write itself — no
-            # post-write count job, no full-table scan
-            obs = Observation(f"tier_{tier}_b{batch_id}")
-            store.merge_tier_partitions(rows, tier, obs)
-            stats += _drop_stale_blocks(store, tier, batch_days, run_id, batch_id)
-            stats.append(
-                {
-                    "run_id": run_id,
-                    "batch_id": batch_id,
-                    "tier": tier,
-                    "partition_key": "all",
-                    "rows_in": n_in,
-                    "rows_out": obs.get["rows_out"],
-                    "min_ts": lo,
-                    "max_ts": hi,
-                    "committed_seq": batch_id * 10 + {"1m": 0, "1h": 1, "1d": 2}[tier],
-                }
-            )
+        # only date partitions the batch touches need rewriting; the
+        # boundary is day-aligned because the physical layout partitions
+        # on bucket_date — everything before it is final and is neither
+        # read (partition pruning) nor written.
+        rows_by_tier = {
+            tier: store.read_tier_since(spark, tier, batch_day).unionByName(turns)
+            if Path(store.tier_path(tier)).exists()
+            else turns
+            for tier in TIERS
+        }
+        store.merge_tiers(rows_by_tier, staging, obs)
     finally:
         # also on failure: a cached batch left behind would outlive the
         # retries in the same Spark session (foreachBatch re-runs stack
         # more copies)
         batch.unpersist()
 
-    # --- commit: lineage rows, then overview (atomic rename last) ---
-    store.append_checkpoint(spark, stats)
-    ov.last_day = max(str(hi), ov.last_day or "")
-    ov.last_batch_id = batch_id
-    store.save_overview(ov)
+    # --- commit: stage the lineage rows, then record and publish ---
+    drop, stats = _stale_blocks(store, batch_days, run_id, batch_id)
+    stats += _tier_lineage(run_id, batch_id, n_in, obs.get, lo, hi, "all")
+    store.append_checkpoint(spark, stats, str(staging / "append" / "_checkpoint"))
+    store.commit_staged(run_id, batch_id, last_day=str(hi), drop=drop)
     return {"skipped": False, "batch_id": batch_id, "rows_in": n_in}
 
 
-def _drop_stale_blocks(
-    store: TranscriptStore, tier: str, days: list[str], run_id: str, batch_id: int
-) -> list[dict]:
-    """Delete the tier's compressed blocks for `days`, which encode the
-    tier's values from before a merge; one lineage row per dropped day.
-    A reader that hits a missing day re-encodes from the tier."""
-    import shutil
+def _tier_lineage(run_id, batch_id, rows_in, rows_out, lo, hi, partition_key) -> list[dict]:
+    """One lineage row per tier; `rows_out` holds the observed
+    ``rows_out_<tier>`` counts of the staged tier job."""
+    return [
+        {
+            "run_id": run_id,
+            "batch_id": batch_id,
+            "tier": tier,
+            "partition_key": partition_key,
+            "rows_in": rows_in,
+            "rows_out": rows_out[f"rows_out_{tier}"],
+            "min_ts": lo,
+            "max_ts": hi,
+            "committed_seq": batch_id * 10 + seq,
+        }
+        for seq, tier in enumerate(TIERS)
+    ]
+
+
+def _stale_blocks(
+    store: TranscriptStore, days: list[str], run_id: str, batch_id: int
+) -> tuple[list[str], list[dict]]:
+    """The compressed block days of every tier that encode the tier's
+    values from before a merge of `days` (directories relative to the
+    store root, dropped on publish), and one lineage row per day. A
+    reader that hits a missing day re-encodes from the tier."""
     from pathlib import Path
 
-    stats = []
-    for d in days:
-        bdir = Path(store.blocks_path(tier)) / f"block_date={d}"
-        if bdir.exists():
-            shutil.rmtree(bdir)
-            stats.append(
-                {
-                    "run_id": run_id,
-                    "batch_id": batch_id,
-                    "tier": f"blocks_{tier}",
-                    "partition_key": f"block_date={d}",
-                    "rows_in": 0,
-                    "rows_out": 0,
-                    "min_ts": None,
-                    "max_ts": None,
-                    "committed_seq": -1,
-                }
-            )
-    return stats
+    drop, stats = [], []
+    for tier in TIERS:
+        for d in days:
+            bdir = Path(store.blocks_path(tier)) / f"block_date={d}"
+            if bdir.exists():
+                drop.append(bdir.relative_to(store.root).as_posix())
+                stats.append(
+                    {
+                        "run_id": run_id,
+                        "batch_id": batch_id,
+                        "tier": f"blocks_{tier}",
+                        "partition_key": f"block_date={d}",
+                        "rows_in": 0,
+                        "rows_out": 0,
+                        "min_ts": None,
+                        "max_ts": None,
+                        "committed_seq": -1,
+                    }
+                )
+    return drop, stats
 
 
 def ingest_batches(
@@ -250,27 +270,32 @@ def merge_quarantine(
     partition they touch is recomputed FROM RAW, so the store ends
     byte-identical to one built with the late rows on time.
 
-    Idempotent under a crash at ANY point, without transactions:
+    The merge is one batch of the store's staged commit (see the module
+    docstring), with batch id ``last_batch_id + 1``:
 
     * the quarantine directory is FROZEN first by an atomic rename to
       ``_quarantine_merging`` — new late rows keep accumulating in a
       fresh ``_quarantine``; a leftover frozen dir on entry means a
       prior merge crashed and is simply re-processed;
     * the raw table is NOT appended to: the affected ``ts_date``
-      partitions are rewritten as dedup(existing ∪ late) on the
-      (conv_id, turn_idx) turn key via dynamic partition overwrite —
-      re-running after any crash converges to the same bytes;
+      partitions are staged as dedup(existing ∪ late) on the
+      (conv_id, turn_idx) turn key, to be swapped in whole;
     * tiers are recomputed for the affected bucket_dates from the
-      MERGED raw days (1m/1h/1d buckets never span a day, so a day
-      recompute is self-contained) — also a dynamic overwrite;
+      staged raw days (1m/1h/1d buckets never span a day, so a day
+      recompute is self-contained) by one `merge_tiers` job;
     * derived compressed block stores (``blocks_<tier>/block_date=d``)
       are computed FROM tier rows, so a merged day makes its blocks
-      stale: they are DROPPED for every affected day (same tier/blocks
-      consistency rule retention enforces) and the drop is recorded in
-      lineage — a reader hitting the missing day re-encodes from the
-      (now correct) tier instead of silently serving pre-merge values;
-    * the lineage row commits, then the frozen dir is deleted.
-      A crash in between re-runs the (idempotent) rewrites once more.
+      stale: they are DROPPED on publish for every affected day (same
+      tier/blocks consistency rule retention enforces) and the drop is
+      recorded in lineage — a reader hitting the missing day
+      re-encodes from the (now correct) tier instead of silently
+      serving pre-merge values;
+    * the lineage rows are staged, the batch is recorded as `pending`
+      (the commit point) and published by renames; then the frozen dir
+      is deleted. A crash before the commit point discards the staging
+      directory; one after it is rolled forward by the next writer. A
+      crash before the frozen dir is deleted re-runs the merge, whose
+      dedup makes it a no-op on the data.
 
     Survivor choice on a turn-key collision is DETERMINISTIC: the late
     row wins (a late delivery is a correction — MERGE/upsert
@@ -285,9 +310,9 @@ def merge_quarantine(
     Scale shape: late data clusters near the append boundary, so the
     rewrite set is a handful of day partitions regardless of table
     size; everything else is partition-pruned out of both the read
-    and the write. One shuffle per tier recompute: the merged raw days
-    go through `turn_partials` into `merge_tier_partitions`, the same
-    plan as the ingest's tier merges.
+    and the write. One shuffle for all three tier recomputes: the
+    merged raw days go through `turn_partials` into `merge_tiers`, the
+    same plan as the ingest's tier merge.
     """
     import shutil
     from pathlib import Path
@@ -295,6 +320,7 @@ def merge_quarantine(
     placeable = None
     store.acquire_writer_lock()
     try:
+        store.roll_forward()
         qdir = Path(store.root) / "_quarantine"
         frozen = Path(store.root) / "_quarantine_merging"
         if not frozen.exists():
@@ -329,9 +355,11 @@ def merge_quarantine(
             shutil.rmtree(frozen)
             return {"merged": 0, "unplaceable": n_null, "days": []}
 
-        # --- raw merge: rewrite only the affected day partitions ---
-        from pyspark.sql import Window
+        # --- raw merge: stage only the affected day partitions ---
+        from pyspark.sql import Observation, Window
 
+        merge_batch = store.load_overview().last_batch_id + 1
+        staging = store.staging_path(run_id, merge_batch)
         raw = spark.read.parquet(store.transcripts_path)
         existing_days = raw.where(F.col("ts_date").isin(days)).drop("ts_date")
         # deterministic survivor per turn key: late (_src=0) beats
@@ -350,51 +378,19 @@ def merge_quarantine(
             .drop("_src", "_rn")
             .withColumn("ts_date", F.to_date("ts"))
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                merged_days.repartition("ts_date")
-                .write.partitionBy("ts_date")
-                .mode("overwrite")
-                .parquet(store.transcripts_path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        staged_raw = str(staging / "swap" / "transcripts")
+        merged_days.repartition("ts_date").write.partitionBy("ts_date").parquet(staged_raw)
 
-        # --- tier recompute from the merged raw days ---
-        raw_days = (
-            spark.read.parquet(store.transcripts_path)
-            .where(F.col("ts_date").isin(days))
-            .drop("ts_date")
+        # --- tier recompute from the staged raw days ---
+        turns = turn_partials(spark.read.parquet(staged_raw).drop("ts_date"))
+        obs = Observation(f"tiers_b{merge_batch}")
+        store.merge_tiers({tier: turns for tier in TIERS}, staging, obs)
+        drop, stats = _stale_blocks(store, days, run_id, merge_batch)
+        stats += _tier_lineage(
+            run_id, merge_batch, n_late, obs.get, b.lo, b.hi, ",".join(sorted(days))
         )
-        turns = turn_partials(raw_days)
-        stats = []
-        ov = store.load_overview()
-        merge_batch = ov.last_batch_id + 1
-        for tier in ("1m", "1h", "1d"):
-            store.merge_tier_partitions(turns, tier)
-            # the tier's derived compressed block store shares the day
-            # layout; its blocks for a merged day now encode PRE-merge
-            # values — drop them (mirrors retention's block handling)
-            stats += _drop_stale_blocks(store, tier, days, run_id, merge_batch)
-            stats.append(
-                {
-                    "run_id": run_id,
-                    "batch_id": merge_batch,
-                    "tier": tier,
-                    "partition_key": ",".join(sorted(days)),
-                    "rows_in": n_late,
-                    "rows_out": -1,  # dynamic overwrite; day-scoped
-                    "min_ts": b.lo,
-                    "max_ts": b.hi,
-                    "committed_seq": merge_batch * 10
-                    + {"1m": 0, "1h": 1, "1d": 2}[tier],
-                }
-            )
-        store.append_checkpoint(spark, stats)
-        ov.last_batch_id = merge_batch
-        store.save_overview(ov)
+        store.append_checkpoint(spark, stats, str(staging / "append" / "_checkpoint"))
+        store.commit_staged(run_id, merge_batch, drop=drop)
         shutil.rmtree(frozen)
         return {"merged": n_late, "unplaceable": n_null, "days": sorted(days)}
     finally:
