@@ -175,13 +175,6 @@ def _q_cascade_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reaggregate(_tier_1h(spark, sf_dir), "1d")
 
 
-def _q_salted_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-safe two-phase (conv_id, bucket, salt) rollup ≡ plain."""
-    from smos_spark.operators.rollup import salted_rollup_from_raw
-
-    return salted_rollup_from_raw(_transcripts(spark, sf_dir), "1h", n_salts=8)
-
-
 def _q_derived_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived per-role/tool rates + mean length over 1h partials,
     emitted as exact ppm floors."""
@@ -2490,7 +2483,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rollup_1m": _q_rollup_1m,
         "cascade_1h": _q_cascade_1h,
         "cascade_1d": _q_cascade_1d,
-        "salted_1h": _q_salted_1h,
         "derived_1h": _q_derived_1h,
         "gap_fill_1h": _q_gap_fill_1h,
         # -- new this session (first driver check next window; all six
@@ -2977,7 +2969,6 @@ def oracle_sql() -> dict[str, str]:
         ),
         "cascade_1h": _T_CTE + tier_1h,
         "cascade_1d": _T_CTE + _tier_sql("day"),
-        "salted_1h": _T_CTE + tier_1h,
         "derived_1h": _T_CTE
         + f", tier AS ({tier_1h})\n"
         + """

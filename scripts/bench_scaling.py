@@ -103,8 +103,7 @@ def synth_input(dest: Path, n_conv: int, span_days: int) -> dict:
 
 
 def run_job(
-    zpath: Path, input_path: Path, output: Path, cores: int, salted: bool,
-    blocks: bool = False,
+    zpath: Path, input_path: Path, output: Path, cores: int, blocks: bool = False,
 ) -> dict:
     if output.exists():
         shutil.rmtree(output)
@@ -127,8 +126,6 @@ def run_job(
         "--shuffle-partitions",
         str(max(cores * 2, 16)),
     ]
-    if salted:
-        cmd.append("--salted")
     if blocks:
         cmd.append("--blocks")
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores))
@@ -152,7 +149,6 @@ def main() -> None:
     ap.add_argument("--cores", default="8,32",
                     help="comma pair N,4N of local[] levels to compare")
     ap.add_argument("--quick", action="store_true", help="tiny run (smoke)")
-    ap.add_argument("--salted", action="store_true")
     ap.add_argument("--blocks", action="store_true", default=True,
                     help="full pipeline incl. gap-fill + codec blocks")
     ap.add_argument("--trials", type=int, default=2,
@@ -189,7 +185,7 @@ def main() -> None:
         for cores in (lo, hi):
             probe = mini_probe(cores)
             r = run_job(zpath, input_path, work / f"tiers_{cores}", cores,
-                        args.salted, args.blocks)
+                        args.blocks)
             r["window_probe_units_per_sec"] = round(probe, 2)
             print(f"trial {trial} local[{cores}]: {r['wall_sec']}s, "
                   f"{r['turns_per_sec']} turns/sec, "
@@ -225,7 +221,6 @@ def main() -> None:
         "winner_window_ceiling_efficiency": winner_ceiling_eff,
         "efficiency_vs_ceiling": round(eff / winner_ceiling_eff, 3),
         "tier_rows": results[hi]["tier_rows"],
-        "salted": args.salted,
         "blocks": args.blocks,
         "trials": args.trials,
         f"phases_{lo}": results[lo]["phases"],

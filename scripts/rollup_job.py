@@ -45,7 +45,6 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--n-buckets", type=int, default=32)
-    ap.add_argument("--salted", action="store_true", help="two-phase skew-safe 1m rollup")
     ap.add_argument(
         "--blocks",
         action="store_true",
@@ -75,11 +74,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from smos_spark.operators.rollup import (
-        reaggregate,
-        rollup_from_raw,
-        salted_rollup_from_raw,
-    )
+    from smos_spark.operators.rollup import reaggregate, rollup_from_raw
     from smos_spark.session import get_spark
     from smos_spark.sources.store import TranscriptStore
 
@@ -121,12 +116,11 @@ def main() -> None:
         return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
     raw, raw_obs = observed(raw, "turns")
-    build_1m = salted_rollup_from_raw if args.salted else rollup_from_raw
     tier_obs = {}
 
     phases = {}
     store = TranscriptStore(args.output, n_buckets=args.n_buckets)
-    m1, tier_obs["1m"] = observed(build_1m(raw, "1m"), "tier_1m")
+    m1, tier_obs["1m"] = observed(rollup_from_raw(raw, "1m"), "tier_1m")
     store.write_tier(m1, "1m")
     phases["1m"] = round(time.time() - t0, 3)
     t1 = time.time()

@@ -9,8 +9,8 @@ a single sort task Spark cannot skew-split — and a bucketed twin whose
 partitions are bounded for ANY key at the cost of ~2× shuffled rows or
 an extra small shuffle. A 100×-scale user should not have to know
 which key is hot: these ``*_auto`` entry points estimate key heat from
-a cheap seeded sample (the `rollup_auto`/`detect_hot_convs` pattern,
-rollup.py:157) and route
+a cheap seeded sample (`detect_hot_keys`) and route, through the one
+router `_dispatch`,
 
 * no hot keys        → the plain form (plus one cheap sampling job);
 * a few hot keys     → split by key: cold majority through the plain
@@ -29,6 +29,7 @@ never a full-key histogram; only the (capped) hot list is collected.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -58,10 +59,9 @@ def detect_hot_keys(
     seed: int = 42,
     max_hot: int = MAX_SPLIT_KEYS,
 ) -> list[tuple] | None:
-    """Estimate hot key tuples from a seeded sample (multi-key
-    generalization of `rollup.detect_hot_convs`, same clamp: the
-    sampled cutoff never drops below 5 rows so a mis-sized threshold
-    cannot pull the whole key set to the driver).
+    """Estimate hot key tuples from a seeded sample. The sampled
+    cutoff never drops below 5 rows, so a mis-sized threshold cannot
+    pull the whole key set to the driver.
 
     Returns the list of hot key tuples (possibly empty), or ``None``
     when MORE than ``max_hot`` keys are hot — the caller should stop
@@ -106,7 +106,7 @@ def hot_key_predicate(key_cols: Sequence[str], hot: Sequence[tuple]) -> Column:
 
 
 def _dispatch(
-    df: DataFrame,
+    frames: tuple[DataFrame, ...],
     key_cols: Sequence[str],
     plain,
     bucketed,
@@ -115,22 +115,23 @@ def _dispatch(
     seed: int,
 ) -> DataFrame:
     """Shared routing: sample → plain / split-union / twin-wholesale.
-    (asof_join_auto routes inline instead: its heat sample runs on
-    LEFT∪RIGHT and the hot filter must apply to BOTH frames, which
-    this single-frame helper cannot express.)"""
+
+    ``plain`` and ``bucketed`` take the frames positionally. Heat is
+    sampled once on the union of the frames' key columns (a multi-frame
+    operator's window partition holds every frame's rows), and the
+    null-safe hot predicate splits every frame alike."""
+    keys = reduce(DataFrame.unionAll, (f.select(*key_cols) for f in frames))
     hot = detect_hot_keys(
-        df,
-        key_cols,
-        hot_threshold,
-        sample_fraction,
-        seed,
+        keys, key_cols, hot_threshold, sample_fraction, seed, max_hot=MAX_SPLIT_KEYS
     )
     if hot is None:  # too many hot keys to split — twin for everything
-        return bucketed(df)
+        return bucketed(*frames)
     if not hot:
-        return plain(df)
+        return plain(*frames)
     is_hot = hot_key_predicate(key_cols, hot)
-    return plain(df.where(~is_hot)).unionByName(bucketed(df.where(is_hot)))
+    return plain(*(f.where(~is_hot) for f in frames)).unionByName(
+        bucketed(*(f.where(is_hot) for f in frames))
+    )
 
 
 def rolling_stats_auto(
@@ -159,7 +160,7 @@ def rolling_stats_auto(
         quantiles=quantiles,
     )
     return _dispatch(
-        df,
+        (df,),
         keys,
         lambda d: rolling_stats(d, **kw),
         lambda d: rolling_stats_bucketed(d, **kw),
@@ -192,17 +193,6 @@ def asof_join_auto(
     Row-identical to ``asof_join(..., tolerance_sec=...)``."""
     from smos_spark.operators.asof import asof_join, asof_join_bucketed
 
-    keys = [on] if isinstance(on, str) else list(on)
-    if tolerance_sec is None:
-        return asof_join(
-            left,
-            right,
-            on=on,
-            ts_col=ts_col,
-            right_cols=right_cols,
-            suffix=suffix,
-            order_col=order_col,
-        )
     kw = dict(
         on=on,
         ts_col=ts_col,
@@ -210,23 +200,16 @@ def asof_join_auto(
         suffix=suffix,
         order_col=order_col,
     )
-    hot = detect_hot_keys(
-        left.select(*keys).unionAll(right.select(*keys)),
-        keys,
+    if tolerance_sec is None:
+        return asof_join(left, right, **kw)
+    return _dispatch(
+        (left, right),
+        [on] if isinstance(on, str) else list(on),
+        lambda lf, rt: asof_join(lf, rt, tolerance_sec=tolerance_sec, **kw),
+        lambda lf, rt: asof_join_bucketed(lf, rt, tolerance_sec, **kw),
         hot_threshold,
         sample_fraction,
         seed,
-    )
-    if hot is None:
-        return asof_join_bucketed(left, right, tolerance_sec, **kw)
-    if not hot:
-        return asof_join(left, right, tolerance_sec=tolerance_sec, **kw)
-    is_hot = hot_key_predicate(keys, hot)
-    cold = asof_join(
-        left.where(~is_hot), right.where(~is_hot), tolerance_sec=tolerance_sec, **kw
-    )
-    return cold.unionByName(
-        asof_join_bucketed(left.where(is_hot), right.where(is_hot), tolerance_sec, **kw)
     )
 
 
@@ -255,7 +238,7 @@ def counter_rate_auto(
         tie_cols=tie_cols,
     )
     return _dispatch(
-        df,
+        (df,),
         list(key_cols),
         lambda d: counter_rate(d, **kw),
         lambda d: counter_rate_bucketed(d, **kw),
@@ -282,7 +265,7 @@ def largest_gaps_auto(
 
     kw = dict(key_cols=key_cols, ts_col=ts_col, top_k=top_k, tie_cols=tie_cols)
     return _dispatch(
-        df,
+        (df,),
         list(key_cols),
         lambda d: largest_gaps(d, **kw),
         lambda d: largest_gaps_bucketed(d, width_sec=width_sec, **kw),
@@ -310,7 +293,7 @@ def event_funnel_auto(
     from smos_spark.operators.events import event_funnel, event_funnel_stepwise
 
     return _dispatch(
-        df,
+        (df,),
         list(key_cols),
         lambda d: event_funnel(
             d,

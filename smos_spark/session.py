@@ -44,6 +44,10 @@ def get_spark(
         .appName(app_name)
         # --- correctness-critical ---
         .config("spark.sql.session.timeZone", "UTC")
+        # overflow raises instead of wrapping; the exact-integer
+        # operators state their domain against this (Spark 4's default,
+        # pinned so a cluster-wide override cannot turn it off)
+        .config("spark.sql.ansi.enabled", "true")
         # --- scale/perf: these are the flags we'd set on the real cluster ---
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

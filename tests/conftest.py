@@ -10,6 +10,8 @@ from smos_spark.session import get_spark
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(master="local[8]", app_name="smos_spark-tests", shuffle_partitions=8)
+    # the exact-integer operators assume overflow raises
+    assert s.conf.get("spark.sql.ansi.enabled") == "true"
     yield s
 
 

@@ -4,9 +4,13 @@ in all three regimes (no hot keys / split / twin-wholesale)."""
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from smos_spark.operators import dispatch
 from smos_spark.operators.dispatch import (
     asof_join_auto,
     counter_rate_auto,
@@ -82,64 +86,96 @@ def test_hot_key_predicate_is_total_over_nulls(spark, skewed):
     assert skewed.where(pred & F.col("user_id").isNull()).count() == 40
 
 
-def test_rolling_stats_auto_identity(spark, skewed):
-    from smos_spark.operators.asof import rolling_stats
+def _routes():
+    """route → (frames from the skewed corpus, *_auto form, plain form);
+    both forms take the frames positionally."""
+    from smos_spark.operators.asof import asof_join, rolling_stats
+    from smos_spark.operators.downsample import counter_rate, largest_gaps
+    from smos_spark.operators.events import event_funnel
 
-    kw = dict(window_sec=86400.0, value_col="value", on="user_id")
-    plain = rolling_stats(skewed, **kw)
-    assert _sorted(rolling_stats_auto(skewed, **kw, **HOT)) == _sorted(plain)
-    # twin-wholesale regime (every key hot) is also identical
-    assert _sorted(
-        rolling_stats_auto(
-            skewed, **kw, hot_threshold=4, sample_fraction=1.0, seed=1
-        )
-    ) == _sorted(plain)
+    roll = dict(window_sec=86400.0, value_col="value", on="user_id")
+    asof = dict(
+        on="user_id",
+        right_cols=["event_id"],
+        order_col="event_id",
+        tolerance_sec=86400.0,
+    )
+    rate = dict(key_cols=("user_id",), counter_col="counter", width_sec=43200.0)
+    gaps = dict(key_cols=("user_id",), top_k=3)
+    funnel = dict(steps=("view", "click", "purchase"), key_cols=("user_id",))
+    return {
+        "rolling_stats": (
+            lambda ev: (ev,),
+            lambda d, **k: rolling_stats_auto(d, **roll, **k),
+            lambda d: rolling_stats(d, **roll),
+        ),
+        "asof_join": (
+            lambda ev: (
+                ev.where(F.col("event_type") == "purchase"),
+                ev.where(F.col("event_type") == "click"),
+            ),
+            lambda lf, rt, **k: asof_join_auto(lf, rt, **asof, **k),
+            lambda lf, rt: asof_join(lf, rt, **asof),
+        ),
+        "counter_rate": (
+            lambda ev: (
+                ev.withColumn("counter", (F.col("event_id") % 1000).cast("long")),
+            ),
+            lambda d, **k: counter_rate_auto(d, **rate, **k),
+            lambda d: counter_rate(d, **rate),
+        ),
+        "largest_gaps": (
+            lambda ev: (ev,),
+            lambda d, **k: largest_gaps_auto(d, **gaps, **k),
+            lambda d: largest_gaps(d, **gaps),
+        ),
+        "event_funnel": (
+            lambda ev: (ev,),
+            lambda d, **k: event_funnel_auto(d, **funnel, **k),
+            lambda d: event_funnel(d, **funnel),
+        ),
+    }
 
 
-def test_asof_join_auto_identity(spark, skewed):
+# regime → (knobs, split limit, the hot list the router must see)
+REGIMES = {
+    "no_hot": (
+        dict(hot_threshold=10**6, sample_fraction=0.25, seed=42),
+        dispatch.MAX_SPLIT_KEYS,
+        [],
+    ),
+    "split": (HOT, dispatch.MAX_SPLIT_KEYS, [(999_999,)]),
+    # every key with >= 5 rows is hot; the corpus has 17 keys (15
+    # users, the hot one, NULL), more than the lowered split limit
+    "wholesale": (dict(hot_threshold=4, sample_fraction=1.0, seed=1), 4, None),
+}
+
+
+@pytest.mark.parametrize("regime", list(REGIMES))
+@pytest.mark.parametrize("route", list(_routes()))
+def test_auto_identity(spark, skewed, monkeypatch, route, regime):
+    """Every *_auto route equals its plain form in every regime, on a
+    corpus with a hot key and NULL-keyed rows."""
+    frames_of, auto, plain = _routes()[route]
+    knobs, max_split, expect_hot = REGIMES[regime]
+    monkeypatch.setattr(dispatch, "MAX_SPLIT_KEYS", max_split)
+    frames = frames_of(skewed)
+    # the router samples heat on the union of all frames' keys
+    keys = reduce(DataFrame.unionAll, (f.select("user_id") for f in frames))
+    got_hot = detect_hot_keys(keys, ["user_id"], **knobs, max_hot=max_split)
+    assert got_hot == expect_hot
+    assert _sorted(auto(*frames, **knobs)) == _sorted(plain(*frames))
+
+
+def test_asof_join_auto_without_tolerance_is_plain(spark, skewed):
+    """Without a tolerance the twin has no bucket width: plain path."""
     from smos_spark.operators.asof import asof_join
 
     purchases = skewed.where(F.col("event_type") == "purchase")
     clicks = skewed.where(F.col("event_type") == "click")
     kw = dict(on="user_id", right_cols=["event_id"], order_col="event_id")
-    plain = asof_join(purchases, clicks, tolerance_sec=86400.0, **kw)
-    got = asof_join_auto(
-        purchases, clicks, tolerance_sec=86400.0, **kw, **HOT
-    )
-    assert _sorted(got) == _sorted(plain)
-    # without a tolerance the twin has no bucket width: plain path
     no_tol = asof_join_auto(purchases, clicks, **kw, **HOT)
     assert _sorted(no_tol) == _sorted(asof_join(purchases, clicks, **kw))
-
-
-def test_counter_rate_auto_identity(spark, skewed):
-    from smos_spark.operators.downsample import counter_rate
-
-    counters = skewed.withColumn(
-        "counter", (F.col("event_id") % 1000).cast("long")
-    )
-    kw = dict(key_cols=("user_id",), counter_col="counter", width_sec=43200.0)
-    assert _sorted(counter_rate_auto(counters, **kw, **HOT)) == _sorted(
-        counter_rate(counters, **kw)
-    )
-
-
-def test_largest_gaps_auto_identity(spark, skewed):
-    from smos_spark.operators.downsample import largest_gaps
-
-    kw = dict(key_cols=("user_id",), top_k=3)
-    assert _sorted(largest_gaps_auto(skewed, **kw, **HOT)) == _sorted(
-        largest_gaps(skewed, **kw)
-    )
-
-
-def test_event_funnel_auto_identity(spark, skewed):
-    from smos_spark.operators.events import event_funnel
-
-    kw = dict(steps=("view", "click", "purchase"), key_cols=("user_id",))
-    assert _sorted(event_funnel_auto(skewed, **kw, **HOT)) == _sorted(
-        event_funnel(skewed, **kw)
-    )
 
 
 @pytest.mark.slow
