@@ -16,9 +16,15 @@ Scale design (learned the hard way at ~10⁶ conversations):
   numpy and encodes each slice directly — per-group cost is a few
   tens of microseconds.
 * The repartition carries an EXPLICIT partition count so AQE cannot
-  coalesce the exchange down to a handful of partitions (the encode
+  coalesce its exchange down to a handful of partitions (the encode
   cost lives in Python workers, which AQE's size-based coalescing
-  cannot see).
+  cannot see). This holds only when the repartition stays in the
+  plan. An input already hash-partitioned on the key into the same
+  count (`forward_fill(gap_fill(...))` under the default shuffle
+  partitions, as in the blocks phase) satisfies it, so
+  `EnsureRequirements` drops it as redundant and AQE coalesces the
+  one remaining exchange: the whole encode then runs in a single
+  task and writes a single file.
 * Groups may straddle Arrow batch boundaries; the kernel carries the
   tail rows of each batch forward (batches arrive in partition order,
   so every group is contiguous).

@@ -12,6 +12,10 @@ def spark():
     s = get_spark(master="local[8]", app_name="smos_spark-tests", shuffle_partitions=8)
     # the exact-integer operators assume overflow raises
     assert s.conf.get("spark.sql.ansi.enabled") == "true"
+    # the Tungsten page the running context actually uses, which also
+    # catches a getOrCreate that reused a context started without it
+    page = s.sparkContext._jsc.sc().env().memoryManager().pageSizeBytes()
+    assert page == 2 * 1024 * 1024
     yield s
 
 
