@@ -5,10 +5,7 @@ tier from 1m, the 1d tier from 1h (exact partial re-aggregation), and
 writes all three to a partitioned tier store
 (bucket_date=YYYY-MM-DD/bucket_id=K — time-major for incremental
 merges, key-bucketed for point-read locality). Prints one JSON line
-with row counts (observed on the writes, no extra scans) + wall time;
-the scaling harness runs this identical job at two parallelism levels
-(local[8] / local[32]) to evidence the N→4N executor
-scaling-efficiency criterion.
+with row counts (observed on the writes, no extra scans) + wall time.
 
 Cluster launch shape (the real thing this mirrors):
   spark-submit --master <cluster> --py-files engine.zip \
@@ -25,12 +22,10 @@ import sys
 import time
 
 # plain `python scripts/rollup_job.py` puts scripts/ on sys.path, not
-# the repo root; executor Python workers additionally need PYTHONPATH
-# (the local-mode twin of spark-submit --py-files engine.zip)
+# the repo root
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
-os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 
 def main() -> None:

@@ -31,11 +31,10 @@ import os
 import sys
 
 # plain `python scripts/store_tool.py` puts scripts/ on sys.path, not
-# the repo root; executor Python workers additionally need PYTHONPATH
+# the repo root
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
-os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 
 def main() -> None:

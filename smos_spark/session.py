@@ -39,7 +39,8 @@ def get_spark(
 
     Defaults honor the driver environment variables:
       SPARK_GRAFT_CPUS  → local[N] parallelism (default 32)
-      SPARK_GRAFT_SF_DIR is consumed by bench.py, not here.
+    A driver launched by spark-submit keeps spark-submit's `--master`
+    unless `master` is given.
 
     Python workers start through `smos_spark._pydaemon` (PySpark's
     daemon without the per-task rescan of `pyspark.zip`); the package
@@ -47,12 +48,17 @@ def get_spark(
     working directory.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
+    # spark-submit starts the JVM first and hands it to the Python driver
+    # through this variable; the JVM's conf already holds its --master
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        master = f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
 
+    builder = SparkSession.builder
+    if master is not None:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
+        builder.appName(app_name)
         # --- correctness-critical ---
         .config("spark.sql.session.timeZone", "UTC")
         # overflow raises instead of wrapping; the exact-integer
@@ -70,7 +76,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SMOS_SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Tungsten page: every task that runs a hash aggregate, a sort or
         # a broadcast hash relation takes at least one page, and Spark

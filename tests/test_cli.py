@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+import zipfile
 from pathlib import Path
 
 import pytest
@@ -15,9 +16,9 @@ from pyspark.sql import functions as F
 REPO = Path(__file__).resolve().parents[1]
 
 
-def _run(args: list[str]) -> dict:
+def _run(args: list[str], launcher: tuple[str, ...] = (sys.executable,)) -> dict:
     out = subprocess.run(
-        [sys.executable, *args],
+        [*launcher, *args],
         cwd=REPO,
         capture_output=True,
         text=True,
@@ -36,21 +37,28 @@ def input_parquet(spark, transcripts, tmp_path_factory):
 
 
 def test_rollup_job_with_subset_flags(spark, transcripts, input_parquet, tmp_path):
+    # the cluster launch shape: spark-submit owns the master and ships
+    # the engine to the executors as a zip
+    engine = tmp_path / "engine.zip"
+    with zipfile.ZipFile(engine, "w", zipfile.ZIP_DEFLATED) as zf:
+        for py in sorted((REPO / "smos_spark").rglob("*.py")):
+            zf.write(py, py.relative_to(REPO))
     store_root = str(tmp_path / "store")
     res = _run(
         [
             "scripts/rollup_job.py",
             "--input", input_parquet,
             "--output", store_root,
-            "--master", "local[4]",
             "--shuffle-partitions", "4",
             "--conv-range", "conv000000,conv000019",
             "--ts-range", "2025-01-01 00:00:00,2025-01-02 23:59:59",
             "--read-roles", "user",
             "--blocks",
             "--block-parameters", "n_turns,len_sum",
-        ]
+        ],
+        launcher=("spark-submit", "--master", "local[4]", "--py-files", str(engine)),
     )
+    assert res["master"] == "local[4]"
     assert res["job"] == "rollup" and res["turns"] > 0
     # subset flags reached the plan: tier holds only the conv/ts slice
     tier = spark.read.parquet(f"{store_root}/tiers/1d")

@@ -209,7 +209,11 @@ def test_python_workers_start_outside_the_checkout(tmp_path):
         sys.path.insert(0, {str(REPO)!r})
         from smos_spark.session import get_spark
 
-        spark = get_spark(master="local[1]", shuffle_partitions=1)
+        spark = get_spark(
+            master="local[1]",
+            shuffle_partitions=1,
+            extra_conf={{"spark.driver.memory": "1g"}},
+        )
 
         def double(batches):
             # workers are forked from the daemon, whose __main__ it is
@@ -223,7 +227,6 @@ def test_python_workers_start_outside_the_checkout(tmp_path):
         """
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["SMOS_SPARK_DRIVER_MEM"] = "1g"
     res = subprocess.run(
         [sys.executable, "-c", script],
         cwd=tmp_path,
