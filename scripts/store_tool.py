@@ -310,15 +310,9 @@ def main() -> None:
 
     elif args.cmd == "compact":
         store = TranscriptStore(args.store)
-        store.acquire_writer_lock()
-        try:
-            res = store.compact_transcripts(
-                spark,
-                target_file_mb=args.target_file_mb,
-                min_files=args.min_files,
-            )
-        finally:
-            store.release_writer_lock()
+        res = store.compact_transcripts(
+            spark, target_file_mb=args.target_file_mb, min_files=args.min_files
+        )
         print(json.dumps({"cmd": "compact", **res}))
 
 

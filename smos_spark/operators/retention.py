@@ -10,17 +10,19 @@ horizon are dropped whole — no row rewrite, no scan of surviving data
 `expire_snapshots`, which is likewise metadata-only on a
 day-partitioned table).
 
-Expiry is recorded in the store's checkpoint lineage (one metrics row
-per dropped partition) so a resumed/auditing job can account for
-missing history, and the overview gains `retention_floor` per tier —
-readers can refuse to gap-fill below it (those buckets are *expired*,
-not *missing*).
+Expiry is staged, like every store change: one maintenance commit
+(`TranscriptStore.commit_staged`) drops the expired day directories on
+publish, appends one lineage row per dropped partition to the
+checkpoint (so a resumed/auditing job can account for missing
+history), and records `retention_floor` per tier in the overview save
+that is its commit point — readers can refuse to gap-fill below it
+(those buckets are *expired*, not *missing*). A crash before the commit
+drops nothing; one after it is rolled forward by the next writer.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import shutil
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -52,100 +54,54 @@ def apply_retention(
     `now` is an explicit timestamp/date (never wall clock — jobs must
     be replayable); policy values are day counts or None (keep all).
 
-    Holds the store's advisory writer lock for the duration (don't
-    call while already holding it): partition drops and the lineage
-    compaction would otherwise race a concurrent ingest_batch — the
-    compaction snapshots the checkpoint directory, so an append
-    landing mid-swap would be moved aside and deleted with it.
+    Holds the store's advisory writer lock (don't call while already
+    holding it). The same commit also compacts the checkpoint's
+    per-batch lineage files into one (`stage_checkpoint_compaction`).
     """
-    store.acquire_writer_lock()
-    try:
-        return _apply_retention_locked(spark, store, now, policy, run_id)
-    finally:
-        store.release_writer_lock()
-
-
-def _apply_retention_locked(
-    spark: SparkSession,
-    store: TranscriptStore,
-    now,
-    policy: dict[str, int | None] | None,
-    run_id: str,
-) -> dict[str, list[str]]:
-    store.roll_forward()  # a crashed writer's committed batch goes first
     policy = {**DEFAULT_RETENTION, **(policy or {})}
     if isinstance(now, str):
         now = dt.date.fromisoformat(now[:10])
     elif isinstance(now, dt.datetime):
         now = now.date()
 
-    dropped: dict[str, list[str]] = {}
-    lineage: list[dict] = []
-    ov = store.load_overview()
-    floors = dict(getattr(ov, "extra", {}).get("retention_floor", {}))
+    def expired(table: str, col: str, cutoff: dt.date) -> list[Path]:
+        return [
+            d
+            for d in sorted(Path(table).glob(f"{col}=*"))
+            if dt.date.fromisoformat(d.name.split("=", 1)[1]) < cutoff
+        ]
 
-    for tier, days in policy.items():
-        dropped[tier] = []
-        if days is None:
-            continue
-        cutoff = now - dt.timedelta(days=days)
-        tier_dir = Path(store.tier_path(tier))
-        if not tier_dir.exists():
-            continue
-        for date_dir in sorted(tier_dir.glob("bucket_date=*")):
-            d = dt.date.fromisoformat(date_dir.name.split("=", 1)[1])
-            if d < cutoff:
-                shutil.rmtree(date_dir)
-                dropped[tier].append(str(d))
-                lineage.append(
-                    {
-                        "run_id": run_id,
-                        "batch_id": -1,
-                        "tier": tier,
-                        "partition_key": f"bucket_date={d}",
-                        "rows_in": 0,
-                        "rows_out": 0,
-                        "min_ts": None,
-                        "max_ts": None,
-                        "committed_seq": -1,
-                    }
-                )
-        # the tier's compressed block store (blocks_<tier>/block_date=…)
-        # shares the day-partition layout and the SAME horizon: expired
-        # tier rows must not survive as decodable blocks
-        blocks_dir = Path(store.blocks_path(tier))
-        if blocks_dir.exists():
-            for date_dir in sorted(blocks_dir.glob("block_date=*")):
-                d = dt.date.fromisoformat(date_dir.name.split("=", 1)[1])
-                if d < cutoff:
-                    shutil.rmtree(date_dir)
-                    dropped[tier].append(f"blocks:{d}")
-                    lineage.append(
-                        {
-                            "run_id": run_id,
-                            "batch_id": -1,
-                            "tier": f"blocks_{tier}",
-                            "partition_key": f"block_date={d}",
-                            "rows_in": 0,
-                            "rows_out": 0,
-                            "min_ts": None,
-                            "max_ts": None,
-                            "committed_seq": -1,
-                        }
-                    )
-        if dropped[tier]:
-            floors[tier] = str(cutoff)
+    with store.writer():
+        ov = store.load_overview()
+        floors = dict((ov.extra or {}).get("retention_floor", {}))
+        dropped: dict[str, list[str]] = {}
+        dirs: list[Path] = []
+        for tier, days in policy.items():
+            dropped[tier] = []
+            if days is None:
+                continue
+            cutoff = now - dt.timedelta(days=days)
+            # the tier's compressed block store (blocks_<tier>/block_date=…)
+            # shares the day-partition layout and the SAME horizon: expired
+            # tier rows must not survive as decodable blocks
+            tier_days = expired(store.tier_path(tier), "bucket_date", cutoff)
+            block_days = expired(store.blocks_path(tier), "block_date", cutoff)
+            dropped[tier] = [d.name.split("=", 1)[1] for d in tier_days] + [
+                "blocks:" + d.name.split("=", 1)[1] for d in block_days
+            ]
+            dirs += tier_days + block_days
+            if dropped[tier]:
+                floors[tier] = str(cutoff)
 
-    if lineage:
-        store.append_checkpoint(spark, lineage)
-    # retention is the natural periodic maintenance hook: fold the
-    # per-batch single-file lineage appends back into one file
-    store.compact_checkpoint(spark)
-    if floors:
-        if not hasattr(ov, "extra") or ov.extra is None:
-            ov.extra = {}
-        ov.extra["retention_floor"] = floors
-        store.save_overview(ov)
+        staging = store.staging_path(run_id)
+        drop, lineage = store.day_drops(dirs, run_id, -1)
+        store.append_checkpoint(spark, lineage, str(staging / "append" / "_checkpoint"))
+        # retention is the natural periodic maintenance hook: fold the
+        # per-batch single-file lineage appends back into one file
+        store.stage_checkpoint_compaction(spark, staging)
+        if staging.exists():
+            ov.extra = {**(ov.extra or {}), "retention_floor": floors}
+            store.commit_staged(ov, staging, drop)
     return dropped
 
 

@@ -12,7 +12,7 @@ and the substitution is documented in BENCH/BASELINE.md):
                                            then key-bucketed
       _checkpoint/                         per-batch lineage+metrics rows
       _quarantine/                         late and NULL-ts raw rows
-      _staging/<run_id>-<batch_id>/        one batch's writes before
+      _staging/<name>/                     one commit's writes before
                                            they are published
       overview.json                        last_day / parameters state,
                                            each table's schema, and the
@@ -39,24 +39,33 @@ and the substitution is documented in BENCH/BASELINE.md):
   write job, into a staging directory.
 
 Staged commit (the reference writes its state only after the data,
-smos_l2/reshuffle.py:147-152). A writer puts everything a batch
-changes under `_staging/<run_id>-<batch_id>/`: `append/<table>/...`
-holds files to add to a table (raw turns, late rows, lineage rows),
-`swap/<table>/...` holds partition directories that replace the live
-ones (tier partitions, rewritten raw days). `commit_staged` then records
-the batch as `pending` in the overview — the atomic rename of
-`Overview.save` is the commit point — and publishes: it moves the
-staged files in, swaps each staged partition directory for the live
-one, drops stale block days, removes the staging directory, and last
-advances `last_batch_id`/`last_day` and clears `pending`. Publishing is
-renames on the local filesystem, like `Overview.save` and the
-checkpoint swap; an object store has no atomic rename and is out of
-scope. `roll_forward`, which ingest, the quarantine merge and retention
-call first under the writer lock, finishes a pending publish (each
-step is skipped once done, so a crash at any point converges) and
+smos_l2/reshuffle.py:147-152). It is the only way a maintained table
+directory changes. A writer puts everything a commit changes under
+`_staging/<name>/`: `append/<table>/...` holds files to add to a table
+(raw turns, late rows, lineage rows), `swap/<table>/...` holds
+directories that replace the live ones (tier partitions, rewritten raw
+days, a compacted `_checkpoint`). `commit_staged` then saves the
+overview with the commit's new state and a `pending` record in one
+atomic rename — the commit point — and publishes: it swaps each staged
+directory for the live one, then moves the staged files in (swaps go
+first, so rows appended to a table the same commit replaces are kept),
+deletes the directories listed as `drop` (stale or expired day
+partitions), removes the staging directory and clears `pending`.
+
+The committers are `ingest_batch` (staged at `<run_id>-<batch_id>`)
+and the maintenance commits `merge_quarantine`, `apply_retention`,
+`compact_checkpoint` and `compact_transcripts` (staged at `<run_id>`).
+Only an ingest batch sets `last_batch_id` and `last_day`; a
+maintenance commit leaves the batch counter alone, so it never takes
+the id of a stream's next epoch. Each committer calls `roll_forward`
+first under the writer lock (`writer`): it finishes a pending publish
+(each step is skipped once done, so a crash at any point converges) and
 discards any staging directory without one, which was never committed.
-A publish first restores a checkpoint compaction that crashed between
-its two renames, like every other checkpoint entry point.
+Readers see only published state and never roll forward: after a crash
+mid-publish, a table can miss a swapped directory (or `_checkpoint` be
+absent) until the next writer rolls the commit forward. Publishing is
+renames on the local filesystem, like `Overview.save`; an object store
+has no atomic rename and is out of scope.
 """
 
 from __future__ import annotations
@@ -110,7 +119,7 @@ class Overview:
     parameters: dict | None = None
     extra: dict = None  # free-form state (e.g. retention_floor per tier)
     schemas: dict = None  # table dir (relative to the root) → schema JSON
-    pending: dict | None = None  # the committed batch still being published
+    pending: dict | None = None  # the committed publish not yet finished
 
     @classmethod
     def load(cls, path: Path) -> "Overview":
@@ -254,7 +263,7 @@ class TranscriptStore:
             "bucket_id", bucket_expr("conv_id", self.n_buckets)
         )
 
-    def write_tier(self, tier_df: DataFrame, tier: str, mode: str = "overwrite") -> None:
+    def write_tier(self, tier_df: DataFrame, tier: str) -> None:
         # Hash-repartition on the partition columns (one shuffle, no
         # sampling pass — repartitionByRange would re-execute the whole
         # upstream aggregate to sample range boundaries). The sort
@@ -266,7 +275,7 @@ class TranscriptStore:
             out.repartition("bucket_date", "bucket_id")
             .sortWithinPartitions("bucket_date", "bucket_id", "conv_id", "bucket_start")
             .write.partitionBy("bucket_date", "bucket_id")
-            .mode(mode)
+            .mode("overwrite")
         ).parquet(self.tier_path(tier))
         self._record_schema(self.tier_path(tier), out)
 
@@ -364,7 +373,6 @@ class TranscriptStore:
         self,
         blocks: DataFrame,
         tier: str = "1h",
-        mode: str = "overwrite",
         codec: str = "gorilla",
     ) -> None:
         """Persist compressed per-conv block rows under
@@ -404,7 +412,7 @@ class TranscriptStore:
             out.repartition("block_date", "bucket_id")
             .sortWithinPartitions("block_date", "bucket_id", "conv_id")
             .write.partitionBy("block_date", "bucket_id")
-            .mode(mode)
+            .mode("overwrite")
         ).parquet(self.blocks_path(tier))
         # record layout + codec so a reopen can never mis-bucket point
         # reads (same guard as write_tier) or decode with the wrong
@@ -628,38 +636,40 @@ class TranscriptStore:
     def staging_root(self) -> Path:
         return self.root / "_staging"
 
-    def staging_path(self, run_id: str, batch_id: int) -> Path:
-        """Where batch (run_id, batch_id) stages its writes: files under
-        `append/<table>/` are added to the table, partition directories
-        under `swap/<table>/` replace the live ones."""
-        return self.staging_root / f"{run_id}-{batch_id}"
+    def staging_path(self, run_id: str, batch_id: int | None = None) -> Path:
+        """Where a commit stages its writes: files under `append/<table>/`
+        are added to the table, directories under `swap/<table>/` replace
+        the live ones. An ingest batch stages at `<run_id>-<batch_id>`, a
+        maintenance commit at `<run_id>`."""
+        return self.staging_root / (run_id if batch_id is None else f"{run_id}-{batch_id}")
 
-    def commit_staged(
-        self,
-        run_id: str,
-        batch_id: int,
-        last_day: str | None = None,
-        drop: list[str] | None = None,
-    ) -> None:
-        """Commit the batch staged at `staging_path(run_id, batch_id)`:
-        record it as `pending` in the overview (the commit point), then
-        publish it. `drop` lists directories (relative to the root) to
-        delete on publish, such as stale block days. Callers hold the
-        writer lock."""
-        ov = self.load_overview()
-        ov.pending = {
-            "run_id": run_id,
-            "batch_id": batch_id,
-            "last_day": last_day,
-            "drop": drop or [],
-        }
+    @contextlib.contextmanager
+    def writer(self):
+        """Hold the writer lock on a rolled-forward store: how every
+        committer starts."""
+        self.acquire_writer_lock()
+        try:
+            self.roll_forward()
+            yield
+        finally:
+            self.release_writer_lock()
+
+    def commit_staged(self, ov: Overview, staging: Path, drop: list[str] | None = None) -> None:
+        """Commit the writes staged at `staging`: save `ov`, which holds
+        the state the commit changes (an ingest batch's `last_batch_id`
+        and `last_day`, retention's `retention_floor`), together with
+        the `pending` publish in one atomic save — the commit point —
+        then publish. `drop` lists directories (relative to the root) to
+        delete on publish, such as stale or expired day partitions.
+        Callers are inside `writer`."""
+        ov.pending = {"staging": staging.name, "drop": drop or []}
         self.save_overview(ov)
         self._publish(ov)
 
     def roll_forward(self) -> None:
-        """Finish what a crashed writer left: publish the pending batch,
+        """Finish what a crashed writer left: publish the pending commit,
         if any, then discard every other staging directory (never
-        committed, so its batch is redone). Callers hold the writer
+        committed, so its work is redone). Callers hold the writer
         lock."""
         ov = self.load_overview()
         if ov.pending is not None:
@@ -667,24 +677,16 @@ class TranscriptStore:
         shutil.rmtree(self.staging_root, ignore_errors=True)
 
     def _publish(self, ov: Overview) -> None:
-        """Publish `ov.pending` by renames, then advance the overview.
-        Every step is skipped once done (a moved file or swapped
-        directory is gone from the staging tree), so re-running after a
-        crash at any point finishes the same publish. A compaction that
-        crashed between its renames is restored first, so the staged
-        lineage lands next to the old history and never in a fresh
-        `_checkpoint` that would shadow it."""
-        self._recover_checkpoint_swap()
+        """Publish `ov.pending` by renames, then clear it. Every step is
+        skipped once done (a swapped directory or a moved file is gone
+        from the staging tree), so re-running after a crash at any point
+        finishes the same publish. Swaps run before appends: a commit
+        that replaces `_checkpoint` and appends lineage rows to it keeps
+        the rows."""
         p = ov.pending
-        staging = self.staging_path(p["run_id"], p["batch_id"])
-        added = staging / "append"
-        for f in sorted(added.rglob("*")):
-            if f.is_file() and not f.name.startswith(("_", "._")):  # not _SUCCESS
-                dst = self.root / f.relative_to(added)
-                dst.parent.mkdir(parents=True, exist_ok=True)
-                os.replace(f, dst)
+        staging = self.staging_root / p["staging"]
         swapped, replaced = staging / "swap", staging / "replaced"
-        # partition directories are the ones holding data files; a
+        # swapped directories are the ones holding data files; a
         # directory emptied by earlier swaps holds none and is skipped
         for d in sorted({f.parent for f in swapped.rglob("part-*") if f.is_file()}):
             rel = d.relative_to(swapped)
@@ -694,35 +696,44 @@ class TranscriptStore:
                 os.replace(live, replaced / rel)
             live.parent.mkdir(parents=True, exist_ok=True)
             os.replace(d, live)
+        added = staging / "append"
+        for f in sorted(added.rglob("*")):
+            if f.is_file() and not f.name.startswith(("_", "._")):  # not _SUCCESS
+                dst = self.root / f.relative_to(added)
+                dst.parent.mkdir(parents=True, exist_ok=True)
+                os.replace(f, dst)
         for rel in p["drop"]:
             shutil.rmtree(self.root / rel, ignore_errors=True)
         shutil.rmtree(staging, ignore_errors=True)
         with contextlib.suppress(OSError):  # leave no empty _staging/
             self.staging_root.rmdir()
-        ov.last_batch_id = p["batch_id"]
-        if p["last_day"] is not None:
-            ov.last_day = max(p["last_day"], ov.last_day or "")
         ov.pending = None
         self.save_overview(ov)
 
+    def day_drops(
+        self, dirs: list[Path], run_id: str, batch_id: int
+    ) -> tuple[list[str], list[dict]]:
+        """For the day directories among `dirs` (`<table>/<col>=<day>`)
+        that exist: the commit's `drop` entries and one lineage row per
+        dropped day, keyed by table name and partition."""
+        dirs = [d for d in dirs if d.is_dir()]
+        rows = [
+            {
+                "run_id": run_id,
+                "batch_id": batch_id,
+                "tier": d.parent.name,
+                "partition_key": d.name,
+                "rows_in": 0,
+                "rows_out": 0,
+                "min_ts": None,
+                "max_ts": None,
+                "committed_seq": -1,
+            }
+            for d in dirs
+        ]
+        return [d.relative_to(self.root).as_posix() for d in dirs], rows
+
     # --- checkpoint lineage ---
-    def _recover_checkpoint_swap(self) -> None:
-        """Self-heal a compaction interrupted between its two directory
-        renames: if `_checkpoint` is missing but `_checkpoint_old`
-        survives, the old directory is the ONLY copy of the lineage —
-        restore it. Called by every checkpoint entry point so a crashed
-        compaction can never strand (or let a later run delete) the
-        sole surviving history."""
-        import shutil
-
-        p = Path(self.checkpoint_path)
-        old = Path(str(p) + "_old")
-        tmp = Path(str(p) + "_compacting")
-        if not p.exists() and old.exists():
-            os.replace(old, p)
-        # leftover tmp from an incomplete rewrite is garbage either way
-        shutil.rmtree(tmp, ignore_errors=True)
-
     def append_checkpoint(
         self, spark: SparkSession, rows: list[dict], path: str | None = None
     ) -> None:
@@ -730,8 +741,6 @@ class TranscriptStore:
         append)."""
         if not rows:
             return
-        if path is None:
-            self._recover_checkpoint_swap()
         spark.createDataFrame(
             [
                 (
@@ -751,7 +760,6 @@ class TranscriptStore:
         ).coalesce(1).write.mode("append").parquet(path or self.checkpoint_path)
 
     def read_checkpoint(self, spark: SparkSession) -> DataFrame | None:
-        self._recover_checkpoint_swap()
         if not Path(self.checkpoint_path).exists():
             return None
         return spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.checkpoint_path)
@@ -760,31 +768,28 @@ class TranscriptStore:
         """Compact the lineage table's per-batch coalesce(1) appends.
         At minutes-cadence streaming the one-tiny-file-per-batch
         appends pile up; once the directory exceeds `max_files`
-        parquet files, rewrite it as one file via an atomic directory
-        swap (readers either see the old layout or the new — never a
-        half-compacted one, and every entry point first restores a
-        compaction that crashed between its two renames). Callers must
-        hold the advisory writer lock — compaction moves files a
-        concurrent append may be writing into. Returns the resulting
-        file count."""
-        import shutil
+        parquet files, rewrite it as one file and publish it by a
+        maintenance commit (readers see the old layout or the new one).
+        Takes the writer lock. Returns the resulting file count."""
+        with self.writer():
+            staging = self.staging_path("compact-checkpoint")
+            n = self.stage_checkpoint_compaction(spark, staging, max_files)
+            if staging.exists():
+                self.commit_staged(self.load_overview(), staging)
+            return n
 
-        self._recover_checkpoint_swap()
-        p = Path(self.checkpoint_path)
-        if not p.exists():
-            return 0
-        files = [f for f in p.glob("*.parquet") if f.is_file()]
+    def stage_checkpoint_compaction(
+        self, spark: SparkSession, staging: Path, max_files: int = 16
+    ) -> int:
+        """If `_checkpoint` holds more than `max_files` files, stage it
+        rewritten as one file at `staging/swap/_checkpoint`. Returns the
+        file count the table has once the staged swap is published."""
+        files = [f for f in Path(self.checkpoint_path).glob("*.parquet") if f.is_file()]
         if len(files) <= max_files:
             return len(files)
-        tmp = Path(str(p) + "_compacting")
-        old = Path(str(p) + "_old")
-        shutil.rmtree(old, ignore_errors=True)
-        spark.read.schema(CHECKPOINT_SCHEMA).parquet(str(p)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp))
-        os.replace(p, old)
-        os.replace(tmp, p)
-        shutil.rmtree(old)
+        spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.checkpoint_path).coalesce(1).write.parquet(
+            str(staging / "swap" / "_checkpoint")
+        )
         return 1
 
     def compact_transcripts(
@@ -805,59 +810,55 @@ class TranscriptStore:
         no Spark jobs), pick dates whose file count exceeds both
         `min_files` and their byte-proportional target
         ``ceil(bytes / target_file_mb)``, then rewrite ONLY those
-        dates with a single dynamic-partition-overwrite write. Rows are
+        dates with a single write into ``swap/transcripts/ts_date=…``
+        of a maintenance commit, which swaps them in whole. Rows are
         spread over each date's target file count via a salt column
         derived from a broadcast date→n_files map, so big days still
         get multiple parallel writers/files. Untouched dates keep
         their files byte-identical; readers see old-or-new per
         partition (the same contract as a published tier merge).
-        Callers doing concurrent maintenance hold the advisory writer
-        lock, like tier merges. Returns
+        Takes the writer lock. Returns
         ``{"dates": k, "files_before": a, "files_after": b}``."""
-        root = Path(self.transcripts_path)
-        if not root.exists():
-            return {"dates": 0, "files_before": 0, "files_after": 0}
-        plan: dict[str, int] = {}
-        before = 0
-        for d in sorted(root.glob("ts_date=*")):
-            if not d.is_dir():
-                continue
-            files = [f for f in d.glob("*.parquet") if f.is_file()]
-            before += len(files)
-            nbytes = sum(f.stat().st_size for f in files)
-            target = max(1, -(-nbytes // (target_file_mb << 20)))
-            if len(files) > max(min_files, target):
-                plan[d.name.split("=", 1)[1]] = int(target)
-        if not plan:
-            return {"dates": 0, "files_before": before, "files_after": before}
-
-        nmap = spark.createDataFrame(
-            [(k, v) for k, v in plan.items()], "ts_date_str string, _nf int"
-        )
         import datetime as _dt
 
-        dates = [_dt.date.fromisoformat(k) for k in plan]
-        df = (
-            spark.read.parquet(str(root))
-            .where(F.col("ts_date").isin(dates))  # partition pruning
-            .withColumn("ts_date_str", F.col("ts_date").cast("string"))
-            .join(F.broadcast(nmap), "ts_date_str")
-            .withColumn("_fno", F.pmod(F.xxhash64("conv_id"), F.col("_nf")))
-            .repartition("ts_date", "_fno")
-            .sortWithinPartitions("ts_date", "conv_id", "turn_idx")
-            .drop("ts_date_str", "_nf", "_fno")
-        )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            df.write.partitionBy("ts_date").mode("overwrite").parquet(str(root))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        after = sum(
-            1
-            for d in root.glob("ts_date=*")
-            if d.is_dir()
-            for f in d.glob("*.parquet")
-            if f.is_file()
-        )
+        root = Path(self.transcripts_path)
+
+        def day_files() -> dict[str, list[Path]]:
+            return {
+                d.name: [f for f in d.glob("*.parquet") if f.is_file()]
+                for d in sorted(root.glob("ts_date=*"))
+                if d.is_dir()
+            }
+
+        with self.writer():
+            files = day_files()
+            before = sum(map(len, files.values()))
+            plan: dict[str, int] = {}
+            for name, fs in files.items():
+                nbytes = sum(f.stat().st_size for f in fs)
+                target = max(1, -(-nbytes // (target_file_mb << 20)))
+                if len(fs) > max(min_files, target):
+                    plan[name.split("=", 1)[1]] = int(target)
+            if not plan:
+                return {"dates": 0, "files_before": before, "files_after": before}
+
+            nmap = spark.createDataFrame(
+                [(k, v) for k, v in plan.items()], "ts_date_str string, _nf int"
+            )
+            dates = [_dt.date.fromisoformat(k) for k in plan]
+            staging = self.staging_path("compact-transcripts")
+            (
+                spark.read.parquet(str(root))
+                .where(F.col("ts_date").isin(dates))  # partition pruning
+                .withColumn("ts_date_str", F.col("ts_date").cast("string"))
+                .join(F.broadcast(nmap), "ts_date_str")
+                .withColumn("_fno", F.pmod(F.xxhash64("conv_id"), F.col("_nf")))
+                .repartition("ts_date", "_fno")
+                .sortWithinPartitions("ts_date", "conv_id", "turn_idx")
+                .drop("ts_date_str", "_nf", "_fno")
+                .write.partitionBy("ts_date")
+                .parquet(str(staging / "swap" / "transcripts"))
+            )
+            self.commit_staged(self.load_overview(), staging)
+            after = sum(map(len, day_files().values()))
         return {"dates": len(plan), "files_before": before, "files_after": after}

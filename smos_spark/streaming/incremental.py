@@ -18,13 +18,13 @@ turns.
 
 Commit protocol (see `sources/store.py`). A batch stages all of its
 writes under `_staging/<run_id>-<batch_id>/`: the raw turns, the late
-rows, the merged tier partitions and its lineage rows. Only then is it
-recorded as `pending` in the overview, and that atomic overview rename
-is the commit point. Publishing moves the staged files into
-`transcripts/`, `_quarantine/` and `_checkpoint/`, swaps the staged
-partition directories into `tiers/<tier>/` and drops stale block days,
-all by local-filesystem renames; last, the overview advances
-`last_batch_id`/`last_day` and clears `pending`. Nothing the live store
+rows, the merged tier partitions and its lineage rows. Only then is the
+overview saved with the batch's `last_batch_id`/`last_day` and a
+`pending` publish, and that atomic overview rename is the commit point.
+Publishing swaps the staged partition directories into `tiers/<tier>/`,
+moves the staged files into `transcripts/`, `_quarantine/` and
+`_checkpoint/` and drops stale block days, all by local-filesystem
+renames; last, the overview clears `pending`. Nothing the live store
 holds changes before the commit point, so a batch is applied exactly
 once whatever fails:
 
@@ -39,7 +39,9 @@ once whatever fails:
   * a batch at or before `last_batch_id` is skipped.
 
 `continuous.stream_ingest` re-runs a failed `foreachBatch` epoch with
-the same batch id, which is exactly such a retry.
+the same batch id, which is exactly such a retry. Only ingest batches
+advance `last_batch_id`: `merge_quarantine` is a maintenance commit and
+leaves it alone, so the stream's next epoch is never taken by a merge.
 """
 
 from __future__ import annotations
@@ -77,7 +79,6 @@ def ingest_batch(
     run_id: str,
     batch_id: int,
     strict: bool = False,
-    quarantine: bool = True,
 ) -> dict:
     """Append one batch of raw turns and incrementally maintain all
     three tiers. Idempotent per (run_id, batch_id): see the module
@@ -86,11 +87,8 @@ def ingest_batch(
     layout has no snapshot isolation, so a second concurrent writer
     raises ConcurrentWriterError instead of interleaving partition
     swaps."""
-    store.acquire_writer_lock()
-    try:
-        return _ingest_batch_locked(store, batch, run_id, batch_id, strict, quarantine)
-    finally:
-        store.release_writer_lock()
+    with store.writer():  # a crashed writer's committed batch goes first
+        return _ingest_batch_locked(store, batch, run_id, batch_id, strict)
 
 
 def _ingest_batch_locked(
@@ -99,12 +97,8 @@ def _ingest_batch_locked(
     run_id: str,
     batch_id: int,
     strict: bool,
-    quarantine: bool,
 ) -> dict:
     spark = batch.sparkSession
-
-    # --- resume: finish a committed batch, discard an uncommitted one ---
-    store.roll_forward()
     ov = store.load_overview()
     if batch_id <= ov.last_batch_id:
         return {"skipped": True, "batch_id": batch_id}
@@ -137,10 +131,10 @@ def _ingest_batch_locked(
                 f"(starts at {bounds.raw_lo}, store last_day {ov.last_day})"
             )
         batch, late = split_late_rows(batch, ov.last_day)
-        if quarantine:
-            late.write.parquet(str(staging / "append" / "_quarantine"))
+        late.write.parquet(str(staging / "append" / "_quarantine"))
+    ov.last_batch_id = batch_id
     if n_in == 0:
-        store.commit_staged(run_id, batch_id)
+        store.commit_staged(ov, staging)
         return {"skipped": False, "batch_id": batch_id, "rows_in": 0}
 
     import datetime as _dt
@@ -191,13 +185,15 @@ def _ingest_batch_locked(
     drop, stats = _stale_blocks(store, batch_days, run_id, batch_id)
     stats += _tier_lineage(run_id, batch_id, n_in, obs.get, lo, hi, "all")
     store.append_checkpoint(spark, stats, str(staging / "append" / "_checkpoint"))
-    store.commit_staged(run_id, batch_id, last_day=str(hi), drop=drop)
+    ov.last_day = str(hi)
+    store.commit_staged(ov, staging, drop)
     return {"skipped": False, "batch_id": batch_id, "rows_in": n_in}
 
 
 def _tier_lineage(run_id, batch_id, rows_in, rows_out, lo, hi, partition_key) -> list[dict]:
     """One lineage row per tier; `rows_out` holds the observed
-    ``rows_out_<tier>`` counts of the staged tier job."""
+    ``rows_out_<tier>`` counts of the staged tier job. A maintenance
+    commit passes batch_id -1 and gets committed_seq -1."""
     return [
         {
             "run_id": run_id,
@@ -208,7 +204,7 @@ def _tier_lineage(run_id, batch_id, rows_in, rows_out, lo, hi, partition_key) ->
             "rows_out": rows_out[f"rows_out_{tier}"],
             "min_ts": lo,
             "max_ts": hi,
-            "committed_seq": batch_id * 10 + seq,
+            "committed_seq": batch_id * 10 + seq if batch_id >= 0 else -1,
         }
         for seq, tier in enumerate(TIERS)
     ]
@@ -223,40 +219,18 @@ def _stale_blocks(
     reader that hits a missing day re-encodes from the tier."""
     from pathlib import Path
 
-    drop, stats = [], []
-    for tier in TIERS:
-        for d in days:
-            bdir = Path(store.blocks_path(tier)) / f"block_date={d}"
-            if bdir.exists():
-                drop.append(bdir.relative_to(store.root).as_posix())
-                stats.append(
-                    {
-                        "run_id": run_id,
-                        "batch_id": batch_id,
-                        "tier": f"blocks_{tier}",
-                        "partition_key": f"block_date={d}",
-                        "rows_in": 0,
-                        "rows_out": 0,
-                        "min_ts": None,
-                        "max_ts": None,
-                        "committed_seq": -1,
-                    }
-                )
-    return drop, stats
+    dirs = [Path(store.blocks_path(t)) / f"block_date={d}" for t in TIERS for d in days]
+    return store.day_drops(dirs, run_id, batch_id)
 
 
 def ingest_batches(
     store: TranscriptStore,
     batches: list[DataFrame],
     run_id: str,
-    start_batch: int = 0,
 ) -> list[dict]:
     """Drive a sequence of time-ordered micro-batches (the imgbuffer
     loop analog, Trigger.AvailableNow shape)."""
-    return [
-        ingest_batch(store, b, run_id, i)
-        for i, b in enumerate(batches[start_batch:], start=start_batch)
-    ]
+    return [ingest_batch(store, b, run_id, i) for i, b in enumerate(batches)]
 
 
 def merge_quarantine(
@@ -270,13 +244,15 @@ def merge_quarantine(
     partition they touch is recomputed FROM RAW, so the store ends
     byte-identical to one built with the late rows on time.
 
-    The merge is one batch of the store's staged commit (see the module
-    docstring), with batch id ``last_batch_id + 1``:
+    The merge is one maintenance commit of the store's staged commit
+    (see the module docstring), staged at ``_staging/<run_id>/``. It
+    does not take or advance ``last_batch_id``, which only ingest
+    batches do, so the stream's next epoch is never skipped:
 
     * the quarantine directory is FROZEN first by an atomic rename to
       ``_quarantine_merging`` — new late rows keep accumulating in a
       fresh ``_quarantine``; a leftover frozen dir on entry means a
-      prior merge crashed and is simply re-processed;
+      prior merge crashed before its commit and is re-processed;
     * the raw table is NOT appended to: the affected ``ts_date``
       partitions are staged as dedup(existing ∪ late) on the
       (conv_id, turn_idx) turn key, to be swapped in whole;
@@ -290,12 +266,11 @@ def merge_quarantine(
       recorded in lineage — a reader hitting the missing day
       re-encodes from the (now correct) tier instead of silently
       serving pre-merge values;
-    * the lineage rows are staged, the batch is recorded as `pending`
-      (the commit point) and published by renames; then the frozen dir
-      is deleted. A crash before the commit point discards the staging
-      directory; one after it is rolled forward by the next writer. A
-      crash before the frozen dir is deleted re-runs the merge, whose
-      dedup makes it a no-op on the data.
+    * the lineage rows are staged and the merge is committed with the
+      frozen dir in its ``drop`` list, so publishing deletes it. A
+      crash before the commit point discards the staging directory and
+      the next merge redoes the work; one after it is rolled forward by
+      the next writer.
 
     Survivor choice on a turn-key collision is DETERMINISTIC: the late
     row wins (a late delivery is a correction — MERGE/upsert
@@ -303,9 +278,9 @@ def merge_quarantine(
     so re-running the merge — or racing rows inside one merge — always
     converges to the same bytes.
 
-    NULL-ts rows can never be placed on the time axis; they are moved
-    to ``_quarantine_unplaceable`` (mode=overwrite per merge — also
-    rerun-safe) instead of poisoning retries forever.
+    NULL-ts rows can never be placed on the time axis; the same commit
+    appends them to ``_quarantine_unplaceable`` instead of poisoning
+    retries forever.
 
     Scale shape: late data clusters near the append boundary, so the
     rewrite set is a handful of day partitions regardless of table
@@ -314,86 +289,76 @@ def merge_quarantine(
     merged raw days go through `turn_partials` into `merge_tiers`, the
     same plan as the ingest's tier merge.
     """
-    import shutil
     from pathlib import Path
 
+    from pyspark.sql import Observation, Window
+
+    from smos_spark.schema import TRANSCRIPTS_SCHEMA
+
     placeable = None
-    store.acquire_writer_lock()
-    try:
-        store.roll_forward()
-        qdir = Path(store.root) / "_quarantine"
-        frozen = Path(store.root) / "_quarantine_merging"
-        if not frozen.exists():
-            if not qdir.exists():
-                return {"merged": 0, "unplaceable": 0, "days": []}
-            qdir.rename(frozen)
+    with store.writer():
+        try:
+            qdir = Path(store.root) / "_quarantine"
+            frozen = Path(store.root) / "_quarantine_merging"
+            if not frozen.exists():
+                if not qdir.exists():
+                    return {"merged": 0, "unplaceable": 0, "days": []}
+                qdir.rename(frozen)
 
-        from smos_spark.schema import TRANSCRIPTS_SCHEMA
+            late = spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(str(frozen))
+            placeable = late.where(F.col("ts").isNotNull()).cache()
+            b = late.agg(
+                F.count(F.lit(1)).alias("n_all"),
+                F.count("ts").alias("n_late"),
+                F.min("ts").alias("lo"),
+                F.max("ts").alias("hi"),
+            ).collect()[0]
+            n_null, n_late = b.n_all - b.n_late, b.n_late
+            staging = store.staging_path(run_id)
+            if n_null:
+                late.where(F.col("ts").isNull()).write.parquet(
+                    str(staging / "append" / "_quarantine_unplaceable")
+                )
+            days = [
+                str(r.d)
+                for r in placeable.select(F.to_date("ts").alias("d")).distinct().collect()
+            ]
+            drop = [frozen.name]
+            if days:
+                # --- raw merge: stage only the affected day partitions ---
+                raw = spark.read.parquet(store.transcripts_path)
+                existing_days = raw.where(F.col("ts_date").isin(days)).drop("ts_date")
+                # deterministic survivor per turn key: late (_src=0) beats
+                # existing (_src=1); within a side, (ts, role, tool, text) is a
+                # total order over the payload so dropDuplicates' arbitrary pick
+                # can't make reruns diverge. Window partitions are turn keys —
+                # a handful of rows each, no skew.
+                surv = Window.partitionBy("conv_id", "turn_idx").orderBy(
+                    "_src", "ts", "role", "tool", "text"
+                )
+                merged_days = (
+                    existing_days.withColumn("_src", F.lit(1))
+                    .unionByName(placeable.withColumn("_src", F.lit(0)))
+                    .withColumn("_rn", F.row_number().over(surv))
+                    .where(F.col("_rn") == 1)
+                    .drop("_src", "_rn")
+                    .withColumn("ts_date", F.to_date("ts"))
+                )
+                staged_raw = str(staging / "swap" / "transcripts")
+                merged_days.repartition("ts_date").write.partitionBy("ts_date").parquet(staged_raw)
 
-        late = spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(str(frozen))
-        placeable = late.where(F.col("ts").isNotNull()).cache()
-        b = late.agg(
-            F.count(F.lit(1)).alias("n_all"),
-            F.count("ts").alias("n_late"),
-            F.min("ts").alias("lo"),
-            F.max("ts").alias("hi"),
-        ).collect()[0]
-        n_null, n_late = b.n_all - b.n_late, b.n_late
-        if n_null:
-            (
-                late.where(F.col("ts").isNull())
-                .write.mode("overwrite")
-                .parquet(str(Path(store.root) / "_quarantine_unplaceable"))
-            )
-        days = [
-            str(r.d)
-            for r in placeable.select(
-                F.to_date("ts").alias("d")
-            ).distinct().collect()
-        ]
-        if not days:
-            shutil.rmtree(frozen)
-            return {"merged": 0, "unplaceable": n_null, "days": []}
-
-        # --- raw merge: stage only the affected day partitions ---
-        from pyspark.sql import Observation, Window
-
-        merge_batch = store.load_overview().last_batch_id + 1
-        staging = store.staging_path(run_id, merge_batch)
-        raw = spark.read.parquet(store.transcripts_path)
-        existing_days = raw.where(F.col("ts_date").isin(days)).drop("ts_date")
-        # deterministic survivor per turn key: late (_src=0) beats
-        # existing (_src=1); within a side, (ts, role, tool, text) is a
-        # total order over the payload so dropDuplicates' arbitrary pick
-        # can't make reruns diverge. Window partitions are turn keys —
-        # a handful of rows each, no skew.
-        surv = Window.partitionBy("conv_id", "turn_idx").orderBy(
-            "_src", "ts", "role", "tool", "text"
-        )
-        merged_days = (
-            existing_days.withColumn("_src", F.lit(1))
-            .unionByName(placeable.withColumn("_src", F.lit(0)))
-            .withColumn("_rn", F.row_number().over(surv))
-            .where(F.col("_rn") == 1)
-            .drop("_src", "_rn")
-            .withColumn("ts_date", F.to_date("ts"))
-        )
-        staged_raw = str(staging / "swap" / "transcripts")
-        merged_days.repartition("ts_date").write.partitionBy("ts_date").parquet(staged_raw)
-
-        # --- tier recompute from the staged raw days ---
-        turns = turn_partials(spark.read.parquet(staged_raw).drop("ts_date"))
-        obs = Observation(f"tiers_b{merge_batch}")
-        store.merge_tiers({tier: turns for tier in TIERS}, staging, obs)
-        drop, stats = _stale_blocks(store, days, run_id, merge_batch)
-        stats += _tier_lineage(
-            run_id, merge_batch, n_late, obs.get, b.lo, b.hi, ",".join(sorted(days))
-        )
-        store.append_checkpoint(spark, stats, str(staging / "append" / "_checkpoint"))
-        store.commit_staged(run_id, merge_batch, drop=drop)
-        shutil.rmtree(frozen)
-        return {"merged": n_late, "unplaceable": n_null, "days": sorted(days)}
-    finally:
-        if placeable is not None:
-            placeable.unpersist()
-        store.release_writer_lock()
+                # --- tier recompute from the staged raw days ---
+                turns = turn_partials(spark.read.parquet(staged_raw).drop("ts_date"))
+                obs = Observation("tiers_merge")
+                store.merge_tiers({tier: turns for tier in TIERS}, staging, obs)
+                stale, stats = _stale_blocks(store, days, run_id, -1)
+                drop += stale
+                stats += _tier_lineage(
+                    run_id, -1, n_late, obs.get, b.lo, b.hi, ",".join(sorted(days))
+                )
+                store.append_checkpoint(spark, stats, str(staging / "append" / "_checkpoint"))
+            store.commit_staged(store.load_overview(), staging, drop)
+            return {"merged": n_late, "unplaceable": n_null, "days": sorted(days)}
+        finally:
+            if placeable is not None:
+                placeable.unpersist()

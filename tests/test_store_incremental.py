@@ -238,7 +238,7 @@ def test_merge_tiers_one_shuffle(spark, transcripts_pdf, tmp_path, monkeypatch):
     store = TranscriptStore(tmp_path / "plan", n_buckets=4)
     # creates the tiers
     store.merge_tiers({t: turn_partials(old) for t in tiers}, store.staging_path("p", 0))
-    store.commit_staged("p", 0)
+    store.commit_staged(store.load_overview(), store.staging_path("p", 0))
 
     plans = []
     write = DataFrameWriter.parquet
@@ -254,7 +254,7 @@ def test_merge_tiers_one_shuffle(spark, transcripts_pdf, tmp_path, monkeypatch):
     }
     store.merge_tiers(rows, store.staging_path("p", 1))
     monkeypatch.undo()
-    store.commit_staged("p", 1)
+    store.commit_staged(store.load_overview(), store.staging_path("p", 1))
 
     assert len(plans) == 1
     assert plans[0].count("Exchange") == 1, plans[0]
@@ -507,8 +507,8 @@ def test_release_lock_respects_new_holder(tmp_path):
 
 def test_checkpoint_compaction(spark, tmp_path):
     """Per-batch coalesce(1) appends pile up one tiny file per batch;
-    compact_checkpoint folds them into one file, preserving rows, via
-    an atomic directory swap."""
+    compact_checkpoint folds them into one file, preserving rows, and
+    publishes it by a maintenance commit."""
     from pathlib import Path
 
     store = TranscriptStore(tmp_path / "ckpt", n_buckets=4)
@@ -540,7 +540,7 @@ def test_checkpoint_compaction(spark, tmp_path):
 
 def test_compact_transcripts(spark, transcripts, tmp_path):
     """Iceberg rewrite_data_files analog: repeated appends pile up
-    small files per day partition; one dynamic-overwrite job rewrites
+    small files per day partition; one staged job rewrites
     only the over-threshold dates, round-trips every row, and a rerun
     is a no-op."""
     from pathlib import Path
@@ -582,61 +582,183 @@ def test_compact_transcripts(spark, transcripts, tmp_path):
     assert res2["files_before"] == res["files_after"]
 
 
-def test_checkpoint_swap_crash_recovery(spark, tmp_path):
-    """A compaction that crashed between its two directory renames
-    (checkpoint moved to _old, replacement not yet in place) must be
-    self-healed by the next checkpoint access, not stranded/deleted."""
+def _crash_publish(monkeypatch, point):
+    """Fail a staged commit at `point`: ``before_commit`` fails the
+    overview save that records the pending publish, ``publish_after_<k>``
+    fails the (k+1)-th rename between the staging tree and the store.
+    Returns the list the injection appends to when it fires."""
     import os
-    from pathlib import Path
 
-    store = TranscriptStore(tmp_path / "store")
-    row = {
-        "run_id": "r",
-        "batch_id": 0,
-        "tier": "1d",
-        "partition_key": "bucket_date=2025-01-01",
-        "rows_in": 1,
-        "rows_out": 1,
-        "min_ts": None,
-        "max_ts": None,
-        "committed_seq": 0,
-    }
-    for b in range(3):
+    from smos_spark.sources.store import Overview
+
+    fired = []
+    if point == "before_commit":
+        save = Overview.save
+
+        def crash(self, path):
+            if not fired and self.pending is not None:
+                fired.append(path)
+                raise _Crash(point)
+            return save(self, path)
+
+        monkeypatch.setattr(Overview, "save", crash)
+    else:
+        k = int(point.rsplit("_", 1)[1])
+        rename, moves = os.replace, []
+
+        def crash(src, dst, *args, **kwargs):
+            # a publish rename moves between the staging tree and the store
+            if ("_staging" in str(src)) != ("_staging" in str(dst)):
+                if len(moves) == k and not fired:
+                    fired.append(src)
+                    raise _Crash(point)
+                moves.append(src)
+            return rename(src, dst, *args, **kwargs)
+
+        monkeypatch.setattr(os, "replace", crash)
+    return fired
+
+
+@pytest.fixture(scope="module")
+def maintained(spark, small, tmp_path_factory):
+    """A store for the maintenance commits to act on: raw days in three
+    file waves, the 1m and 1h tiers, 1m blocks, and 17 single-file
+    lineage appends (one over the compaction threshold)."""
+    from smos_spark.operators.compress import compress_series
+    from smos_spark.operators.rollup import reaggregate
+
+    root = tmp_path_factory.mktemp("maintained") / "store"
+    store = TranscriptStore(root, n_buckets=4)
+    for i in range(3):
+        store.append_transcripts(small.where(F.col("turn_idx") % 3 == i))
+    m1 = rollup_from_raw(small, "1m")
+    store.write_tier(m1, "1m")
+    store.write_tier(reaggregate(m1, "1h"), "1h")
+    series = m1.select("conv_id", F.col("bucket_start").alias("ts"), F.col("n_turns").cast("double").alias("n_turns"))
+    store.write_blocks(compress_series(series, ["n_turns"], stats=True, slice_col=F.to_date("ts")), "1m")
+    row = {"run_id": "r", "tier": "1m", "partition_key": "all", "rows_in": 1, "rows_out": 1,
+           "min_ts": None, "max_ts": None, "committed_seq": 0}
+    for b in range(17):
         store.append_checkpoint(spark, [{**row, "batch_id": b}])
-    p = Path(store.checkpoint_path)
-    # simulate the crash window: first rename done, second never ran
-    os.replace(p, Path(str(p) + "_old"))
-    assert not p.exists()
-
-    df = store.read_checkpoint(spark)
-    assert df is not None and df.count() == 3
-    assert p.exists() and not Path(str(p) + "_old").exists()
-
-    # and compaction itself recovers + proceeds
-    os.replace(p, Path(str(p) + "_old"))
-    assert store.compact_checkpoint(spark, max_files=1) == 1
-    assert store.read_checkpoint(spark).count() == 3
+    return root
 
 
-def test_ingest_restores_crashed_checkpoint_swap(spark, small, days, tmp_path):
-    """A batch published while a crashed compaction left the lineage in
-    `_checkpoint_old` adds its rows to that history: the publish does
-    not create a fresh `_checkpoint` that would shadow the old one and
-    let the next compaction delete it."""
-    import os
+@pytest.mark.parametrize(
+    "commit,point",
+    [
+        ("retention", "before_commit"),
+        ("retention", "publish_after_1"),  # `_checkpoint` moved aside
+        ("retention", "publish_after_2"),  # swapped, lineage not appended
+        ("compact_checkpoint", "before_commit"),
+        ("compact_checkpoint", "publish_after_1"),
+        ("compact_transcripts", "before_commit"),
+        ("compact_transcripts", "publish_after_1"),
+    ],
+)
+def test_maintenance_crash_rolls_forward(spark, days, maintained, tmp_path, monkeypatch, commit, point):
+    """Retention and both compactions publish through the staged
+    commit: a crash before the commit point changes nothing, and one
+    mid-publish is finished by the next writer's roll_forward. Either
+    way the store converges to the finished commit: every lineage row
+    kept (plus retention's), expired days gone, floors set, raw rows
+    unchanged, and the batch counter untouched."""
+    import shutil
     from pathlib import Path
 
-    store = TranscriptStore(tmp_path / "store", n_buckets=8)
-    ingest_batch(store, small.where(F.to_date("ts") == days[0]), run_id="r", batch_id=0)
-    p = Path(store.checkpoint_path)
-    os.replace(p, Path(str(p) + "_old"))  # first compaction rename done
+    from smos_spark.operators.retention import apply_retention
 
-    ingest_batch(store, small.where(F.to_date("ts") == days[1]), run_id="r", batch_id=1)
-    assert not Path(str(p) + "_old").exists()
-    cp = store.read_checkpoint(spark).groupBy("batch_id").count().collect()
-    assert sorted((c.batch_id, c["count"]) for c in cp) == [(0, 3), (1, 3)]
-    assert store.compact_checkpoint(spark, max_files=1) == 1
-    assert store.read_checkpoint(spark).count() == 6
+    shutil.copytree(maintained, tmp_path / "store")
+    store = TranscriptStore(tmp_path / "store")
+    tables = {store.tier_path("1m"): "bucket_date", store.tier_path("1h"): "bucket_date",
+              store.blocks_path("1m"): "block_date"}
+    expired = [Path(t) / f"{col}={d}" for t, col in tables.items() for d in days[:-1]]
+    assert all(p.is_dir() for p in expired)
+    lineage = sorted(map(tuple, store.read_checkpoint(spark).collect()))
+    raw = store.read_transcripts(spark).cache()
+    n_raw = raw.count()
+
+    def run():
+        if commit == "retention":
+            return apply_retention(spark, store, days[-1], policy={"1m": 0, "1h": 0})
+        if commit == "compact_checkpoint":
+            return store.compact_checkpoint(spark)
+        return store.compact_transcripts(spark, min_files=2)
+
+    fired = _crash_publish(monkeypatch, point)
+    with pytest.raises(_Crash):
+        run()
+    monkeypatch.undo()
+    assert fired
+    with store.writer():  # the next writer rolls forward first
+        pass
+    if point == "before_commit":  # nothing was committed: redo it
+        assert all(p.is_dir() for p in expired)
+        assert sorted(map(tuple, store.read_checkpoint(spark).collect())) == lineage
+        run()
+
+    assert not store.staging_root.exists()
+    ov = store.load_overview()
+    assert ov.pending is None and ov.last_batch_id == -1
+    got = store.read_transcripts(spark)
+    assert got.count() == n_raw and got.exceptAll(raw).isEmpty()
+    cp = store.read_checkpoint(spark)
+    ckpt_files = len(list(Path(store.checkpoint_path).glob("*.parquet")))
+    if commit == "retention":
+        assert not any(p.exists() for p in expired)
+        assert set(ov.extra["retention_floor"]) == {"1m", "1h"}
+        dropped = cp.where(F.col("run_id") == "retention").select("tier", "partition_key")
+        assert sorted(map(tuple, dropped.collect())) == sorted(
+            (p.parent.name, p.name) for p in expired
+        )
+        assert sorted(map(tuple, cp.where(F.col("run_id") == "r").collect())) == lineage
+        assert ckpt_files == 2  # the compacted history plus the new rows
+    else:
+        assert all(p.is_dir() for p in expired)
+        assert sorted(map(tuple, cp.collect())) == lineage
+    if commit == "compact_checkpoint":
+        assert ckpt_files == 1
+    if commit == "compact_transcripts":
+        per_day = [len(list(d.glob("*.parquet"))) for d in Path(store.transcripts_path).glob("ts_date=*")]
+        assert per_day and all(n == 1 for n in per_day)
+
+
+def test_merge_quarantine_keeps_next_epoch(spark, small, days, tmp_path):
+    """A late-data merge between two stream epochs takes no batch id:
+    the next epoch is applied, not skipped as already done, and the
+    store holds every row. NULL-ts rows of successive merges all stay
+    in ``_quarantine_unplaceable``."""
+    from smos_spark.streaming.incremental import merge_quarantine
+
+    held = (F.to_date("ts") == days[0]) & (F.crc32("conv_id") % 3 == 0)
+    cut = F.col("ts") < F.to_timestamp(F.lit(f"{days[1]} 12:00:00"))
+    later = (F.to_date("ts") == days[1]) & ~cut
+
+    def null_row(conv):
+        return spark.createDataFrame(
+            [(conv, 0, "user", "t", None, None)],
+            "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+        )
+
+    store = TranscriptStore(tmp_path / "epoch", n_buckets=8)
+    ingest_batch(store, small.where((F.to_date("ts") == days[0]) & ~held), "s", 0)
+    ingest_batch(store, small.where((F.to_date("ts") == days[1]) & cut), "s", 1)
+    r2 = ingest_batch(store, small.where(held).unionByName(null_row("convNULL1")), "s", 2)
+    assert r2["rows_in"] == 0  # all late
+    assert merge_quarantine(store, spark, run_id="m1")["merged"] == small.where(held).count()
+
+    r3 = ingest_batch(store, small.where(later).unionByName(null_row("convNULL2")), "s", 3)
+    assert not r3["skipped"] and r3["rows_in"] == small.where(later).count()
+    assert merge_quarantine(store, spark, run_id="m2") == {"merged": 0, "unplaceable": 1, "days": []}
+    assert store.load_overview().last_batch_id == 3
+
+    raw = store.read_transcripts(spark).select(*small.columns)
+    assert raw.count() == small.count() and raw.exceptAll(small).isEmpty()
+    for tier in ("1m", "1h", "1d"):
+        ref = rollup_from_raw(small, tier).toPandas().sort_values(["conv_id", "bucket_start"])
+        got = tier_pdf(spark, store, tier)
+        pd.testing.assert_frame_equal(got[ref.columns], ref.reset_index(drop=True), check_dtype=True)
+    unp = spark.read.parquet(str(store.root / "_quarantine_unplaceable"))
+    assert sorted(r.conv_id for r in unp.collect()) == ["convNULL1", "convNULL2"]
 
 
 def test_merge_quarantine_backfill(spark, small, days, tmp_path):
@@ -891,9 +1013,10 @@ def test_merge_quarantine_deterministic_survivor(spark, small, days, tmp_path):
     assert store.read_transcripts(spark).count() == small.count()
 
     # re-running the merge with the same correction converges to the
-    # same bytes (the already-merged row is now the 'existing' side)
+    # same bytes (the already-merged row is now the 'existing' side);
+    # the merge took no batch id, so this batch is not skipped
     ingest_batch(store, corrected, run_id="r1", batch_id=len(days) + 1)
-    merge_quarantine(store, spark, run_id="m2")
+    assert merge_quarantine(store, spark, run_id="m2")["merged"] == 1
     again = (
         store.read_transcripts(spark)
         .where(
