@@ -29,7 +29,7 @@ operators/anomaly.py module header).
 Spark-first shape (batch): ONE window exchange on the key.  The LOCF
 is ``last(c, ignorenulls=True)`` over rowsBetween(unboundedPreceding,
 current) — the same engine-native forward fill as
-operators/gapfill.py:124 — and the transition flag is one further
+`gapfill.forward_fill` — and the transition flag is one further
 ``lag`` over the SAME window partitioning, so Catalyst plans both in
 a single sort+exchange (no second shuffle).  All expressions are
 whole-stage-codegen; no UDF.

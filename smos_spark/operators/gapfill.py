@@ -7,11 +7,13 @@ NaN arrays for every missing timestamp on the dense daily grid
 golden is `[0.198517, nan, nan]` for a 3-day range with days 2-3 missing
 (/root/reference/tests/test_ICreshuffle.py:39-52).
 
-Spark shape: dense per-key bucket grid (`sequence` + `explode`, the
-S4 timestamp-grid generator) LEFT JOIN the tier table (J3). The join
-keys are exactly the tier's grouping keys, so with both sides
-partitioned on conv_id this is a co-partitioned join; the grid side is
-generated, never scanned.
+Spark shape: one pass over the tier's own rows. A `lead` window on
+conv_id gives each row the key's next bucket, and the row explodes a
+`sequence` from its own bucket up to the one before it (the S4
+timestamp-grid generator), keeping its partials on its own bucket only
+(S5, J3). The tier is scanned once and shuffled once on conv_id, which
+the fill windows below reuse; no grid is built, joined or broadcast,
+and a NULL conv_id is a series like any other.
 
 Fill strategies on top of the NULL rows — both pure JVM windows:
 * ``forward_fill`` — `last(col, ignorenulls=True)` over
@@ -29,10 +31,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from smos_spark.schema import TIER_PARTIAL_COLS, TIERS
+from smos_spark.schema import TIERS
 
 __all__ = [
-    "dense_grid",
     "gap_fill",
     "forward_fill",
     "interpolate_linear",
@@ -40,78 +41,44 @@ __all__ = [
 ]
 
 
-def dense_grid(
-    tier_df: DataFrame,
-    tier: str,
-    start=None,
-    end=None,
-) -> DataFrame:
-    """Dense (conv_id, bucket_start) grid spanning each conv's observed
-    [min, max] bucket range (or an explicit [start, end]) — the
-    tstamps_for_daterange analog (interface.py:502-525)."""
-    unit = TIERS[tier]["unit"]
-    if start is not None and end is not None:
-        bounds = tier_df.select("conv_id").distinct().select(
-            "conv_id",
-            F.date_trunc(unit, F.lit(start).cast("timestamp")).alias("_lo"),
-            F.date_trunc(unit, F.lit(end).cast("timestamp")).alias("_hi"),
-        )
-    else:
-        bounds = tier_df.groupBy("conv_id").agg(
-            F.min("bucket_start").alias("_lo"), F.max("bucket_start").alias("_hi")
-        )
-    if unit == "minute":
-        # Chunked grid: one sequence() per conv at the 1m tier would
-        # materialize the whole span as a single array row (a year ≈
-        # 525k elements — executor OOM / sequence cap territory for
-        # long-lived convs). Explode fixed 1440-minute chunks from
-        # _lo, then the ≤1440 minutes inside each chunk. Chunk bounds
-        # are computed in EPOCH SECONDS (timestamp_seconds), never by
-        # interval addition: a day-time interval's day component adds
-        # as a CALENDAR day (23/25 h under a DST session timezone),
-        # which double-emits or drops the transition minutes; the
-        # 1-minute sequence step itself is fixed-duration.
-        chunks = bounds.select(
-            "conv_id",
-            F.unix_timestamp(F.col("_lo").cast("timestamp")).alias("_lo_s"),
-            F.unix_timestamp(F.col("_hi").cast("timestamp")).alias("_hi_s"),
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.floor(
-                        (
-                            F.unix_timestamp(F.col("_hi").cast("timestamp"))
-                            - F.unix_timestamp(F.col("_lo").cast("timestamp"))
-                        )
-                        / (1440 * 60)
-                    ).cast("int"),
-                )
-            ).alias("_k"),
-        )
-        return chunks.select(
-            "conv_id",
-            F.explode(
-                F.expr(
-                    "sequence(timestamp_seconds(_lo_s + _k * 86400),"
-                    " timestamp_seconds(least(_lo_s + _k * 86400 + 86340, _hi_s)),"
-                    " interval 1 minute)"
-                )
-            ).alias("bucket_start"),
-        )
-    step = f"interval 1 {unit}"
-    return bounds.select(
-        "conv_id",
-        F.explode(F.expr(f"sequence(_lo, _hi, {step})")).alias("bucket_start"),
-    )
-
-
 def gap_fill(tier_df: DataFrame, tier: str, start=None, end=None) -> DataFrame:
-    """LEFT JOIN the dense grid against the tier → gap buckets exist as
-    rows with NULL partials (never dropped, never zero-filled: a gap
-    bucket's n_turns is NULL, matching the reference's NaN rows —
-    count 0 would lie about observed-but-empty vs unobserved)."""
-    grid = dense_grid(tier_df, tier, start=start, end=end)
-    return grid.join(tier_df, ["conv_id", "bucket_start"], "left")
+    """Each conv's missing buckets as rows with NULL partials (never
+    dropped, never zero-filled: a gap bucket's n_turns is NULL, matching
+    the reference's NaN rows — count 0 would lie about observed-but-empty
+    vs unobserved). The buckets span each conv's observed [first, last],
+    or the truncated explicit [start, end] (the tstamps_for_daterange
+    analog, interface.py:502-525). The unit step is exact under a DST
+    session time zone: a minute or an hour is a fixed duration, and a
+    day is the calendar day that ``date_trunc('day')`` buckets use."""
+    unit = TIERS[tier]["unit"]
+    step = F.expr(f"INTERVAL 1 {unit.upper()}")
+    w = Window.partitionBy("conv_id").orderBy("bucket_start")
+    own = F.col("bucket_start")
+    nxt = F.lead(own).over(w)
+    # a conv's last row (no next; greatest skips the NULL) and a
+    # duplicate bucket (next == own) still emit their own bucket
+    lo, hi = own, F.greatest(nxt - step, own)
+    if start is not None and end is not None:
+        first, last = (F.date_trunc(unit, F.lit(t).cast("timestamp")) for t in (start, end))
+        # row_number, not a NULL lag: a NULL bucket_start sorts first
+        lo = F.when(F.row_number().over(w) == 1, first).otherwise(F.greatest(own, first))
+        hi = F.when(nxt.isNull(), last).otherwise(F.least(hi, last))
+    values = [c for c in tier_df.columns if c not in ("conv_id", "bucket_start")]
+    runs = tier_df.select("*", lo.alias("_lo"), hi.alias("_hi")).select(
+        "conv_id",
+        own.alias("_own"),
+        *values,
+        # a run clipped out of the range emits nothing (sequence
+        # rejects lo > hi)
+        F.explode(
+            F.when(F.col("_lo") <= F.col("_hi"), F.sequence("_lo", "_hi", step))
+        ).alias("bucket_start"),
+    )
+    return runs.select(
+        "conv_id",
+        "bucket_start",
+        *[F.when(F.col("bucket_start") == F.col("_own"), F.col(c)).alias(c) for c in values],
+    )
 
 
 def forward_fill(
@@ -202,16 +169,3 @@ def interpolate_linear_pandas(
             new_fields.append(f"{f.name} {f.dataType.simpleString()}")
     out_schema = ", ".join(new_fields)
     return casted.groupBy(key).applyInPandas(_interp, schema=out_schema)
-
-
-def gap_filled_tier(tier_df: DataFrame, tier: str, fill: str = "none") -> DataFrame:
-    """Convenience: gap_fill + optional fill strategy over the partials."""
-    filled = gap_fill(tier_df, tier)
-    if fill == "none":
-        return filled
-    value_cols = [c for c in TIER_PARTIAL_COLS if c in filled.columns]
-    if fill == "ffill":
-        return forward_fill(filled, value_cols)
-    if fill == "linear":
-        return interpolate_linear(filled, value_cols)
-    raise ValueError(f"unknown fill strategy: {fill}")

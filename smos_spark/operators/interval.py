@@ -2,7 +2,7 @@
 intervals that contain them.
 
 The missing piece of the time-series join algebra next to `asof_join`
-(nearest-in-time) and `gap_fill` (grid left join): "which session /
+(nearest-in-time) and `gap_fill` (per-key gap emission): "which session /
 maintenance window / attribution window does this event fall in".
 Reference analog: the per-date image lookup resolves a timestamp into
 the file interval covering it (/root/reference/src/smos/interface.py
@@ -302,7 +302,8 @@ def interval_concurrency(
 
     Only buckets containing >= 1 boundary are emitted; in a silent
     bucket the gauge holds the previous row's ``level_end``
-    (documented gap semantics, same convention as gap_fill's grid).
+    (documented gap semantics: as in a tier before `gap_fill`, a
+    silent bucket is an absent row).
 
     Output: key cols + ``bucket_start`` (timestamp), ``peak_active``
     (long), ``level_end`` (long), ``n_starts``/``n_ends`` (long).

@@ -70,7 +70,9 @@ def read_conv_series(
     """
     df = store.read_tier_for_conv(spark, tier, conv_id)
     if dense:
-        df = gap_fill(df, tier)
+        # one partition already satisfies gap_fill's window on conv_id,
+        # so the dense read adds no exchange and no job
+        df = gap_fill(df.coalesce(1), tier)
     value_cols = [c for c in df.columns if c not in ("conv_id", "bucket_start")]
     if parameters:
         keep = [c for c in value_cols if c in parameters]

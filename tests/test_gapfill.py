@@ -8,6 +8,7 @@ missing (/root/reference/tests/test_ICreshuffle.py:39-52).
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from smos_spark.operators.gapfill import (
@@ -16,6 +17,7 @@ from smos_spark.operators.gapfill import (
     interpolate_linear,
 )
 from smos_spark.operators.rollup import rollup_from_raw
+from smos_spark.schema import TIERS
 
 
 def test_gap_buckets_materialized_as_null_rows(spark, transcripts, transcripts_pdf):
@@ -132,12 +134,33 @@ def test_interpolate_window_equals_pandas(spark, transcripts):
         )
 
 
-def test_minute_grid_chunked_long_span(spark):
-    """A year-long conv gap-fills at the 1m tier without a single
-    525k-element sequence() array (the grid explodes days first,
-    then minutes-within-day) — and the chunked grid is exact."""
-    from smos_spark.operators.gapfill import dense_grid
+def test_null_key_series_keeps_observed_values(spark):
+    """A NULL conv_id is a series like any other: its observed buckets
+    keep their values and its gaps become NULL rows (an equi-join on
+    the key never matches NULL, which blanked the whole series)."""
+    rows = [
+        (None, "2025-01-01 00:00:00", 1),
+        (None, "2025-01-01 03:00:00", 4),
+        ("k", "2025-01-01 01:00:00", 2),
+        ("k", "2025-01-01 02:00:00", 3),
+    ]
+    tier = spark.createDataFrame(rows, "conv_id string, b string, n_turns long").select(
+        "conv_id", F.col("b").cast("timestamp").alias("bucket_start"), "n_turns"
+    )
+    got = gap_fill(tier, "1h").toPandas().sort_values("bucket_start")
+    null_key = got[got.conv_id.isna()]
+    assert [str(b) for b in null_key.bucket_start] == [
+        f"2025-01-01 0{h}:00:00" for h in range(4)
+    ]
+    assert null_key.n_turns.tolist()[0] == 1 and null_key.n_turns.tolist()[3] == 4
+    assert null_key.n_turns.iloc[1:3].isna().all()
+    assert got[got.conv_id == "k"].n_turns.tolist() == [2, 3]
 
+
+def test_minute_grid_chunked_long_span(spark):
+    """A year-long conv gap-fills at the 1m tier exactly: its one gap
+    is one sequence() of about 527k minutes, bounded by the observed
+    buckets."""
     rows = [
         ("c1", "2024-01-03 07:30:00"),
         ("c1", "2025-01-03 07:31:00"),  # ~1 year later
@@ -147,7 +170,7 @@ def test_minute_grid_chunked_long_span(spark):
     tier = spark.createDataFrame(rows, "conv_id string, b string").select(
         "conv_id", F.col("b").cast("timestamp").alias("bucket_start")
     )
-    grid = dense_grid(tier, "1m")
+    grid = gap_fill(tier, "1m")
     counts = {r.conv_id: r.n for r in grid.groupBy("conv_id").agg(F.count("*").alias("n")).collect()}
     # 2024 is a leap year: 366 days * 1440 + 2 extra minutes
     assert counts["c1"] == 366 * 1440 + 2
@@ -160,12 +183,9 @@ def test_minute_grid_chunked_long_span(spark):
 
 
 def test_minute_grid_dst_timezone_exact(spark):
-    """The chunked 1m grid uses fixed-duration epoch chunks: under a
-    DST session timezone the minute count across a spring-forward
-    transition equals the epoch span, with no duplicate or missing
-    buckets."""
-    from smos_spark.operators.gapfill import dense_grid
-
+    """The 1m step is a fixed duration: under a DST session timezone
+    the minute count across a spring-forward transition equals the
+    epoch span, with no duplicate or missing buckets."""
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
@@ -173,7 +193,7 @@ def test_minute_grid_dst_timezone_exact(spark):
         tier = spark.createDataFrame(rows, "conv_id string, b string").select(
             "conv_id", F.col("b").cast("timestamp").alias("bucket_start")
         )
-        grid = dense_grid(tier, "1m")
+        grid = gap_fill(tier, "1m")
         stats = grid.agg(
             F.count("*").alias("n"),
             F.count_distinct("bucket_start").alias("nd"),
@@ -189,5 +209,52 @@ def test_minute_grid_dst_timezone_exact(spark):
         assert stats.n == stats.nd == int(stats.span_minutes)
         # spring-forward weekend: 47 wall-clock hours = 2821 minute buckets
         assert stats.n == 47 * 60 + 1
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev_tz)
+
+
+# (first, last) local noon across each 2024 America/New_York transition,
+# and the buckets each tier holds between them: spring-forward loses an
+# hour (47 h), fall-back gains one (49 h); a day bucket is a local
+# midnight either way
+DST_WEEKENDS = {
+    "spring": (("2024-03-09 12:00:00", "2024-03-11 12:00:00"), 47),
+    "fall": (("2024-11-02 12:00:00", "2024-11-04 12:00:00"), 49),
+}
+
+
+@pytest.mark.parametrize("weekend", sorted(DST_WEEKENDS))
+@pytest.mark.parametrize("tier", ["1m", "1h", "1d"])
+def test_gap_fill_dst_weekends_exact(spark, tier, weekend):
+    """Across both DST transitions every tier's grid is exact: one row
+    per elapsed unit (minutes and hours are fixed durations, days are
+    the local midnights `date_trunc('day')` makes), observed values kept,
+    with or without an explicit range."""
+    (lo, hi), hours = DST_WEEKENDS[weekend]
+    unit = TIERS[tier]["unit"]
+    want = {"minute": hours * 60 + 1, "hour": hours + 1, "day": 3}[unit]
+    prev_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        tier_df = spark.createDataFrame(
+            [("c1", lo, 1), ("c1", hi, 2)], "conv_id string, b string, n_turns long"
+        ).select(
+            "conv_id",
+            F.date_trunc(unit, F.col("b").cast("timestamp")).alias("bucket_start"),
+            "n_turns",
+        )
+        for kw in ({}, {"start": lo, "end": hi}):
+            grid = gap_fill(tier_df, tier, **kw)
+            stats = grid.agg(
+                F.count("*").alias("n"),
+                F.count_distinct("bucket_start").alias("nd"),
+                F.sort_array(F.collect_list("n_turns")).alias("obs"),
+                F.count_distinct(F.date_format("bucket_start", "HH:mm")).alias("clock"),
+            ).collect()[0]
+            assert stats.n == stats.nd == want, kw
+            assert stats.obs == [1, 2], kw
+            if unit == "day":
+                # every day bucket is a local midnight
+                assert stats.clock == 1, kw
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)

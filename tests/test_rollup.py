@@ -144,6 +144,25 @@ def test_plain_rollup_plan_shape(parquet_inputs, build):
     assert "HashAggregate" in below and "partial_" in below, plan
 
 
+def test_gap_fill_plan_shape(spark, parquet_inputs, tmp_path):
+    """The blocks phase's regularization, `forward_fill(gap_fill(...))`
+    over a 1h tier read from parquet, scans the tier once and shuffles
+    it once: `gap_fill` emits each conversation's gaps from its own
+    rows through a window on conv_id, which `forward_fill`'s window
+    reuses, so no grid is built and nothing is broadcast."""
+    from smos_spark.operators.gapfill import forward_fill, gap_fill
+
+    path = str(tmp_path / "tier_1h")
+    reaggregate(parquet_inputs[1], "1h").write.parquet(path)
+    out = forward_fill(gap_fill(spark.read.parquet(path), "1h"), ["n_turns", "len_sum"])
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    lines = plan.splitlines()
+    assert sum("FileScan" in ln for ln in lines) == 1, plan
+    assert sum("Exchange" in ln for ln in lines) == 1, plan
+    assert not any("BroadcastExchange" in ln for ln in lines), plan
+
+
 def test_derived_rates(transcripts, transcripts_pdf):
     got = spark_tier_pdf(with_derived(rollup_from_raw(transcripts, "1d")))
     # rates sum to 1 per bucket; tool_rate within [0,1]; len_mean sane

@@ -105,6 +105,25 @@ def test_point_read_runs_one_job(spark, served, transcripts):
     assert pdf.bucket_start.is_monotonic_increasing
 
 
+def test_dense_point_read_runs_one_job(spark, served):
+    """A dense point read regularizes one conversation in one partition:
+    gap_fill's window needs no exchange, so the read is still one job."""
+    store, _ = served
+    n, pdf = _jobs(
+        spark,
+        lambda: read_conv_series(
+            spark, store, "conv000010", "1h", drop_missing=False, dense=True
+        ).toPandas(),
+    )
+    assert n == 1
+    assert (pdf.bucket_start.diff().dropna() == dt.timedelta(hours=1)).all()
+    # conv000010 carries a forced gap of over 2 h
+    assert pdf.n_turns.isna().sum() >= 2
+    assert pdf.n_turns.notna().sum() == len(
+        read_conv_series(spark, store, "conv000010", "1h").toPandas()
+    )
+
+
 @pytest.mark.parametrize("layout", ["flat", "write_blocks"])
 def test_block_read_runs_one_job(spark, served, layout):
     store, flat = served
