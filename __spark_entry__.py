@@ -356,7 +356,7 @@ def _q_codec_chimp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("string").alias("conv_id"), "ts", "value"
     )
     comp = compress_series(ev, ["value"], codec="chimp")
-    dec = decompress_series(comp, ["value"], codec="chimp")
+    dec = decompress_series(comp, ["value"])
     joined = ev.alias("o").join(dec.alias("d"), ["conv_id", "ts"], "inner")
     return joined.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_points"),
@@ -386,8 +386,8 @@ def _q_range_minmax_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_range_minmax_chimp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed-domain range aggregate over CHIMP-coded blocks (the
-    block store records its codec; this row pins that the Chimp block
+    """Compressed-domain range aggregate over CHIMP-coded blocks (each
+    block row names its codec; this row pins that the Chimp block
     headers' stats + straddling-block decode compose exactly, like the
     Gorilla row `range_minmax_pruned` does for the default codec).
     Window differs from the Gorilla row so the two pins are
@@ -399,7 +399,7 @@ def _q_range_minmax_chimp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     comp = compress_series(ev, ["value"], stats=True, codec="chimp").persist()
     return range_minmax(
-        comp, "value", "2024-01-05 12:00:00", "2024-01-20 06:00:00", codec="chimp"
+        comp, "value", "2024-01-05 12:00:00", "2024-01-20 06:00:00"
     )
 
 

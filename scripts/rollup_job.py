@@ -4,8 +4,11 @@ Reads a transcripts parquet table, builds the 1m tier from raw, the 1h
 tier from 1m, the 1d tier from 1h (exact partial re-aggregation), and
 writes all three to a partitioned tier store
 (bucket_date=YYYY-MM-DD/bucket_id=K — time-major for incremental
-merges, key-bucketed for point-read locality). Prints one JSON line
-with row counts (observed on the writes, no extra scans) + wall time.
+merges, key-bucketed for point-read locality). The newest turn's ts
+becomes the store's `last_day` (the reference's reshuffle writes it to
+overview.yml), so a later `store_tool extend` quarantines any overlap
+instead of counting it twice. Prints one JSON line with row counts
+(observed on the writes, no extra scans) + wall time.
 
 Cluster launch shape (the real thing this mirrors):
   spark-submit --master <cluster> --py-files engine.zip \
@@ -106,11 +109,13 @@ def main() -> None:
 
     # row counts ride the writes as observed metrics: no re-read of raw
     # or the tiers just to count them
-    def observed(df, name):
+    def observed(df, name, *metrics):
         obs = Observation(name)
-        return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+        return df.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics), obs
 
-    raw, raw_obs = observed(raw, "turns")
+    # the newest turn rides the same observation: it becomes the store's
+    # last_day, so a later `store_tool extend` quarantines any overlap
+    raw, raw_obs = observed(raw, "turns", F.max("ts").alias("last_ts"))
     tier_obs = {}
 
     phases = {}
@@ -127,6 +132,10 @@ def main() -> None:
     d1, tier_obs["1d"] = observed(reaggregate(store.read_tier(spark, "1h"), "1d"), "tier_1d")
     store.write_tier(d1, "1d")
     phases["1d"] = round(time.time() - t2, 3)
+    if raw_obs.get["last_ts"] is not None:
+        ov = store.load_overview()
+        ov.last_day = str(raw_obs.get["last_ts"])
+        store.save_overview(ov)
 
     if args.blocks:
         # regularize + forward-fill the 1h series per conv, then

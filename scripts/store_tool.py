@@ -1,17 +1,28 @@
 """Store maintenance + read-back CLI — the smos_l2 console-script
 analog (/root/reference/src/smos/smos_l2/cli.py:195-225 registers
 `smos_repurpose` / `smos_extend`; reshuffle.py:96-155 implements
-extend-from-overview). Three subcommands over a TranscriptStore:
+extend-from-overview). Nine subcommands over a TranscriptStore:
 
-  read    — one conversation's tier series with the reference post-op
-            chain (drop-missing / dense NaN rows / int restoration)
-  extend  — ingest a new time-ordered batch through the checkpointed
-            incremental path (resumable, monotonic guard, quarantine)
-  export  — subset re-export into a new day-partitioned store (the
-            K2 subset-and-write round trip)
-  mirror  — sync new landing-area days into the store (the FTP
-            sync_period analog, S7; complete months batch as one scan,
-            the newest possibly-incomplete day is skipped by default)
+  read        — one conversation's tier series with the reference
+                post-op chain (drop-missing / dense NaN rows / int
+                restoration)
+  extend      — ingest a new time-ordered batch through the
+                checkpointed incremental path (resumable, monotonic
+                guard, quarantine)
+  export      — subset re-export into a new day-partitioned store (the
+                K2 subset-and-write round trip)
+  mirror      — sync new landing-area days into the store (the FTP
+                sync_period analog, S7; complete months batch as one
+                scan, the newest possibly-incomplete day is skipped by
+                default)
+  merge-late  — backfill quarantined late rows into raw + tiers
+  compact     — rewrite small-file day partitions of the raw table
+  blocks      — compress a tier into the day x bucket block store
+                (`--codec` picks Gorilla or Chimp; each block row
+                records it)
+  range-agg   — per-conv min/max/count over a time range from the
+                block store (each block decodes by its own codec)
+  tiered-read — retention-aware range read across the tiers
 
 Usage:
   python scripts/store_tool.py read   --store ROOT --conv ID [--tier 1h]
@@ -21,6 +32,10 @@ Usage:
   python scripts/store_tool.py export --store ROOT --output NEWROOT
       [--tier 1h] [--conv-range LO,HI] [--ts-range A,B]
       [--parameters n_turns,len_sum]
+  python scripts/store_tool.py blocks --store ROOT [--tier 1h]
+      [--parameters n_turns,len_sum] [--codec gorilla|chimp]
+  python scripts/store_tool.py range-agg --store ROOT --parameter P
+      --ts-range 'A,B' [--tier 1h]
 """
 
 from __future__ import annotations
@@ -126,8 +141,6 @@ def main() -> None:
     ra.add_argument("--parameter", required=True)
     ra.add_argument("--ts-range", required=True,
                     help="comma pair 'YYYY-MM-DD HH:MM:SS,YYYY-MM-DD HH:MM:SS'")
-    ra.add_argument("--codec", default=None, choices=("gorilla", "chimp"),
-                    help="defaults to the codec recorded at write time")
     ra.add_argument("--limit", type=int, default=20)
 
     tr = sub.add_parser(
@@ -240,35 +253,30 @@ def main() -> None:
 
         store = TranscriptStore(args.store)
         params = [p.strip() for p in args.parameters.split(",")]
-        tier_df = store.read_tier(spark, args.tier).select(
-            "conv_id",
-            F.col("bucket_start").alias("ts"),
-            *[F.col(p).cast("double").alias(p) for p in params],
-        )
-        blocks = compress_series(
-            tier_df,
-            params,
-            codec=args.codec,
-            stats=True,
-            slice_col=F.to_date("ts"),
-        )
-        # writer lock: the full-directory overwrite must not race a
-        # concurrent blocks build or ingest (same discipline as every
-        # other mutating store path)
-        store.acquire_writer_lock()
-        try:
-            store.write_blocks(blocks, tier=args.tier, codec=args.codec)
-        finally:
-            store.release_writer_lock()
+        # like every mutating store path: under the writer lock, on a
+        # store whose pending commit is rolled forward, and the tier is
+        # listed only then, so it holds every published partition
+        with store.writer():
+            tier_df = store.read_tier(spark, args.tier).select(
+                "conv_id",
+                F.col("bucket_start").alias("ts"),
+                *[F.col(p).cast("double").alias(p) for p in params],
+            )
+            blocks = compress_series(
+                tier_df,
+                params,
+                codec=args.codec,
+                stats=True,
+                slice_col=F.to_date("ts"),
+            )
+            store.write_blocks(blocks, tier=args.tier)
         n = store.read_blocks(spark, args.tier).count()
         print(json.dumps({"cmd": "blocks", "tier": args.tier, "blocks": n}))
 
     elif args.cmd == "range-agg":
         store = TranscriptStore(args.store)
         t0, t1 = (x.strip() for x in args.ts_range.split(","))
-        df = store.blocks_range_minmax(
-            spark, args.tier, args.parameter, t0, t1, codec=args.codec
-        )
+        df = store.blocks_range_minmax(spark, args.tier, args.parameter, t0, t1)
         # CLI shape: never materialize the full result on the driver —
         # push the display limit into the plan (GlobalLimit, asserted
         # in tests). ONE execution: fetch limit+1 rows; when the

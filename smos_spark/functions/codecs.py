@@ -1,12 +1,12 @@
-"""Time-series compression codecs: Gorilla XOR (float64) and
-delta-of-delta (int64 timestamps).
+"""Time-series compression codecs: Gorilla XOR and Chimp (float64
+values) and delta-of-delta (int64 timestamps).
 
 Public algorithms from the Gorilla paper (Pelkonen et al., "Gorilla: A
-Fast, Scalable, In-Memory Time Series Database", VLDB 2015) — see also
-Chimp (VLDB'22) in PAPERS.md for context. Implemented from the paper's
-description; no reference-repo analog exists (the reference compresses
-with netCDF zlib, /root/reference/src/smos/interface.py:376 — Gorilla
-is this engine's own payload codec per the north rule).
+Fast, Scalable, In-Memory Time Series Database", VLDB 2015) and Chimp
+(Liakos et al., VLDB 2022, PAPERS.md). Implemented from the papers'
+descriptions; no reference-repo analog exists (the reference compresses
+with netCDF zlib, reference `src/smos/interface.py:376` — these
+are this engine's own payload codecs per the north rule).
 
 Encoding layout (bit-exact, MSB-first within our own stream;
 self-contained):
@@ -18,6 +18,9 @@ Gorilla XOR values:
     new window      → '11' + 5b leading + 6b (sig_len - 1) + sig bits
   NaNs roundtrip bit-exactly (we compare/store raw u64 bit patterns).
 
+Chimp values: the same header, other control codes (see the Chimp
+section below).
+
 Delta-of-delta timestamps (µs precision, so the escape bucket is 64-bit
 instead of the paper's 32-bit seconds):
   [u64 count][i64 first ts][i64 first delta] then per ts, dod =
@@ -27,17 +30,29 @@ instead of the paper's 32-bit seconds):
     [-2047, 2048]    → '1110' + 12b zigzag
     else             → '1111' + 64b raw
 
-Implementation notes (the 100 TB hot path runs this inside Arrow
-batches, so per-value Python cost is the whole ballgame — this was the
-worst-scaling phase of the round-1 bench before vectorization):
+A value blob does not name its codec: Gorilla and Chimp blobs share
+the header, and decoding one as the other raises or, worse, returns
+wrong values. `operators.compress` therefore writes the codec name
+into each block row's `codec` column, and every reader decodes by it.
 
-* Encoders emit (value, nbits) token arrays and bit-pack them in ONE
-  numpy pass (`_pack_bits`: repeat/shift/packbits) — no per-byte
-  Python loop. clz/ctz/zigzag/bucket selection are all vectorized;
-  the only remaining Python loop is the Gorilla window-reuse state
-  machine, which is inherently sequential (each decision depends on
-  the previous '11' token) and now touches precomputed ints only.
-  Delta-of-delta encode is loop-free except for the rare 64-bit
+Implementation notes (the 100 TB hot path runs this inside Arrow
+batches, so per-value Python cost is the whole ballgame):
+
+* The scalar encoders (`gorilla_encode`, `chimp_encode`, `dod_encode`)
+  are plain `_BitWriter` loops over one series, whatever its length.
+  They are the oracles the batch encoders are tested against; only
+  tests call them.
+* The batch encoders (`*_encode_batch`) encode every group of an Arrow
+  batch at once; `compress_series` calls only these. They emit
+  (value, nbits) tokens, and `_blobs` bit-packs all groups' tokens in
+  ONE numpy pass (`_pack_bits`), each group byte-aligned, and cuts one
+  blob per group. Gorilla and Chimp share `_xor_batch`: the xor,
+  clz/ctz, the per-group loop and the headers are vectorized or
+  common; only the per-group state machines (`_gorilla_group`,
+  `_chimp_group`) differ. They are inherently sequential (each control
+  code depends on the window or lead stored by an earlier one), run
+  once per group and touch precomputed ints of the nonzero-xor values
+  only. Delta-of-delta encode is loop-free except for the rare 64-bit
   escape tokens (np.insert splice).
 * Decoders are sequential by nature (variable-length prefix codes);
   the bit reader pulls 128-bit windows from a big-endian word list so
@@ -65,17 +80,11 @@ __all__ = [
 ]
 
 _U1 = np.uint64(1)
-
-# Below this length a plain Python bit-writer loop beats the
-# vectorized token pipeline (whose ~30 numpy calls cost ~200 µs flat
-# per invocation); the BATCH encoders amortize that flat cost across
-# every group of an Arrow batch and are the hot path in
-# compress_series regardless of group size.
-_SMALL_N = 2048
+_EMPTY = struct.pack("<Q", 0)  # the blob of an empty series
 
 
 class _BitWriter:
-    """Classic accumulator bit-writer — the small-series fast path."""
+    """Classic accumulator bit-writer — the scalar encoders' sink."""
 
     __slots__ = ("buf", "acc", "nbits")
 
@@ -99,17 +108,16 @@ class _BitWriter:
         return bytes(self.buf)
 
 
-def _pack_bits(vals: np.ndarray, nbits: np.ndarray) -> bytes:
-    """MSB-first bit-pack: token i contributes the low nbits[i] bits of
-    vals[i]. O(tokens) vector ops, not O(bits): each ≤64-bit token
-    lands in at most two 64-bit words; per-word contributions are
-    OR-combined with reduceat over the (already sorted) word index."""
-    total = int(nbits.sum())
-    if total == 0:
-        return b""
-    ends = np.cumsum(nbits)
-    offs = ends - nbits  # start bit of each token
-    off_in_word = (offs & 63).astype(np.int64)
+def _pack_bits(vals: np.ndarray, nbits: np.ndarray, offs: np.ndarray, nbytes: int) -> bytes:
+    """MSB-first bit-pack into `nbytes` zero bytes: token i writes the
+    low nbits[i] (≤ 64) bits of vals[i] at bit offset offs[i] (offsets
+    ascending, tokens disjoint). O(tokens) vector ops, not O(bits):
+    each token lands in at most two 64-bit words; per-word
+    contributions are OR-combined with reduceat over the (already
+    sorted) word index."""
+    if not len(vals):
+        return bytes(nbytes)
+    off_in_word = offs & 63
     # mask defensively to the token width (callers may pass full words)
     width_mask = (~np.uint64(0)) >> (64 - nbits).astype(np.uint64)
     val = vals & width_mask
@@ -122,14 +130,40 @@ def _pack_bits(vals: np.ndarray, nbits: np.ndarray) -> bytes:
     high = np.where(ge, val << sh_hi, val >> sh_lo_of_hi)
     sh_lo = np.where(ge, 0, r).astype(np.uint64)
     low = np.where(ge, np.uint64(0), val << sh_lo)
-    w = (offs >> 6).astype(np.int64)
-    nwords = (total + 63) // 64 + 1
-    words = np.zeros(nwords, dtype=np.uint64)
+    w = offs >> 6
+    words = np.zeros((nbytes + 7) // 8 + 1, dtype=np.uint64)
     # w is non-decreasing → group boundaries via diff, no sort
     bnd = np.concatenate(([0], np.flatnonzero(w[1:] != w[:-1]) + 1))
     words[w[bnd]] = np.bitwise_or.reduceat(high, bnd)
     words[w[bnd] + 1] |= np.bitwise_or.reduceat(low, bnd)
-    return words.astype(">u8").tobytes()[: (total + 7) // 8]
+    return words.astype(">u8").tobytes()[:nbytes]
+
+
+def _blobs(vals, nbits, tok_end, heads: list[bytes]) -> list[bytes]:
+    """One blob per group: heads[g] + group g's tokens, bit-packed and
+    padded to a byte. Group g owns tokens [tok_end[g-1], tok_end[g]).
+    All groups pack in one `_pack_bits` call and the blobs are byte
+    slices of its buffer. Zero-valued tokens are not packed (the buffer
+    starts zeroed), so they may be of any width: a run of repeated
+    values is one token."""
+    vals = np.asarray(vals, dtype=np.uint64)
+    nbits = np.asarray(nbits, dtype=np.int64)
+    tok_end = np.asarray(tok_end, dtype=np.int64)
+    bit_end = np.concatenate(([0], np.cumsum(nbits)))
+    tok_start = np.concatenate(([0], tok_end))[:-1]
+    gbits = bit_end[tok_end] - bit_end[tok_start]
+    gbytes = (gbits + 7) // 8
+    # each token moves by the byte-alignment pads of the groups before it
+    pads = gbytes * 8 - gbits
+    offs = bit_end[:-1] + np.repeat(np.cumsum(pads) - pads, tok_end - tok_start)
+    keep = np.flatnonzero(vals)
+    payload = _pack_bits(vals[keep], nbits[keep], offs[keep], int(gbytes.sum()))
+    out: list[bytes] = []
+    off = 0
+    for head, nb in zip(heads, gbytes.tolist()):
+        out.append(head + payload[off : off + nb])
+        off += nb
+    return out
 
 
 def _bit_length_u64(x: np.ndarray) -> np.ndarray:
@@ -143,6 +177,54 @@ def _bit_length_u64(x: np.ndarray) -> np.ndarray:
         v = np.where(m, v >> s, v)
     bl += v != 0
     return bl
+
+
+def _xor_batch(values: np.ndarray, starts: np.ndarray, round_lead, group_tokens) -> list[bytes]:
+    """The shared half of the Gorilla and Chimp batch encoders.
+    `values` is the concatenation of the series, `starts` the group
+    start offsets (ascending, starts[0] == 0); returns one blob per
+    group, byte-equal to the scalar encoder's blob of each slice.
+
+    The xor with the previous value, its leading zeros (through
+    `round_lead`, which maps a clz array to the codec's stored lead) and
+    trailing zeros are vectorized over the whole batch. Then, once per
+    group of two or more values, `group_tokens(put_v, put_b, idx, xor,
+    lead, trail, j0, j1, pos, end)` appends the group's tokens: values
+    pos..end-1 of the concatenation (the first value is in the header),
+    of which idx[j0:j1] have a nonzero xor. Per-group flat cost is a few
+    µs — this is what makes compress_series fast at millions of tiny
+    series."""
+    vals = np.asarray(values, dtype=np.float64)
+    starts = np.asarray(starts, dtype=np.int64)
+    n_total = len(vals)
+    ends = np.append(starts[1:], n_total)
+    bits = vals.view(np.uint64)
+    xor = np.zeros(n_total, np.uint64)
+    if n_total:
+        xor[1:] = bits[1:] ^ bits[:-1]
+        xor[starts[starts < n_total]] = 0  # group firsts live in headers
+    nz = np.flatnonzero(xor)
+    x = xor[nz]
+    lead = round_lead(64 - _bit_length_u64(x))
+    trail = _bit_length_u64(x & (~x + _U1)) - 1
+    idx, xl, ll, tl = nz.tolist(), x.tolist(), lead.tolist(), trail.tolist()
+    sl, el = starts.tolist(), ends.tolist()
+    ev: list[int] = []
+    eb: list[int] = []
+    put_v, put_b = ev.append, eb.append  # bound methods: loop-hot
+    tok_end: list[int] = []
+    for s, e, j0, j1 in zip(
+        sl, el, np.searchsorted(nz, starts).tolist(), np.searchsorted(nz, ends).tolist()
+    ):
+        if e - s >= 2:
+            group_tokens(put_v, put_b, idx, xl, ll, tl, j0, j1, s + 1, e)
+        tok_end.append(len(ev))
+    firsts = bits[np.minimum(starts, n_total - 1)].tolist() if n_total else [0] * len(sl)
+    heads = [
+        struct.pack("<QQ", e - s, f) if e > s else _EMPTY
+        for s, e, f in zip(sl, el, firsts)
+    ]
+    return _blobs(ev, eb, tok_end, heads)
 
 
 class _BitReader:
@@ -174,14 +256,17 @@ def _ctz64(x: int) -> int:
     return (x & -x).bit_length() - 1
 
 
-def _gorilla_encode_small(bits_list: list[int], n: int) -> bytes:
-    """Loop encoder for short series (bits_list = raw u64 patterns)."""
+def gorilla_encode(values: np.ndarray) -> bytes:
+    """Gorilla XOR-encode a float64 array → bytes, one value at a time.
+    Bit-exact roundtrip (including NaN payloads). The loop oracle of
+    `gorilla_encode_batch`."""
+    bits = np.asarray(values, dtype=np.float64).view(np.uint64).tolist()
+    if not bits:
+        return _EMPTY
     w = _BitWriter()
-    prev = bits_list[0]
+    prev = bits[0]
     prev_lead, prev_sig = 65, 0  # invalid window → first xor forces '11'
-    out = [struct.pack("<QQ", n, prev)]
-    for i in range(1, n):
-        cur = bits_list[i]
+    for cur in bits[1:]:
         xor = prev ^ cur
         if xor == 0:
             w.write(0, 1)
@@ -199,134 +284,46 @@ def _gorilla_encode_small(bits_list: list[int], n: int) -> bytes:
                 w.write(xor >> trail, sig)
                 prev_lead, prev_sig = lead, sig
         prev = cur
-    out.append(w.getvalue())
-    return b"".join(out)
+    return struct.pack("<QQ", len(bits), bits[0]) + w.getvalue()
 
 
-def gorilla_encode(values: np.ndarray) -> bytes:
-    """Gorilla XOR-encode a float64 array → bytes. Bit-exact roundtrip
-    (including NaN payloads). Short inputs take the loop path; long
-    inputs route through the vectorized batch encoder."""
-    vals = np.asarray(values, dtype=np.float64)
-    n = len(vals)
-    if n == 0:
-        return struct.pack("<Q", 0)
-    bits = vals.view(np.uint64)
-    if n == 1:
-        return struct.pack("<QQ", 1, int(bits[0]))
-    if n < _SMALL_N:
-        return _gorilla_encode_small(bits.tolist(), n)
-    return gorilla_encode_batch(vals, np.zeros(1, dtype=np.int64))[0]
+def _gorilla_group(put_v, put_b, idx, xor, lead, trail, j0, j1, pos, end) -> None:
+    """Gorilla tokens of one group (the `_xor_batch` contract)."""
+    prev_lead, prev_sig = 65, 0  # invalid window → first xor forces '11'
+    shift = 0  # 64 - prev_lead - prev_sig (window low edge)
+    for j in range(j0, j1):
+        i = idx[j]
+        if i > pos:  # '0' per repeated value
+            put_v(0)
+            put_b(i - pos)
+        ld = lead[j]
+        tr = trail[j]
+        if prev_lead <= ld and shift <= tr:
+            # fits the previous window → '10' + prev_sig bits
+            put_v(0b10)
+            put_b(2)
+            put_v(xor[j] >> shift)
+            put_b(prev_sig)
+        else:
+            sig = 64 - ld - tr
+            put_v((0b11 << 11) | (ld << 6) | (sig - 1))
+            put_b(13)
+            put_v(xor[j] >> tr)
+            put_b(sig)
+            prev_lead, prev_sig, shift = ld, sig, tr
+        pos = i + 1
+    if end > pos:
+        put_v(0)
+        put_b(end - pos)
 
 
 def gorilla_encode_batch(values: np.ndarray, starts: np.ndarray) -> list[bytes]:
-    """Encode MANY series in one pass: `values` is the concatenation,
-    `starts` the group start offsets (ascending, starts[0] == 0).
-    Returns one blob per group, bit-identical to gorilla_encode of
-    each slice.
-
-    All per-value math (xor, clz/ctz, window widths) is vectorized
-    over the whole batch; the sequential window-reuse state machine
-    runs once over the batch's nonzero-xor entries only; every
-    group's token stream is padded to a byte boundary so a SINGLE
-    _pack_bits call packs the entire batch and the blobs are byte
-    slices of one buffer. Per-group flat cost is a few µs — this is
-    what makes compress_series fast at millions of tiny series."""
-    vals = np.asarray(values, dtype=np.float64)
-    starts = np.asarray(starts, dtype=np.int64)
-    n_total = len(vals)
-    n_groups = len(starts)
-    ends = np.append(starts[1:], n_total)
-    bits = vals.view(np.uint64) if n_total else np.empty(0, np.uint64)
-
-    xor = np.empty(n_total, np.uint64)
-    if n_total:
-        xor[0] = 0
-        xor[1:] = bits[1:] ^ bits[:-1]
-        xor[starts[starts < n_total]] = 0  # group firsts live in headers
-    nz = np.flatnonzero(xor)
-    x = xor[nz]
-    bl = _bit_length_u64(x)
-    lead_a = np.minimum(64 - bl, 31)  # leading cap 31 so it fits 5 bits
-    low = x & (~x + _U1)
-    trail_a = _bit_length_u64(low) - 1
-    sig_a = 64 - lead_a - trail_a
-    grp_nz_lo = np.searchsorted(nz, starts).tolist()
-    grp_nz_hi = np.searchsorted(nz, ends).tolist()
-
-    ev: list[int] = []
-    eb: list[int] = []
-    meta: list[int] = []  # per-group payload bit count (byte-aligned)
-    xl, ll, tl, sl = x.tolist(), lead_a.tolist(), trail_a.tolist(), sig_a.tolist()
-    nzl = nz.tolist()
-    sl_g, el_g = starts.tolist(), ends.tolist()
-    ev_app, eb_app = ev.append, eb.append  # bound methods: loop-hot
-    for g in range(n_groups):
-        s, e = sl_g[g], el_g[g]
-        bits_g = 0
-        if e - s >= 2:
-            prev_lead, prev_sig = 65, 0
-            shift = 0  # 64 - prev_lead - prev_sig (window low edge)
-            pos = s + 1
-            for j in range(grp_nz_lo[g], grp_nz_hi[g]):
-                i = nzl[j]
-                zrun = i - pos
-                while zrun > 0:
-                    c = 64 if zrun > 64 else zrun
-                    ev_app(0)
-                    eb_app(c)
-                    bits_g += c
-                    zrun -= c
-                lead = ll[j]
-                trail = tl[j]
-                if prev_lead <= lead and shift <= trail:
-                    # fits the previous window → '10' + prev_sig bits
-                    ev_app(0b10)
-                    eb_app(2)
-                    ev_app(xl[j] >> shift)
-                    eb_app(prev_sig)
-                    bits_g += 2 + prev_sig
-                else:
-                    sig = sl[j]
-                    ev_app((0b11 << 11) | (lead << 6) | (sig - 1))
-                    eb_app(13)
-                    ev_app(xl[j] >> trail)
-                    eb_app(sig)
-                    bits_g += 13 + sig
-                    prev_lead, prev_sig = lead, sig
-                    shift = trail
-                pos = i + 1
-            zrun = e - pos
-            while zrun > 0:
-                c = 64 if zrun > 64 else zrun
-                ev_app(0)
-                eb_app(c)
-                bits_g += c
-                zrun -= c
-            pad = (-bits_g) % 8
-            if pad:
-                ev_app(0)
-                eb_app(pad)
-                bits_g += pad
-        meta.append(bits_g)
-
-    payload = _pack_bits(np.array(ev, dtype=np.uint64), np.array(eb, dtype=np.int64))
-    out: list[bytes] = []
-    byte_off = 0
-    firsts = (
-        bits[np.minimum(starts, max(n_total - 1, 0))].tolist() if n_total else []
-    )
-    for g in range(n_groups):
-        n_g = el_g[g] - sl_g[g]
-        if n_g == 0:
-            out.append(struct.pack("<Q", 0))
-            continue
-        nbytes = meta[g] // 8
-        out.append(
-            struct.pack("<QQ", n_g, firsts[g]) + payload[byte_off : byte_off + nbytes]
-        )
-        byte_off += nbytes
-    return out
+    """Gorilla-encode MANY series in one pass: `values` is the
+    concatenation, `starts` the group start offsets (ascending,
+    starts[0] == 0). Returns one blob per group, bit-identical to
+    gorilla_encode of each slice. Leading zeros are capped at 31 so
+    they fit 5 bits."""
+    return _xor_batch(values, starts, lambda clz: np.minimum(clz, 31), _gorilla_group)
 
 
 def gorilla_decode(blob: bytes) -> np.ndarray:
@@ -362,8 +359,15 @@ _ZIGZAG_BUCKETS = (  # (max_zigzag_exclusive, prefix, prefix_len, payload_bits)
 )
 
 
-def _dod_encode_small(t: list[int], n: int) -> bytes:
-    """Loop encoder for short series."""
+def dod_encode(ts: np.ndarray) -> bytes:
+    """Delta-of-delta encode an int64 (µs) timestamp array → bytes, one
+    timestamp at a time. The loop oracle of `dod_encode_batch`."""
+    t = np.asarray(ts, dtype=np.int64).tolist()
+    n = len(t)
+    if n == 0:
+        return _EMPTY
+    if n == 1:
+        return struct.pack("<Qq", 1, t[0])
     first_delta = t[1] - t[0]
     w = _BitWriter()
     prev_delta = first_delta
@@ -386,29 +390,15 @@ def _dod_encode_small(t: list[int], n: int) -> bytes:
     return struct.pack("<Qqq", n, t[0], first_delta) + w.getvalue()
 
 
-def dod_encode(ts: np.ndarray) -> bytes:
-    """Delta-of-delta encode an int64 (µs) timestamp array → bytes.
-    Short inputs take the loop path; long inputs the batch encoder."""
-    t = np.asarray(ts, dtype=np.int64)
-    n = len(t)
-    if n == 0:
-        return struct.pack("<Q", 0)
-    if n == 1:
-        return struct.pack("<Qq", 1, int(t[0]))
-    if n < _SMALL_N:
-        return _dod_encode_small(t.tolist(), n)
-    return dod_encode_batch(t, np.zeros(1, dtype=np.int64))[0]
-
-
 def dod_encode_batch(ts: np.ndarray, starts: np.ndarray) -> list[bytes]:
     """Encode many timestamp series in one pass (see
     gorilla_encode_batch for the contract). Fully vectorized: deltas
     and delta-of-deltas are computed over the concatenation with
     group-start positions masked out, zigzag + bucket prefixes merge
     into one ≤16-bit token per point (np.select-style masks), rare
-    64-bit escapes and per-group byte-alignment pads are spliced with
-    np.insert, and ONE _pack_bits call packs the whole batch. No
-    Python loop over values at all — only a per-group header loop."""
+    64-bit escapes are spliced with np.insert, and `_blobs` packs and
+    cuts the whole batch. No Python loop over values at all — only
+    the per-group headers."""
     t = np.asarray(ts, dtype=np.int64)
     starts = np.asarray(starts, dtype=np.int64)
     n_total = len(t)
@@ -455,37 +445,14 @@ def dod_encode_batch(ts: np.ndarray, starts: np.ndarray) -> list[bytes]:
         nb = np.insert(nb, ei + 1, 64)
         gi = np.insert(gi, ei + 1, gi[ei])
 
-    bitsum = np.bincount(gi, weights=nb.astype(np.float64), minlength=n_groups).astype(
-        np.int64
-    )
-    pad = (-bitsum) % 8
-    grp_tok_end = np.cumsum(np.bincount(gi, minlength=n_groups))
-    pm = pad > 0
-    if pm.any():
-        vals = np.insert(vals, grp_tok_end[pm], np.uint64(0))
-        nb = np.insert(nb, grp_tok_end[pm], pad[pm])
-    payload = _pack_bits(vals, nb)
-
-    gbytes = ((bitsum + pad) // 8).tolist()
-    sl_g, el_g = starts.tolist(), ends.tolist()
-    tl = t[np.minimum(starts, max(n_total - 1, 0))].tolist() if n_total else []
-    s1c = np.minimum(starts + 1, max(n_total - 1, 0))
-    fdl = delta[s1c].tolist() if n_total else []
-    out: list[bytes] = []
-    off = 0
-    for g in range(n_groups):
-        n_g = el_g[g] - sl_g[g]
-        if n_g == 0:
-            out.append(struct.pack("<Q", 0))
-        elif n_g == 1:
-            out.append(struct.pack("<Qq", 1, tl[g]))
-        else:
-            out.append(
-                struct.pack("<Qqq", n_g, tl[g], fdl[g])
-                + payload[off : off + gbytes[g]]
-            )
-            off += gbytes[g]
-    return out
+    last = max(n_total - 1, 0)
+    firsts = t[np.minimum(starts, last)].tolist() if n_total else [0] * n_groups
+    first_deltas = delta[np.minimum(starts + 1, last)].tolist() if n_total else firsts
+    heads = [
+        struct.pack("<Qqq", n, f, d) if n > 1 else struct.pack("<Qq", 1, f) if n else _EMPTY
+        for n, f, d in zip((ends - starts).tolist(), firsts, first_deltas)
+    ]
+    return _blobs(vals, nb, np.cumsum(np.bincount(gi, minlength=n_groups)), heads)
 
 
 def dod_decode(blob: bytes) -> np.ndarray:
@@ -550,12 +517,12 @@ _CHIMP_REP = {v: i for i, v in enumerate(_CHIMP_LEADS)}
 
 def chimp_encode(values: np.ndarray) -> bytes:
     """Chimp-encode a float64 array → bytes (bit-exact round trip,
-    NaN payloads included). Loop reference implementation; the batch
-    twin `chimp_encode_batch` is bit-identical (asserted in tests)."""
+    NaN payloads included), one value at a time. The loop oracle of
+    `chimp_encode_batch`."""
     vals = np.asarray(values, dtype=np.float64)
     n = len(vals)
     if n == 0:
-        return struct.pack("<Q", 0)
+        return _EMPTY
     bits = vals.view(np.uint64).tolist()
     prev = bits[0]
     out = [struct.pack("<QQ", n, prev)]
@@ -589,109 +556,44 @@ def chimp_encode(values: np.ndarray) -> bytes:
     return b"".join(out)
 
 
-def chimp_encode_batch(values: np.ndarray, starts: np.ndarray) -> list[bytes]:
-    """Encode many series in one pass (same contract as
-    gorilla_encode_batch): vectorized xor/lead/trail over the batch,
-    a sequential token loop over nonzero-xor entries only, one
-    _pack_bits for the whole batch, blobs sliced per group."""
-    vals = np.asarray(values, dtype=np.float64)
-    starts = np.asarray(starts, dtype=np.int64)
-    n_total = len(vals)
-    n_groups = len(starts)
-    ends = np.append(starts[1:], n_total)
-    bits = vals.view(np.uint64) if n_total else np.empty(0, np.uint64)
-
-    xor = np.empty(n_total, np.uint64)
-    if n_total:
-        xor[0] = 0
-        xor[1:] = bits[1:] ^ bits[:-1]
-        xor[starts[starts < n_total]] = 0
-    nz = np.flatnonzero(xor)
-    x = xor[nz]
-    bl = _bit_length_u64(x)
-    lead_a = _CHIMP_ROUND[64 - bl]
-    low = x & (~x + _U1)
-    trail_a = _bit_length_u64(low) - 1
-    grp_nz_lo = np.searchsorted(nz, starts).tolist()
-    grp_nz_hi = np.searchsorted(nz, ends).tolist()
-
-    ev: list[int] = []
-    eb: list[int] = []
-    meta: list[int] = []
-    xl, ll, tl = x.tolist(), lead_a.tolist(), trail_a.tolist()
-    nzl = nz.tolist()
-    sl_g, el_g = starts.tolist(), ends.tolist()
-    ev_app, eb_app = ev.append, eb.append
-    for g in range(n_groups):
-        s, e = sl_g[g], el_g[g]
-        bits_g = 0
-        if e - s >= 2:
+def _chimp_group(put_v, put_b, idx, xor, lead, trail, j0, j1, pos, end) -> None:
+    """Chimp tokens of one group (the `_xor_batch` contract)."""
+    stored_lead = -1
+    for j in range(j0, j1):
+        i = idx[j]
+        if i > pos:  # '00' per repeated value
+            put_v(0)
+            put_b(2 * (i - pos))
+        ld = lead[j]
+        tr = trail[j]
+        if tr > 6:
+            sig = 64 - ld - tr
+            put_v((0b01 << 9) | (_CHIMP_REP[ld] << 6) | sig)
+            put_b(11)
+            put_v(xor[j] >> tr)
+            put_b(sig)
             stored_lead = -1
-            pos = s + 1
-            for j in range(grp_nz_lo[g], grp_nz_hi[g]):
-                i = nzl[j]
-                zrun = i - pos
-                while zrun > 0:  # '00' per repeated value
-                    c = 32 if zrun > 32 else zrun
-                    ev_app(0)
-                    eb_app(2 * c)
-                    bits_g += 2 * c
-                    zrun -= c
-                lead = ll[j]
-                trail = tl[j]
-                if trail > 6:
-                    sig = 64 - lead - trail
-                    ev_app((0b01 << 9) | (_CHIMP_REP[lead] << 6) | sig)
-                    eb_app(11)
-                    ev_app(xl[j] >> trail)
-                    eb_app(sig)
-                    bits_g += 11 + sig
-                    stored_lead = -1
-                elif lead == stored_lead:
-                    ev_app(0b10)
-                    eb_app(2)
-                    ev_app(xl[j])
-                    eb_app(64 - lead)
-                    bits_g += 2 + 64 - lead
-                else:
-                    stored_lead = lead
-                    ev_app((0b11 << 3) | _CHIMP_REP[lead])
-                    eb_app(5)
-                    ev_app(xl[j])
-                    eb_app(64 - lead)
-                    bits_g += 5 + 64 - lead
-                pos = i + 1
-            zrun = e - pos
-            while zrun > 0:
-                c = 32 if zrun > 32 else zrun
-                ev_app(0)
-                eb_app(2 * c)
-                bits_g += 2 * c
-                zrun -= c
-            pad = (-bits_g) % 8
-            if pad:
-                ev_app(0)
-                eb_app(pad)
-                bits_g += pad
-        meta.append(bits_g)
+        elif ld == stored_lead:
+            put_v(0b10)
+            put_b(2)
+            put_v(xor[j])
+            put_b(64 - ld)
+        else:
+            stored_lead = ld
+            put_v((0b11 << 3) | _CHIMP_REP[ld])
+            put_b(5)
+            put_v(xor[j])
+            put_b(64 - ld)
+        pos = i + 1
+    if end > pos:
+        put_v(0)
+        put_b(2 * (end - pos))
 
-    payload = _pack_bits(np.array(ev, dtype=np.uint64), np.array(eb, dtype=np.int64))
-    out: list[bytes] = []
-    byte_off = 0
-    firsts = (
-        bits[np.minimum(starts, max(n_total - 1, 0))].tolist() if n_total else []
-    )
-    for g in range(n_groups):
-        n_g = el_g[g] - sl_g[g]
-        if n_g == 0:
-            out.append(struct.pack("<Q", 0))
-            continue
-        nbytes = meta[g] // 8
-        out.append(
-            struct.pack("<QQ", n_g, firsts[g]) + payload[byte_off : byte_off + nbytes]
-        )
-        byte_off += nbytes
-    return out
+
+def chimp_encode_batch(values: np.ndarray, starts: np.ndarray) -> list[bytes]:
+    """Chimp-encode many series in one pass (same contract as
+    gorilla_encode_batch); leading zeros round to the 8 Chimp leads."""
+    return _xor_batch(values, starts, _CHIMP_ROUND.__getitem__, _chimp_group)
 
 
 def chimp_decode(blob: bytes) -> np.ndarray:

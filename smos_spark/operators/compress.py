@@ -4,7 +4,16 @@ The reference persists each grid point's series inside a zlib-chunked
 cell file (/root/reference/src/smos/interface.py:341,376 — zlib
 complevel 6, chunksize 1000). Our engine's analog stores one compressed
 block row per conversation: delta-of-delta timestamps + Gorilla XOR
-values (smos_spark.functions.codecs).
+or Chimp values (smos_spark.functions.codecs).
+
+Block row schema: (key, n, first_ts, last_ts, ts_blob, <col>_blob…,
+codec[, <col>_min, <col>_max…][, slice]). `codec` names the value
+codec of the row's blobs. `compress_series(codec=)` is the only place
+the choice is made: `decompress_series`, `range_minmax`,
+`readback.read_block_series` and `TranscriptStore.blocks_range_minmax`
+decode each row by its own `codec`, so blocks of both codecs can share
+a table and no reader can pick the wrong decoder (a Gorilla blob read
+as Chimp, or the reverse, raises or returns wrong values silently).
 
 Scale design (learned the hard way at ~10⁶ conversations):
 
@@ -47,9 +56,10 @@ from smos_spark.functions.codecs import (
     gorilla_encode_batch,
 )
 
-#: value codecs: Gorilla XOR (Facebook, VLDB 2015) and Chimp (VLDB
-#: 2022 — rounded 3-bit leading codes, verbatim-xor fast path; ~10%
-#: smaller blocks on smooth series, same bit-exact contract)
+#: value codecs by the name a block row stores in its `codec` column:
+#: Gorilla XOR (Facebook, VLDB 2015) and Chimp (VLDB 2022 — rounded
+#: 3-bit leading codes, verbatim-xor fast path; ~10% smaller blocks on
+#: smooth series, same bit-exact contract)
 _CODECS = {
     "gorilla": (gorilla_encode_batch, gorilla_decode),
     "chimp": (chimp_encode_batch, chimp_decode),
@@ -70,9 +80,10 @@ def compress_series(
     slice_col=None,
 ) -> DataFrame:
     """→ one row per key: (key, n, first_ts, last_ts, ts_blob,
-    <col>_blob…). Ordering inside the block is (ts, *order_cols) —
-    the stable-turn-order invariant. `codec` picks the float value
-    codec (timestamps are always delta-of-delta). `stats=True` adds
+    <col>_blob…, codec). Ordering inside the block is (ts, *order_cols)
+    — the stable-turn-order invariant. `codec` picks the float value
+    codec (timestamps are always delta-of-delta) and is written into
+    every row, where the decoders read it. `stats=True` adds
     per-block `<col>_min`/`<col>_max` columns (NaN-skipping, NULL when
     all-NaN) — the compressed-domain pruning metadata `range_minmax`
     answers covered blocks from without decoding (the same idea as
@@ -93,6 +104,7 @@ def compress_series(
     schema = (
         f"{key} string, n long, first_ts timestamp, last_ts timestamp, ts_blob binary, "
         + ", ".join(f"{c}_blob binary" for c in value_cols)
+        + ", codec string"
     )
     if stats:
         schema += ", " + ", ".join(
@@ -113,7 +125,7 @@ def compress_series(
     def _empty_rows() -> dict:
         cols = [key, "n", "first_ts", "last_ts", "ts_blob"] + [
             f"{c}_blob" for c in value_cols
-        ]
+        ] + ["codec"]
         if stats:
             cols += [f"{c}_{m}" for c in value_cols for m in ("min", "max")]
         if has_slice:
@@ -137,6 +149,7 @@ def compress_series(
         rows["first_ts"].extend(ts_raw[starts])
         rows["last_ts"].extend(ts_raw[ends - 1])
         rows["ts_blob"].extend(dod_encode_batch(ts_us, starts))
+        rows["codec"].extend([codec] * len(starts))
         for c in value_cols:
             arr = pdf[c].to_numpy(dtype="float64")
             rows[f"{c}_blob"].extend(enc_batch(arr, starts))
@@ -190,24 +203,31 @@ def decompress_series(
     value_cols: Sequence[str],
     key: str = "conv_id",
     ts_col: str = "ts",
-    codec: str = "gorilla",
 ) -> DataFrame:
     """Inverse of compress_series → long form (key, ts, *value_cols).
-    mapInPandas: no shuffle at all — each block row expands in place.
-    `codec` must match the one blocks were written with."""
-    if codec not in _CODECS:
-        raise ValueError(f"unknown codec {codec!r}; choose from {sorted(_CODECS)}")
-    dec = _CODECS[codec][1]
+    mapInPandas: no shuffle at all — each block row expands in place,
+    its value blobs decoded by the codec its `codec` column names."""
+    if "codec" not in comp.columns:
+        raise ValueError(
+            "block rows lack the codec column: write them with compress_series"
+        )
     value_cols = list(value_cols)
     schema = f"{key} string, {ts_col} timestamp, " + ", ".join(
         f"{c} double" for c in value_cols
     )
-    blob_cols = [f"{c}_blob" for c in value_cols]
 
     def _dec(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
+            names = pdf["codec"].tolist()
+            unknown = set(names) - _CODECS.keys()
+            if unknown:
+                raise ValueError(
+                    f"block rows name unknown codecs {sorted(map(str, unknown))}; "
+                    f"known: {sorted(_CODECS)}"
+                )
+            decs = [_CODECS[k][1] for k in names]
             # decode every block of the batch, then assemble ONE frame
             # (np.repeat keys + concatenated arrays) — a DataFrame per
             # block costs ~100 µs of pandas overhead each, which
@@ -223,7 +243,7 @@ def decompress_series(
                 ).astype("datetime64[us]"),
             }
             for c in value_cols:
-                arrs = [dec(bytes(b)) for b in pdf[f"{c}_blob"]]
+                arrs = [dec(bytes(b)) for dec, b in zip(decs, pdf[f"{c}_blob"])]
                 data[c] = (
                     np.concatenate(arrs) if arrs else np.empty(0, dtype="float64")
                 )
@@ -238,7 +258,6 @@ def range_minmax(
     ts_from,
     ts_to,
     key: str = "conv_id",
-    codec: str = "gorilla",
 ) -> DataFrame:
     """Per-key (min, max, count) of `value_col` over [ts_from, ts_to]
     answered IN THE COMPRESSED DOMAIN wherever possible: a block whose
@@ -286,7 +305,7 @@ def range_minmax(
         F.col(f"{value_col}_max").alias("_max"),
         F.col("n").alias("_n"),
     )
-    decoded = decompress_series(straddling, [value_col], key=key, codec=codec)
+    decoded = decompress_series(straddling, [value_col], key=key)
     v = F.when(~F.isnan(F.col(value_col)), F.col(value_col))
     from_decode = (
         decoded.where((F.col("ts") >= t0) & (F.col("ts") <= t1))

@@ -100,7 +100,8 @@ def read_block_series(
     --blocks phase): the conv_id predicate pushes down to the parquet
     scan (key column min/max row-group stats — blocks are written
     conv-clustered), then ONLY that conversation's blocks are
-    decoded. Returns the long-form series ordered by time.
+    decoded, each by the codec its row names. Returns the long-form
+    series ordered by time.
 
     Works on a flat blocks directory and on a `write_blocks` layout
     (whose partition columns are discovered from the paths). The scan
@@ -109,12 +110,14 @@ def read_block_series(
     from smos_spark.operators.compress import decompress_series
 
     blobs = ["ts_blob", *(f"{c}_blob" for c in value_cols)]
-    schema = ", ".join(["conv_id string", *(f"{b} binary" for b in blobs)])
+    schema = ", ".join(
+        ["conv_id string", *(f"{b} binary" for b in blobs), "codec string"]
+    )
     blocks = (
         spark.read.schema(schema)
         .parquet(blocks_path)
         .where(F.col("conv_id") == conv_id)
-        .select("conv_id", *blobs)
+        .select("conv_id", *blobs, "codec")
     )
     return (  # sorted in one task, as in read_conv_series
         decompress_series(blocks, list(value_cols), ts_col=ts_col)

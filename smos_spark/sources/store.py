@@ -10,6 +10,10 @@ and the substitution is documented in BENCH/BASELINE.md):
       tiers/{1m,1h,1d}/bucket_date=D/bucket_id=K/...
                                            tier partials, time-major,
                                            then key-bucketed
+      blocks_<tier>/block_date=D/bucket_id=K/...
+                                           compressed block rows
+                                           (compress_series); each row
+                                           names its value codec
       _checkpoint/                         per-batch lineage+metrics rows
       _quarantine/                         late and NULL-ts raw rows
       _staging/<name>/                     one commit's writes before
@@ -55,12 +59,14 @@ partitions), removes the staging directory and clears `pending`.
 The committers are `ingest_batch` (staged at `<run_id>-<batch_id>`)
 and the maintenance commits `merge_quarantine`, `apply_retention`,
 `compact_checkpoint` and `compact_transcripts` (staged at `<run_id>`).
-Only an ingest batch sets `last_batch_id` and `last_day`; a
-maintenance commit leaves the batch counter alone, so it never takes
-the id of a stream's next epoch. Each committer calls `roll_forward`
-first under the writer lock (`writer`): it finishes a pending publish
-(each step is skipped once done, so a crash at any point converges) and
-discards any staging directory without one, which was never committed.
+Only an ingest batch sets `last_batch_id`, and it and
+`scripts/rollup_job.py` (after its tier writes) are the only writers of
+`last_day`; a maintenance commit leaves the batch counter alone, so it
+never takes the id of a stream's next epoch. Each committer calls
+`roll_forward` first under the writer lock (`writer`): it finishes a
+pending publish (each step is skipped once done, so a crash at any
+point converges) and discards any staging directory without one, which
+was never committed.
 Readers see only published state and never roll forward: after a crash
 mid-publish, a table can miss a swapped directory (or `_checkpoint` be
 absent) until the next writer rolls the commit forward. Publishing is
@@ -373,7 +379,6 @@ class TranscriptStore:
         self,
         blocks: DataFrame,
         tier: str = "1h",
-        codec: str = "gorilla",
     ) -> None:
         """Persist compressed per-conv block rows under
         blocks_<tier>/block_date=…/bucket_id=… — the K3 cell layout
@@ -414,15 +419,12 @@ class TranscriptStore:
             .write.partitionBy("block_date", "bucket_id")
             .mode("overwrite")
         ).parquet(self.blocks_path(tier))
-        # record layout + codec so a reopen can never mis-bucket point
-        # reads (same guard as write_tier) or decode with the wrong
-        # codec (gorilla/chimp blobs share a header and misparse
-        # silently), and the schema the readers scan with
-        ov = self.load_overview()
-        codecs = dict((ov.extra or {}).get("block_codecs") or {})
-        codecs[tier] = codec
-        ov.extra = {**(ov.extra or {}), "block_codecs": codecs}
-        self.save_overview(ov, {self._table_key(self.blocks_path(tier)): out.schema})
+        # record the layout so a reopen can never mis-bucket point reads
+        # (same guard as write_tier), and the schema the readers scan
+        # with; each row names its own codec, so none is recorded here
+        self.save_overview(
+            self.load_overview(), {self._table_key(self.blocks_path(tier)): out.schema}
+        )
 
     def read_blocks(
         self, spark: SparkSession, tier: str, day_lo=None, day_hi=None
@@ -451,31 +453,17 @@ class TranscriptStore:
         value_col: str,
         ts_from: str,
         ts_to: str,
-        codec: str | None = None,
     ) -> DataFrame:
         """Per-conv (min, max, count) over [ts_from, ts_to] straight
         from the block store: day-partition pruning cuts the scan to
         the range's days, block stats answer fully-covered blocks
         without decode, and only the ≤2 boundary-day blocks per conv
         decompress (compress.range_minmax). ts_from/ts_to:
-        'YYYY-MM-DD HH:MM:SS' strings or datetimes. `codec` defaults
-        to the one recorded at write_blocks time — gorilla and chimp
-        blobs share a header and misparse each other SILENTLY, so a
-        mismatching explicit codec raises."""
+        'YYYY-MM-DD HH:MM:SS' strings or datetimes. Each block decodes
+        by the codec its row names."""
         from datetime import datetime
 
         from smos_spark.operators.compress import range_minmax
-
-        recorded = ((self.load_overview().extra or {}).get("block_codecs") or {}).get(
-            tier
-        )
-        if codec is None:
-            codec = recorded or "gorilla"
-        elif recorded is not None and codec != recorded:
-            raise ValueError(
-                f"blocks_{tier} was written with codec {recorded!r}; "
-                f"decoding with {codec!r} would corrupt values silently"
-            )
 
         def _d(x):
             return (
@@ -491,7 +479,7 @@ class TranscriptStore:
                 f"blocks_{tier} lacks {value_col}_min/_max stats — write "
                 "them with compress_series(..., stats=True)"
             )
-        return range_minmax(blocks, value_col, ts_from, ts_to, codec=codec)
+        return range_minmax(blocks, value_col, ts_from, ts_to)
 
     def tier_bucket_count(self, tier: str) -> int:
         """Number of distinct key buckets on disk (the 2,449-cell-files

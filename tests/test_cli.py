@@ -10,6 +10,7 @@ import sys
 import zipfile
 from pathlib import Path
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -73,12 +74,32 @@ def test_rollup_job_with_subset_flags(spark, transcripts, input_parquet, tmp_pat
     for t in ("1m", "1h", "1d"):
         on_disk = spark.read.parquet(f"{store_root}/tiers/{t}").count()
         assert res["tier_rows"][t] == on_disk, t
-    expected_turns = (
-        transcripts.where(F.col("conv_id").between("conv000000", "conv000019"))
-        .where(F.col("ts").between("2025-01-01 00:00:00", "2025-01-02 23:59:59"))
-        .count()
-    )
-    assert res["turns"] == expected_turns
+    subset = transcripts.where(
+        F.col("conv_id").between("conv000000", "conv000019")
+    ).where(F.col("ts").between("2025-01-01 00:00:00", "2025-01-02 23:59:59"))
+    assert res["turns"] == subset.count()
+
+    # the newest filtered turn is the store's last_day, so an ingest of
+    # overlapping turns quarantines them and leaves the tiers as they are
+    from smos_spark.sources.store import TranscriptStore
+    from smos_spark.streaming.incremental import ingest_batch
+
+    store = TranscriptStore(store_root)
+    assert store.load_overview().last_day == str(subset.agg(F.max("ts")).first()[0])
+
+    def tier_sums():
+        return [
+            spark.read.parquet(f"{store_root}/tiers/{t}")
+            .agg(F.sum("n_turns"), F.sum("len_sum"))
+            .first()
+            for t in ("1m", "1h", "1d")
+        ]
+
+    before = tier_sums()
+    assert ingest_batch(store, subset, run_id="overlap", batch_id=0)["rows_in"] == 0
+    quarantined = spark.read.schema(subset.schema).parquet(f"{store_root}/_quarantine")
+    assert quarantined.count() == subset.count()
+    assert tier_sums() == before
 
 
 def test_store_tool_read_extend_export(spark, transcripts, tmp_path):
@@ -170,9 +191,11 @@ def test_store_tool_compact(spark, transcripts, tmp_path):
 
 def test_store_tool_blocks_and_range_agg(spark, transcripts, tmp_path):
     """CLI block-store build + compressed-domain range aggregate:
-    blocks from a 1h tier, then a range query answered from block
-    stats; row count equals distinct convs active in the range."""
+    chimp blocks from a 1h tier, read back with no codec argument, then
+    a range query answered from block stats; row count equals distinct
+    convs active in the range."""
     from smos_spark.operators.rollup import reaggregate, rollup_from_raw
+    from smos_spark.readback import read_block_series
     from smos_spark.sources.store import TranscriptStore
 
     store = TranscriptStore(tmp_path / "bstore", n_buckets=8)
@@ -185,6 +208,24 @@ def test_store_tool_blocks_and_range_agg(spark, transcripts, tmp_path):
          "--parameters", "n_turns,len_sum", "--codec", "chimp"]
     )
     assert r["blocks"] > 0
+    # the rows name their codec, so the point read decodes them as
+    # chimp on its own and returns the tier's series
+    conv = h1.groupBy("conv_id").count().orderBy(F.desc("count"), "conv_id").first()[0]
+    params = ["n_turns", "len_sum"]
+    got = read_block_series(spark, store.blocks_path("1h"), conv, params).toPandas()
+    exp = (
+        h1.where(F.col("conv_id") == conv)
+        .select(
+            "conv_id",
+            F.col("bucket_start").alias("ts"),
+            *[F.col(p).cast("double").alias(p) for p in params],
+        )
+        .orderBy("ts")
+        .toPandas()
+    )
+    pd.testing.assert_frame_equal(got, exp)
+    blocks = store.read_blocks(spark, "1h")
+    assert {r.codec for r in blocks.select("codec").distinct().collect()} == {"chimp"}
 
     lo, hi = h1.agg(F.min("bucket_start"), F.max("bucket_start")).first()
     # limit above the conv count -> the (limit+1)-row probe sees the
@@ -194,7 +235,7 @@ def test_store_tool_blocks_and_range_agg(spark, transcripts, tmp_path):
     r2 = _run(
         ["scripts/store_tool.py", "--master", "local[4]", "range-agg",
          "--store", str(tmp_path / "bstore"), "--tier", "1h",
-         "--parameter", "n_turns", "--codec", "chimp",
+         "--parameter", "n_turns",
          "--ts-range", f"{lo},{hi}", "--limit", "100"]
     )
     exp = h1.select("conv_id").distinct().count()
@@ -203,9 +244,7 @@ def test_store_tool_blocks_and_range_agg(spark, transcripts, tmp_path):
     # the CLI never collects the full result: display rows are capped
     # by a limit PUSHED INTO THE PLAN — re-build the displayed frame
     # exactly as range-agg does and pin GlobalLimit in the physical plan
-    shown = store.blocks_range_minmax(
-        spark, "1h", "n_turns", str(lo), str(hi), codec="chimp"
-    ).limit(3)
+    shown = store.blocks_range_minmax(spark, "1h", "n_turns", str(lo), str(hi)).limit(3)
     plan = shown._jdf.queryExecution().executedPlan().toString()
     assert "GlobalLimit" in plan or "CollectLimit" in plan, plan
     assert len(shown.collect()) == min(3, exp)

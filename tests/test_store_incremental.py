@@ -381,6 +381,54 @@ def test_ingest_crash_retry_applies_batch_once(spark, small, days, tmp_path, mon
     assert ov.last_day == str(on_time.agg(F.max("ts")).first()[0])
 
 
+def test_store_tool_blocks_rolls_crashed_ingest_forward(spark, small, days, tmp_path, monkeypatch):
+    """`store_tool blocks` builds inside `store.writer()`: after an
+    ingest that crashed mid-publish, it rolls the commit forward before
+    it lists the tier, so the blocks hold every partition of the batch."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from smos_spark.operators.compress import decompress_series
+
+    store = TranscriptStore(tmp_path / "bcrash", n_buckets=4)
+    ingest_batch(store, small.where(F.to_date("ts") == days[0]), run_id="r1", batch_id=0)
+    fired = _crash_publish(monkeypatch, "publish_after_1")
+    with pytest.raises(_Crash):
+        ingest_batch(store, small.where(F.to_date("ts") == days[1]), run_id="r1", batch_id=1)
+    monkeypatch.undo()
+    assert fired and store.load_overview().pending is not None
+
+    out = subprocess.run(
+        [sys.executable, "scripts/store_tool.py", "--master", "local[2]", "blocks",
+         "--store", str(store.root), "--tier", "1h", "--parameters", "n_turns"],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        timeout=420,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = (
+        decompress_series(store.read_blocks(spark, "1h"), ["n_turns"])
+        .toPandas()
+        .sort_values(["conv_id", "ts"])
+        .reset_index(drop=True)
+    )
+    ref = (
+        rollup_from_raw(small.where(F.to_date("ts").isin(days[:2])), "1h")
+        .select(
+            "conv_id",
+            F.col("bucket_start").alias("ts"),
+            F.col("n_turns").cast("double").alias("n_turns"),
+        )
+        .toPandas()
+        .sort_values(["conv_id", "ts"])
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, ref)
+    assert store.load_overview().pending is None
+
+
 def test_export_subset_roundtrip(spark, transcripts, tmp_path):
     """Reference K2 round trip (tests/test_ICimg_subset_and_write.py:38-77
     archetype): export a conv/ts-range subset of a tier into a NEW
@@ -855,7 +903,11 @@ def test_block_store_roundtrip_and_pruned_range(spark, transcripts, tmp_path):
     directory; blocks_range_minmax over a mid-span window equals the
     raw aggregate while scanning ONLY the range's day partitions."""
     from pyspark.sql import functions as F
-    from smos_spark.operators.compress import compress_series, decompress_series
+    from smos_spark.operators.compress import (
+        compress_series,
+        decompress_series,
+        range_minmax,
+    )
 
     ev = transcripts.select(
         "conv_id",
@@ -910,12 +962,24 @@ def test_block_store_roundtrip_and_pruned_range(spark, transcripts, tmp_path):
     assert "PartitionFilters" in plan and "block_date" in plan.split(
         "PartitionFilters"
     )[1][:260], plan
-    # recorded-codec guard: a mismatching explicit codec must refuse
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="codec"):
-        store.blocks_range_minmax(spark, "raw", "value", str(t0), str(t1),
-                                  codec="chimp")
+    # a frame of gorilla and chimp block rows: each row decodes by the
+    # codec it names, in decompress_series and range_minmax alike
+    chimp = compress_series(
+        ev, ["value"], stats=True, slice_col=F.to_date("ts"), codec="chimp"
+    )
+    half = F.crc32("conv_id") % 2 == 0
+    mixed = blocks.where(half).unionByName(chimp.where(~half))
+    back = decompress_series(mixed, ["value"])
+    assert sorted(map(tuple, ev.collect())) == sorted(map(tuple, back.collect()))
+    got = {
+        r["conv_id"]: (r["vmin"], r["vmax"], r["n_points"])
+        for r in range_minmax(mixed, "value", t0, t1).collect()
+    }
+    assert got == exp
+    assert {r.codec for r in mixed.select("codec").distinct().collect()} == {
+        "gorilla",
+        "chimp",
+    }
 
 
 def test_merge_quarantine_invalidates_stale_blocks(spark, small, days, tmp_path):
