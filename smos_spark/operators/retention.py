@@ -23,11 +23,13 @@ drops nothing; one after it is rolled forward by the next writer.
 from __future__ import annotations
 
 import datetime as dt
+from functools import partial, reduce
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from smos_spark.sources.store import TranscriptStore
+from smos_spark.sources.store import TranscriptStore, _ts_lit
 
 __all__ = [
     "DEFAULT_RETENTION",
@@ -220,23 +222,13 @@ def tiered_read(
     the union is read-only plan glue).  The driver-side boundary math
     is O(#tiers) plain datetimes.
     """
-    from pyspark.sql import functions as F
 
-    order, segments = plan_tier_segments(list(tiers), t0, t1, now, keep_s)
-    out = None
-    for name, lo, hi_ in segments:
-        part = tiers[name].where(
-            (F.col("bucket_start") >= F.lit(lo))
-            & (F.col("bucket_start") < F.lit(hi_))
+    def read(name, lo, hi):
+        return tiers[name].where(
+            (F.col("bucket_start") >= _ts_lit(lo)) & (F.col("bucket_start") < _ts_lit(hi))
         )
-        part = part.select(F.lit(name).alias("tier"), *tiers[name].columns)
-        out = part if out is None else out.unionByName(part)
-    if out is None:  # whole range expired: empty frame, finest schema
-        base = tiers[order[0]]
-        return base.where(F.lit(False)).select(
-            F.lit(order[0]).alias("tier"), *base.columns
-        )
-    return out
+
+    return _stitch(read, list(tiers), t0, t1, now, keep_s)
 
 
 def tiered_read_store(
@@ -249,39 +241,23 @@ def tiered_read_store(
     tier_names=("1m", "1h", "1d"),
 ):
     """`tiered_read` against a TranscriptStore's persisted tier
-    layout, with the segment range ALSO applied to the bucket_date
-    PARTITION column so each segment's scan prunes to its own day
-    directories (bucket_start alone is a data column — it row-group
-    prunes via min/max stats but cannot drop partitions).  The
-    bucket_date predicate is the enclosing-day widening of
-    [lo, hi): date(lo) .. date(hi − 1µs), exact because a bucket's
-    date is derived from its bucket_start."""
-    from pyspark.sql import functions as F
+    layout: each segment is one `read_tier(tier, lo, hi)`, so its scan
+    also prunes to its own day directories (bucket_start alone is a
+    data column — it row-group prunes via min/max stats but cannot
+    drop partitions)."""
+    return _stitch(partial(store.read_tier, spark), list(tier_names), t0, t1, now, keep_s)
 
-    order, segments = plan_tier_segments(list(tier_names), t0, t1, now, keep_s)
-    out = None
-    cols = None
-    for name, lo, hi in segments:
-        df = store.scan_tier(spark, name)
-        if cols is None:
-            cols = [c for c in df.columns if c not in ("bucket_id", "bucket_date")]
-        part = (
-            df.where(
-                (F.col("bucket_date") >= F.lit(lo.date()))
-                & (
-                    F.col("bucket_date")
-                    <= F.lit((hi - dt.timedelta(microseconds=1)).date())
-                )
-                & (F.col("bucket_start") >= F.lit(lo))
-                & (F.col("bucket_start") < F.lit(hi))
-            )
-            .drop("bucket_id", "bucket_date")
-            .select(F.lit(name).alias("tier"), *cols)
-        )
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        base = store.read_tier(spark, order[0])
-        return base.where(F.lit(False)).select(
-            F.lit(order[0]).alias("tier"), *base.columns
-        )
-    return out
+
+def _stitch(read, tier_names, t0, t1, now, keep_s):
+    """The union of `read(tier, lo, hi)` (rows with lo <= bucket_start
+    < hi) over the planned segments, each row tagged with its tier; a
+    wholly expired range gives an empty frame of the finest tier."""
+    order, segments = plan_tier_segments(tier_names, t0, t1, now, keep_s)
+    parts = [
+        read(name, lo, hi).select(F.lit(name).alias("tier"), "*")
+        for name, lo, hi in segments
+    ]
+    if not parts:
+        empty = read(order[0], t0, t1).where(F.lit(False))
+        parts = [empty.select(F.lit(order[0]).alias("tier"), "*")]
+    return reduce(DataFrame.unionByName, parts)

@@ -3,7 +3,8 @@
 Reference post-op chain (/root/reference/src/smos/interface.py:128-162),
 reproduced in order:
   1. point lookup by key → one cell file (here: one bucket directory,
-     pruned by a foldable bucket_id predicate — store.read_tier_for_conv)
+     pruned by a foldable bucket_id predicate —
+     store.read_tier(conv_id=…))
   2. drop rows where ALL value columns are NULL (`drop_missing=True`,
      interface.py:151-152)
   3. integer restoration: a float column with no NULLs and all whole
@@ -68,7 +69,7 @@ def read_conv_series(
     — combined with drop_missing=False this returns the reference's
     NaN-row shape ([v, null, null] for a gap, test_ICreshuffle.py:39-52).
     """
-    df = store.read_tier_for_conv(spark, tier, conv_id)
+    df = store.read_tier(spark, tier, conv_id=conv_id)
     if dense:
         # one partition already satisfies gap_fill's window on conv_id,
         # so the dense read adds no exchange and no job

@@ -163,24 +163,25 @@ def mirror_ingest(
         if not r.get("skipped") and r.get("rows_in") == 0:
             # all-late batch: record its days as stale so they are not
             # re-planned forever (crash mid-sync keeps the completed
-            # prefix; ingest_batch just saved overview, so reload
-            # before mutating to not clobber its commit). The list
-            # stays bounded: only pathological all-late days enter it,
-            # and entries at/before last_day are pruned (the data
-            # watermark already gates them).
-            ov = store.load_overview()
-            cur_last = str(ov.last_day)[:10] if ov.last_day is not None else ""
-            cur = _load_stale(ov)
-            cur.update(pre_fps)
-            ov.extra = {
-                **(ov.extra or {}),
-                "mirror_stale_days": {
-                    d: fp
-                    for d, fp in sorted(cur.items())
-                    if not (cur_last and d <= cur_last)
-                },
-            }
-            store.save_overview(ov)
+            # prefix). The overview is loaded and saved under the writer
+            # lock, so no other committer's save falls in between and is
+            # overwritten. The list stays bounded: only pathological
+            # all-late days enter it, and entries at/before last_day are
+            # pruned (the data watermark already gates them).
+            with store.writer():
+                ov = store.load_overview()
+                cur_last = str(ov.last_day)[:10] if ov.last_day is not None else ""
+                cur = _load_stale(ov)
+                cur.update(pre_fps)
+                ov.extra = {
+                    **(ov.extra or {}),
+                    "mirror_stale_days": {
+                        d: fp
+                        for d, fp in sorted(cur.items())
+                        if not (cur_last and d <= cur_last)
+                    },
+                }
+                store.save_overview(ov)
     return {
         "ingested": ingested,
         "skipped": sorted(skipped),

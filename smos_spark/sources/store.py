@@ -36,6 +36,12 @@ and the substitution is documented in BENCH/BASELINE.md):
   schema it wrote, and the readers scan with it, so Spark never runs a
   footer-reading job to infer one (`_checkpoint` has the fixed
   CHECKPOINT_SCHEMA).
+* One reader and one writer serve every (date, bucket) table, tiers
+  and blocks alike. `_write` adds the partition columns from a row's
+  own timestamp and key, sorts and overwrites; `_read` turns a
+  half-open time range [lo, hi) into day-directory pruning and a key
+  into one bucket directory. Readers (`read_tier`, `read_blocks`)
+  return the table's own columns, never the partition columns.
 * Tiers are built whole by `write_tier` and maintained by
   `merge_tiers`: new partials (raw turns through
   `rollup.turn_partials`) are merged with the existing rows of the day
@@ -77,6 +83,7 @@ has no atomic rename and is out of scope.
 from __future__ import annotations
 
 import contextlib
+import datetime as dt
 import json
 import os
 import shutil
@@ -114,6 +121,25 @@ def bucket_expr(col="conv_id", n_buckets: int = DEFAULT_N_BUCKETS):
     `col` is a column name or a Column (a literal key gives a foldable
     expression)."""
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
+
+
+_US = dt.timedelta(microseconds=1)
+
+
+def _instant(t) -> dt.datetime | None:
+    """A range bound as a datetime: an ISO string is parsed, a date is
+    its midnight, None stays open."""
+    if isinstance(t, str):
+        return dt.datetime.fromisoformat(t)
+    if isinstance(t, dt.date) and not isinstance(t, dt.datetime):
+        return dt.datetime.combine(t, dt.time())
+    return t
+
+
+def _ts_lit(t: dt.datetime):
+    """`t` as a timestamp literal read in the session time zone (a
+    naive datetime given to F.lit is read in the Python process's)."""
+    return F.lit(str(t)).cast("timestamp")
 
 
 @dataclass
@@ -260,30 +286,73 @@ class TranscriptStore:
     def read_transcripts(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.transcripts_path).drop("ts_date")
 
-    # --- tier tables ---
-    # Layout: bucket_date=YYYY-MM-DD/bucket_id=K/part-*.parquet
+    # --- tier and block tables ---
+    # Layout: <date_col>=YYYY-MM-DD/bucket_id=K/part-*.parquet
     # time-major first so incremental merges rewrite only the dates a
     # batch touches; key-bucketed second for point-read locality.
-    def _with_partition_cols(self, tier_df: DataFrame) -> DataFrame:
-        return tier_df.withColumn("bucket_date", F.to_date("bucket_start")).withColumn(
+    def _with_partition_cols(self, df: DataFrame, date_col: str, ts_col: str) -> DataFrame:
+        return df.withColumn(date_col, F.to_date(ts_col)).withColumn(
             "bucket_id", bucket_expr("conv_id", self.n_buckets)
         )
 
-    def write_tier(self, tier_df: DataFrame, tier: str) -> None:
-        # Hash-repartition on the partition columns (one shuffle, no
-        # sampling pass — repartitionByRange would re-execute the whole
-        # upstream aggregate to sample range boundaries). The sort
-        # leads with the partition columns so the dynamic-partition
-        # writer's required ordering is already satisfied: no hidden
-        # second sort, one open file at a time, conv-clustered rows.
-        out = self._with_partition_cols(tier_df)
+    def _write(self, df: DataFrame, path: str, date_col: str, ts_col: str) -> None:
+        """Overwrite the table at `path` partitioned on (date_col =
+        date(ts_col), bucket_id), and record the schema written.
+
+        Hash-repartition on the partition columns (one shuffle, no
+        sampling pass — repartitionByRange would re-execute the whole
+        upstream aggregate to sample range boundaries). The sort leads
+        with the partition columns so the dynamic-partition writer's
+        required ordering is already satisfied: no hidden second sort,
+        one open file at a time, conv-clustered rows."""
+        out = self._with_partition_cols(df, date_col, ts_col)
         self._with_point_read_options(
-            out.repartition("bucket_date", "bucket_id")
-            .sortWithinPartitions("bucket_date", "bucket_id", "conv_id", "bucket_start")
-            .write.partitionBy("bucket_date", "bucket_id")
+            out.repartition(date_col, "bucket_id")
+            .sortWithinPartitions(date_col, "bucket_id", "conv_id", ts_col)
+            .write.partitionBy(date_col, "bucket_id")
             .mode("overwrite")
-        ).parquet(self.tier_path(tier))
-        self._record_schema(self.tier_path(tier), out)
+        ).parquet(path)
+        self._record_schema(path, out)
+
+    def _read(
+        self,
+        spark: SparkSession,
+        path: str,
+        date_col: str,
+        lo=None,
+        hi=None,
+        conv_id: str | None = None,
+        ts_col: str | None = None,
+    ) -> DataFrame:
+        """The table at `path` pruned to the half-open range [lo, hi)
+        and to one key, without its partition columns.
+
+        The range prunes day directories: date(lo) <= date_col <=
+        date(hi - 1µs), exact because a row's date is derived from its
+        own timestamp. With `ts_col`, rows are also cut to lo <= ts_col
+        < hi. The key adds the bucket predicate, `bucket_expr` over a
+        literal: it is foldable, so the optimizer folds it to a
+        constant during partition pruning, which keeps exactly one
+        bucket directory with no job to compute the bucket (the
+        read-one-cell-file locality of the reference, J2), and the
+        conv_id equality reaches the parquet bloom filter."""
+        lo, hi = _instant(lo), _instant(hi)
+        df = self._scan(spark, path)
+        if lo is not None:
+            df = df.where(F.col(date_col) >= F.lit(lo.date()))
+            if ts_col is not None:
+                df = df.where(F.col(ts_col) >= _ts_lit(lo))
+        if hi is not None:
+            df = df.where(F.col(date_col) <= F.lit((hi - _US).date()))
+            if ts_col is not None:
+                df = df.where(F.col(ts_col) < _ts_lit(hi))
+        if conv_id is not None:
+            bucket = bucket_expr(F.lit(conv_id), self.n_buckets)
+            df = df.where((F.col("bucket_id") == bucket) & (F.col("conv_id") == conv_id))
+        return df.drop(date_col, "bucket_id")
+
+    def write_tier(self, tier_df: DataFrame, tier: str) -> None:
+        self._write(tier_df, self.tier_path(tier), "bucket_date", "bucket_start")
 
     def merge_tiers(
         self,
@@ -310,7 +379,9 @@ class TranscriptStore:
             )
             for tier, rows in rows_by_tier.items()
         ]
-        keyed = self._with_partition_cols(reduce(DataFrame.unionByName, tagged))
+        keyed = self._with_partition_cols(
+            reduce(DataFrame.unionByName, tagged), "bucket_date", "bucket_start"
+        )
         out = (
             keyed.repartition("tier", "bucket_date", "bucket_id")
             .groupBy("tier", "bucket_date", "bucket_id", "conv_id", "bucket_start")
@@ -336,41 +407,16 @@ class TranscriptStore:
             {self._table_key(self.tier_path(t)): schema for t in rows_by_tier},
         )
 
-    def scan_tier(self, spark: SparkSession, tier: str) -> DataFrame:
-        """The tier with its bucket_date/bucket_id partition columns,
-        for callers that prune on them."""
-        return self._scan(spark, self.tier_path(tier))
-
-    def read_tier(self, spark: SparkSession, tier: str) -> DataFrame:
-        return self.scan_tier(spark, tier).drop("bucket_id", "bucket_date")
-
-    def read_tier_since(self, spark: SparkSession, tier: str, day_lo) -> DataFrame:
-        """Tier rows with bucket_date >= day_lo — the filter hits the
-        bucket_date PARTITION column, so older directories are pruned
-        from the scan entirely."""
-        df = self.scan_tier(spark, tier)
-        return df.where(F.col("bucket_date") >= F.to_date(F.lit(str(day_lo)))).drop(
-            "bucket_id", "bucket_date"
-        )
-
-    def _read_conv(self, spark: SparkSession, path: str, conv_id: str) -> DataFrame:
-        """Point read shared by tier and block tables. The bucket side
-        is `bucket_expr` over a literal, so it is foldable: the
-        optimizer folds it to a constant during partition pruning, which
-        keeps exactly one bucket directory with no job to compute the
-        bucket."""
-        bucket = bucket_expr(F.lit(conv_id), self.n_buckets)
-        return (
-            self._scan(spark, path)
-            .where((F.col("bucket_id") == bucket) & (F.col("conv_id") == conv_id))
-            .drop("bucket_id")
-        )
-
-    def read_tier_for_conv(self, spark: SparkSession, tier: str, conv_id: str) -> DataFrame:
-        """Point read with bucket pruning: the partition filter on
-        bucket_id restricts the scan to one directory — the read-one-
-        cell-file locality of the reference (J2)."""
-        return self._read_conv(spark, self.tier_path(tier), conv_id)
+    def read_tier(
+        self, spark: SparkSession, tier: str, lo=None, hi=None, conv_id: str | None = None
+    ) -> DataFrame:
+        """The tier's rows with lo <= bucket_start < hi (each bound a
+        datetime, a date or an ISO string; None leaves that side open),
+        of one conversation if `conv_id` is given. Both prune the scan:
+        the range to its day directories, the key to one bucket
+        directory."""
+        path = self.tier_path(tier)
+        return self._read(spark, path, "bucket_date", lo, hi, conv_id, "bucket_start")
 
     def blocks_path(self, tier: str) -> str:
         return str(self.root / f"blocks_{tier}")
@@ -385,11 +431,12 @@ class TranscriptStore:
         applied to the codec family. Expects the output of
         `compress_series(..., stats=True, slice_col=F.to_date(ts))`
         (day-sliced blocks with per-block min/max stats): the slice
-        becomes the date partition, so time-range reads prune whole
-        day directories, bucket_id prunes point reads, and the stored
-        stats let `blocks_range_minmax` answer covered blocks without
-        decoding. Same writer-sort discipline as write_tier (partition
-        columns lead the sort — no hidden re-sort, one open file)."""
+        day, which is the date of each block's first_ts, becomes the
+        date partition, so time-range reads prune whole day
+        directories, bucket_id prunes point reads, and the stored stats
+        let `blocks_range_minmax` answer covered blocks without
+        decoding. Written by the same writer as the tiers. Each row
+        names its own codec, so none is recorded."""
         if "slice" not in blocks.columns:
             raise ValueError(
                 "write_blocks expects day-sliced blocks: run "
@@ -408,71 +455,34 @@ class TranscriptStore:
                 "write_blocks: block spans cross their slice value — "
                 "slices must be DAY-grained (slice_col=F.to_date(ts_col))"
             )
-        out = (
-            blocks.withColumn("block_date", F.col("slice"))
-            .withColumn("bucket_id", bucket_expr("conv_id", self.n_buckets))
-            .drop("slice")
-        )
-        self._with_point_read_options(
-            out.repartition("block_date", "bucket_id")
-            .sortWithinPartitions("block_date", "bucket_id", "conv_id")
-            .write.partitionBy("block_date", "bucket_id")
-            .mode("overwrite")
-        ).parquet(self.blocks_path(tier))
-        # record the layout so a reopen can never mis-bucket point reads
-        # (same guard as write_tier), and the schema the readers scan
-        # with; each row names its own codec, so none is recorded here
-        self.save_overview(
-            self.load_overview(), {self._table_key(self.blocks_path(tier)): out.schema}
-        )
+        self._write(blocks.drop("slice"), self.blocks_path(tier), "block_date", "first_ts")
 
     def read_blocks(
-        self, spark: SparkSession, tier: str, day_lo=None, day_hi=None
+        self, spark: SparkSession, tier: str, lo=None, hi=None, conv_id: str | None = None
     ) -> DataFrame:
-        """Block rows, optionally pruned to block_date ∈ [day_lo,
-        day_hi] — the filter hits the PARTITION column, so out-of-range
-        day directories never enter the scan."""
-        df = self._scan(spark, self.blocks_path(tier))
-        if day_lo is not None:
-            df = df.where(F.col("block_date") >= F.to_date(F.lit(str(day_lo))))
-        if day_hi is not None:
-            df = df.where(F.col("block_date") <= F.to_date(F.lit(str(day_hi))))
-        return df.drop("bucket_id")
-
-    def read_blocks_for_conv(
-        self, spark: SparkSession, tier: str, conv_id: str
-    ) -> DataFrame:
-        """Point read with bucket pruning (the same folded bucket
-        predicate as read_tier_for_conv — J2 locality for blocks)."""
-        return self._read_conv(spark, self.blocks_path(tier), conv_id)
+        """Block rows of the days that [lo, hi) touches (bounds as in
+        `read_tier`; a block is kept whole, so it may reach outside the
+        range), of one conversation if `conv_id` is given."""
+        return self._read(spark, self.blocks_path(tier), "block_date", lo, hi, conv_id)
 
     def blocks_range_minmax(
         self,
         spark: SparkSession,
         tier: str,
         value_col: str,
-        ts_from: str,
-        ts_to: str,
+        ts_from,
+        ts_to,
     ) -> DataFrame:
         """Per-conv (min, max, count) over [ts_from, ts_to] straight
         from the block store: day-partition pruning cuts the scan to
         the range's days, block stats answer fully-covered blocks
         without decode, and only the ≤2 boundary-day blocks per conv
-        decompress (compress.range_minmax). ts_from/ts_to:
-        'YYYY-MM-DD HH:MM:SS' strings or datetimes. Each block decodes
-        by the codec its row names."""
-        from datetime import datetime
-
+        decompress (compress.range_minmax). ts_from/ts_to: datetimes,
+        dates or ISO strings. Each block decodes by the codec its row
+        names."""
         from smos_spark.operators.compress import range_minmax
 
-        def _d(x):
-            return (
-                datetime.fromisoformat(x) if isinstance(x, str) else x
-            ).date()
-
-        blocks = self.read_blocks(
-            spark, tier, day_lo=_d(ts_from), day_hi=_d(ts_to)
-        )
+        blocks = self.read_blocks(spark, tier, ts_from, _instant(ts_to) + _US)
         # stats columns are required for the covered-block fast path
         if f"{value_col}_min" not in blocks.columns:
             raise ValueError(
@@ -512,15 +522,10 @@ class TranscriptStore:
         points, write them as new date-coded files that the SAME reader
         opens. Filters land on the scan (bucket_date partition pruning
         for the ts range; conv_id min/max row-group stats for the key
-        range); one write, no driver materialization."""
-        df = self.scan_tier(spark, tier)
-        if ts_lo is not None:
-            df = df.where(F.col("bucket_start") >= F.lit(str(ts_lo)).cast("timestamp"))
-            df = df.where(F.col("bucket_date") >= F.to_date(F.lit(str(ts_lo)[:10])))
-        if ts_hi is not None:
-            df = df.where(F.col("bucket_start") <= F.lit(str(ts_hi)).cast("timestamp"))
-            df = df.where(F.col("bucket_date") <= F.to_date(F.lit(str(ts_hi)[:10])))
-        df = df.drop("bucket_id", "bucket_date")
+        range); one write, no driver materialization. ts_lo/ts_hi
+        bound bucket_start inclusively."""
+        hi = None if ts_hi is None else _instant(ts_hi) + _US
+        df = self.read_tier(spark, tier, ts_lo, hi)
         if conv_lo is not None:
             df = df.where(F.col("conv_id") >= conv_lo)
         if conv_hi is not None:

@@ -150,7 +150,8 @@ def _ingest_batch_locked(
     # any derived compressed blocks for these days encode PRE-append
     # tier values and must be dropped (same tier/blocks consistency
     # rule as retention and merge_quarantine). Dropping an untouched
-    # day in the span is safe — it just re-encodes later.
+    # day in the span loses no tier data: the day is absent from the
+    # block readers until `store_tool blocks` rebuilds the blocks.
     d0 = _dt.date.fromisoformat(batch_day)
     d1 = _dt.date.fromisoformat(str(hi)[:10])
     batch_days = [
@@ -169,7 +170,7 @@ def _ingest_batch_locked(
         # on bucket_date — everything before it is final and is neither
         # read (partition pruning) nor written.
         rows_by_tier = {
-            tier: store.read_tier_since(spark, tier, batch_day).unionByName(turns)
+            tier: store.read_tier(spark, tier, lo=batch_day).unionByName(turns)
             if Path(store.tier_path(tier)).exists()
             else turns
             for tier in TIERS
@@ -215,8 +216,9 @@ def _stale_blocks(
 ) -> tuple[list[str], list[dict]]:
     """The compressed block days of every tier that encode the tier's
     values from before a merge of `days` (directories relative to the
-    store root, dropped on publish), and one lineage row per day. A
-    reader that hits a missing day re-encodes from the tier."""
+    store root, dropped on publish), and one lineage row per day. No
+    reader re-encodes: a dropped day is absent from `read_blocks` and
+    `read_block_series` until `store_tool blocks` rebuilds it."""
     from pathlib import Path
 
     dirs = [Path(store.blocks_path(t)) / f"block_date={d}" for t in TIERS for d in days]
@@ -263,9 +265,10 @@ def merge_quarantine(
       are computed FROM tier rows, so a merged day makes its blocks
       stale: they are DROPPED on publish for every affected day (same
       tier/blocks consistency rule retention enforces) and the drop is
-      recorded in lineage — a reader hitting the missing day
-      re-encodes from the (now correct) tier instead of silently
-      serving pre-merge values;
+      recorded in lineage — the day is then absent from `read_blocks`
+      and `read_block_series` until `store_tool blocks` rebuilds it
+      from the (now correct) tier, instead of serving pre-merge
+      values;
     * the lineage rows are staged and the merge is committed with the
       frozen dir in its ``drop`` list, so publishing deletes it. A
       crash before the commit point discards the staging directory and

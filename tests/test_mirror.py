@@ -146,6 +146,43 @@ def test_mirror_all_late_day_not_replanned(spark, landing, tmp_path):
     assert spark.read.parquet(str(qdir)).count() == n_q
 
 
+def test_mirror_stale_days_saved_under_writer_lock(spark, landing, tmp_path, monkeypatch):
+    """Recording an all-late day is a store write: it takes the writer
+    lock, so a committer that took the lock after the batch's ingest
+    makes it raise instead of having its overview save overwritten."""
+    import json
+    import shutil
+    import time
+
+    from smos_spark.sources import mirror
+    from smos_spark.sources.store import ConcurrentWriterError
+
+    root, df, days = landing
+    land = tmp_path / "landing_lock"
+    land.mkdir()
+    for d in days:
+        shutil.copytree(root / f"day={d}", land / f"day={d}")
+    store = TranscriptStore(tmp_path / "lock", n_buckets=4)
+    mirror_ingest(spark, store, land, run_id="m1", include_last_day=True)
+    last_day = str(store.load_overview().last_day)[:10]
+    fake_day = (dt.date.fromisoformat(last_day) + dt.timedelta(days=1)).isoformat()
+    df.where(F.to_date("ts") == days[0]).write.mode("overwrite").parquet(
+        str(land / f"day={fake_day}")
+    )
+
+    ingest = mirror.ingest_batch
+
+    def ingest_then_foreign_writer(*args, **kwargs):
+        res = ingest(*args, **kwargs)
+        store.lock_path.write_text(json.dumps({"pid": -1, "ts": time.time()}))
+        return res
+
+    monkeypatch.setattr(mirror, "ingest_batch", ingest_then_foreign_writer)
+    with pytest.raises(ConcurrentWriterError):
+        mirror_ingest(spark, store, land, run_id="m2", include_last_day=True)
+    assert "mirror_stale_days" not in (store.load_overview().extra or {})
+
+
 def test_mirror_out_of_order_day_still_ingested(spark, landing, tmp_path):
     """An eventually-consistent listing can surface an OLDER day dir
     after a newer all-late day was processed; the stale-day gate must

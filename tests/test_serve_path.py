@@ -84,15 +84,68 @@ def test_building_store_readers_launches_no_job(spark, served):
     store, _ = served
     builders = {
         "read_tier": lambda: store.read_tier(spark, "1h"),
-        "read_tier_since": lambda: store.read_tier_since(spark, "1m", "2025-01-02"),
-        "read_tier_for_conv": lambda: store.read_tier_for_conv(spark, "1h", "conv000007"),
-        "read_blocks": lambda: store.read_blocks(spark, "1h", day_lo="2025-01-02"),
-        "read_blocks_for_conv": lambda: store.read_blocks_for_conv(spark, "1h", "conv000007"),
+        "read_tier_lo": lambda: store.read_tier(spark, "1m", lo="2025-01-02"),
+        "read_tier_conv": lambda: store.read_tier(spark, "1h", conv_id="conv000007"),
+        "read_tier_range": lambda: store.read_tier(
+            spark, "1m", dt.date(2025, 1, 2), dt.datetime(2025, 1, 3, 6)
+        ),
+        "read_tier_range_conv": lambda: store.read_tier(
+            spark, "1h", "2025-01-02", "2025-01-03", conv_id="conv000007"
+        ),
+        "read_blocks_lo": lambda: store.read_blocks(spark, "1h", lo="2025-01-02"),
+        "read_blocks_conv": lambda: store.read_blocks(spark, "1h", conv_id="conv000007"),
+        "read_blocks_range_conv": lambda: store.read_blocks(
+            spark, "1h", "2025-01-02", "2025-01-03", conv_id="conv000007"
+        ),
         "read_checkpoint": lambda: store.read_checkpoint(spark),
     }
     assert {name: _jobs(spark, build)[0] for name, build in builders.items()} == {
         name: 0 for name in builders
     }
+
+
+def test_point_read_returns_tier_columns_only(spark, served, transcripts):
+    """A point read holds the tier's own columns, no partition column."""
+    store, _ = served
+    tier_cols = rollup_from_raw(transcripts, "1h").columns
+    assert read_conv_series(spark, store, "conv000007", "1h").columns == tier_cols
+
+
+def test_block_reads_return_no_partition_columns(spark, served):
+    store, _ = served
+    cols = store.read_blocks(spark, "1h").columns
+    assert not {"block_date", "bucket_id"} & set(cols)
+    assert {"conv_id", "ts_blob", "codec"} <= set(cols)
+    one = store.read_blocks(spark, "1h", "2025-01-02", "2025-01-03", conv_id="conv000007")
+    assert one.columns == cols
+
+
+def test_blocks_range_minmax_bound_types(spark, served, tmp_path):
+    """A range bound may be a date, a datetime or an ISO string; all
+    three give the same answer."""
+    store, _ = served
+    blocks = TranscriptStore(tmp_path / "stats", n_buckets=4)
+    h1 = _series(store.read_tier(spark, "1h"))
+    blocks.write_blocks(
+        compress_series(h1, PARAMS, stats=True, slice_col=F.to_date("ts")), "1h"
+    )
+    lo, hi = dt.date(2025, 1, 2), dt.date(2025, 1, 3)
+    bounds = [
+        (lo, hi),
+        (dt.datetime(2025, 1, 2), dt.datetime(2025, 1, 3)),
+        ("2025-01-02", "2025-01-03 00:00:00"),
+    ]
+    got = [
+        sorted(map(tuple, blocks.blocks_range_minmax(spark, "1h", "n_turns", a, b).collect()))
+        for a, b in bounds
+    ]
+    assert got[0] and got[0] == got[1] == got[2]
+    want = (
+        h1.where((F.col("ts") >= "2025-01-02") & (F.col("ts") <= "2025-01-03"))
+        .groupBy("conv_id")
+        .agg(F.min("n_turns"), F.max("n_turns"), F.count(F.lit(1)))
+    )
+    assert got[0] == sorted(map(tuple, want.collect()))
 
 
 def test_point_read_runs_one_job(spark, served, transcripts):

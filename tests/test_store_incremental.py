@@ -127,7 +127,7 @@ def test_point_read_bucket_pruning(spark, transcripts, tmp_path):
     store.write_tier(rollup_from_raw(transcripts, "1h"), "1h")
     assert 1 <= store.tier_bucket_count("1h") <= 8
 
-    got = store.read_tier_for_conv(spark, "1h", "conv000007")
+    got = store.read_tier(spark, "1h", conv_id="conv000007")
     assert got.select("conv_id").distinct().collect()[0].conv_id == "conv000007"
     # the scan's partition filter includes the literal bucket predicate
     plan = got._jdf.queryExecution().executedPlan().toString()
@@ -249,7 +249,7 @@ def test_merge_tiers_one_shuffle(spark, transcripts_pdf, tmp_path, monkeypatch):
 
     monkeypatch.setattr(DataFrameWriter, "parquet", spy)
     rows = {
-        t: store.read_tier_since(spark, t, "2025-01-01").unionByName(turn_partials(new))
+        t: store.read_tier(spark, t, lo="2025-01-01").unionByName(turn_partials(new))
         for t in tiers
     }
     store.merge_tiers(rows, store.staging_path("p", 1))
@@ -471,7 +471,7 @@ def test_export_subset_roundtrip(spark, transcripts, tmp_path):
     pd.testing.assert_frame_equal(got[exp.columns], exp)
 
     # the exported store supports the same pruned point read
-    one = out.read_tier_for_conv(spark, "1h", "conv000012")
+    one = out.read_tier(spark, "1h", conv_id="conv000012")
     assert one.select("conv_id").distinct().collect()[0].conv_id == "conv000012"
     # provenance sidecar
     ov = out.load_overview()
@@ -926,7 +926,7 @@ def test_block_store_roundtrip_and_pruned_range(spark, transcripts, tmp_path):
     assert sorted(map(tuple, ev.collect())) == sorted(map(tuple, back.collect()))
 
     some_conv = ev.select("conv_id").first()[0]
-    one = store.read_blocks_for_conv(spark, "raw", some_conv)
+    one = store.read_blocks(spark, "raw", conv_id=some_conv)
     # pruning must reach the PHYSICAL plan (input_file_name() over
     # surviving rows would pass even if the scan read every bucket)
     plan = one._jdf.queryExecution().executedPlan().toString()
@@ -957,7 +957,7 @@ def test_block_store_roundtrip_and_pruned_range(spark, transcripts, tmp_path):
     }
     assert got == exp
     # day pruning reaches the PHYSICAL plan (not just the row filter)
-    pruned = store.read_blocks(spark, "raw", day_lo=t0.date(), day_hi=t1.date())
+    pruned = store.read_blocks(spark, "raw", t0, t1)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "block_date" in plan.split(
         "PartitionFilters"
@@ -1196,13 +1196,13 @@ def test_point_read_bloom_prunes_row_groups(spark, tmp_path):
         # absent key that sorts between two present conv ids: min/max
         # row-group stats cannot exclude it, only the bloom can
         ghost = "conv000123x"
-        rows_on = _leaf_scan_rows(on.read_tier_for_conv(spark, "1h", ghost))
-        rows_off = _leaf_scan_rows(off.read_tier_for_conv(spark, "1h", ghost))
+        rows_on = _leaf_scan_rows(on.read_tier(spark, "1h", conv_id=ghost))
+        rows_off = _leaf_scan_rows(off.read_tier(spark, "1h", conv_id=ghost))
         assert rows_on == 0, f"bloom store decoded {rows_on} rows for absent key"
         assert rows_off > 0, "without bloom some row-group must be decoded"
         # present key: same answer either way (bloom is pruning-only)
-        a = sorted(map(tuple, on.read_tier_for_conv(spark, "1h", "conv000123").collect()))
-        b = sorted(map(tuple, off.read_tier_for_conv(spark, "1h", "conv000123").collect()))
+        a = sorted(map(tuple, on.read_tier(spark, "1h", conv_id="conv000123").collect()))
+        b = sorted(map(tuple, off.read_tier(spark, "1h", conv_id="conv000123").collect()))
         assert a == b and len(a) > 0
     finally:
         if prev_block is None:
