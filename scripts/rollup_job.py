@@ -114,8 +114,9 @@ def main() -> None:
         return df.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics), obs
 
     # the newest turn rides the same observation: it becomes the store's
-    # last_day, so a later `store_tool extend` quarantines any overlap
-    raw, raw_obs = observed(raw, "turns", F.max("ts").alias("last_ts"))
+    # last_day, so a later `store_tool extend` quarantines any overlap;
+    # as a string, it is the session zone's wall time, like the store's
+    raw, raw_obs = observed(raw, "turns", F.max("ts").cast("string").alias("last_ts"))
     tier_obs = {}
 
     phases = {}
@@ -134,7 +135,7 @@ def main() -> None:
     phases["1d"] = round(time.time() - t2, 3)
     if raw_obs.get["last_ts"] is not None:
         ov = store.load_overview()
-        ov.last_day = str(raw_obs.get["last_ts"])
+        ov.last_day = raw_obs.get["last_ts"]
         store.save_overview(ov)
 
     if args.blocks:

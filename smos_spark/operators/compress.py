@@ -288,8 +288,9 @@ def range_minmax(
     greatest)."""
     from pyspark.sql import functions as F
 
-    t0 = F.lit(ts_from).cast("timestamp")
-    t1 = F.lit(ts_to).cast("timestamp")
+    from smos_spark.sources.store import _ts_lit
+
+    t0, t1 = _ts_lit(ts_from), _ts_lit(ts_to)
     overlapping = comp.where(
         (F.col("last_ts") >= t0) & (F.col("first_ts") <= t1)
     )

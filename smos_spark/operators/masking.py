@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from smos_spark.sources.store import _ts_lit
+
 DEFAULT_READ_ROLES = ("user", "assistant", "tool")
 MASKABLE_COLS = ("text", "tool")
 
@@ -76,11 +78,12 @@ def masked_read(
 
 def filter_ts_range(df: DataFrame, start=None, end=None) -> DataFrame:
     """S2/P6 time predicate — prunes partitions on a days(ts)-
-    partitioned table (the yearly-subdir/file-template analog)."""
+    partitioned table (the yearly-subdir/file-template analog). The
+    bounds are read in the session time zone."""
     if start is not None:
-        df = df.where(F.col("ts") >= F.lit(start).cast("timestamp"))
+        df = df.where(F.col("ts") >= _ts_lit(start))
     if end is not None:
-        df = df.where(F.col("ts") <= F.lit(end).cast("timestamp"))
+        df = df.where(F.col("ts") <= _ts_lit(end))
     return df
 
 

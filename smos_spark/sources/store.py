@@ -62,12 +62,20 @@ first, so rows appended to a table the same commit replaces are kept),
 deletes the directories listed as `drop` (stale or expired day
 partitions), removes the staging directory and clears `pending`.
 
+An ingest batch stages its raw turns and its late rows with one
+`append_transcripts` write, the late rows under its `NULL_DAY`
+directory, which the batch renames to `append/_quarantine/` before it
+commits. Lineage rows are written by `append_checkpoint` on the driver
+with pyarrow, so staging them runs no Spark job.
+
 The committers are `ingest_batch` (staged at `<run_id>-<batch_id>`)
 and the maintenance commits `merge_quarantine`, `apply_retention`,
 `compact_checkpoint` and `compact_transcripts` (staged at `<run_id>`).
 Only an ingest batch sets `last_batch_id`, and it and
 `scripts/rollup_job.py` (after its tier writes) are the only writers of
-`last_day`; a maintenance commit leaves the batch counter alone, so it
+`last_day`, the newest turn's ts as wall time in the session time zone
+(observed by Spark, so the Python process's zone never enters); a
+maintenance commit leaves the batch counter alone, so it
 never takes the id of a stream's next epoch. Each committer calls
 `roll_forward` first under the writer lock (`writer`): it finishes a
 pending publish (each step is skipped once done, so a crash at any
@@ -92,7 +100,7 @@ from dataclasses import dataclass
 from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -115,6 +123,9 @@ CHECKPOINT_SCHEMA = (
     "committed_seq long"
 )
 
+#: where a `ts_date`-partitioned write puts the rows whose day is NULL
+NULL_DAY = "ts_date=__HIVE_DEFAULT_PARTITION__"
+
 
 def bucket_expr(col="conv_id", n_buckets: int = DEFAULT_N_BUCKETS):
     """Deterministic key→bucket assignment (J4, the lonlat2cell analog).
@@ -136,9 +147,10 @@ def _instant(t) -> dt.datetime | None:
     return t
 
 
-def _ts_lit(t: dt.datetime):
-    """`t` as a timestamp literal read in the session time zone (a
-    naive datetime given to F.lit is read in the Python process's)."""
+def _ts_lit(t):
+    """`t` (a datetime, a date or an ISO string) as a timestamp literal
+    read in the session time zone: its string form is cast, since a
+    naive datetime given to F.lit is read in the Python process's zone."""
     return F.lit(str(t)).cast("timestamp")
 
 
@@ -146,7 +158,7 @@ def _ts_lit(t: dt.datetime):
 class Overview:
     """State sidecar (overview.yml analog, misc.py:82-90)."""
 
-    last_day: str | None = None  # max ts seen, ISO string
+    last_day: str | None = None  # max ts seen, ISO string in the session zone
     last_batch_id: int = -1
     parameters: dict | None = None
     extra: dict = None  # free-form state (e.g. retention_floor per tier)
@@ -273,10 +285,15 @@ class TranscriptStore:
         self.save_overview(self.load_overview(), {self._table_key(path): written.schema})
 
     # --- raw table ---
-    def append_transcripts(self, df: DataFrame, path: str | None = None) -> None:
-        """Append raw turns to the table, or to `path` (a staged append)."""
+    def append_transcripts(
+        self, df: DataFrame, path: str | None = None, day: Column | None = None
+    ) -> None:
+        """Append raw turns to the table, or to `path` (a staged append),
+        one file per `ts_date` day. `day` replaces the day column
+        (default `to_date(ts)`): rows whose `day` is NULL are written to
+        the `NULL_DAY` directory of `path`."""
         (
-            df.withColumn("ts_date", F.to_date("ts"))
+            df.withColumn("ts_date", F.to_date("ts") if day is None else day)
             .repartition("ts_date")  # one writer wave per day partition
             .write.partitionBy("ts_date")
             .mode("append")
@@ -697,11 +714,16 @@ class TranscriptStore:
                 os.replace(f, dst)
         for rel in p["drop"]:
             shutil.rmtree(self.root / rel, ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
-        with contextlib.suppress(OSError):  # leave no empty _staging/
-            self.staging_root.rmdir()
+        self.discard_staged(staging)
         ov.pending = None
         self.save_overview(ov)
+
+    def discard_staged(self, staging: Path) -> None:
+        """Remove a commit's staging directory, and `_staging/` with it
+        once empty."""
+        shutil.rmtree(staging, ignore_errors=True)
+        with contextlib.suppress(OSError):
+            self.staging_root.rmdir()
 
     def day_drops(
         self, dirs: list[Path], run_id: str, batch_id: int
@@ -731,26 +753,32 @@ class TranscriptStore:
         self, spark: SparkSession, rows: list[dict], path: str | None = None
     ) -> None:
         """Append lineage rows to `_checkpoint`, or to `path` (a staged
-        append)."""
+        append), as one parquet file written on the driver: no Spark
+        job. `min_ts`/`max_ts` are ISO strings in the session time zone,
+        or None."""
         if not rows:
             return
-        spark.createDataFrame(
-            [
-                (
-                    r["run_id"],
-                    r["batch_id"],
-                    r["tier"],
-                    r["partition_key"],
-                    r["rows_in"],
-                    r["rows_out"],
-                    r["min_ts"],
-                    r["max_ts"],
-                    r["committed_seq"],
-                )
-                for r in rows
-            ],
-            CHECKPOINT_SCHEMA,
-        ).coalesce(1).write.mode("append").parquet(path or self.checkpoint_path)
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(T.StructType.fromDDL(CHECKPOINT_SCHEMA))
+        tz = spark.conf.get("spark.sql.session.timeZone")
+        cols = []
+        for f in schema:
+            if pa.types.is_timestamp(f.type):  # session-zone wall time → instant
+                wall = pa.array([r[f.name] for r in rows], pa.string()).cast(pa.timestamp("us"))
+                at = pc.assume_timezone(wall, tz, ambiguous="earliest", nonexistent="earliest")
+                cols.append(at.cast(f.type))
+            else:
+                cols.append(pa.array([r[f.name] for r in rows], f.type))
+        out = Path(path or self.checkpoint_path)
+        out.mkdir(parents=True, exist_ok=True)
+        table = pa.Table.from_arrays(cols, schema=schema)
+        pq.write_table(table, out / f"part-{uuid.uuid4()}.parquet")
 
     def read_checkpoint(self, spark: SparkSession) -> DataFrame | None:
         if not Path(self.checkpoint_path).exists():
@@ -758,7 +786,7 @@ class TranscriptStore:
         return spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.checkpoint_path)
 
     def compact_checkpoint(self, spark: SparkSession, max_files: int = 16) -> int:
-        """Compact the lineage table's per-batch coalesce(1) appends.
+        """Compact the lineage table's per-batch single-file appends.
         At minutes-cadence streaming the one-tiny-file-per-batch
         appends pile up; once the directory exceeds `max_files`
         parquet files, rewrite it as one file and publish it by a

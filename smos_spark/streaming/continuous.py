@@ -18,7 +18,7 @@ reshuffle.py:96-155). On Spark this becomes two complementary shapes:
    producing 1m-tier partials continuously; late rows beyond the
    watermark are dropped by Spark (the reference's hard prepend
    refusal, smos_l2/reshuffle.py:75-77 — our quarantine variant lives
-   in the batch path's split_late_rows).
+   in the batch path's ingest_batch).
 
 Both keep all aggregation JVM-side (same _partial_aggs expressions as
 the batch tier build — one code path for the math).

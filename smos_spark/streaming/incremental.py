@@ -7,20 +7,30 @@ Reference semantics (/root/reference/src/smos/smos_l2/reshuffle.py:96-155):
   * the state file is written only after a successful repurpose
     (:147-152) — commit follows data
 
+One raw write per batch. The batch is read once, by a
+`partitionBy("ts_date")` write into the staging directory: `ts_date` is
+the row's day when it is on time (ts after `last_day`) and NULL when it
+is late or has no ts, so the late rows land in the write's NULL_DAY
+directory, which is renamed to the batch's quarantine. The same write
+carries an `Observation` of the row counts and the on-time bounds
+(session-zone strings), so no other job reads the batch.
+
 Merge strategy on parquet, which has no MERGE: each raw turn becomes a
 one-turn partial (`rollup.turn_partials`), and every tier is merged
 straight from those, not cascaded 1m→1h→1d. `TranscriptStore.merge_tiers`
 re-aggregates, for all three tiers at once, (each tier's rows from the
 batch's first day on ∪ the turn partials) in one shuffle and one write
 job, and stages only the touched (bucket_date, bucket_id) partitions.
-Because the partials are exact, the result equals a rollup of all raw
-turns.
+The turns are read back from the staged on-time files, with the batch's
+schema, so the batch itself is neither re-read nor cached. Because the
+partials are exact, the result equals a rollup of all raw turns.
 
 Commit protocol (see `sources/store.py`). A batch stages all of its
 writes under `_staging/<run_id>-<batch_id>/`: the raw turns, the late
-rows, the merged tier partitions and its lineage rows. Only then is the
-overview saved with the batch's `last_batch_id`/`last_day` and a
-`pending` publish, and that atomic overview rename is the commit point.
+rows, the merged tier partitions and its lineage rows (written on the
+driver, no Spark job). Only then is the overview saved with the
+batch's `last_batch_id`/`last_day` and a `pending` publish, and that
+atomic overview rename is the commit point.
 Publishing swaps the staged partition directories into `tiers/<tier>/`,
 moves the staged files into `transcripts/`, `_quarantine/` and
 `_checkpoint/` and drops stale block days, all by local-filesystem
@@ -28,9 +38,11 @@ renames; last, the overview clears `pending`. Nothing the live store
 holds changes before the commit point, so a batch is applied exactly
 once whatever fails:
 
-  * a failure before the commit point (a bounds job, the staged tier
-    job, the lineage write) leaves a staging directory without a
-    `pending` record; the retry discards it and redoes the batch;
+  * a failure before the commit point (the staged raw write, the
+    staged tier job, the lineage write) leaves a staging directory
+    without a `pending` record; the retry discards it and redoes the
+    batch. A `strict` batch with late rows raises there too, after
+    deleting its own staging directory;
   * a failure after it (mid-publish, or before the final overview
     save) is rolled forward by the next writer: a retry of the same
     (run_id, batch_id) finishes the publish and is then skipped by the
@@ -51,26 +63,12 @@ from pyspark.sql import functions as F
 
 from smos_spark.operators.rollup import turn_partials
 from smos_spark.schema import TIERS
-from smos_spark.sources.store import TranscriptStore
+from smos_spark.sources.store import NULL_DAY, TranscriptStore
 
 
 class MonotonicAppendError(ValueError):
     """New batch starts at or before the store's last_day — the
     reference's prepend guard (smos_l2/reshuffle.py:75-77)."""
-
-
-def split_late_rows(batch: DataFrame, last_day: str | None):
-    """Route rows at/before the checkpoint — and rows with NULL ts,
-    which a time-series store cannot place — to quarantine (late-data
-    policy, SURVEY.md §2.8). Returns (on_time, late)."""
-    null_ts = F.col("ts").isNull()
-    if last_day is None:
-        return batch.where(~null_ts), batch.where(null_ts)
-    cut = F.lit(last_day).cast("timestamp")
-    return (
-        batch.where(F.col("ts") > cut),  # null ts fails the predicate
-        batch.where(null_ts | (F.col("ts") <= cut)),
-    )
 
 
 def ingest_batch(
@@ -98,54 +96,69 @@ def _ingest_batch_locked(
     batch_id: int,
     strict: bool,
 ) -> dict:
+    import datetime as _dt
+    import os
+    from pathlib import Path
+
+    from pyspark.sql import Observation
+    from pyspark.sql import types as T
+
     spark = batch.sparkSession
     ov = store.load_overview()
     if batch_id <= ov.last_batch_id:
         return {"skipped": True, "batch_id": batch_id}
 
-    # --- monotonic guard / late/invalid-data routing ---
-    # ONE bounds job computes raw counts AND the on-time-only
-    # (non-null ts > last_day) variants as conditional aggregates, so
-    # the late path needs no second scan. NULL-ts rows count as
-    # not-on-time: a time-series store cannot place them, so they go
-    # to quarantine rather than silently vanishing.
-    if ov.last_day is not None:
-        on_time = F.when(
-            F.col("ts") > F.lit(ov.last_day).cast("timestamp"), F.col("ts")
-        )
+    # --- one raw write: on-time rows by day, late rows by partition ---
+    # A row is on time when its ts is after last_day; NULL-ts rows are
+    # not (a time-series store cannot place them). The others get a
+    # NULL day, so the same write puts them in the NULL_DAY directory,
+    # which becomes the batch's quarantine. The write observes the
+    # bounds, as session-zone strings, so the batch is read once.
+    ts = F.col("ts")
+    if ov.last_day is None:
+        on_time = ts.isNotNull()
     else:
-        on_time = F.col("ts")  # count() skips NULLs
-    bounds = batch.agg(
-        F.min("ts").alias("raw_lo"),
-        F.count(F.lit(1)).alias("n_raw"),
-        F.min(on_time).alias("lo"),
-        F.max(on_time).alias("hi"),
-        F.count(on_time).alias("n"),
-    ).collect()[0]
-    lo, hi, n_in = bounds.lo, bounds.hi, bounds.n
+        on_time = ts > F.lit(ov.last_day).cast("timestamp")
+    ts_on_time = F.when(on_time, ts)
+    # unnamed (a fresh name each time): Spark keys an observation by its
+    # name and the observed DataFrame, so a retry observing the same
+    # batch under the failed attempt's name would wait forever
+    bounds = Observation()
     staging = store.staging_path(run_id, batch_id)
-    if bounds.n_raw != n_in:  # some rows are late and/or NULL-ts
+    raw = staging / "append" / "transcripts"
+    store.append_transcripts(
+        batch.observe(
+            bounds,
+            F.count(F.lit(1)).alias("n_raw"),
+            F.count(ts_on_time).alias("n"),
+            F.min(ts_on_time).cast("string").alias("lo"),
+            F.max(ts_on_time).cast("string").alias("hi"),
+            F.min(ts).cast("string").alias("raw_lo"),
+        ),
+        str(raw),
+        day=F.to_date(ts_on_time),
+    )
+    # an empty batch writes no file, and Spark may then observe nothing
+    b = bounds.get if any(raw.glob("*/*.parquet")) else {"n_raw": 0, "n": 0}
+    n_in = b["n"]
+    if b["n_raw"] != n_in:  # some rows are late and/or NULL-ts
         if strict:
+            store.discard_staged(staging)
             raise MonotonicAppendError(
-                f"batch has {bounds.n_raw - n_in} late/NULL-ts rows "
-                f"(starts at {bounds.raw_lo}, store last_day {ov.last_day})"
+                f"batch has {b['n_raw'] - n_in} late/NULL-ts rows "
+                f"(starts at {b['raw_lo']}, store last_day {ov.last_day})"
             )
-        batch, late = split_late_rows(batch, ov.last_day)
-        late.write.parquet(str(staging / "append" / "_quarantine"))
+        os.replace(raw / NULL_DAY, staging / "append" / "_quarantine")
     ov.last_batch_id = batch_id
     if n_in == 0:
         store.commit_staged(ov, staging)
         return {"skipped": False, "batch_id": batch_id, "rows_in": 0}
 
-    import datetime as _dt
-    from pathlib import Path
-
-    from pyspark.sql import Observation
-
+    lo, hi = b["lo"], b["hi"]
     # every bucket the batch touches starts on/after lo's calendar day
     # (bucket_start = date_trunc(unit, ts ≥ lo)), so the day-aligned
     # rewrite boundary is known WITHOUT a per-tier min() job
-    batch_day = str(lo)[:10]
+    batch_day = lo[:10]
     # the batch's calendar-day span, enumerated driver-side (no job):
     # any derived compressed blocks for these days encode PRE-append
     # tier values and must be dropped (same tier/blocks consistency
@@ -153,40 +166,38 @@ def _ingest_batch_locked(
     # day in the span loses no tier data: the day is absent from the
     # block readers until `store_tool blocks` rebuilds the blocks.
     d0 = _dt.date.fromisoformat(batch_day)
-    d1 = _dt.date.fromisoformat(str(hi)[:10])
+    d1 = _dt.date.fromisoformat(hi[:10])
     batch_days = [
         str(d0 + _dt.timedelta(days=i)) for i in range((d1 - d0).days + 1)
     ]
+
+    # --- tier maintenance: merge the staged turns straight into each tier ---
+    # read back with the batch's schema (no inference job): the batch
+    # itself is not read again
+    staged = spark.read.schema(
+        T.StructType([*batch.schema.fields, T.StructField("ts_date", T.DateType())])
+    ).parquet(str(raw))
+    turns = turn_partials(staged.drop("ts_date"))
+    # only date partitions the batch touches need rewriting; the
+    # boundary is day-aligned because the physical layout partitions
+    # on bucket_date — everything before it is final and is neither
+    # read (partition pruning) nor written.
+    rows_by_tier = {
+        tier: store.read_tier(spark, tier, lo=batch_day).unionByName(turns)
+        if Path(store.tier_path(tier)).exists()
+        else turns
+        for tier in TIERS
+    }
     # rows_out_<tier> via observed metrics on the tier write itself — no
     # post-write count job, no full-table scan
     obs = Observation(f"tiers_b{batch_id}")
-    batch = batch.cache()
-    try:
-        store.append_transcripts(batch, str(staging / "append" / "transcripts"))
-        # --- tier maintenance: merge the turns straight into each tier ---
-        turns = turn_partials(batch)
-        # only date partitions the batch touches need rewriting; the
-        # boundary is day-aligned because the physical layout partitions
-        # on bucket_date — everything before it is final and is neither
-        # read (partition pruning) nor written.
-        rows_by_tier = {
-            tier: store.read_tier(spark, tier, lo=batch_day).unionByName(turns)
-            if Path(store.tier_path(tier)).exists()
-            else turns
-            for tier in TIERS
-        }
-        store.merge_tiers(rows_by_tier, staging, obs)
-    finally:
-        # also on failure: a cached batch left behind would outlive the
-        # retries in the same Spark session (foreachBatch re-runs stack
-        # more copies)
-        batch.unpersist()
+    store.merge_tiers(rows_by_tier, staging, obs)
 
     # --- commit: stage the lineage rows, then record and publish ---
     drop, stats = _stale_blocks(store, batch_days, run_id, batch_id)
     stats += _tier_lineage(run_id, batch_id, n_in, obs.get, lo, hi, "all")
     store.append_checkpoint(spark, stats, str(staging / "append" / "_checkpoint"))
-    ov.last_day = str(hi)
+    ov.last_day = hi
     store.commit_staged(ov, staging, drop)
     return {"skipped": False, "batch_id": batch_id, "rows_in": n_in}
 
@@ -313,8 +324,8 @@ def merge_quarantine(
             b = late.agg(
                 F.count(F.lit(1)).alias("n_all"),
                 F.count("ts").alias("n_late"),
-                F.min("ts").alias("lo"),
-                F.max("ts").alias("hi"),
+                F.min("ts").cast("string").alias("lo"),
+                F.max("ts").cast("string").alias("hi"),
             ).collect()[0]
             n_null, n_late = b.n_all - b.n_late, b.n_late
             staging = store.staging_path(run_id)

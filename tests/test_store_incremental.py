@@ -109,9 +109,14 @@ def test_monotonic_guard_and_quarantine(spark, small, days, tmp_path):
     store = TranscriptStore(tmp_path / "guard", n_buckets=8)
     batches = day_batches(small, days)
     ingest_batch(store, batches[1], run_id="r1", batch_id=0)
+    overview = store.overview_path.read_text()
     # strict: prepending day 0 after day 1 raises (reference guard)
     with pytest.raises(MonotonicAppendError):
         ingest_batch(store, batches[0], run_id="r1", batch_id=1, strict=True)
+    # ... before its commit point, and it leaves nothing behind
+    assert not store.staging_root.exists()
+    assert not (store.root / "_quarantine").exists()
+    assert store.overview_path.read_text() == overview
     # lenient: late rows quarantined, tiers unchanged
     before = tier_pdf(spark, store, "1d")
     r = ingest_batch(store, batches[0], run_id="r1", batch_id=1, strict=False)
@@ -183,11 +188,11 @@ def test_int_restoration(spark):
 
 
 def test_ingest_batch_driver_job_budget(spark, transcripts, tmp_path):
-    """Per-batch driver-side Spark jobs are bounded: one combined
-    bounds/count aggregation, the data writes, and the lineage append
-    — metrics ride the write jobs as observed metrics, never extra
-    count() scans (at minutes-cadence streaming those metric jobs
-    would dominate)."""
+    """Per-batch driver-side Spark jobs are bounded: the batch's one raw
+    write and the one tier write. The bounds and counts ride the writes
+    as observed metrics, never extra count() or collect() scans (at
+    minutes-cadence streaming those metric jobs would dominate), and
+    the lineage rows are written on the driver."""
     from smos_spark.streaming.incremental import ingest_batch
 
     store = TranscriptStore(tmp_path / "budget", n_buckets=4)
@@ -209,15 +214,42 @@ def test_ingest_batch_driver_job_budget(spark, transcripts, tmp_path):
     sc.setJobGroup("other", "")
     n1 = len(tracker.getJobIdsForGroup("ingest_b1"))
 
-    # the bounds aggregation (3 jobs under AQE on this input), the
-    # staged raw append (2: AQE materializes a write's shuffle stage as
-    # its own job), ONE staged write for all three tiers (2) and the
-    # staged lineage rows (1); publishing is renames, and no checkpoint
-    # probe runs. Measured: 8 (create) / 8 (merge). A job per tier, a
-    # second shuffle in the tier job, or a per-tier min()+count()
-    # metric scan breaks it.
-    assert n0 <= 8, f"first batch ran {n0} jobs"
-    assert n1 <= 8, f"merge batch ran {n1} jobs"
+    # the staged raw write, which also routes the late rows (3 on this
+    # input: AQE runs each exchange below the write, the day exchange
+    # included, as a job of its own, then the write), and ONE staged
+    # write for all three tiers (2: its exchange, then the write). No
+    # bounds job, no quarantine write, no lineage job; publishing is
+    # renames. Measured: 5 (create) / 5 (merge). A job per tier, a
+    # second read of the batch, or a per-tier min()+count() metric scan
+    # breaks it.
+    assert n0 <= 5, f"first batch ran {n0} jobs"
+    assert n1 <= 5, f"merge batch ran {n1} jobs"
+
+
+def test_ingest_reads_batch_once(spark, small, days, tmp_path):
+    """The batch is read by the raw write alone: the bounds ride it as
+    observed metrics, late rows leave it by partition, and the tier
+    merge reads the staged files back."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            acc.add(len(pdf))
+            yield pdf
+
+    store = TranscriptStore(tmp_path / "once", n_buckets=4)
+    first = small.where(F.to_date("ts") == days[0])
+    ingest_batch(store, first, run_id="r1", batch_id=0)
+    # day 1 plus copies of some day-0 turns, which are late
+    late = first.where(F.col("turn_idx") % 5 == 0).withColumn(
+        "turn_idx", F.col("turn_idx") + 10_000
+    )
+    second = small.where(F.to_date("ts") == days[1]).unionByName(late)
+    n = second.count()
+    wrapped = second.mapInPandas(count_rows, second.schema)
+    r = ingest_batch(store, wrapped, run_id="r1", batch_id=1)
+    assert r["rows_in"] == n - late.count() > 0
+    assert acc.value == n
 
 
 def test_merge_tiers_one_shuffle(spark, transcripts_pdf, tmp_path, monkeypatch):
@@ -287,7 +319,7 @@ class _Crash(RuntimeError):
 
 
 @pytest.mark.parametrize(
-    "point", ["tier_job", "publish_after_1", "publish_after_9", "before_commit"]
+    "point", ["raw_job", "tier_job", "publish_after_1", "publish_after_9", "before_commit"]
 )
 def test_ingest_crash_retry_applies_batch_once(spark, small, days, tmp_path, monkeypatch, point):
     """A batch that fails at any point and is retried with the same
@@ -312,13 +344,18 @@ def test_ingest_crash_retry_applies_batch_once(spark, small, days, tmp_path, mon
     second = small.where(F.to_date("ts") == days[1]).unionByName(late)
 
     fired = []
-    if point == "tier_job":
-        # the write of the 1h tier (or of the job staging all tiers)
+    if point in ("raw_job", "tier_job"):
+        # the staged raw write, or the write of the 1h tier (or of the
+        # job staging all tiers)
         write = DataFrameWriter.parquet
 
         def crash(self, path, *args, **kwargs):
             parts = os.path.normpath(path).split(os.sep)
-            if not fired and "tiers" in parts and parts[-1] != "1m":
+            if point == "raw_job":
+                hit = parts[-1] == "transcripts"
+            else:
+                hit = "tiers" in parts and parts[-1] != "1m"
+            if not fired and hit:
                 fired.append(path)
                 raise _Crash(point)
             return write(self, path, *args, **kwargs)
@@ -356,7 +393,7 @@ def test_ingest_crash_retry_applies_batch_once(spark, small, days, tmp_path, mon
     r = ingest_batch(store, second, run_id="r1", batch_id=1)
     # a failure before the commit point redoes the batch; one after it
     # is rolled forward, and the batch is then already done
-    assert r["skipped"] == (point != "tier_job")
+    assert r["skipped"] == (point not in ("raw_job", "tier_job"))
 
     on_time = small.where(F.to_date("ts").isin(days[:2]))
     for tier in ("1m", "1h", "1d"):
@@ -496,6 +533,81 @@ def test_ingest_null_ts_rows_quarantined(spark, transcripts, tmp_path):
     store2 = TranscriptStore(tmp_path / "nullts2", n_buckets=4)
     with pytest.raises(MonotonicAppendError):
         ingest_batch(store2, batch, run_id="nt", batch_id=0, strict=True)
+
+
+def test_timestamp_bounds_use_session_time_zone(spark, transcripts, tmp_path, monkeypatch):
+    """Bounds are read and recorded in the session time zone (UTC), not
+    the Python process's: ingest's and rollup_job's `last_day`, the late
+    cut that follows it, `filter_ts_range` and `range_minmax`."""
+    import datetime as dt
+    import importlib.util
+    import os
+    import sys
+    import time
+    from pathlib import Path
+
+    from smos_spark.operators.compress import compress_series, range_minmax
+    from smos_spark.operators.masking import filter_ts_range
+
+    def turn(idx, ts):
+        return transcripts.limit(1).withColumns(
+            {"turn_idx": F.lit(idx), "ts": F.lit(ts).cast("timestamp")}
+        )
+
+    spec = importlib.util.spec_from_file_location(
+        "rollup_job", Path(__file__).resolve().parents[1] / "scripts" / "rollup_job.py"
+    )
+    rollup_job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(rollup_job)
+    raw = str(tmp_path / "turn")
+    turn(0, "2025-01-02 10:00:00").write.parquet(raw)
+    series = spark.range(8, 13).select(
+        F.lit("c").alias("conv_id"),
+        F.make_timestamp(F.lit(2025), F.lit(1), F.lit(2), "id", F.lit(0), F.lit(0)).alias("ts"),
+        F.col("id").cast("double").alias("value"),
+    )
+    comp = compress_series(series, ["value"], stats=True)
+
+    tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        store = TranscriptStore(tmp_path / "tz", n_buckets=4)
+        ingest_batch(store, turn(0, "2025-01-02 10:00:00"), run_id="tz", batch_id=0)
+        assert store.load_overview().last_day == "2025-01-02 10:00:00"
+        r = ingest_batch(store, turn(1, "2025-01-02 07:00:00"), run_id="tz", batch_id=1)
+        assert r["rows_in"] == 0  # 07:00 UTC is late
+
+        monkeypatch.setattr(sys, "argv", [
+            "rollup_job.py", "--master", spark.sparkContext.master, "--shuffle-partitions",
+            spark.conf.get("spark.sql.shuffle.partitions"), "--n-buckets", "4",
+            "--input", raw, "--output", str(tmp_path / "job"),
+        ])
+        rollup_job.main()
+        assert TranscriptStore(tmp_path / "job").load_overview().last_day == "2025-01-02 10:00:00"
+
+        t0, t1 = dt.datetime(2025, 1, 2, 9), dt.datetime(2025, 1, 2, 11)
+        assert filter_ts_range(series, t0, t1).count() == 3
+        assert [tuple(r) for r in range_minmax(comp, "value", t0, t1).collect()] == [
+            ("c", 9.0, 11.0, 3)
+        ]
+    finally:
+        if tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = tz
+        time.tzset()
+
+
+def test_ingest_empty_batch(spark, transcripts, tmp_path):
+    """An empty batch, even one of no partitions, commits with no rows
+    and leaves last_day where it was."""
+    store = TranscriptStore(tmp_path / "empty", n_buckets=4)
+    r = ingest_batch(store, spark.createDataFrame([], transcripts.schema), run_id="e", batch_id=0)
+    assert r == {"skipped": False, "batch_id": 0, "rows_in": 0}
+    ov = store.load_overview()
+    assert ov.last_batch_id == 0 and ov.last_day is None
+    assert not store.staging_root.exists()
 
 
 def test_reopen_with_conflicting_bucket_count_raises(spark, transcripts, tmp_path):
