@@ -32,6 +32,19 @@ vanilla Spark lacks as built-ins:
   the within-series twin of the tier rollup's bucketed aggregates.
   One shuffle on the key; the frame arithmetic is integer-exact so
   results are bit-stable across partitionings and engines.
+
+Hot keys: both operators partition their one ordered window on the
+key, so a pathologically hot key is a single sort task. Each
+``*_bucketed`` twin runs the same body over a halo (`_halo`): every
+row goes to its own width-w time bucket ``_bkt`` and, when its ts is
+not NULL, a ghost copy goes to ``_bkt + 1``. A trailing frame of
+width w spans at most two width-w buckets, so a window partitioned on
+(key, ``_bkt``) sees every row the frame needs, and ghosts are dropped
+after it. Partitions hold at most 2x the rows of one bucket for ANY
+key, at the cost of 2x the shuffled rows (right rows only, for the
+join). A NULL ts gets no ghost: its frame is its key's NULL-ts rows,
+all in one (key, NULL) partition. Buckets are at least 1 µs wide, so
+a zero window or tolerance is valid on both paths.
 """
 
 from __future__ import annotations
@@ -65,10 +78,13 @@ def asof_join(
 
     ``order_col`` (default: first of ``right_cols``) breaks ts ties
     among right rows — greatest value wins — so the result is
-    deterministic even on tied input timestamps.
+    deterministic even on tied input timestamps. A negative
+    ``tolerance_sec`` is a ValueError.
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
+    if tolerance_sec is not None and tolerance_sec < 0:
+        raise ValueError(f"tolerance_sec must be >= 0, got {tolerance_sec}")
     keys = [on] if isinstance(on, str) else list(on)
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in (*keys, ts_col)]
@@ -138,6 +154,22 @@ def asof_join(
     return out
 
 
+def _bucket(us: Column, width_us: int) -> Column:
+    """Width-µs time bucket of epoch micros, at least 1 µs wide (the
+    double division is exact for |us| < 2^53, so floor never rounds
+    across a bucket edge)."""
+    return F.floor(us / F.lit(max(width_us, 1)))
+
+
+def _halo(frame: DataFrame, us: Column, width_us: int) -> DataFrame:
+    """`frame` with each row in its own bucket ``_bkt`` (``_ghost`` 0)
+    plus, when ``us`` is not NULL, a ghost copy in ``_bkt + 1``
+    (``_ghost`` 1). One scan: the copies are generated, not unioned."""
+    bkt = _bucket(us, width_us)
+    copies = F.when(us.isNull(), F.array(bkt)).otherwise(F.array(bkt, bkt + 1))
+    return frame.select("*", F.posexplode(copies).alias("_ghost", "_bkt"))
+
+
 def _q_name(prefix: str, q: float) -> str:
     """roll_p50 / roll_p90 / roll_p99_9 — deterministic quantile names."""
     return f"{prefix}p" + f"{q * 100:g}".replace(".", "_")
@@ -165,8 +197,10 @@ def rolling_stats(
     interpolation percentiles over the centi-unit longs (a function of
     the frame multiset, so order-independent; bit-identical to
     DuckDB's ``quantile_cont`` on the same ints — verified in the
-    contract suite).
+    contract suite). A negative ``window_sec`` is a ValueError.
     """
+    if window_sec < 0:
+        raise ValueError(f"window_sec must be >= 0, got {window_sec}")
     keys = [on] if isinstance(on, str) else list(on)
     v = F.col(value_col) if isinstance(value_col, str) else value_col
     cents = F.round(v * 100).cast("long")
@@ -201,55 +235,19 @@ def rolling_stats_bucketed(
     """`rolling_stats` with BOUNDED window partitions — the hot-key
     path. The plain implementation partitions by key alone, so one
     pathologically hot key (a 10^9-turn conversation) is a single
-    sort+scan task. This variant exploits that a trailing RANGE frame
-    of width w spans at most TWO width-w time buckets: every row is
-    sent to its own bucket plus (as a ghost copy) the next one, the
-    window runs inside (key, bucket) — partition size is bounded by
-    2× the rows per window width, for ANY key — and ghost rows are
-    dropped from the output. Results are identical to
-    `rolling_stats` (asserted in tests); cost is 2× the shuffled rows
-    in exchange for straggler-free scaling.
+    sort+scan task. This twin runs `rolling_stats` itself over the
+    halo (module docstring) with (key, ``_bkt``) as its key, then drops
+    the ghosts. Results are identical to `rolling_stats` (asserted in
+    tests); cost is 2× the shuffled rows in exchange for
+    straggler-free scaling.
     """
     keys = [on] if isinstance(on, str) else list(on)
-    v = F.col(value_col) if isinstance(value_col, str) else value_col
-    cents = F.round(v * 100).cast("long")
-    win_us = int(round(window_sec * 1_000_000))
-
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    bkt = F.floor(us / F.lit(win_us))  # floor div is exact on int64 here
-    base = df.select(
-        *df.columns,
-        us.alias("_us"),
-        cents.alias("_cents"),
-        v.alias("_v"),
+    haloed = _halo(df, us, int(round(window_sec * 1_000_000)))
+    out = rolling_stats(
+        haloed, window_sec, value_col, [*keys, "_bkt"], ts_col, prefix, quantiles
     )
-    real = base.select("*", bkt.alias("_bkt"), F.lit(False).alias("_ghost"))
-    ghost = base.select("*", (bkt + 1).alias("_bkt"), F.lit(True).alias("_ghost"))
-    unioned = real.unionByName(ghost)
-
-    w = (
-        Window.partitionBy(*keys, "_bkt")
-        .orderBy("_us")
-        .rangeBetween(-win_us, 0)
-    )
-    out = (
-        unioned.select(
-            "*",
-            F.count(F.lit(1)).over(w).alias(f"{prefix}cnt"),
-            F.sum("_cents").over(w).alias(f"{prefix}sum_cents"),
-            F.min("_v").over(w).alias(f"{prefix}min"),
-            F.max("_v").over(w).alias(f"{prefix}max"),
-            *[
-                F.percentile(F.col("_cents"), F.lit(q))
-                .over(w)
-                .alias(_q_name(prefix, q))
-                for q in quantiles
-            ],
-        )
-        .where(~F.col("_ghost"))
-        .drop("_us", "_cents", "_v", "_bkt", "_ghost")
-    )
-    return out
+    return out.where(F.col("_ghost") == 0).drop("_ghost", "_bkt")
 
 
 def asof_join_bucketed(
@@ -266,63 +264,24 @@ def asof_join_bucketed(
     hot-key path, available whenever a staleness bound (`tolerance`)
     exists. A backward match within tolerance w lies in
     [left.ts - w, left.ts], which spans at most two width-w time
-    buckets — so right rows are sent to their own bucket plus a ghost
-    copy in the next, left rows to their own bucket only, and the
-    ordered last-payload window runs inside (key, bucket): partition
-    size is bounded for ANY key. Results are identical to
+    buckets — so this twin runs `asof_join` itself with (key, ``_bkt``)
+    as its key, left rows in their own bucket and right rows haloed
+    (module docstring). Results are identical to
     `asof_join(..., tolerance_sec=w)` (asserted in tests); exact
     matches are allowed (the backward default).
     """
-    if tolerance_sec is None or tolerance_sec <= 0:
-        raise ValueError("asof_join_bucketed requires a positive tolerance_sec")
+    if tolerance_sec is None:
+        raise ValueError("asof_join_bucketed requires a tolerance_sec")
     keys = [on] if isinstance(on, str) else list(on)
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in (*keys, ts_col)]
-    right_cols = list(right_cols)
-    if not right_cols:
-        raise ValueError("right side must contribute at least one column")
-    order_col = order_col or right_cols[0]
-    win_us = int(round(tolerance_sec * 1_000_000))
-
-    payload = F.struct(
-        F.col(order_col).alias("_tie"),
-        F.col(ts_col).alias(ts_col),
-        *[F.col(c).alias(c) for c in right_cols],
-    )
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    bkt = F.floor(us / F.lit(win_us))
-    r_base = right.select(
-        *keys,
-        us.alias("_us"),
-        F.lit(0).alias("_side"),
-        payload.alias("_payload"),
-    )
-    r = r_base.select("*", F.floor(F.col("_us") / F.lit(win_us)).alias("_bkt")).unionByName(
-        r_base.select(
-            "*", (F.floor(F.col("_us") / F.lit(win_us)) + 1).alias("_bkt")
-        )
-    )
-    l = left.select(
-        *left.columns,
-        us.alias("_us"),
-        F.lit(1).alias("_side"),
-        F.lit(None).cast(r.schema["_payload"].dataType).alias("_payload"),
-        bkt.alias("_bkt"),
-    )
-    unioned = l.unionByName(r, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(*keys, "_bkt")
-        .orderBy(F.col("_us").asc(), F.col("_side").asc(), F.col("_payload._tie").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    matched = unioned.withColumn(
-        "_match", F.last("_payload", ignorenulls=True).over(w)
-    ).where(F.col("_side") == 1)
-    m = F.col("_match")
-    dist = F.col("_us") - F.unix_micros(m[ts_col].cast("timestamp"))
-    m = F.when(dist <= F.lit(win_us), F.col("_match"))
-    return matched.select(
-        *left.columns,
-        m[ts_col].alias(f"{ts_col}{suffix}"),
-        *[m[c].alias(f"{c}{suffix}") for c in right_cols],
-    )
+    width_us = int(round(tolerance_sec * 1_000_000))
+    return asof_join(
+        left.withColumn("_bkt", _bucket(us, width_us)),
+        _halo(right, us, width_us).drop("_ghost"),
+        [*keys, "_bkt"],
+        ts_col,
+        tolerance_sec=tolerance_sec,
+        right_cols=right_cols,
+        suffix=suffix,
+        order_col=order_col,
+    ).drop("_bkt")

@@ -260,9 +260,12 @@ def largest_gaps_auto(
     seed: int = 42,
 ) -> DataFrame:
     """`largest_gaps`, hot keys routed through the two-level-adjacency
-    twin. Row-identical to `largest_gaps`."""
+    twin. Row-identical to `largest_gaps`; a ``width_sec`` <= 0 is a
+    ValueError before sampling, whatever the key heat."""
     from smos_spark.operators.downsample import largest_gaps, largest_gaps_bucketed
 
+    if width_sec <= 0:
+        raise ValueError(f"width_sec must be positive, got {width_sec}")
     kw = dict(key_cols=key_cols, ts_col=ts_col, top_k=top_k, tie_cols=tie_cols)
     return _dispatch(
         (df,),

@@ -24,10 +24,15 @@ Scale shape: each operator is ONE hash Exchange on its window
 partition key. ``m4_downsample`` partitions by (key, bucket) so the
 densest single bucket — not the hottest key — bounds task size; the
 four orderings are in-partition sorts on the same Exchange.
-``counter_rate`` and ``largest_gaps`` partition per key; their
-``*_bucketed`` twins bound every window partition by (key, width
-bucket) with a two-level adjacency carry across non-empty buckets —
-the hot-key path, proven identical to the keyed versions in tests.
+``counter_rate``, ``largest_gaps`` and ``gap_alerts`` read each row's
+predecessor from one mechanism, ``_prev``: a ``lag`` over the key
+window. Their ``*_bucketed`` twins run the same body with a width,
+which makes ``_prev`` a two-level adjacency carry — the lag runs
+inside (key, width bucket), bounded for ANY key, and each bucket's
+first row takes the previous NON-EMPTY bucket's last row from a
+per-key window over the O(span/width) bucket rows, however many
+empty buckets lie between — the hot-key path, proven identical to the
+keyed versions in tests.
 
 The streaming twins (``counter_rate_stream``, ``gap_alerts_stream``)
 are fold steps on streaming/fold.py's ``keyed_fold_stream``, which
@@ -44,11 +49,11 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from smos_spark.functions.joins import null_safe_join
+from smos_spark.operators.asof import _bucket
 from smos_spark.operators.rollup import _width_bucket
 from smos_spark.streaming.fold import keyed_fold_stream, schema_ddl
 
@@ -238,6 +243,66 @@ def lttb_downsample(
     return ends.unionByName(tri)
 
 
+def _prev(df: DataFrame, keys: Sequence[str], us: Column, ties: Sequence[str],
+          cols: Sequence[str], width_us: int | None = None) -> DataFrame:
+    """``df`` plus ``_prev``: one struct of the predecessor row's
+    ``cols`` in (ts, *ties) order within its key, NULL for a key's first
+    row (``us`` is the ts as epoch micros).
+
+    Without ``width_us`` this is a ``lag`` over the key window. With it,
+    the lag runs inside (key, width bucket), and each bucket leads with
+    one carried row: the previous non-empty bucket's last row (a struct
+    max per bucket, lagged over the key's bucket rows). Carried rows are
+    dropped after the lag."""
+    row = F.struct(*[F.col(c).alias(c) for c in cols])
+    order = [us, *[F.col(t) for t in ties]]
+    if width_us is None:
+        w = Window.partitionBy(*keys).orderBy(*order)
+        return df.withColumn("_prev", F.lag(row).over(w))
+    b = df.withColumn("_pbkt", _bucket(us, width_us))
+    # struct max: deterministic and map-side combinable
+    last = b.groupBy(*keys, "_pbkt").agg(
+        F.max(F.struct(*order, row.alias("_row")))["_row"].alias("_row")
+    )
+    w_b = Window.partitionBy(*keys).orderBy("_pbkt")
+    carry = last.select(*keys, "_pbkt", F.lag("_row").over(w_b).alias("_row")).where(
+        F.col("_row").isNotNull()
+    )
+    framed = b.withColumn("_carried", F.lit(False)).unionByName(
+        carry.select(*keys, "_pbkt", "_row.*", F.lit(True).alias("_carried")),
+        allowMissingColumns=True,
+    )
+    w_in = Window.partitionBy(*keys, "_pbkt").orderBy(F.col("_carried").desc(), *order)
+    return (
+        framed.withColumn("_prev", F.lag(row).over(w_in))
+        .where(~F.col("_carried"))
+        .select(*df.columns, "_prev")
+    )
+
+
+def _counter_rate(df, key_cols, ts_col, counter_col, width_sec, origin, tie_cols,
+                  bounded=False) -> DataFrame:
+    """The body of `counter_rate` and, ``bounded``, of its twin."""
+    bucket = _width_bucket(F.col(ts_col), width_sec, origin).alias("bucket_start")
+    width_us = int(round(width_sec * 1_000_000)) if bounded else None
+    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    base = df.where(F.col(ts_col).isNotNull() & F.col(counter_col).isNotNull())
+    v, prev = F.col(counter_col), F.col("_prev")[counter_col]
+    delta = (
+        F.when(prev.isNull(), F.lit(0))
+        .when(v >= prev, v - prev)
+        .otherwise(v)
+    )
+    return (
+        _prev(base, key_cols, us, tie_cols, [counter_col], width_us)
+        .groupBy(*key_cols, bucket)
+        .agg(
+            F.sum(delta).alias("increase"),
+            F.count(F.lit(1)).alias("n_samples"),
+        )
+    )
+
+
 def counter_rate(
     df: DataFrame,
     key_cols: Sequence[str] = ("user_id",),
@@ -257,24 +322,41 @@ def counter_rate(
     (key, bucket) with ``increase`` (sum of deltas, exact for integer
     counters) and ``n_samples``.
     """
-    keys = [F.col(k) for k in key_cols]
-    w = Window.partitionBy(*keys).orderBy(
-        F.col(ts_col), *[F.col(t) for t in tie_cols]
+    return _counter_rate(df, key_cols, ts_col, counter_col, width_sec, origin, tie_cols)
+
+
+def _gaps(df, key_cols, ts_col, tie_cols, width_us=None) -> DataFrame:
+    """Every inter-sample gap per key: key cols, tie cols, ``gap_start``
+    (the predecessor's ts), ``gap_end`` (this sample's ts) and
+    ``gap_us``, in integer µs. A key's first sample opens no gap."""
+    # cast("timestamp"): parquet NTZ timestamps are not valid unix_micros
+    # input; the cast is a no-op under the session's pinned UTC tz
+    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    start = F.col("_prev")[ts_col]
+    return (
+        _prev(df.where(F.col(ts_col).isNotNull()), key_cols, us, tie_cols, [ts_col], width_us)
+        .select(
+            *key_cols,
+            *tie_cols,
+            start.alias("gap_start"),
+            F.col(ts_col).alias("gap_end"),
+            (us - F.unix_micros(start.cast("timestamp"))).alias("gap_us"),
+        )
+        .where(F.col("gap_us").isNotNull())
     )
-    v, prev = F.col(counter_col), F.lag(F.col(counter_col)).over(w)
-    delta = (
-        F.when(prev.isNull(), F.lit(0))
-        .when(v >= prev, v - prev)
-        .otherwise(v)
+
+
+def _largest_gaps(df, key_cols, ts_col, top_k, tie_cols, width_us=None) -> DataFrame:
+    """The body of `largest_gaps` and of its twin: the gap frame,
+    ranked top-k per key."""
+    rank_w = Window.partitionBy(*key_cols).orderBy(
+        F.col("gap_us").desc(), F.col("gap_end").asc(), *[F.col(t).asc() for t in tie_cols]
     )
     return (
-        df.where(F.col(ts_col).isNotNull() & F.col(counter_col).isNotNull())
-        .withColumn("_delta", delta)
-        .groupBy(*keys, _width_bucket(F.col(ts_col), width_sec, origin).alias("bucket_start"))
-        .agg(
-            F.sum("_delta").alias("increase"),
-            F.count(F.lit(1)).alias("n_samples"),
-        )
+        _gaps(df, key_cols, ts_col, tie_cols, width_us)
+        .withColumn("gap_rank", F.row_number().over(rank_w))
+        .where(F.col("gap_rank") <= top_k)
+        .select(*key_cols, "gap_start", "gap_end", "gap_us", "gap_rank")
     )
 
 
@@ -293,34 +375,7 @@ def largest_gaps(
     Output: key cols, ``gap_start``, ``gap_end``, ``gap_us``,
     ``gap_rank`` (1 = largest).
     """
-    keys = [F.col(k) for k in key_cols]
-    ties = [F.col(t) for t in tie_cols]
-    w = Window.partitionBy(*keys).orderBy(F.col(ts_col), *ties)
-    # cast("timestamp"): parquet NTZ timestamps are not valid unix_micros
-    # input; the cast is a no-op under the session's pinned UTC tz
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    gaps = (
-        df.where(F.col(ts_col).isNotNull())
-        .withColumn("gap_start", F.lag(F.col(ts_col)).over(w))
-        .withColumn(
-            "gap_us", us - F.unix_micros(F.col("gap_start").cast("timestamp"))
-        )
-        .where(F.col("gap_us").isNotNull())
-    )
-    rank_w = Window.partitionBy(*keys).orderBy(
-        F.col("gap_us").desc(), F.col(ts_col).asc(), *[t.asc() for t in ties]
-    )
-    return (
-        gaps.withColumn("gap_rank", F.row_number().over(rank_w))
-        .where(F.col("gap_rank") <= top_k)
-        .select(
-            *key_cols,
-            "gap_start",
-            F.col(ts_col).alias("gap_end"),
-            "gap_us",
-            "gap_rank",
-        )
-    )
+    return _largest_gaps(df, key_cols, ts_col, top_k, tie_cols)
 
 
 def counter_rate_bucketed(
@@ -334,59 +389,15 @@ def counter_rate_bucketed(
 ) -> DataFrame:
     """`counter_rate` with BOUNDED window partitions — the hot-key
     path (a single hot counter key with 10^9 samples makes the plain
-    per-key lag window one sort task).
-
-    Two-level adjacency: (a) the in-bucket lag runs inside
-    (key, output bucket) — partition size bounded by samples per
-    width, for ANY key; (b) each bucket's FIRST sample gets its true
-    predecessor from the previous NON-EMPTY bucket's last sample via a
-    per-key window over the O(span/width) bucket-level rows (one row
-    per non-empty bucket, however many samples it held — a year of
-    hourly buckets is ≤8.8k rows per key). Sparse keys are handled
-    correctly: the carry crosses any number of EMPTY buckets (pinned
-    in tests), which a naive ghost-copy-to-next-bucket would miss.
-    Results identical to `counter_rate` (asserted in tests)."""
-    keys = list(key_cols)
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    base = (
-        df.where(F.col(ts_col).isNotNull() & F.col(counter_col).isNotNull())
-        .withColumn(
-            "bucket_start", _width_bucket(F.col(ts_col), width_sec, origin)
-        )
-        .withColumn("_us", us)
-    )
-    ties = [F.col(t) for t in tie_cols]
-    w_in = Window.partitionBy(*keys, "bucket_start").orderBy(F.col("_us"), *ties)
-    v = F.col(counter_col)
-    prev_in = F.lag(v).over(w_in)
-    # bucket-level last sample: struct max over (us, ties, counter) —
-    # deterministic, map-side combinable, one row per non-empty bucket
-    last_struct = F.max(
-        F.struct(F.col("_us"), *ties, v.alias("_v"))
-    ).alias("_last")
-    per_bucket = base.groupBy(*keys, "bucket_start").agg(last_struct)
-    w_b = Window.partitionBy(*keys).orderBy("bucket_start")
-    carry = per_bucket.select(
-        *keys,
-        F.col("bucket_start"),
-        F.lag(F.col("_last._v")).over(w_b).alias("_carry"),
-    )
-    # null-safe: a NULL-keyed series is a regular group to groupBy and
-    # the window twin — a plain equi-join would drop its carry
-    joined = null_safe_join(base, carry, [*keys, "bucket_start"], "left")
-    prev = F.coalesce(prev_in, F.col("_carry"))
-    delta = (
-        F.when(prev.isNull(), F.lit(0))
-        .when(v >= prev, v - prev)
-        .otherwise(v)
-    )
-    return (
-        joined.withColumn("_delta", delta)
-        .groupBy(*keys, "bucket_start")
-        .agg(
-            F.sum("_delta").alias("increase"),
-            F.count(F.lit(1)).alias("n_samples"),
-        )
+    per-key lag window one sort task). The same body reads each
+    sample's predecessor through ``_prev``'s two-level carry over
+    ``width_sec`` buckets (module docstring): partition size is
+    bounded by samples per width for ANY key, and the carry crosses
+    any number of EMPTY buckets (pinned in tests), which a naive
+    ghost-copy-to-next-bucket would miss. Results identical to
+    `counter_rate` (asserted in tests)."""
+    return _counter_rate(
+        df, key_cols, ts_col, counter_col, width_sec, origin, tie_cols, bounded=True
     )
 
 
@@ -399,68 +410,18 @@ def largest_gaps_bucketed(
     width_sec: float = 86400.0,
 ) -> DataFrame:
     """`largest_gaps` with BOUNDED window partitions — the hot-key
-    path. In-bucket gaps come from a lag inside (key, width bucket);
-    the gap ACROSS each bucket boundary (first sample of a non-empty
-    bucket vs the previous non-empty bucket's last sample — any number
-    of empty buckets apart) comes from a per-key window over the
-    O(span/width) bucket-level rows. The final top-k rank per key runs
-    over per-sample gap rows, but `row_number() <= k` is cut map-side
-    by WindowGroupLimit, so its shuffle is O(keys·k·tasks) regardless
-    of key heat. Results identical to `largest_gaps` (asserted)."""
-    keys = list(key_cols)
-    ties = [F.col(t) for t in tie_cols]
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    base = (
-        df.where(F.col(ts_col).isNotNull())
-        .withColumn(
-            "_bkt", _width_bucket(F.col(ts_col), width_sec)
-        )
-        .withColumn("_us", us)
-    )
-    w_in = Window.partitionBy(*keys, "_bkt").orderBy(F.col("_us"), *ties)
-    in_bucket = base.select(
-        *keys,
-        F.col(ts_col),
-        *[F.col(t) for t in tie_cols],
-        F.lag(F.col(ts_col)).over(w_in).alias("gap_start"),
-        (F.col("_us") - F.lag(F.col("_us")).over(w_in)).alias("gap_us"),
-    ).where(F.col("gap_us").isNotNull())
-    # bucket-level first/last samples (struct min/max: deterministic)
-    per_bucket = base.groupBy(*keys, "_bkt").agg(
-        F.min(F.struct(F.col("_us"), *ties, F.col(ts_col).alias("_ts"))).alias("_f"),
-        F.max(F.struct(F.col("_us"), *ties, F.col(ts_col).alias("_ts"))).alias("_l"),
-    )
-    w_b = Window.partitionBy(*keys).orderBy("_bkt")
-    boundary = (
-        per_bucket.select(
-            *keys,
-            F.col("_f"),
-            F.lag(F.col("_l")).over(w_b).alias("_pl"),
-        )
-        .where(F.col("_pl").isNotNull())
-        .select(
-            *keys,
-            F.col("_f._ts").alias(ts_col),
-            *[F.col(f"_f.{t}").alias(t) for t in tie_cols],
-            F.col("_pl._ts").alias("gap_start"),
-            (F.col("_f._us") - F.col("_pl._us")).alias("gap_us"),
-        )
-    )
-    gaps = in_bucket.unionByName(boundary)
-    rank_w = Window.partitionBy(*keys).orderBy(
-        F.col("gap_us").desc(), F.col(ts_col).asc(), *[t.asc() for t in ties]
-    )
-    return (
-        gaps.withColumn("gap_rank", F.row_number().over(rank_w))
-        .where(F.col("gap_rank") <= top_k)
-        .select(
-            *keys,
-            "gap_start",
-            F.col(ts_col).alias("gap_end"),
-            "gap_us",
-            "gap_rank",
-        )
-    )
+    path. The same body reads each gap's start through ``_prev``'s
+    two-level carry over ``width_sec`` buckets (module docstring), so
+    the gap across each bucket boundary is found however many empty
+    buckets apart. The final top-k rank per key runs over per-sample
+    gap rows, but `row_number() <= k` is cut map-side by
+    WindowGroupLimit, so its shuffle is O(keys·k·tasks) regardless of
+    key heat. A ``width_sec`` <= 0 is a ValueError. Results identical
+    to `largest_gaps` (asserted)."""
+    if width_sec <= 0:
+        raise ValueError(f"width_sec must be positive, got {width_sec}")
+    width_us = int(round(width_sec * 1_000_000))
+    return _largest_gaps(df, key_cols, ts_col, top_k, tie_cols, width_us)
 
 
 def counter_rate_stream(
@@ -576,23 +537,11 @@ def gap_alerts(
     """
     if min_gap_sec <= 0:
         raise ValueError("min_gap_sec must be positive")
-    keys = [F.col(k) for k in key_cols]
     min_gap_us = int(round(min_gap_sec * 1_000_000))
-    w = Window.partitionBy(*keys).orderBy(
-        F.col(ts_col), *[F.col(t) for t in tie_cols]
-    )
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    prev_ts = F.lag(F.col(ts_col)).over(w)
-    gap = us - F.lag(us).over(w)
     return (
-        df.where(F.col(ts_col).isNotNull())
-        .select(
-            *keys,
-            prev_ts.alias("gap_start"),
-            F.col(ts_col).alias("gap_end"),
-            gap.alias("gap_us"),
-        )
+        _gaps(df, key_cols, ts_col, tie_cols)
         .where(F.col("gap_us") >= F.lit(min_gap_us))
+        .select(*key_cols, "gap_start", "gap_end", "gap_us")
     )
 
 

@@ -196,9 +196,11 @@ def autocorrelation(
     Output: key cols, n_pairs (samples with a lag-k predecessor),
     acf_ppm (NULL when either side is constant or n_pairs < 2).
 
-    Plan: one per-key ordered window for the lag (the keyed-lag class;
-    for a pathologically hot key route through a (key, bucket) twin
-    first — PLANS.md §27/§28), then one map-side-combined aggregation.
+    Plan: one per-key ordered window for the lag, then one
+    map-side-combined aggregation. There is no hot-key twin: a key's
+    samples sort in one partition, so this relies on the bounded-group
+    contract, as `interval_coverage` does — key by (entity, calendar
+    unit) when one entity's series is too long for one task.
     """
     if lag < 1:
         raise ValueError("lag must be >= 1")

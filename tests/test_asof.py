@@ -235,3 +235,21 @@ def test_rolling_quantiles_bucketed_equals_plain(spark):
     assert twin == plain
     cols = plain[0].asDict()
     assert "roll_p50" in cols and "roll_p90" in cols and "roll_p99" in cols
+
+
+def test_rolling_bucketed_null_ts_equals_plain(spark):
+    """A NULL ts is its own frame in the plain form (the key's NULL-ts
+    rows, equal under RANGE ordering); the twin must not count a ghost
+    copy of those rows into it."""
+    from smos_spark.operators.asof import rolling_stats, rolling_stats_bucketed
+
+    df = spark.createDataFrame(
+        [("a", _ts(s), float(i)) for i, s in enumerate((0.0, 30.0, 59.0, 60.0, 90.0, 200.0))]
+        + [("a", None, 5.0), ("a", None, 10.0)],
+        "conv_id string, ts timestamp, value double",
+    )
+    plain = sorted(map(tuple, rolling_stats(df, 60.0).collect()), key=str)
+    twin = sorted(map(tuple, rolling_stats_bucketed(df, 60.0).collect()), key=str)
+    assert twin == plain
+    nulls = [r for r in plain if r[1] is None]
+    assert [(r[3], r[4]) for r in nulls] == [(2, 1500), (2, 1500)]

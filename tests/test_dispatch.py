@@ -4,6 +4,7 @@ in all three regimes (no hot keys / split / twin-wholesale)."""
 
 from __future__ import annotations
 
+import datetime as dt
 from functools import reduce
 
 import pytest
@@ -176,6 +177,74 @@ def test_asof_join_auto_without_tolerance_is_plain(spark, skewed):
     kw = dict(on="user_id", right_cols=["event_id"], order_col="event_id")
     no_tol = asof_join_auto(purchases, clicks, **kw, **HOT)
     assert _sorted(no_tol) == _sorted(asof_join(purchases, clicks, **kw))
+
+
+def _edge_cases():
+    """case → (*_auto form taking the frame and the heat knobs, plain
+    form taking the frame) for a zero or negative window, tolerance or
+    width."""
+    from smos_spark.operators.asof import asof_join, rolling_stats
+    from smos_spark.operators.downsample import largest_gaps
+
+    def halves(d):
+        return d.where(F.col("event_id") % 2 == 0), d.where(F.col("event_id") % 2 == 1)
+
+    def asof(tol):
+        kw = dict(on="user_id", right_cols=["event_id"], tolerance_sec=tol)
+        return (
+            lambda d, k: asof_join_auto(*halves(d), **kw, **k),
+            lambda d: asof_join(*halves(d), **kw),
+        )
+
+    def roll(win):
+        kw = dict(window_sec=win, on="user_id")
+        return (
+            lambda d, k: rolling_stats_auto(d, **kw, **k),
+            lambda d: rolling_stats(d, **kw),
+        )
+
+    gaps = dict(key_cols=("user_id",), top_k=2)
+    return {
+        "asof_zero_tolerance": asof(0.0),
+        "asof_negative_tolerance": asof(-1.0),
+        "rolling_zero_window": roll(0.0),
+        "rolling_negative_window": roll(-1.0),
+        "largest_gaps_zero_width": (
+            lambda d, k: largest_gaps_auto(d, width_sec=0.0, **gaps, **k),
+            lambda d: largest_gaps(d, **gaps),
+        ),
+    }
+
+
+def _outcome(run):
+    try:
+        return "rows", _sorted(run())
+    except ValueError as e:
+        return "ValueError", str(e)
+
+
+@pytest.mark.parametrize("case", list(_edge_cases()))
+def test_auto_edge_arguments_ignore_heat(spark, case):
+    """An *_auto call's outcome for an edge argument (a zero or
+    negative window, tolerance or width) does not depend on sampled
+    heat: cold and hot routes both give the plain form's rows, or the
+    same ValueError."""
+    auto, plain = _edge_cases()[case]
+    t0 = dt.datetime(2024, 1, 1)
+    # user 1 is hot (24 rows, ts ties in pairs); user 2 is cold
+    rows = [(i, 1, t0 + dt.timedelta(seconds=7 * (i // 2)), float(i)) for i in range(24)]
+    rows += [(100 + i, 2, t0 + dt.timedelta(minutes=i), 1.0) for i in range(3)]
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id long, ts timestamp, value double"
+    )
+    cold = dict(hot_threshold=10**9, sample_fraction=1.0, seed=1)
+    hot = dict(hot_threshold=10, sample_fraction=1.0, seed=1)
+    assert detect_hot_keys(df, ["user_id"], **hot) == [(1,)]
+    got_cold = _outcome(lambda: auto(df, cold))
+    got_hot = _outcome(lambda: auto(df, hot))
+    assert got_hot == got_cold
+    if got_cold[0] == "rows":
+        assert got_cold == _outcome(lambda: plain(df))
 
 
 @pytest.mark.slow
