@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from smos_spark.functions.timegrid import epoch_us, to_us
 from smos_spark.streaming.fold import keyed_fold_stream, schema_ddl
 
 __all__ = [
@@ -229,11 +230,9 @@ def threshold_hold_alerts(
     trusted (/root/reference/src/smos/smos_l2/reshuffle.py:60-75
     fraction screens) is this hold discipline at tier scale.
     """
-    if hold_sec < 0:
-        raise ValueError("hold_sec must be >= 0")
+    hold_us = to_us(hold_sec, "hold_sec", zero_ok=True)
     keys = list(key_cols)
     ties = list(tie_cols)
-    hold_us = int(round(hold_sec * 1_000_000))
     v = F.col(value_col)
     order = [F.col(ts_col), *[F.col(t) for t in ties]]
     w_loc = (
@@ -244,7 +243,7 @@ def threshold_hold_alerts(
     w_lag = Window.partitionBy(*keys).orderBy(*order)
     base = (
         df.where(F.col(ts_col).isNotNull() & v.isNotNull())
-        .withColumn("_us", F.unix_micros(F.col(ts_col).cast("timestamp")))
+        .withColumn("_us", epoch_us(ts_col))
         .withColumn("_cond", (v >= F.lit(hi)).cast("int"))
     )
     prev_cond = F.lag(F.col("_cond")).over(w_lag)
@@ -296,11 +295,9 @@ def threshold_hold_stream(
     twin), each exactly once, row-for-row equal to batch over the same
     rows.
     """
-    if hold_sec < 0:
-        raise ValueError("hold_sec must be >= 0")
+    hold_us = to_us(hold_sec, "hold_sec", zero_ok=True)
     keys = list(key_cols)
     ties = list(tie_cols)
-    hold_us = int(round(hold_sec * 1_000_000))
     src = stream.where(
         F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
     ).select(

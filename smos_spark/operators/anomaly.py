@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from smos_spark.functions.timegrid import bucket_index, bucket_start, dow_hour, to_us
 from smos_spark.streaming.fold import keyed_fold_stream, schema_ddl
 
 __all__ = [
@@ -74,20 +75,6 @@ __all__ = [
 ]
 
 _DEC = "decimal(38,0)"
-
-
-def _dow_hour(ts_col: str):
-    """(dow 0=Sunday, hour-of-day) from pure integer epoch-µs
-    arithmetic — identical buckets in Spark and DuckDB regardless of
-    either engine's dayofweek() numbering convention (same derivation
-    as stats.hourly_profile)."""
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    day_us, hour_us = 86_400_000_000, 3_600_000_000
-    days = ((us - F.pmod(us, F.lit(day_us))) / F.lit(day_us)).cast("long")
-    hours = ((us - F.pmod(us, F.lit(hour_us))) / F.lit(hour_us)).cast("long")
-    dow = F.pmod(days + 4, F.lit(7)).cast("int")
-    hour = F.pmod(hours, F.lit(24)).cast("int")
-    return dow, hour
 
 
 def seasonal_anomaly(
@@ -153,7 +140,7 @@ def _prepare_seasonal(
     ts_col: str,
     cents: int,
 ) -> DataFrame:
-    dow, hour = _dow_hour(ts_col)
+    dow, hour = dow_hour(ts_col)
     vc = F.floor(F.col(value_col).cast("double") * cents).cast("long")
     return df.where(
         F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
@@ -492,7 +479,7 @@ def trend_slope(
     ts_col: str = "ts",
     cents: int = 100,
     epoch: str = "2020-01-01",
-    x_unit_s: int = 3600,
+    x_unit_s: float = 3600,
     min_count: int = 2,
     keep_moments: bool = False,
 ) -> DataFrame:
@@ -534,15 +521,7 @@ def trend_slope(
         raise ValueError("min_count must be >= 2")
     if cents <= 0:
         raise ValueError("cents must be positive")
-    if x_unit_s <= 0:
-        raise ValueError("x_unit_s must be positive")
-    us = F.unix_micros(F.col(ts_col).cast("timestamp")) - F.unix_micros(
-        F.lit(epoch).cast("timestamp")
-    )
-    unit_us = int(x_unit_s) * 1_000_000
-    # floor-to-unit via pmod: identical semantics in Spark and DuckDB
-    # for negative x (rows before `epoch`), where `/` or `//` differ
-    xs = ((us - F.pmod(us, F.lit(unit_us))) / F.lit(unit_us)).cast("long")
+    xs = bucket_index(ts_col, to_us(x_unit_s, "x_unit_s"), epoch)
     y = F.floor(F.col(value_col).cast("double") * cents).cast("long")
     base = df.where(
         F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
@@ -649,7 +628,7 @@ def theil_sen_slope(
     ts_col: str = "ts",
     cents: int = 100,
     epoch: str = "2020-01-01",
-    x_unit_s: int = 3600,
+    x_unit_s: float = 3600,
 ) -> DataFrame:
     """Per-group Theil–Sen trend slope: the median of the pairwise
     slopes (y_j − y_i)/(x_j − x_i) over all sample pairs with distinct
@@ -679,13 +658,7 @@ def theil_sen_slope(
     """
     if cents <= 0:
         raise ValueError("cents must be positive")
-    if x_unit_s <= 0:
-        raise ValueError("x_unit_s must be positive")
-    us = F.unix_micros(F.col(ts_col).cast("timestamp")) - F.unix_micros(
-        F.lit(epoch).cast("timestamp")
-    )
-    unit_us = int(x_unit_s) * 1_000_000
-    xs = ((us - F.pmod(us, F.lit(unit_us))) / F.lit(unit_us)).cast("long")
+    xs = bucket_index(ts_col, to_us(x_unit_s, "x_unit_s"), epoch)
     y = F.floor(F.col(value_col).cast("double") * cents).cast("long")
     base = df.where(
         F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
@@ -729,7 +702,7 @@ def mann_kendall(
     ts_col: str = "ts",
     cents: int = 100,
     epoch: str = "2020-01-01",
-    x_unit_s: int = 3600,
+    x_unit_s: float = 3600,
 ) -> DataFrame:
     """Per-group Mann–Kendall trend test statistic: S = Σ_{x_i < x_j}
     sign(y_j − y_i) over all sample pairs with distinct time buckets —
@@ -757,13 +730,7 @@ def mann_kendall(
     """
     if cents <= 0:
         raise ValueError("cents must be positive")
-    if x_unit_s <= 0:
-        raise ValueError("x_unit_s must be positive")
-    us = F.unix_micros(F.col(ts_col).cast("timestamp")) - F.unix_micros(
-        F.lit(epoch).cast("timestamp")
-    )
-    unit_us = int(x_unit_s) * 1_000_000
-    xs = ((us - F.pmod(us, F.lit(unit_us))) / F.lit(unit_us)).cast("long")
+    xs = bucket_index(ts_col, to_us(x_unit_s, "x_unit_s"), epoch)
     y = F.floor(F.col(value_col).cast("double") * cents).cast("long")
     base = df.where(
         F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
@@ -800,7 +767,7 @@ def classical_decompose(
     group_cols: list[str],
     ts_col: str = "ts",
     period: int = 24,
-    width_sec: int = 3600,
+    width_sec: float = 3600,
     cents: int = 100,
 ) -> DataFrame:
     """Classical additive seasonal decomposition of a per-group
@@ -840,14 +807,11 @@ def classical_decompose(
     """
     if period < 2 or period % 2 != 0:
         raise ValueError("period must be an even integer >= 2")
-    if width_sec <= 0:
-        raise ValueError("width_sec must be positive")
+    width_us = to_us(width_sec)
     if cents <= 0:
         raise ValueError("cents must be positive")
     m = period // 2
-    width_us = int(width_sec) * 1_000_000
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    b = ((us - F.pmod(us, F.lit(width_us))) / F.lit(width_us)).cast("long")
+    b = bucket_index(ts_col, width_us)
     vc = F.floor(F.col(value_col).cast("double") * cents).cast("long")
     sums = (
         df.where(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
@@ -887,9 +851,7 @@ def classical_decompose(
     wp = Window.partitionBy(*group_cols, "_phase")
     return valid.select(
         *group_cols,
-        F.timestamp_micros(F.col("_b") * F.lit(width_us)).alias(
-            "bucket_start"
-        ),
+        bucket_start("_b", width_us).alias("bucket_start"),
         F.col("_y").alias("y_cents"),
         F.col("_t2p").alias("trend_x2p"),
         F.col("_d2p").alias("detr_x2p"),
@@ -904,7 +866,7 @@ def seasonal_adjust(
     group_cols: list[str],
     ts_col: str = "ts",
     period: int = 24,
-    width_sec: int = 3600,
+    width_sec: float = 3600,
     cents: int = 100,
 ) -> DataFrame:
     """Seasonally-adjusted remainder series on top of

@@ -55,6 +55,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from smos_spark.functions.timegrid import epoch_us, floor_div, to_us
+
 __all__ = ["asof_join", "asof_join_bucketed", "rolling_stats", "rolling_stats_bucketed"]
 
 
@@ -83,8 +85,8 @@ def asof_join(
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    if tolerance_sec is not None and tolerance_sec < 0:
-        raise ValueError(f"tolerance_sec must be >= 0, got {tolerance_sec}")
+    if tolerance_sec is not None:
+        tol_us = to_us(tolerance_sec, "tolerance_sec", zero_ok=True)
     keys = [on] if isinstance(on, str) else list(on)
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in (*keys, ts_col)]
@@ -138,10 +140,7 @@ def asof_join(
 
     m = F.col("_match")
     if tolerance_sec is not None:
-        tol_us = int(round(tolerance_sec * 1_000_000))
-        dist = F.unix_micros(F.col("_ts").cast("timestamp")) - F.unix_micros(
-            m[ts_col].cast("timestamp")
-        )
+        dist = epoch_us("_ts") - epoch_us(m[ts_col])
         if direction == "forward":
             dist = -dist
         m = F.when(dist <= F.lit(tol_us), F.col("_match"))
@@ -154,18 +153,11 @@ def asof_join(
     return out
 
 
-def _bucket(us: Column, width_us: int) -> Column:
-    """Width-µs time bucket of epoch micros, at least 1 µs wide (the
-    double division is exact for |us| < 2^53, so floor never rounds
-    across a bucket edge)."""
-    return F.floor(us / F.lit(max(width_us, 1)))
-
-
 def _halo(frame: DataFrame, us: Column, width_us: int) -> DataFrame:
     """`frame` with each row in its own bucket ``_bkt`` (``_ghost`` 0)
     plus, when ``us`` is not NULL, a ghost copy in ``_bkt + 1``
     (``_ghost`` 1). One scan: the copies are generated, not unioned."""
-    bkt = _bucket(us, width_us)
+    bkt = floor_div(us, max(width_us, 1))
     copies = F.when(us.isNull(), F.array(bkt)).otherwise(F.array(bkt, bkt + 1))
     return frame.select("*", F.posexplode(copies).alias("_ghost", "_bkt"))
 
@@ -199,15 +191,13 @@ def rolling_stats(
     DuckDB's ``quantile_cont`` on the same ints — verified in the
     contract suite). A negative ``window_sec`` is a ValueError.
     """
-    if window_sec < 0:
-        raise ValueError(f"window_sec must be >= 0, got {window_sec}")
+    win_us = to_us(window_sec, "window_sec", zero_ok=True)
     keys = [on] if isinstance(on, str) else list(on)
     v = F.col(value_col) if isinstance(value_col, str) else value_col
     cents = F.round(v * 100).cast("long")
-    win_us = int(round(window_sec * 1_000_000))
     w = (
         Window.partitionBy(*keys)
-        .orderBy(F.unix_micros(F.col(ts_col).cast("timestamp")))
+        .orderBy(epoch_us(ts_col))
         .rangeBetween(-win_us, 0)
     )
     return df.select(
@@ -242,8 +232,7 @@ def rolling_stats_bucketed(
     straggler-free scaling.
     """
     keys = [on] if isinstance(on, str) else list(on)
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    haloed = _halo(df, us, int(round(window_sec * 1_000_000)))
+    haloed = _halo(df, epoch_us(ts_col), to_us(window_sec, "window_sec", zero_ok=True))
     out = rolling_stats(
         haloed, window_sec, value_col, [*keys, "_bkt"], ts_col, prefix, quantiles
     )
@@ -273,10 +262,10 @@ def asof_join_bucketed(
     if tolerance_sec is None:
         raise ValueError("asof_join_bucketed requires a tolerance_sec")
     keys = [on] if isinstance(on, str) else list(on)
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    width_us = int(round(tolerance_sec * 1_000_000))
+    us = epoch_us(ts_col)
+    width_us = to_us(tolerance_sec, "tolerance_sec", zero_ok=True)
     return asof_join(
-        left.withColumn("_bkt", _bucket(us, width_us)),
+        left.withColumn("_bkt", floor_div(us, max(width_us, 1))),
         _halo(right, us, width_us).drop("_ghost"),
         [*keys, "_bkt"],
         ts_col,

@@ -288,9 +288,9 @@ def range_minmax(
     greatest)."""
     from pyspark.sql import functions as F
 
-    from smos_spark.sources.store import _ts_lit
+    from smos_spark.functions.timegrid import ts_lit
 
-    t0, t1 = _ts_lit(ts_from), _ts_lit(ts_to)
+    t0, t1 = ts_lit(ts_from), ts_lit(ts_to)
     overlapping = comp.where(
         (F.col("last_ts") >= t0) & (F.col("first_ts") <= t1)
     )

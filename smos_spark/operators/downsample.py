@@ -53,8 +53,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from smos_spark.operators.asof import _bucket
-from smos_spark.operators.rollup import _width_bucket
+from smos_spark.functions.timegrid import day_segment, epoch_us, floor_div, floor_ts, to_us
 from smos_spark.streaming.fold import keyed_fold_stream, schema_ddl
 
 __all__ = [
@@ -93,7 +92,7 @@ def m4_downsample(
     ties = [F.col(t) for t in tie_cols]
     work = (
         df.where(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
-        .withColumn("bucket_start", _width_bucket(F.col(ts_col), width_sec, origin))
+        .withColumn("bucket_start", floor_ts(ts_col, to_us(width_sec), origin))
     )
     part = Window.partitionBy(*keys, F.col("bucket_start"))
     ts, val = F.col(ts_col), F.col(value_col)
@@ -115,7 +114,6 @@ def m4_downsample(
 
 
 _DEC = "decimal(38,0)"
-_DAY_US = 86_400_000_000
 
 
 def lttb_downsample(
@@ -160,26 +158,14 @@ def lttb_downsample(
         raise ValueError(f"n_segments must be >= 3, got {n_segments}")
     keys = list(key_cols)
 
-    b = (
-        df.where(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
-        .select(
-            *keys,
-            F.date_trunc("day", F.col(ts_col)).alias("day"),
-            F.col(ts_col).alias("ts"),
-            (
-                F.unix_micros(F.col(ts_col).cast("timestamp"))
-                - F.unix_micros(
-                    F.date_trunc("day", F.col(ts_col)).cast("timestamp")
-                )
-            ).alias("x"),
-            F.floor(F.col(value_col).cast("double") * F.lit(100))
-            .cast("long")
-            .alias("val_cents"),
-        )
-        .withColumn(
-            "seg",
-            F.expr(f"x * {int(n_segments)}L div {_DAY_US}L"),
-        )
+    x, seg = day_segment(ts_col, n_segments)
+    b = df.where(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()).select(
+        *keys,
+        F.date_trunc("day", F.col(ts_col)).alias("day"),
+        F.col(ts_col).alias("ts"),
+        x.alias("x"),
+        F.floor(F.col(value_col).cast("double") * F.lit(100)).cast("long").alias("val_cents"),
+        seg.alias("seg"),
     )
 
     s = b.groupBy(*keys, "day", "seg").agg(
@@ -259,7 +245,7 @@ def _prev(df: DataFrame, keys: Sequence[str], us: Column, ties: Sequence[str],
     if width_us is None:
         w = Window.partitionBy(*keys).orderBy(*order)
         return df.withColumn("_prev", F.lag(row).over(w))
-    b = df.withColumn("_pbkt", _bucket(us, width_us))
+    b = df.withColumn("_pbkt", floor_div(us, width_us))
     # struct max: deterministic and map-side combinable
     last = b.groupBy(*keys, "_pbkt").agg(
         F.max(F.struct(*order, row.alias("_row")))["_row"].alias("_row")
@@ -283,9 +269,9 @@ def _prev(df: DataFrame, keys: Sequence[str], us: Column, ties: Sequence[str],
 def _counter_rate(df, key_cols, ts_col, counter_col, width_sec, origin, tie_cols,
                   bounded=False) -> DataFrame:
     """The body of `counter_rate` and, ``bounded``, of its twin."""
-    bucket = _width_bucket(F.col(ts_col), width_sec, origin).alias("bucket_start")
-    width_us = int(round(width_sec * 1_000_000)) if bounded else None
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    width_us = to_us(width_sec)
+    bucket = floor_ts(ts_col, width_us, origin).alias("bucket_start")
+    us = epoch_us(ts_col)
     base = df.where(F.col(ts_col).isNotNull() & F.col(counter_col).isNotNull())
     v, prev = F.col(counter_col), F.col("_prev")[counter_col]
     delta = (
@@ -294,7 +280,7 @@ def _counter_rate(df, key_cols, ts_col, counter_col, width_sec, origin, tie_cols
         .otherwise(v)
     )
     return (
-        _prev(base, key_cols, us, tie_cols, [counter_col], width_us)
+        _prev(base, key_cols, us, tie_cols, [counter_col], width_us if bounded else None)
         .groupBy(*key_cols, bucket)
         .agg(
             F.sum(delta).alias("increase"),
@@ -329,9 +315,7 @@ def _gaps(df, key_cols, ts_col, tie_cols, width_us=None) -> DataFrame:
     """Every inter-sample gap per key: key cols, tie cols, ``gap_start``
     (the predecessor's ts), ``gap_end`` (this sample's ts) and
     ``gap_us``, in integer µs. A key's first sample opens no gap."""
-    # cast("timestamp"): parquet NTZ timestamps are not valid unix_micros
-    # input; the cast is a no-op under the session's pinned UTC tz
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = epoch_us(ts_col)
     start = F.col("_prev")[ts_col]
     return (
         _prev(df.where(F.col(ts_col).isNotNull()), key_cols, us, tie_cols, [ts_col], width_us)
@@ -340,7 +324,7 @@ def _gaps(df, key_cols, ts_col, tie_cols, width_us=None) -> DataFrame:
             *tie_cols,
             start.alias("gap_start"),
             F.col(ts_col).alias("gap_end"),
-            (us - F.unix_micros(start.cast("timestamp"))).alias("gap_us"),
+            (us - epoch_us(start)).alias("gap_us"),
         )
         .where(F.col("gap_us").isNotNull())
     )
@@ -418,10 +402,7 @@ def largest_gaps_bucketed(
     WindowGroupLimit, so its shuffle is O(keys·k·tasks) regardless of
     key heat. A ``width_sec`` <= 0 is a ValueError. Results identical
     to `largest_gaps` (asserted)."""
-    if width_sec <= 0:
-        raise ValueError(f"width_sec must be positive, got {width_sec}")
-    width_us = int(round(width_sec * 1_000_000))
-    return _largest_gaps(df, key_cols, ts_col, top_k, tie_cols, width_us)
+    return _largest_gaps(df, key_cols, ts_col, top_k, tie_cols, to_us(width_sec))
 
 
 def counter_rate_stream(
@@ -454,9 +435,7 @@ def counter_rate_stream(
     is the batch rule verbatim: delta = v - prev when monotone, else v;
     a key's first sample contributes 0.
     """
-    width_us = int(round(width_sec * 1_000_000))
-    if width_us <= 0:
-        raise ValueError(f"width_sec must be positive, got {width_sec}")
+    width_us = to_us(width_sec)
     keys = list(key_cols)
     ties = list(tie_cols)
     src = stream.where(
@@ -535,9 +514,7 @@ def gap_alerts(
     first sample opens no gap (no predecessor).  One key-partitioned
     lag window, all codegen.
     """
-    if min_gap_sec <= 0:
-        raise ValueError("min_gap_sec must be positive")
-    min_gap_us = int(round(min_gap_sec * 1_000_000))
+    min_gap_us = to_us(min_gap_sec, "min_gap_sec")
     return (
         _gaps(df, key_cols, ts_col, tie_cols)
         .where(F.col("gap_us") >= F.lit(min_gap_us))
@@ -563,11 +540,9 @@ def gap_alerts_stream(
     twins.  State per key is the previous sample's event-time micros
     (plus the fold's last_us) — 16 bytes, O(1).
     """
-    if min_gap_sec <= 0:
-        raise ValueError("min_gap_sec must be positive")
+    min_gap_us = to_us(min_gap_sec, "min_gap_sec")
     keys = list(key_cols)
     ties = list(tie_cols)
-    min_gap_us = int(round(min_gap_sec * 1_000_000))
     src = stream.where(F.col(ts_col).isNotNull()).select(
         *keys,
         F.col(ts_col).cast("timestamp").alias(ts_col),

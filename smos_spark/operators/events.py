@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from smos_spark.functions.joins import null_safe_join
-from smos_spark.operators.rollup import _width_bucket
+from smos_spark.functions.timegrid import bucket_index, bucket_start, epoch_us, to_us
 
 __all__ = [
     "event_funnel",
@@ -151,26 +151,21 @@ def cohort_retention(
     count is the cohort size).  Exact int64 bucket math, explicit
     two-level distinct.
     """
+    width_us = to_us(width_sec)
     keys = [F.col(k) for k in key_cols]
-    bucket = _width_bucket(F.col(ts_col), width_sec)
     w = Window.partitionBy(*keys)
-    width_us = int(round(width_sec * 1_000_000))
     active = (
         df.where(F.col(ts_col).isNotNull())
-        .select(*key_cols, bucket.alias("bucket_start"))
-        .withColumn("cohort_start", F.min("bucket_start").over(w))
+        .select(*key_cols, bucket_index(ts_col, width_us).alias("_b"))
+        .withColumn("_b0", F.min("_b").over(w))
         # level 1: dedup to one row per (key, bucket) — the only wide
         # row stream; level 2 below is a plain combinable count
-        .dropDuplicates([*key_cols, "bucket_start"])
+        .dropDuplicates([*key_cols, "_b"])
     )
-    off_us = F.unix_micros(F.col("bucket_start").cast("timestamp")) - F.unix_micros(
-        F.col("cohort_start").cast("timestamp")
-    )
-    return (
-        active.withColumn("offset_buckets", (off_us / F.lit(width_us)).cast("long"))
-        .groupBy("cohort_start", "offset_buckets")
-        .agg(F.count(F.lit(1)).alias("n_active"))
-    )
+    return active.groupBy(
+        bucket_start("_b0", width_us).alias("cohort_start"),
+        (F.col("_b") - F.col("_b0")).alias("offset_buckets"),
+    ).agg(F.count(F.lit(1)).alias("n_active"))
 
 
 def event_funnel_stepwise(
@@ -228,7 +223,7 @@ def user_growth(
     df: DataFrame,
     key_col: str = "user_id",
     ts_col: str = "ts",
-    width_sec: int = 86400,
+    width_sec: float = 86400,
 ) -> DataFrame:
     """Growth curve: per time bucket, how many keys were seen for the
     FIRST time (new), how many were active, and the cumulative
@@ -252,11 +247,8 @@ def user_growth(
     """
     from pyspark.sql.window import Window
 
-    if width_sec <= 0:
-        raise ValueError("width_sec must be positive")
-    width_us = int(width_sec) * 1_000_000
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    b = ((us - F.pmod(us, F.lit(width_us))) / F.lit(width_us)).cast("long")
+    width_us = to_us(width_sec)
+    b = bucket_index(ts_col, width_us)
     base = df.where(
         F.col(ts_col).isNotNull() & F.col(key_col).isNotNull()
     ).select(F.col(key_col).alias("_k"), b.alias("_b"))
@@ -274,9 +266,7 @@ def user_growth(
     return joined.withColumn(
         "cum_keys", F.sum("new_keys").over(w)
     ).select(
-        F.timestamp_micros(F.col("_b") * F.lit(width_us)).alias(
-            "bucket_start"
-        ),
+        bucket_start("_b", width_us).alias("bucket_start"),
         "new_keys",
         "active_keys",
         "cum_keys",
@@ -288,7 +278,7 @@ def period_compare(
     value_col: str,
     key_cols: Sequence[str] | None = None,
     ts_col: str = "ts",
-    width_sec: int = 86400,
+    width_sec: float = 86400,
     lag_buckets: int = 7,
 ) -> DataFrame:
     """Period-over-period comparison: each (key, bucket) integer total
@@ -312,14 +302,11 @@ def period_compare(
     stream is scanned once, never window-sorted (the
     lagged_crosscorr shape).
     """
-    if width_sec <= 0:
-        raise ValueError("width_sec must be positive")
+    width_us = to_us(width_sec)
     if lag_buckets < 1:
         raise ValueError("lag_buckets must be >= 1")
     keys = list(key_cols or [])
-    width_us = int(width_sec) * 1_000_000
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    b = ((us - F.pmod(us, F.lit(width_us))) / F.lit(width_us)).cast("long")
+    b = bucket_index(ts_col, width_us)
     v = F.col(value_col).cast("long")
     totals = (
         df.where(F.col(ts_col).isNotNull() & v.isNotNull())
@@ -341,9 +328,7 @@ def period_compare(
     )
     return joined.select(
         *keys,
-        F.timestamp_micros(F.col("_b") * F.lit(width_us)).alias(
-            "bucket_start"
-        ),
+        bucket_start("_b", width_us).alias("bucket_start"),
         "cur",
         "prev",
         (F.col("cur") - F.col("prev")).alias("delta"),
@@ -371,7 +356,6 @@ def conversion_lag(
     tables — the raw stream is scanned once per side, never shuffled
     on rows. Output: key, first_from_ts, first_to_ts, lag_us.
     """
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     base = df.where(
         F.col(ts_col).isNotNull() & F.col(key_col).isNotNull()
     )
@@ -383,9 +367,7 @@ def conversion_lag(
     f = firsts(from_type, "first_from_ts")
     t = firsts(to_type, "first_to_ts")
     joined = f.join(t, "key")
-    lag = F.unix_micros(F.col("first_to_ts")) - F.unix_micros(
-        F.col("first_from_ts")
-    )
+    lag = epoch_us("first_to_ts") - epoch_us("first_from_ts")
     return joined.where(lag >= 0).select(
         "key", "first_from_ts", "first_to_ts", lag.alias("lag_us")
     )

@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from smos_spark.functions.timegrid import epoch_us
+
 __all__ = [
     "response_latency",
     "transition_matrix",
@@ -58,9 +60,7 @@ def response_latency(
     O(conversations) rows of 5 ints.
     """
     w = Window.partitionBy(conv_col).orderBy(ts_col, *order_cols)
-    # cast("timestamp"): parquet TIMESTAMP_NTZ is not valid unix_micros
-    # input; the session tz is pinned UTC so the cast is value-exact
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = epoch_us(ts_col)
     lagged = df.select(
         conv_col,
         F.col(role_col),
@@ -190,7 +190,7 @@ def conv_features(
     store (/root/reference/src/smos/interface.py:128-162) — here the
     summary is computed corpus-wide in one pass instead of per lookup.
     """
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = epoch_us(ts_col)
     one_if = lambda cond: F.sum(F.when(cond, 1).otherwise(0))  # noqa: E731
     agg = df.groupBy(conv_col).agg(
         F.count(F.lit(1)).alias("n_turns"),

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from smos_spark.functions.timegrid import ts_lit
 from smos_spark.schema import TIERS
 
 __all__ = [
@@ -59,7 +60,7 @@ def gap_fill(tier_df: DataFrame, tier: str, start=None, end=None) -> DataFrame:
     # duplicate bucket (next == own) still emit their own bucket
     lo, hi = own, F.greatest(nxt - step, own)
     if start is not None and end is not None:
-        first, last = (F.date_trunc(unit, F.lit(t).cast("timestamp")) for t in (start, end))
+        first, last = (F.date_trunc(unit, ts_lit(t)) for t in (start, end))
         # row_number, not a NULL lag: a NULL bucket_start sorts first
         lo = F.when(F.row_number().over(w) == 1, first).otherwise(F.greatest(own, first))
         hi = F.when(nxt.isNull(), last).otherwise(F.least(hi, last))

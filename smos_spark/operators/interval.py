@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from smos_spark.functions.timegrid import bucket_index, epoch_us, floor_ts, to_us
+
 __all__ = [
     "interval_join",
     "interval_join_stream",
@@ -82,8 +84,7 @@ def interval_join(
     """
     if how not in ("inner", "left"):
         raise ValueError(f"how must be inner|left, got {how!r}")
-    if width_sec <= 0:
-        raise ValueError("width_sec must be positive")
+    win_us = to_us(width_sec)
     keys = [on] if isinstance(on, str) else list(on)
     clash = (set(intervals.columns) - set(keys)) & set(points.columns)
     if clash:
@@ -91,22 +92,15 @@ def interval_join(
             f"interval columns collide with point columns: {sorted(clash)}; "
             "rename before joining"
         )
-    win_us = int(round(width_sec * 1_000_000))
-
-    def us(c):
-        return F.unix_micros(F.col(c).cast("timestamp"))
-
     p = points.where(F.col(ts_col).isNotNull()).withColumn(
-        "_bkt", F.floor(us(ts_col) / F.lit(win_us))
+        "_bkt", bucket_index(ts_col, win_us)
     )
     iv = intervals.where(
         F.col(start_col).isNotNull()
         & F.col(end_col).isNotNull()
         & (F.col(end_col) >= F.col(start_col))
     )
-    b0, b1 = F.floor(us(start_col) / F.lit(win_us)), F.floor(
-        us(end_col) / F.lit(win_us)
-    )
+    b0, b1 = bucket_index(start_col, win_us), bucket_index(end_col, win_us)
     # distributed guard: raise_error inside the span expression fails
     # the job on the first degenerate interval instead of fanning out
     span = b1 - b0 + 1
@@ -200,8 +194,7 @@ def interval_join_stream(
     test_interval_join_stream_matches_batch). NULL-ts points and
     NULL-bound intervals cannot match and are dropped, as in batch.
     """
-    if max_len_sec <= 0:
-        raise ValueError("max_len_sec must be positive")
+    max_us = to_us(max_len_sec, "max_len_sec")
     keys = [on] if isinstance(on, str) else list(on)
     clash = (set(intervals.columns) - set(keys)) & set(points.columns)
     if clash:
@@ -209,12 +202,8 @@ def interval_join_stream(
             f"interval columns collide with point columns: {sorted(clash)}; "
             "rename before joining"
         )
-    max_us = int(round(max_len_sec * 1_000_000))
     p = points.where(F.col(ts_col).isNotNull()).withWatermark(ts_col, watermark)
-    too_long = (
-        F.unix_micros(F.col(end_col).cast("timestamp"))
-        - F.unix_micros(F.col(start_col).cast("timestamp"))
-    ) > max_us
+    too_long = epoch_us(end_col) - epoch_us(start_col) > max_us
     guard = F.when(
         too_long,
         F.raise_error(
@@ -313,8 +302,7 @@ def interval_concurrency(
     /root/reference/src/smos/interface.py date-indexed multi-file
     datasets) is this gauge with day buckets.
     """
-    if width_sec <= 0:
-        raise ValueError("width_sec must be positive")
+    width_us = to_us(width_sec)
     keys = list(key_cols)
     ties = list(tie_cols)
     # end-before-start (+1 sorts after -1) for half-open; start-before-
@@ -339,10 +327,8 @@ def interval_concurrency(
         F.lit(end_ord).alias("_ord"),
         *[F.col(t) for t in ties],
     )
-    from smos_spark.operators.rollup import _width_bucket
-
     deltas = d_start.unionByName(d_end).withColumn(
-        "bucket_start", _width_bucket(F.col("_t"), width_sec)
+        "bucket_start", floor_ts("_t", width_us)
     )
     order = [F.col("_t"), F.col("_ord"), *[F.col(t) for t in ties]]
     w_in = (
@@ -418,8 +404,7 @@ def interval_coverage(
     keys = list(key_cols)
     if not keys:
         raise ValueError("key_cols must be non-empty")
-    s_us = F.unix_micros(F.col(start_col).cast("timestamp"))
-    e_us = F.unix_micros(F.col(end_col).cast("timestamp"))
+    s_us, e_us = epoch_us(start_col), epoch_us(end_col)
     base = intervals.where(
         F.col(start_col).isNotNull()
         & F.col(end_col).isNotNull()

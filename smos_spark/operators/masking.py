@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from smos_spark.sources.store import _ts_lit
+from smos_spark.functions.timegrid import ts_lit
 
 DEFAULT_READ_ROLES = ("user", "assistant", "tool")
 MASKABLE_COLS = ("text", "tool")
@@ -81,9 +81,9 @@ def filter_ts_range(df: DataFrame, start=None, end=None) -> DataFrame:
     partitioned table (the yearly-subdir/file-template analog). The
     bounds are read in the session time zone."""
     if start is not None:
-        df = df.where(F.col("ts") >= _ts_lit(start))
+        df = df.where(F.col("ts") >= ts_lit(start))
     if end is not None:
-        df = df.where(F.col("ts") <= _ts_lit(end))
+        df = df.where(F.col("ts") <= ts_lit(end))
     return df
 
 

@@ -29,7 +29,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from smos_spark.sources.store import TranscriptStore, _ts_lit
+from smos_spark.functions.timegrid import instant, ts_lit
+from smos_spark.sources.store import TranscriptStore
 
 __all__ = [
     "DEFAULT_RETENTION",
@@ -108,20 +109,15 @@ def apply_retention(
 
 
 def _ceil_to_unit(t: dt.datetime, seconds: int) -> dt.datetime:
-    """Smallest unit-aligned timestamp >= t (pure integer µs math)."""
-    us = int(t.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
-    unit_us = seconds * 1_000_000
-    snapped = -(-us // unit_us) * unit_us
-    return dt.datetime.fromtimestamp(snapped / 1_000_000, dt.timezone.utc).replace(
-        tzinfo=None
-    )
+    """Smallest unit-aligned timestamp >= t (exact timedelta math)."""
+    return t + (dt.datetime(1970, 1, 1) - t) % dt.timedelta(seconds=seconds)
 
 
 def plan_tier_segments(
     tier_names,
-    t0: dt.datetime | str,
-    t1: dt.datetime | str,
-    now: dt.datetime | str,
+    t0: dt.date | str,
+    t1: dt.date | str,
+    now: dt.date | str,
     keep_s=None,
 ):
     """Driver-side segment planner shared by `tiered_read` (in-memory
@@ -131,12 +127,7 @@ def plan_tier_segments(
     O(#tiers)."""
     from smos_spark.schema import TIERS
 
-    def _ts(x):
-        if isinstance(x, str):
-            return dt.datetime.fromisoformat(x)
-        return x
-
-    t0, t1, now = _ts(t0), _ts(t1), _ts(now)
+    t0, t1, now = instant(t0), instant(t1), instant(now)
     if t0 >= t1:
         raise ValueError("t0 must be < t1")
     for name in tier_names:
@@ -188,9 +179,9 @@ def plan_tier_segments(
 
 def tiered_read(
     tiers,
-    t0: dt.datetime | str,
-    t1: dt.datetime | str,
-    now: dt.datetime | str,
+    t0: dt.date | str,
+    t1: dt.date | str,
+    now: dt.date | str,
     keep_s=None,
 ):
     """Retention-aware tiered range read — the continuous-aggregate
@@ -225,7 +216,7 @@ def tiered_read(
 
     def read(name, lo, hi):
         return tiers[name].where(
-            (F.col("bucket_start") >= _ts_lit(lo)) & (F.col("bucket_start") < _ts_lit(hi))
+            (F.col("bucket_start") >= ts_lit(lo)) & (F.col("bucket_start") < ts_lit(hi))
         )
 
     return _stitch(read, list(tiers), t0, t1, now, keep_s)
@@ -234,9 +225,9 @@ def tiered_read(
 def tiered_read_store(
     spark: SparkSession,
     store: TranscriptStore,
-    t0: dt.datetime | str,
-    t1: dt.datetime | str,
-    now: dt.datetime | str,
+    t0: dt.date | str,
+    t1: dt.date | str,
+    now: dt.date | str,
     keep_s=None,
     tier_names=("1m", "1h", "1d"),
 ):

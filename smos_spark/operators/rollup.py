@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from smos_spark.functions.timegrid import floor_ts, to_us
 from smos_spark.schema import ROLES, TIERS
 
 __all__ = [
@@ -168,21 +169,6 @@ def with_derived(tier_df: DataFrame, round_to: int | None = None) -> DataFrame:
     )
 
 
-def _width_bucket(col: Column, width_sec: float, origin: str | None = None) -> Column:
-    """Floor `col` to a width_sec-wide bucket in exact int64 epoch
-    micros (`off - pmod(off, width)` — correct for any sign, no float
-    epoch, no DST surprises; calendar-aware tiers use date_trunc)."""
-    width_us = int(round(width_sec * 1_000_000))
-    if width_us <= 0:
-        raise ValueError(f"width_sec must be positive, got {width_sec}")
-    us = F.unix_micros(col.cast("timestamp"))
-    if origin is not None:
-        origin_us = F.unix_micros(F.lit(origin).cast("timestamp"))
-        off = us - origin_us
-        return F.timestamp_micros(off - F.pmod(off, F.lit(width_us)) + origin_us)
-    return F.timestamp_micros(us - F.pmod(us, F.lit(width_us)))
-
-
 def resample(df: DataFrame, width_sec: float, origin: str | None = None) -> DataFrame:
     """Arbitrary-width downsample: raw turns → tier-shaped partials at
     ANY bucket width (15 s, 5 min, 6 h, …), not just the named
@@ -196,7 +182,7 @@ def resample(df: DataFrame, width_sec: float, origin: str | None = None) -> Data
     """
     return df.groupBy(
         F.col("conv_id"),
-        _width_bucket(F.col("ts"), width_sec, origin).alias("bucket_start"),
+        floor_ts("ts", to_us(width_sec), origin).alias("bucket_start"),
     ).agg(*_partial_aggs())
 
 
@@ -209,5 +195,5 @@ def reaggregate_width(
     named-tier cascade, where 1h ⊇ 1m and 1d ⊇ 1h."""
     return tier_df.groupBy(
         F.col("conv_id"),
-        _width_bucket(F.col("bucket_start"), width_sec, origin).alias("bucket_start"),
+        floor_ts("bucket_start", to_us(width_sec), origin).alias("bucket_start"),
     ).agg(*_merge_aggs())

@@ -8,15 +8,14 @@ threshold (idle timeout). Two implementations, one semantics:
 * `sessionize` (batch): pure window expressions — `lag(ts)` marks
   gap-breaks, a running `sum` over the break flags numbers sessions.
   One shuffle on conv_id; whole-stage codegen; exact SQL twin. The
-  gap compares exact int64 epoch MICROS (`unix_micros`, not
-  second-truncated unix_timestamp nor ~0.25 µs-ulp epoch doubles),
-  bit-identical to the streaming twin's state arithmetic.
+  gap compares epoch µs (`timegrid.epoch_us`), the same arithmetic as
+  the streaming twin's state function.
 * `sessionize_stream` (streaming): `applyInPandasWithState` keeps
   (last_ts, open-session aggregate) per conv_id and emits a session
   row when the event-time timeout fires or a new turn breaks the gap
   — the custom stateful operator shape for live transcript feeds.
   All state/timeout arithmetic runs in TRUE epoch micros
-  (`unix_micros` computed JVM-side before the stateful operator), and
+  (computed JVM-side before the stateful operator), and
   emitted timestamps are tz-aware UTC — correct under any
   spark.sql.session.timeZone, unlike naive-datetime arithmetic which
   shifts by the session offset and can throw
@@ -31,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from smos_spark.functions.timegrid import epoch_us, to_us
+
 __all__ = ["sessionize", "session_stats", "sessionize_stream"]
 
 
@@ -40,17 +41,9 @@ def sessionize(df: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     Stable under ts ties via the (ts, turn_idx) secondary order."""
     w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
     prev_ts = F.lag("ts").over(w)
-    # exact int64 epoch-microsecond gap — the SAME arithmetic as the
-    # streaming twin's state function, so a gap within 1 ulp of
-    # gap_seconds can never split differently between the two paths
-    # (epoch doubles have ~0.25 µs ulp at current epochs); the leading
-    # cast("timestamp") makes TIMESTAMP_NTZ inputs work
-    def _us(c):
-        return F.unix_micros(c.cast("timestamp"))
-
+    gap_us = to_us(gap_seconds, "gap_seconds", zero_ok=True)
     is_break = (
-        prev_ts.isNull()
-        | (_us(F.col("ts")) - _us(prev_ts) > F.lit(gap_seconds * 1_000_000).cast("long"))
+        prev_ts.isNull() | (epoch_us("ts") - epoch_us(prev_ts) > F.lit(gap_us).cast("long"))
     ).cast("long")
     return df.withColumn(
         "session_id",
@@ -106,7 +99,7 @@ def sessionize_stream(
         "session_end timestamp, n_turns long, n_tool_calls long, len_sum long"
     )
     state_schema = "session_id int, start_us long, last_us long, n long, ntool long, lsum long"
-    gap_us = gap_seconds * 1_000_000
+    gap_us = to_us(gap_seconds, "gap_seconds", zero_ok=True)
 
     def _fn(key, pdfs, state: GroupState):
         (conv_id,) = key
@@ -193,14 +186,14 @@ def sessionize_stream(
             state.update((sid, start_us, last_us, n, ntool, lsum))
             # true-epoch timeout; Spark requires it beyond the current
             # watermark (an idle conv's timeout then fires immediately)
-            timeout_ms = last_us // 1000 + gap_seconds * 1000
+            timeout_ms = (last_us + gap_us) // 1000
             wm = state.getCurrentWatermarkMs()
             state.setTimeoutTimestamp(max(timeout_ms, wm + 1))
         return iter([pd.DataFrame(rows)] if rows else [])
 
     return (
         stream.withWatermark("ts", watermark)
-        .withColumn("_ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
+        .withColumn("_ts_us", epoch_us("ts"))
         .groupBy("conv_id")
         .applyInPandasWithState(
             _fn,

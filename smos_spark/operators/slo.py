@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from smos_spark.functions.timegrid import bucket_index, bucket_start, floor_ts, to_us
+
 __all__ = ["apdex", "slo_burn_rate", "slo_stream", "error_budget"]
 
 _DEC = "decimal(38,0)"
@@ -59,7 +61,7 @@ def slo_burn_rate(
     is_error_col: str,
     ts_col: str = "ts",
     key_cols: Sequence[str] = (),
-    short_sec: int = 3600,
+    short_sec: float = 3600,
     long_buckets: int = 6,
     budget_ppm: int = 250_000,
     fast_num: int = 6,
@@ -88,12 +90,8 @@ def slo_burn_rate(
         raise ValueError("burn-rate thresholds must be positive rationals")
     keys = list(key_cols)
 
-    # integral `div`, NOT double `/`: near an exact bucket boundary the
-    # rounded double quotient could cross the integer and mis-bucket
-    width_us = int(short_sec) * 1_000_000
-    bucket = F.expr(
-        f"unix_micros(CAST({ts_col} AS TIMESTAMP)) div {width_us}L"
-    )
+    width_us = to_us(short_sec, "short_sec")
+    bucket = bucket_index(ts_col, width_us)
     counters = (
         df.where(F.col(ts_col).isNotNull())
         .groupBy(*keys, bucket.alias("bucket"))
@@ -131,10 +129,7 @@ def slo_burn_rate(
     out = (
         counters.withColumn("long_total", long_total)
         .withColumn("long_errors", long_errors)
-        .withColumn(
-            "bucket_ts",
-            F.timestamp_micros(F.col("bucket") * F.lit(width_us)),
-        )
+        .withColumn("bucket_ts", bucket_start("bucket", width_us))
         .withColumn("burn_fast_ppm", _ppm(F.col("errors"), F.col("total")))
         .withColumn(
             "burn_slow_ppm", _ppm(F.col("long_errors"), F.col("long_total"))
@@ -175,7 +170,7 @@ def error_budget(
     is_error_col: str,
     ts_col: str = "ts",
     key_cols: Sequence[str] = (),
-    short_sec: int = 3600,
+    short_sec: float = 3600,
     budget_ppm: int = 250_000,
 ) -> DataFrame:
     """Month-to-date error-budget accounting per key — the report
@@ -205,10 +200,8 @@ def error_budget(
     if not 0 < budget_ppm <= 1_000_000:
         raise ValueError(f"budget_ppm must be in (0, 10^6], got {budget_ppm}")
     keys = list(key_cols)
-    width_us = int(short_sec) * 1_000_000
-    bucket = F.expr(
-        f"unix_micros(CAST({ts_col} AS TIMESTAMP)) div {width_us}L"
-    )
+    width_us = to_us(short_sec, "short_sec")
+    bucket = bucket_index(ts_col, width_us)
     counters = (
         df.where(F.col(ts_col).isNotNull())
         .groupBy(
@@ -239,9 +232,7 @@ def error_budget(
     return (
         counters.withColumn("cum_total", F.sum("total").over(w))
         .withColumn("cum_errors", F.sum("errors").over(w))
-        .withColumn(
-            "bucket_ts", F.timestamp_micros(F.col("bucket") * F.lit(width_us))
-        )
+        .withColumn("bucket_ts", bucket_start("bucket", width_us))
         .withColumn(
             "burn_mtd_ppm",
             F.floor(burn * F.lit(1_000_000.0)).cast("long"),
@@ -274,7 +265,7 @@ def slo_stream(
     is_error_col: str,
     ts_col: str = "ts",
     key_cols: Sequence[str] = (),
-    short_sec: int = 3600,
+    short_sec: float = 3600,
     long_buckets: int = 6,
     budget_ppm: int = 250_000,
     fast_num: int = 6,
@@ -321,7 +312,7 @@ def slo_stream(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     keys = list(key_cols)
-    width_us = int(short_sec) * 1_000_000
+    width_us = to_us(short_sec, "short_sec")
     nl = int(long_buckets)
     budget = int(budget_ppm)
     fn_, fd_, sn_, sd_ = int(fast_num), int(fast_den), int(slow_num), int(slow_den)
@@ -332,9 +323,7 @@ def slo_stream(
         .select(
             *keys,
             F.col(ts_col),
-            F.expr(
-                f"unix_micros(CAST({ts_col} AS TIMESTAMP)) div {width_us}L"
-            ).alias("_bucket"),
+            bucket_index(ts_col, width_us).alias("_bucket"),
             F.when(F.col(is_error_col), F.lit(1))
             .otherwise(F.lit(0))
             .cast("long")
@@ -477,7 +466,7 @@ def apdex(
     latency_col: str,
     t_us: int,
     group_cols: list[str] | None = None,
-    bucket_sec: int | None = 3600,
+    bucket_sec: float | None = 3600,
     ts_col: str = "ts",
 ) -> DataFrame:
     """Apdex score per (group, bucket): the Application Performance
@@ -507,13 +496,9 @@ def apdex(
     base = df.where(lat.isNotNull())
     keys: list = [*groups]
     if bucket_sec is not None:
-        if bucket_sec <= 0:
-            raise ValueError("bucket_sec must be positive (or None)")
-        width_us = int(bucket_sec) * 1_000_000
-        us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-        b = ((us - F.pmod(us, F.lit(width_us))) / F.lit(width_us)).cast("long")
+        width_us = to_us(bucket_sec, "bucket_sec")
         base = base.where(F.col(ts_col).isNotNull()).withColumn(
-            "_bkt", F.timestamp_micros(b * F.lit(width_us))
+            "_bkt", floor_ts(ts_col, width_us)
         )
         keys.append("_bkt")
     sat = F.sum(F.when(lat <= t_us, 1).otherwise(0)).alias("satisfied")

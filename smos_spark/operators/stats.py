@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from smos_spark.functions.joins import null_safe_join
+from smos_spark.functions.timegrid import bucket_index, bucket_start, dow_hour, to_us
 
 __all__ = [
     "autocorrelation",
@@ -134,25 +135,14 @@ def hourly_profile(
     """Calendar seasonality: event count (and mean value in ppm) per
     (group, day-of-week, hour-of-day).
 
-    dow/hour come from pure integer epoch-µs arithmetic —
-    dow = (epoch_days + 4) % 7 with 0=Sunday (1970-01-01 was a
-    Thursday) — NOT from the engines' dayofweek(), whose numbering
-    conventions differ (Spark: 1=Sunday; DuckDB dow: 0=Sunday; ISO
-    variants elsewhere). The mean aggregates floor(value·cents) as
-    int64 and performs one double division chain at the end, so the
-    ppm output is bit-identical cross-engine. One aggregation,
-    map-side partials, output bounded by groups·168 rows."""
+    dow (0=Sunday) and hour come from `timegrid.dow_hour`, not the
+    engines' dayofweek(), whose numbering conventions differ. The mean
+    aggregates floor(value·cents) as int64 and performs one double
+    division chain at the end, so the ppm output is bit-identical
+    cross-engine. One aggregation, map-side partials, output bounded
+    by groups·168 rows."""
     group_cols = list(group_cols or [])
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    # exact integer division: (us - us%N)/N divides an exact multiple,
-    # so the double quotient is the true integer — a bare floor(us/N)
-    # could round across a boundary for timestamps within ~0.4 µs of
-    # midnight, while the DuckDB twin's `//` is true integer division.
-    day_us, hour_us = 86_400_000_000, 3_600_000_000
-    days = ((us - F.pmod(us, F.lit(day_us))) / F.lit(day_us)).cast("long")
-    hours = ((us - F.pmod(us, F.lit(hour_us))) / F.lit(hour_us)).cast("long")
-    dow = F.pmod(days + 4, F.lit(7)).cast("int")
-    hour = F.pmod(hours, F.lit(24)).cast("int")
+    dow, hour = dow_hour(ts_col)
     base = df.select(
         *group_cols, dow.alias("dow"), hour.alias("hour"),
         *(
@@ -259,17 +249,9 @@ def lagged_crosscorr(
     """
     if lag_buckets < 0:
         raise ValueError("lag_buckets must be >= 0 (swap the series)")
-    width_us = int(round(width_sec * 1_000_000))
-    if width_us <= 0:
-        raise ValueError(f"width_sec must be positive, got {width_sec}")
+    bucket = bucket_index(ts_col, to_us(width_sec))
     groups = list(group_cols or [])
     v = F.floor(F.col(value_col) * cents).cast("long")
-    # integer `div`, never a double division: a quotient one ulp above
-    # an integer boundary would bucket-split the engines (post-epoch
-    # timestamps are positive, so truncating div == floor on both)
-    bucket = F.expr(
-        f"unix_micros(cast({ts_col} as timestamp)) div {width_us}L"
-    )
     base = (
         df.where(
             F.col(ts_col).isNotNull()
@@ -635,7 +617,7 @@ def top_movers(
     value_col: str,
     key_col: str,
     ts_col: str = "ts",
-    width_sec: int = 86400,
+    width_sec: float = 86400,
     k: int = 5,
 ) -> DataFrame:
     """Biggest bucket-over-bucket movers: for every time bucket, the
@@ -655,13 +637,10 @@ def top_movers(
     """
     from pyspark.sql.window import Window
 
-    if width_sec <= 0:
-        raise ValueError("width_sec must be positive")
+    width_us = to_us(width_sec)
     if k <= 0:
         raise ValueError("k must be positive")
-    width_us = int(width_sec) * 1_000_000
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    b = ((us - F.pmod(us, F.lit(width_us))) / F.lit(width_us)).cast("long")
+    b = bucket_index(ts_col, width_us)
     v = F.col(value_col).cast("long")
     totals = (
         df.where(F.col(ts_col).isNotNull() & v.isNotNull())
@@ -679,9 +658,7 @@ def top_movers(
         with_prev.withColumn("rank", F.row_number().over(wr))
         .where(F.col("rank") <= k)
         .select(
-            F.timestamp_micros(F.col("_b") * F.lit(width_us)).alias(
-                "bucket_start"
-            ),
+            bucket_start("_b", width_us).alias("bucket_start"),
             "key",
             "cur",
             "prev",

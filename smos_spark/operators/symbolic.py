@@ -45,9 +45,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from smos_spark.functions.timegrid import day_segment
+
 __all__ = ["paa", "sax_words", "sax_motifs"]
 
-_DAY_US = 86_400_000_000
 _DEC = "decimal(38,0)"
 
 
@@ -72,16 +73,7 @@ def paa(
     keys = list(key_cols)
 
     day = F.date_trunc("day", F.col(ts_col)).alias("day")
-    # integral `div` on the day offset: off_us < 86.4e9 and
-    # n_segments <= ~1e4 keeps off_us * n inside int64 comfortably
-    off_us = F.unix_micros(F.col(ts_col).cast("timestamp")) - F.unix_micros(
-        F.date_trunc("day", F.col(ts_col)).cast("timestamp")
-    )
-    seg = F.expr(
-        f"(unix_micros(CAST({ts_col} AS TIMESTAMP))"
-        f" - unix_micros(CAST(date_trunc('day', {ts_col}) AS TIMESTAMP)))"
-        f" * {int(n_segments)}L div {_DAY_US}L"
-    )
+    _, seg = day_segment(ts_col, n_segments)
     cents = F.floor(F.col(value_col).cast("double") * F.lit(100)).cast("long")
 
     segs = (

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from smos_spark.operators.rollup import _width_bucket
+from smos_spark.functions.timegrid import DAY_US, bucket_start, epoch_us, floor_div, floor_ts, to_us
 
 __all__ = [
     "ohlc",
@@ -67,12 +67,6 @@ def _cents(col: F.Column) -> F.Column:
     round) so no half-way rounding-mode delta can exist between
     engines."""
     return F.floor(col * 100).cast("long")
-
-
-def _us(col: F.Column) -> F.Column:
-    # cast("timestamp"): parquet NTZ timestamps are not valid
-    # unix_micros input; no-op under the session's pinned UTC tz
-    return F.unix_micros(col.cast("timestamp"))
 
 
 def ohlc(
@@ -104,9 +98,7 @@ def ohlc(
         df.where(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
         .groupBy(
             *keys,
-            _width_bucket(F.col(ts_col), width_sec, origin).alias(
-                "bucket_start"
-            ),
+            floor_ts(ts_col, to_us(width_sec), origin).alias("bucket_start"),
         )
         .agg(
             F.min_by(v, order).alias("open_cents"),
@@ -146,9 +138,9 @@ def time_weighted_avg(
     w = Window.partitionBy(*keys).orderBy(
         F.col(ts_col), *[F.col(t) for t in tie_cols]
     )
-    ts_us = _us(F.col(ts_col))
+    ts_us = epoch_us(ts_col)
     day = F.date_trunc("day", F.col(ts_col))
-    day_end_us = _us(day) + F.lit(86_400_000_000)
+    day_end_us = epoch_us(day) + F.lit(DAY_US)
     next_us = F.lead(ts_us).over(w)
     weight = F.least(F.coalesce(next_us, day_end_us), day_end_us) - ts_us
     return (
@@ -191,7 +183,7 @@ def state_durations(
     w = Window.partitionBy(*keys).orderBy(
         F.col(ts_col), *[F.col(t) for t in tie_cols]
     )
-    dur = F.lead(_us(F.col(ts_col))).over(w) - _us(F.col(ts_col))
+    dur = F.lead(epoch_us(ts_col)).over(w) - epoch_us(ts_col)
     return (
         df.where(F.col(ts_col).isNotNull() & F.col(state_col).isNotNull())
         .select(*keys, F.col(state_col), dur.alias("_dur"))
@@ -221,12 +213,12 @@ def uptime(
     Output per key: ``n_beats``, ``span_us`` (last−first beat) and
     ``up_us`` (covered µs; ≤ span_us + liveness_us).
     """
-    live_us = int(round(liveness_sec * 1e6))
+    live_us = to_us(liveness_sec, "liveness_sec", zero_ok=True)
     keys = [F.col(k) for k in key_cols]
     w = Window.partitionBy(*keys).orderBy(
         F.col(ts_col), *[F.col(t) for t in tie_cols]
     )
-    ts_us = _us(F.col(ts_col))
+    ts_us = epoch_us(ts_col)
     gap = F.lead(ts_us).over(w) - ts_us
     covered = F.coalesce(F.least(gap, F.lit(live_us)), F.lit(live_us))
     return (
@@ -272,16 +264,14 @@ def time_weighted_buckets(
     a map-side-combined groupBy on (key, bucket) — fan-out rows
     combine before the second exchange, which carries O(keys·buckets).
     """
-    width_us = int(round(width_sec * 1_000_000))
-    if width_us <= 0:
-        raise ValueError(f"width_sec must be positive, got {width_sec}")
+    width_us = to_us(width_sec)
     if max_span_buckets <= 0:
         raise ValueError("max_span_buckets must be positive")
     keys = [F.col(k) for k in key_cols]
     w = Window.partitionBy(*keys).orderBy(
         F.col(ts_col), *[F.col(t) for t in tie_cols]
     )
-    us = _us(F.col(ts_col))
+    us = epoch_us(ts_col)
     src = (
         df.where(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
         .select(
@@ -292,9 +282,8 @@ def time_weighted_buckets(
         )
         .where(F.col("_end").isNotNull() & (F.col("_end") > F.col("_us")))
     )
-    # integer div: post-epoch µs are positive, truncation == floor
-    b0 = F.expr(f"_us div {width_us}L")
-    b1 = F.expr(f"(_end - 1L) div {width_us}L")  # _end is exclusive
+    b0 = floor_div(F.col("_us"), width_us)
+    b1 = floor_div(F.col("_end") - 1, width_us)  # _end is exclusive
     span = b1 - b0 + 1
     span = F.when(
         span > max_span_buckets,
@@ -328,7 +317,7 @@ def time_weighted_buckets(
     return (
         exploded.select(
             *key_cols,
-            F.timestamp_micros(b_start).alias("bucket_start"),
+            bucket_start("_b", width_us).alias("bucket_start"),
             F.col("_c"),
             overlap.alias("_w"),
         )
@@ -362,13 +351,13 @@ def uptime_partials(
     merged measure equals the direct-from-raw computation EXACTLY
     (pinned in test + the weekly contract row).
     """
-    live_us = int(round(liveness_sec * 1e6))
+    live_us = to_us(liveness_sec, "liveness_sec", zero_ok=True)
     keys = [F.col(k) for k in key_cols]
     chunk = F.date_trunc(unit, F.col(ts_col))
     w = Window.partitionBy(*keys, chunk).orderBy(
         F.col(ts_col), *[F.col(t) for t in tie_cols]
     )
-    ts_us = _us(F.col(ts_col))
+    ts_us = epoch_us(ts_col)
     gap = F.lead(ts_us).over(w) - ts_us
     covered = F.coalesce(F.least(gap, F.lit(live_us)), F.lit(live_us))
     return (
@@ -407,7 +396,7 @@ def uptime_merge(
     the already-aggregated table, never the raw beats — then a
     groupBy on the same clustering (exchange reused).
     """
-    live_us = int(round(liveness_sec * 1e6))
+    live_us = to_us(liveness_sec, "liveness_sec", zero_ok=True)
     keys = [F.col(k) for k in key_cols]
     groups = [F.col(g) for g in group_cols]
     w = Window.partitionBy(*keys, *groups).orderBy("chunk")
@@ -463,7 +452,7 @@ def state_duration_partials(
         *key_cols,
         chunk.alias("chunk"),
         F.col(state_col).alias("state"),
-        _us(F.col(ts_col)).alias("_us"),
+        epoch_us(ts_col).alias("_us"),
         *[F.col(t) for t in tie_cols],
     )
     w = Window.partitionBy(*keys, "chunk").orderBy(
@@ -554,9 +543,7 @@ def ohlc_merge(
     return (
         partials.groupBy(
             *[F.col(k) for k in key_cols],
-            _width_bucket(F.col("bucket_start"), width_sec, origin).alias(
-                "bucket_start"
-            ),
+            floor_ts("bucket_start", to_us(width_sec), origin).alias("bucket_start"),
         )
         .agg(
             F.min_by(F.col("open_cents"), F.col("bucket_start")).alias(
@@ -608,9 +595,9 @@ def weighted_median(
     w = Window.partitionBy(*keys).orderBy(
         F.col(ts_col), *[F.col(t) for t in tie_cols]
     )
-    ts_us = _us(F.col(ts_col))
+    ts_us = epoch_us(ts_col)
     day = F.date_trunc("day", F.col(ts_col))
-    day_end_us = _us(day) + F.lit(86_400_000_000)
+    day_end_us = epoch_us(day) + F.lit(DAY_US)
     next_us = F.lead(ts_us).over(w)
     weight = F.least(F.coalesce(next_us, day_end_us), day_end_us) - ts_us
     levels = (

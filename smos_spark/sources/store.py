@@ -104,6 +104,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from smos_spark.functions.timegrid import instant, ts_lit
 from smos_spark.operators.rollup import _MERGE, _bucket, _merge_aggs
 from smos_spark.schema import TIERS
 
@@ -135,23 +136,6 @@ def bucket_expr(col="conv_id", n_buckets: int = DEFAULT_N_BUCKETS):
 
 
 _US = dt.timedelta(microseconds=1)
-
-
-def _instant(t) -> dt.datetime | None:
-    """A range bound as a datetime: an ISO string is parsed, a date is
-    its midnight, None stays open."""
-    if isinstance(t, str):
-        return dt.datetime.fromisoformat(t)
-    if isinstance(t, dt.date) and not isinstance(t, dt.datetime):
-        return dt.datetime.combine(t, dt.time())
-    return t
-
-
-def _ts_lit(t):
-    """`t` (a datetime, a date or an ISO string) as a timestamp literal
-    read in the session time zone: its string form is cast, since a
-    naive datetime given to F.lit is read in the Python process's zone."""
-    return F.lit(str(t)).cast("timestamp")
 
 
 @dataclass
@@ -353,16 +337,16 @@ class TranscriptStore:
         bucket directory with no job to compute the bucket (the
         read-one-cell-file locality of the reference, J2), and the
         conv_id equality reaches the parquet bloom filter."""
-        lo, hi = _instant(lo), _instant(hi)
+        lo, hi = instant(lo), instant(hi)
         df = self._scan(spark, path)
         if lo is not None:
             df = df.where(F.col(date_col) >= F.lit(lo.date()))
             if ts_col is not None:
-                df = df.where(F.col(ts_col) >= _ts_lit(lo))
+                df = df.where(F.col(ts_col) >= ts_lit(lo))
         if hi is not None:
             df = df.where(F.col(date_col) <= F.lit((hi - _US).date()))
             if ts_col is not None:
-                df = df.where(F.col(ts_col) < _ts_lit(hi))
+                df = df.where(F.col(ts_col) < ts_lit(hi))
         if conv_id is not None:
             bucket = bucket_expr(F.lit(conv_id), self.n_buckets)
             df = df.where((F.col("bucket_id") == bucket) & (F.col("conv_id") == conv_id))
@@ -499,7 +483,7 @@ class TranscriptStore:
         names."""
         from smos_spark.operators.compress import range_minmax
 
-        blocks = self.read_blocks(spark, tier, ts_from, _instant(ts_to) + _US)
+        blocks = self.read_blocks(spark, tier, ts_from, instant(ts_to) + _US)
         # stats columns are required for the covered-block fast path
         if f"{value_col}_min" not in blocks.columns:
             raise ValueError(
@@ -541,7 +525,7 @@ class TranscriptStore:
         for the ts range; conv_id min/max row-group stats for the key
         range); one write, no driver materialization. ts_lo/ts_hi
         bound bucket_start inclusively."""
-        hi = None if ts_hi is None else _instant(ts_hi) + _US
+        hi = None if ts_hi is None else instant(ts_hi) + _US
         df = self.read_tier(spark, tier, ts_lo, hi)
         if conv_lo is not None:
             df = df.where(F.col("conv_id") >= conv_lo)

@@ -36,7 +36,8 @@ from collections.abc import Callable, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from smos_spark.functions.timegrid import epoch_us
 
 __all__ = ["keyed_fold_stream", "schema_ddl"]
 
@@ -96,7 +97,7 @@ def keyed_fold_stream(
 
     return (
         src.withWatermark(ts_col, watermark)
-        .withColumn("_ts_us", F.unix_micros(F.col(ts_col).cast("timestamp")))
+        .withColumn("_ts_us", epoch_us(ts_col))
         .groupBy(*keys)
         .applyInPandasWithState(
             _fn,

@@ -61,6 +61,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smos_spark.functions.timegrid import ts_lit
 from smos_spark.operators.rollup import turn_partials
 from smos_spark.schema import TIERS
 from smos_spark.sources.store import NULL_DAY, TranscriptStore
@@ -118,7 +119,7 @@ def _ingest_batch_locked(
     if ov.last_day is None:
         on_time = ts.isNotNull()
     else:
-        on_time = ts > F.lit(ov.last_day).cast("timestamp")
+        on_time = ts > ts_lit(ov.last_day)
     ts_on_time = F.when(on_time, ts)
     # unnamed (a fresh name each time): Spark keys an observation by its
     # name and the observed DataFrame, so a retry observing the same

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smos_spark.functions.timegrid import ts_lit
+
 _WORDS = (
     "the quick brown fox jumps over lazy dog spark rollup tier "
     "gap fill series window shuffle partition bucket stream"
@@ -95,7 +97,7 @@ def synth_transcripts(
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    epoch0 = F.unix_timestamp(F.lit(start).cast("timestamp"))
+    epoch0 = F.unix_timestamp(ts_lit(start))
     ts = F.timestamp_seconds(epoch0 + conv_offset + F.sum(gap).over(w))
 
     u_role = _u(seed, "role", F.col("conv_id"), F.col("turn_idx"))

@@ -3,11 +3,12 @@ survivors untouched, expiry recorded in lineage + overview floor."""
 
 from __future__ import annotations
 
+import datetime as dt
 from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from smos_spark.operators.retention import apply_retention
+from smos_spark.operators.retention import apply_retention, plan_tier_segments
 from smos_spark.operators.rollup import reaggregate, rollup_from_raw
 from smos_spark.sources.store import TranscriptStore
 from smos_spark.synth import synth_transcripts
@@ -265,3 +266,14 @@ def test_tiered_read_store_prunes_and_matches(spark, tmp_path):
     for (f,) in files:
         d = dt.date.fromisoformat(f.split("bucket_date=")[1].split("/")[0])
         assert m_lo <= d <= t1.date()
+
+
+def test_plan_tier_segments_accepts_date_bounds():
+    """Date bounds (all dates, or dates mixed with ISO strings) plan the
+    same segments as the ISO-string bounds, as `read_tier` reads them."""
+    tiers = ["1m", "1h", "1d"]
+    iso = plan_tier_segments(tiers, "2024-06-01", "2025-03-01", "2025-02-20")
+    assert [seg[0] for seg in iso[1]] == tiers
+    d0, d1, now = dt.date(2024, 6, 1), dt.date(2025, 3, 1), dt.date(2025, 2, 20)
+    assert plan_tier_segments(tiers, d0, d1, now) == iso
+    assert plan_tier_segments(tiers, d0, "2025-03-01", now) == iso

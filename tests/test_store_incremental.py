@@ -538,7 +538,8 @@ def test_ingest_null_ts_rows_quarantined(spark, transcripts, tmp_path):
 def test_timestamp_bounds_use_session_time_zone(spark, transcripts, tmp_path, monkeypatch):
     """Bounds are read and recorded in the session time zone (UTC), not
     the Python process's: ingest's and rollup_job's `last_day`, the late
-    cut that follows it, `filter_ts_range` and `range_minmax`."""
+    cut that follows it, `filter_ts_range`, `range_minmax`, `gap_fill`
+    bounds, a `resample` origin and a `trend_slope` epoch."""
     import datetime as dt
     import importlib.util
     import os
@@ -546,8 +547,11 @@ def test_timestamp_bounds_use_session_time_zone(spark, transcripts, tmp_path, mo
     import time
     from pathlib import Path
 
+    from smos_spark.operators.anomaly import trend_slope
     from smos_spark.operators.compress import compress_series, range_minmax
+    from smos_spark.operators.gapfill import gap_fill
     from smos_spark.operators.masking import filter_ts_range
+    from smos_spark.operators.rollup import resample
 
     def turn(idx, ts):
         return transcripts.limit(1).withColumns(
@@ -591,6 +595,19 @@ def test_timestamp_bounds_use_session_time_zone(spark, transcripts, tmp_path, mo
         assert [tuple(r) for r in range_minmax(comp, "value", t0, t1).collect()] == [
             ("c", 9.0, 11.0, 3)
         ]
+
+        def hours_utc(df):
+            hours = df.select(F.date_format("bucket_start", "HH:mm").alias("h"))
+            return [r.h for r in hours.collect()]
+
+        tier = series.select("conv_id", F.col("ts").alias("bucket_start"), "value")
+        filled = gap_fill(tier, "1h", dt.datetime(2025, 1, 2, 6), dt.datetime(2025, 1, 2, 14))
+        assert hours_utc(filled.orderBy("bucket_start")) == [f"{h:02d}:00" for h in range(6, 15)]
+        origin = dt.datetime(2025, 1, 2, 9, 30)
+        assert hours_utc(resample(turn(0, "2025-01-02 10:00:00"), 86400, origin)) == ["09:30"]
+        slope = trend_slope(series, "value", ["conv_id"], epoch=dt.datetime(2025, 1, 2),
+                            keep_moments=True)
+        assert [r.sum_x for r in slope.collect()] == [8 + 9 + 10 + 11 + 12]
     finally:
         if tz is None:
             del os.environ["TZ"]
